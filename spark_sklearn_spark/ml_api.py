@@ -67,6 +67,8 @@ class GridSearchCV:
         # across engines/runs — the sklearn `cv=iterable` analogue —
         # where the default rand(seed) split is engine-internal.
         self.fold_col = fold_col
+        self._best_model = None
+        self._fit_df = None
 
     def _grid(self):
         from pyspark.ml.tuning import ParamGridBuilder
@@ -155,8 +157,10 @@ class GridSearchCV:
         the grid query 5.0 -> ~2.9 s quiet (3 fit waves + 0.9 s refit
         -> 1 wave, no refit)."""
         from concurrent.futures import ThreadPoolExecutor
+        from functools import partial
 
         from pyspark.storagelevel import StorageLevel
+        from pyspark.util import inheritable_thread_target
 
         cached_here = df.storageLevel == StorageLevel.NONE
         if cached_here:
@@ -167,17 +171,25 @@ class GridSearchCV:
             test = df.filter(F.col(self.fold_col) == f).drop(self.fold_col)
             fold_datasets.append((train, test))
 
-        def one(task):
-            i, f = task
+        def one(i, f):
             train, test = fold_datasets[f]
             model = self.estimator.fit(train, grid[i])
             return i, evaluator.evaluate(model.transform(test))
 
-        tasks = [(i, f) for i in range(len(grid)) for f in range(self.cv)]
+        # Each task carries its own copy of the caller's local
+        # properties (job group, scheduler pool, tags), so the fits on
+        # pool threads run under the caller's job group and concurrent
+        # SQL executions never mutate one shared property set.
+        tasks = [
+            inheritable_thread_target(df.sparkSession)(partial(one, i, f))
+            for i in range(len(grid))
+            for f in range(self.cv)
+        ]
         metrics = np.zeros(len(grid))
         try:
+            self._check_folds(df)
             with ThreadPoolExecutor(max_workers=self.parallelism) as pool:
-                for i, m in pool.map(one, tasks):
+                for i, m in pool.map(lambda task: task(), tasks):
                     metrics[i] += m / self.cv
         finally:
             if cached_here:
@@ -187,12 +199,32 @@ class GridSearchCV:
         self._grid_cache = grid
         return metrics.tolist()
 
+    def _check_folds(self, df: DataFrame) -> None:
+        """Fail loudly on NULL or out-of-range fold values — one
+        aggregate over the persisted input, before the fan-out. A NULL
+        fold would otherwise silently drop its row from every split,
+        and a value outside [0, cv) would put its row in every training
+        set and no validation set."""
+        fold = F.col(self.fold_col)
+        bad = df.agg(
+            F.count(F.when(fold.isNull() | (fold < 0) | (fold >= self.cv), 1))
+        ).first()[0]
+        if bad:
+            raise ValueError(
+                f"fold column {self.fold_col!r} must hold values in "
+                f"[0, {self.cv}); found {bad} NULL or out-of-range rows"
+            )
+
     @property
     def best_model_(self):
         """The best candidate refit on the full data. Lazy on the
         explicit-fold path: the refit is a full extra fit the search
         itself never consumes, so it runs on first access only."""
         if self._best_model is None:
+            if self._fit_df is None:
+                raise AttributeError(
+                    "best_model_ is not available: call fit() first"
+                )
             self._best_model = self.estimator.fit(
                 self._fit_df.drop(self.fold_col),
                 self._grid_cache[self.best_index_],

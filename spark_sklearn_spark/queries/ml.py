@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.io import load
+from ..sources.io import load, snapshot, write_parquet
 from ._helpers import DEC, h56 as _h56, sql_h56
 
 GRID_REG = [0.01, 0.1]
@@ -708,20 +708,17 @@ def q_ml_keyed_scale(spark, d):
 
 # q_ml_linear_ols and q_ml_ols2 (pipeline11) fit on overlapping moment
 # sets of the same lineitem scan — compute the UNION of their eleven
-# decimal moments once per (application, sf_dir) and snapshot it (3
-# rows; the dup_components memo pattern), so the second fit pays a
-# file re-read instead of a second scan + wide-agg codegen compile.
-_LI_MOMENTS_CACHE: dict[tuple[str, str], str] = {}
+# decimal moments once and snapshot it (3 rows), so the second fit
+# pays a file re-read instead of a second scan + wide-agg codegen
+# compile.
 
 
 def li_ols_moments(spark, d):
-    """Memoized per-returnflag decimal moments of (quantity, discount,
-    extendedprice): n, sx, sy, sxy, sxx, syy, sd, sxd, sdd, sdy."""
-    from ..sources.io import warehouse_path
+    """Snapshotted per-returnflag decimal moments of (quantity,
+    discount, extendedprice): n, sx, sy, sxy, sxx, syy, sd, sxd, sdd,
+    sdy."""
 
-    key = (spark.sparkContext.applicationId, d)
-    path = _LI_MOMENTS_CACHE.get(key)
-    if path is None:
+    def write(path):
         li = load(spark, d, "lineitem")
         q, dc, p = (
             F.col("l_quantity"),
@@ -740,10 +737,9 @@ def li_ols_moments(spark, d):
             F.sum((dc * dc).cast(DEC)).cast("double").alias("sdd"),
             F.sum((dc * p).cast(DEC)).cast("double").alias("sdy"),
         )
-        path = warehouse_path("li_ols_moments", d)
-        sums.write.mode("overwrite").parquet(path)
-        _LI_MOMENTS_CACHE[key] = path
-    return spark.read.parquet(path)
+        write_parquet(sums, path)
+
+    return spark.read.parquet(snapshot(spark, d, "li_ols_moments", write))
 
 
 @query(

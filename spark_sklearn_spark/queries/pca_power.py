@@ -30,10 +30,12 @@ the hash pins not just the answer but the convergence path.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.io import load
+from ..sources.io import load, snapshot, write_parquet
 
 PP_DIM = 64
 PP_Q = 1000  # milli quantization of components
@@ -109,11 +111,8 @@ def _idiv(a, b):
 
 
 # The O(n·d²) Gram build is the expensive stage and is shared by
-# q_emb_pca_power and q_emb_pca_topk — snapshot the fit to parquet per
-# (application, sf_dir) like pipeline.dup_components, so the second
-# consumer pays a file re-read instead of a recompute (and bench.py's
-# clearCache() can't evict it).
-_PCA_FIT_CACHE: dict[tuple[str, str], tuple[str, str, list[str]]] = {}
+# q_emb_pca_power and q_emb_pca_topk — snapshot the fit so the second
+# consumer pays a file re-read instead of a recompute.
 
 
 def power_fit(spark, d):
@@ -121,37 +120,22 @@ def power_fit(spark, d):
     ``(cent, cells, iterates)`` where ``cent`` is the centered
     quantized (vec_id, i, c) relation, ``cells`` the damped 4096-cell
     Gram matrix, and ``iterates`` the list of renormalized 64-row
-    iterate DataFrames. Memoized via parquet snapshots (module
-    comment). q_emb_pca_power emits the trajectory; q_emb_pca_topk
-    projects the corpus onto the final iterate; q_emb_pca deflates
-    against it for PC2."""
-    from ..sources.io import warehouse_path
+    iterate DataFrames. Snapshotted (block comment above).
+    q_emb_pca_power emits the trajectory; q_emb_pca_topk projects the
+    corpus onto the final iterate; q_emb_pca deflates against it for
+    PC2."""
+    names = ["cent", "cells", *(f"v{r}" for r in range(1, PP_ROUNDS + 1))]
 
-    key = (spark.sparkContext.applicationId, d)
-    cached = _PCA_FIT_CACHE.get(key)
-    if cached is not None:
-        cent_path, cells_path, iter_paths = cached
-        return (
-            spark.read.parquet(cent_path),
-            spark.read.parquet(cells_path),
-            [spark.read.parquet(p) for p in iter_paths],
-        )
-    cent, cells, iterates = _power_fit_live(spark, d)
-    cent_path = warehouse_path("pca_cent", d)
-    cent.write.mode("overwrite").parquet(cent_path)
-    cells_path = warehouse_path("pca_cells", d)
-    cells.write.mode("overwrite").parquet(cells_path)
-    iter_paths = []
-    for r, it in enumerate(iterates, start=1):
-        p = warehouse_path(f"pca_v{r}", d)
-        it.write.mode("overwrite").parquet(p)
-        iter_paths.append(p)
-    _PCA_FIT_CACHE[key] = (cent_path, cells_path, iter_paths)
-    return (
-        spark.read.parquet(cent_path),
-        spark.read.parquet(cells_path),
-        [spark.read.parquet(p) for p in iter_paths],
+    def write(path):
+        cent, cells, iterates = _power_fit_live(spark, d)
+        for name, df in zip(names, [cent, cells, *iterates]):
+            write_parquet(df, os.path.join(path, name))
+
+    path = snapshot(spark, d, "pca_fit", write)
+    cent, cells, *iterates = (
+        spark.read.parquet(os.path.join(path, name)) for name in names
     )
+    return cent, cells, iterates
 
 
 def _power_fit_live(spark, d):
@@ -325,25 +309,19 @@ def _pca_proj_oracle() -> str:
     """
 
 
-# PC2 deflation fit snapshot, keyed like _PCA_FIT_CACHE (r17): the
-# deflated power rounds run on 64-row relations, but each round is a
-# localCheckpoint + several eager aggregates — ~14 scheduled jobs of
-# pure round-trip latency per execution. Same posture as the
-# lr_fit/li_ols_moments memos: snapshot the FIT (the final 64-row u
-# iterate), not any corpus-sized relation.
-_PC2_FIT_CACHE: dict[tuple[str, str], str] = {}
+# PC2 deflation fit snapshot (r17): the deflated power rounds run on
+# 64-row relations, but each round is a localCheckpoint + several
+# eager aggregates — ~14 scheduled jobs of pure round-trip latency
+# per execution. Like the lr_fit/li_ols_moments snapshots it holds
+# the FIT (the final 64-row u iterate), not any corpus-sized relation.
 
 
 def pc2_fit(spark, d):
     """The fitted PC2 iterate (i, u): integer Gram-Schmidt deflation
     against PC1 through PP_ROUNDS matvec rounds (block comment above
-    for the construction), memoized to a 64-row parquet snapshot per
-    (application, sf_dir)."""
-    from ..sources.io import warehouse_path
+    for the construction), snapshotted as 64 rows of parquet."""
 
-    key = (spark.sparkContext.applicationId, d)
-    path = _PC2_FIT_CACHE.get(key)
-    if path is None:
+    def write(path):
         _, cells, iterates = power_fit(spark, d)
         vs = PP_VSCALE
         v1 = iterates[-1]  # (i, v) — the fitted PC1 iterate
@@ -386,10 +364,9 @@ def pc2_fit(spark, d):
                 .select("i", _idiv(f"(o * {vs})", "ma").alias("u"))
                 .localCheckpoint()
             )
-        path = warehouse_path(f"pca_u{PP_ROUNDS}", d)
-        u.write.mode("overwrite").parquet(path)
-        _PC2_FIT_CACHE[key] = path
-    return spark.read.parquet(path)
+        write_parquet(u, path)
+
+    return spark.read.parquet(snapshot(spark, d, f"pca_u{PP_ROUNDS}", write))
 
 
 @query("q_emb_pca", oracle=_pca_proj_oracle())

@@ -21,7 +21,7 @@ import os
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.io import load, warehouse_path
+from ..sources.io import load, snapshot
 from ._helpers import sql_h56
 
 # --------------------------------------------------------------------------
@@ -52,9 +52,6 @@ _BINFILE_ORACLE = f"""
     ORDER BY source
 """
 
-_BINFILE_CACHE: dict[tuple[str, str], str] = {}
-
-
 @query("q_source_binaryfile", oracle=_BINFILE_ORACLE)
 def q_source_binaryfile(spark, d):
     """binaryFile source roundtrip (module comment): materialize one
@@ -62,10 +59,8 @@ def q_source_binaryfile(spark, d):
     format, hash the bytes. The write is a foreachPartition over the
     |sources|-bounded content relation; the read is a real
     spark.read.format('binaryFile') scan."""
-    key = (spark.sparkContext.applicationId, d)
-    out_dir = _BINFILE_CACHE.get(key)
-    if out_dir is None:
-        out_dir = warehouse_path("binfiles", d)
+
+    def write(out_dir):
         import shutil
 
         shutil.rmtree(out_dir, ignore_errors=True)
@@ -93,7 +88,8 @@ def q_source_binaryfile(spark, d):
                     fh.write(r["content"].encode("utf-8"))
 
         contents.foreachPartition(write_files)
-        _BINFILE_CACHE[key] = out_dir
+
+    out_dir = snapshot(spark, d, "binfiles", write)
     bin_df = spark.read.format("binaryFile").load(out_dir)
     return (
         bin_df.select(

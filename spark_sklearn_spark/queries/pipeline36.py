@@ -69,7 +69,7 @@ from datetime import date
 from pyspark.sql import Window, functions as F
 
 from ..registry import query
-from ..sources.io import load
+from ..sources.io import load, snapshot, write_parquet
 from .pipeline6 import SESSION_GAP_US
 from .pipeline8 import TAIL_BASKETS_SQL, tail_baskets
 
@@ -256,23 +256,15 @@ def q_ts_concurrency(spark, d):
 # HITS hubs/authorities on the co-purchase bipartite graph
 # --------------------------------------------------------------------------
 
-_BASKET_SNAPSHOT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def copurchase_snapshot(spark, d):
-    """The tail-filtered (cust, part) incidence relation, memoized as
-    a parquet snapshot (the near_dup_edges pattern): q_graph_hits'
-    four message-passing consumers re-read one file instead of
-    re-running the basket build + popularity cap per consumer, and
-    the memo survives bench.py's per-query clearCache()."""
-    from ..sources.io import warehouse_path
-
-    key = (spark.sparkContext.applicationId, d)
-    path = _BASKET_SNAPSHOT_CACHE.get(key)
-    if path is None:
-        path = warehouse_path("copurchase_baskets", d)
-        tail_baskets(spark, d).write.mode("overwrite").parquet(path)
-        _BASKET_SNAPSHOT_CACHE[key] = path
+    """The tail-filtered (cust, part) incidence relation as a parquet
+    snapshot: q_graph_hits' four message-passing consumers re-read one
+    file instead of re-running the basket build + popularity cap per
+    consumer."""
+    path = snapshot(
+        spark, d, "copurchase_baskets",
+        lambda p: write_parquet(tail_baskets(spark, d), p),
+    )
     return spark.read.parquet(path)
 
 

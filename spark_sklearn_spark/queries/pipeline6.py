@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..registry import query
-from ..sources.io import load
+from ..sources.io import load, snapshot, write_parquet
 from ._helpers import DEC
 from .pipeline2 import _BIGRAMS_SQL
 
@@ -1138,20 +1138,13 @@ def q_win_pareto(spark, d):
 # Semantic-tier dedup clusters (components over embedding-LSH pairs)
 # --------------------------------------------------------------------------
 
-_SEMANTIC_COMP_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _semantic_components(spark, d):
     """(vec_id, cluster_id) over the planted SRP-LSH pair set,
-    memoized to parquet per (application, sf_dir) — same posture as
-    pipeline.dup_components."""
+    snapshotted like pipeline.dup_components."""
     from ..operators.components import connected_components
     from ..operators.srp import srp_near_dup_pairs
-    from ..sources.io import warehouse_path
 
-    key = (spark.sparkContext.applicationId, d)
-    path = _SEMANTIC_COMP_CACHE.get(key)
-    if path is None:
+    def write(path):
         emb = load(spark, d, "embeddings")
         base = emb.select("vec_id", "embedding")
         copies = emb.filter(F.col("vec_id") % 20 == 0).select(
@@ -1167,10 +1160,11 @@ def _semantic_components(spark, d):
         comp = connected_components(
             planted.select("vec_id"), pairs, "vec_id", "src", "dst"
         )
-        path = warehouse_path("semantic_components", d)
-        comp.write.mode("overwrite").parquet(path)
-        _SEMANTIC_COMP_CACHE[key] = path
-    return spark.read.parquet(path)
+        write_parquet(comp, path)
+
+    return spark.read.parquet(
+        snapshot(spark, d, "semantic_components", write)
+    )
 
 
 @query(
@@ -1220,9 +1214,8 @@ def q_dedup_semantic_cluster(spark, d):
     agnostic. Declared against DuckDB's recursive-CTE closure over
     the exact O(n²) cosine pair set; the Spark side never goes
     all-pairs (banded SRP candidates + exact verify only on
-    survivors). The (vec_id, cluster_id) assignment is snapshotted to
-    parquet per (application, sf_dir) — the same corpus-version memo
-    posture as pipeline.dup_components."""
+    survivors). The (vec_id, cluster_id) assignment is a snapshot
+    (sources/io.snapshot), like pipeline.dup_components."""
     comp = _semantic_components(spark, d)
     return (
         comp.groupBy("cluster_id")
@@ -1340,23 +1333,15 @@ def q_behavior_attribution(spark, d):
 # Partition-pruned source (hive-style partitioning + pruning)
 # --------------------------------------------------------------------------
 
-_PARTITIONED_EVENTS_CACHE: dict[tuple[str, str], str] = {}
-
-
 def partitioned_events(spark, d) -> str:
-    """Events written ONCE per (application, sf_dir) as a hive-style
-    event_type-partitioned parquet layout; returns the path."""
-    from ..sources.io import warehouse_path, write_parquet
-
-    key = (spark.sparkContext.applicationId, d)
-    path = _PARTITIONED_EVENTS_CACHE.get(key)
-    if path is None:
-        path = warehouse_path("events_by_type", d)
-        write_parquet(
-            load(spark, d, "events"), path, partition_by=["event_type"]
-        )
-        _PARTITIONED_EVENTS_CACHE[key] = path
-    return path
+    """Path of the events snapshot in a hive-style event_type-partitioned
+    parquet layout."""
+    return snapshot(
+        spark, d, "events_by_type",
+        lambda p: write_parquet(
+            load(spark, d, "events"), p, partition_by=["event_type"]
+        ),
+    )
 
 
 @query(

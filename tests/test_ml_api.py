@@ -292,3 +292,59 @@ def test_keyed_model_transform_keeps_unseen_keys(spark):
     assert set(rows) == {"a", "zz"}
     assert rows["a"] is not None and abs(rows["a"] - 1.0) < 1e-6
     assert rows["zz"] is None
+
+
+def test_best_model_before_fit_says_fit_first():
+    from pyspark.ml.classification import LogisticRegression
+
+    gs = GridSearchCV(LogisticRegression(), {"regParam": [0.1]})
+    with pytest.raises(AttributeError, match=r"fit\(\) first"):
+        gs.best_model_
+
+
+@pytest.mark.parametrize(
+    "fold",
+    [
+        "monotonically_increasing_id() % 4",  # 3 is outside [0, 3)
+        "CASE WHEN monotonically_increasing_id() % 10 != 0"
+        " THEN monotonically_increasing_id() % 3 END",  # some NULLs
+    ],
+    ids=["out_of_range", "null"],
+)
+def test_fold_col_rejects_bad_fold_values(spark, features_df, fold):
+    from pyspark.ml.classification import LogisticRegression
+
+    gs = GridSearchCV(
+        LogisticRegression(maxIter=5), {"regParam": [0.1]}, cv=3,
+        fold_col="fold",
+    )
+    with pytest.raises(ValueError, match=r"'fold'.*\[0, 3\)"):
+        gs.fit(features_df.withColumn("fold", F.expr(fold).cast("int")))
+
+
+def test_fold_col_fit_keeps_callers_job_group(spark, features_df):
+    """The candidate×fold fan-out runs its fits on pool threads; they
+    must still carry the caller's job group (so cancelJobGroup and
+    per-group accounting reach them)."""
+    from pyspark.ml.classification import LogisticRegression
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    df = features_df.withColumn(
+        "fold", (F.monotonically_increasing_id() % 2).cast("int")
+    )
+    gs = GridSearchCV(
+        LogisticRegression(maxIter=5), {"regParam": [0.01, 0.1]}, cv=2,
+        parallelism=4, fold_col="fold",
+    )
+    group = "test-fold-col-job-group"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "fold-column search")
+    try:
+        gs.fit(df)
+    finally:
+        sc._jsc.clearJobGroup()
+    # every job of the fit, pool threads included, is in the group:
+    # at least one per candidate×fold fit, none left ungrouped
+    assert len(tracker.getJobIdsForGroup(group)) >= 4
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped

@@ -117,9 +117,12 @@ def test_round12_batch_plans_are_scalable(spark):
     (global n agg) both run on that bounded relation, so the test
     instead asserts the scan side aggregates map-side (partial agg
     present) and reads only the two needed columns."""
+    import os
+
     import __spark_entry__ as entry
 
     from spark_sklearn_spark.plans import assert_scalable, executed_plan
+    from spark_sklearn_spark.sources.io import warehouse_path
 
     sf = "/root/testdata/sf0.001"
     qs = entry.queries()
@@ -139,7 +142,8 @@ def test_round12_batch_plans_are_scalable(spark):
     # snapshot — the global agg's SinglePartition runs on a
     # constant-size relation (Lloyd-shape exemption).
     plan = executed_plan(qs["q_emb_isotropy"](spark, sf))
-    assert "pca_cells" in plan  # reads the shared fit snapshot
+    fit = os.path.basename(warehouse_path("pca_fit", sf))
+    assert f"pca_fit/{fit}/cells" in plan  # reads the shared fit snapshot
 
 
 def test_isotropy_bounds(spark):

@@ -6,6 +6,8 @@ inferSchema is banned in pipelines)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -13,6 +15,7 @@ from pyspark.sql import functions as F
 from spark_sklearn_spark.sources.io import (
     load,
     read_table,
+    snapshot,
     supported_formats,
     write_table,
 )
@@ -67,3 +70,34 @@ def test_supported_formats_reports_builtins(spark):
     fmts = supported_formats(spark)
     for f in ("parquet", "orc", "json", "csv", "text"):
         assert f in fmts
+
+
+def test_snapshot_writes_once_per_key(spark, tmp_path):
+    """``write`` runs once per (sf_dir, kind); a different kind or a
+    different sf_dir builds its own snapshot."""
+    calls = []
+    d1, d2 = str(tmp_path / "sf_a"), str(tmp_path / "sf_b")
+    path = snapshot(spark, d1, "test_snapshot", calls.append)
+    assert snapshot(spark, d1, "test_snapshot", calls.append) == path
+    assert calls == [path]
+    assert re.search(r"/spark-warehouse/test_snapshot/sf_a_[0-9a-f]{6}$", path)
+    other_kind = snapshot(spark, d1, "test_snapshot_other", calls.append)
+    other_dir = snapshot(spark, d2, "test_snapshot", calls.append)
+    assert calls == [path, other_kind, other_dir]
+    assert len(set(calls)) == 3
+
+
+def test_snapshot_failed_write_memoizes_nothing(spark, tmp_path):
+    attempts = []
+
+    def flaky(path):
+        attempts.append(path)
+        if len(attempts) == 1:
+            raise OSError("disk full")
+
+    d = str(tmp_path / "sf")
+    with pytest.raises(OSError):
+        snapshot(spark, d, "test_snapshot", flaky)
+    path = snapshot(spark, d, "test_snapshot", flaky)
+    assert snapshot(spark, d, "test_snapshot", flaky) == path
+    assert attempts == [path, path]

@@ -13,7 +13,9 @@ Deliberate deltas from the reference (documented, not hidden):
   (`grid_search.py` ≈L190-260 broadcast X,y to every executor — the
   pattern that stops working the moment X outgrows one machine).
 - Candidate×fold fan-out (`base_search.py#_fit` ≈L60-180,
-  sc.parallelize one task per tuple) is CrossValidator(parallelism=N).
+  sc.parallelize one task per tuple) is one thread-pool wave of MLlib
+  fits over the cached input, with CrossValidator's rand(seed) split
+  (or a user fold column) and its avgMetrics.
 
 Per-key models keep the reference's data model exactly
 (`keyed_models.py` ≈L30-320): a models DataFrame of
@@ -88,13 +90,72 @@ class GridSearchCV:
     def fit(self, df: DataFrame) -> "GridSearchCV":
         """Run the cross-validated search on a (features, label)
         DataFrame; populates best_params_/best_score_/best_model_/
-        cv_results_ and returns self (sklearn-style)."""
+        cv_results_ and returns self (sklearn-style).
+
+        All candidate×fold fits fan out in ONE thread-pool wave (the
+        reference's base_search.py#_fit posture — one task per
+        (candidate, fold) tuple) instead of CrossValidator's sequential
+        per-fold waves, and the best-model refit on the full data runs
+        lazily on first access of best_model_. The avgMetrics equal
+        CrossValidator's for both split modes: validation = rows of
+        fold i, training = the rest, avgMetric = mean over folds of
+        evaluator.evaluate(model.transform(validation))."""
+        from concurrent.futures import ThreadPoolExecutor
+        from functools import partial
+
+        from pyspark.storagelevel import StorageLevel
+        from pyspark.util import inheritable_thread_target
+
         grid = self._grid()
         evaluator = self._evaluator()  # one instance: CV + direction check
-        if self.fold_col:
-            avg_metrics = self._fit_foldcol(df, grid, evaluator)
-        else:
-            avg_metrics = self._fit_cv(df, grid, evaluator)
+        # Every fit recomputes its input; caching it is the distributed
+        # analogue of the reference's broadcast of X/y
+        # (grid_search.py ≈L190-260). Respect an existing persist;
+        # release ours when done.
+        cached_here = df.storageLevel == StorageLevel.NONE
+        if cached_here:
+            df = df.persist()
+        fold_col = self.fold_col or "__fold"
+        folded = df if self.fold_col else self._rand_folds(df, fold_col)
+        fold = F.col(fold_col)
+        fold_datasets = [
+            (
+                folded.filter(fold != f).drop(fold_col),
+                folded.filter(fold == f).drop(fold_col),
+            )
+            for f in range(self.cv)
+        ]
+
+        def one(i, f):
+            train, test = fold_datasets[f]
+            model = self.estimator.fit(train, grid[i])
+            return i, f, evaluator.evaluate(model.transform(test))
+
+        # Each task carries its own copy of the caller's local
+        # properties (job group, scheduler pool, tags), so the fits on
+        # pool threads run under the caller's job group and concurrent
+        # SQL executions never mutate one shared property set.
+        tasks = [
+            inheritable_thread_target(df.sparkSession)(partial(one, i, f))
+            for i in range(len(grid))
+            for f in range(self.cv)
+        ]
+        metrics = np.zeros((self.cv, len(grid)))
+        try:
+            if self.fold_col:
+                self._check_folds(df)
+            with ThreadPoolExecutor(max_workers=self.parallelism) as pool:
+                for i, f, m in pool.map(lambda task: task(), tasks):
+                    metrics[f, i] = m
+        finally:
+            if cached_here:
+                df.unpersist()
+        # CrossValidator._gen_avg_and_std_metrics' reduction, so the
+        # averages match it to the last bit.
+        avg_metrics = np.mean(metrics, axis=0).tolist()
+        self._best_model = None
+        self._fit_df = df.drop(self.fold_col) if self.fold_col else df
+        self._grid_cache = grid
         self.cv_results_ = [
             {
                 "params": {p.name: v for p, v in pm.items()},
@@ -114,90 +175,23 @@ class GridSearchCV:
         self.best_score_ = self.cv_results_[best]["mean_test_score"]
         return self
 
-    def _fit_cv(self, df: DataFrame, grid, evaluator) -> list[float]:
-        """Default-split path: delegate to CrossValidator (its rand(seed)
-        kFold split is engine-internal and must stay MLlib's own)."""
-        from pyspark.ml.tuning import CrossValidator
-        from pyspark.storagelevel import StorageLevel
-
-        cv = CrossValidator(
-            estimator=self.estimator,
-            estimatorParamMaps=grid,
-            evaluator=evaluator,
-            numFolds=self.cv,
-            parallelism=self.parallelism,
-            seed=self.seed,
+    def _rand_folds(self, df: DataFrame, fold_col: str) -> DataFrame:
+        """CrossValidator._kFold's default split as a fold column: with
+        h = 1/cv, row r is in validation fold i iff i*h <= r < (i+1)*h
+        over rand(seed). rand is drawn on the persisted input, where
+        CrossValidator draws it; a row with r >= cv*h gets fold cv and
+        so trains in every fold, as in CrossValidator. rand lies in
+        [0, 1), so the first bound r < (i+1)*h that holds names i."""
+        h = 1.0 / self.cv
+        r = F.col("__rand")
+        fold = F.when(r < h, 0)
+        for i in range(1, self.cv):
+            fold = fold.when(r < (i + 1) * h, i)
+        return (
+            df.select("*", F.rand(self.seed).alias("__rand"))
+            .withColumn(fold_col, fold.otherwise(self.cv))
+            .drop("__rand")
         )
-        # CrossValidator recomputes its input for every candidate×fold
-        # fit; caching it is the distributed analogue of the
-        # reference's broadcast of X/y (grid_search.py ≈L190-260) —
-        # measured 2.5× on the embeddings fixture. Respect an existing
-        # persist; release ours when done.
-        cached_here = df.storageLevel == StorageLevel.NONE
-        if cached_here:
-            df = df.persist()
-        try:
-            model = cv.fit(df)
-        finally:
-            if cached_here:
-                df.unpersist()
-        self._best_model = model.bestModel
-        return list(model.avgMetrics)
-
-    def _fit_foldcol(self, df: DataFrame, grid, evaluator) -> list[float]:
-        """Explicit-fold path: fan ALL candidate×fold fits out in ONE
-        thread-pool wave (the reference's base_search.py#_fit posture —
-        one task per (candidate, fold) tuple) instead of
-        CrossValidator's sequential per-fold waves, and skip its final
-        best-model refit on the full data (best_model_ refits lazily on
-        first access). Semantics match CrossValidator with foldCol
-        exactly: validation = rows where fold == i, training = the
-        rest, avgMetric = mean over folds of
-        evaluator.evaluate(model.transform(validation)). r18 measured
-        the grid query 5.0 -> ~2.9 s quiet (3 fit waves + 0.9 s refit
-        -> 1 wave, no refit)."""
-        from concurrent.futures import ThreadPoolExecutor
-        from functools import partial
-
-        from pyspark.storagelevel import StorageLevel
-        from pyspark.util import inheritable_thread_target
-
-        cached_here = df.storageLevel == StorageLevel.NONE
-        if cached_here:
-            df = df.persist()
-        fold_datasets = []
-        for f in range(self.cv):
-            train = df.filter(F.col(self.fold_col) != f).drop(self.fold_col)
-            test = df.filter(F.col(self.fold_col) == f).drop(self.fold_col)
-            fold_datasets.append((train, test))
-
-        def one(i, f):
-            train, test = fold_datasets[f]
-            model = self.estimator.fit(train, grid[i])
-            return i, evaluator.evaluate(model.transform(test))
-
-        # Each task carries its own copy of the caller's local
-        # properties (job group, scheduler pool, tags), so the fits on
-        # pool threads run under the caller's job group and concurrent
-        # SQL executions never mutate one shared property set.
-        tasks = [
-            inheritable_thread_target(df.sparkSession)(partial(one, i, f))
-            for i in range(len(grid))
-            for f in range(self.cv)
-        ]
-        metrics = np.zeros(len(grid))
-        try:
-            self._check_folds(df)
-            with ThreadPoolExecutor(max_workers=self.parallelism) as pool:
-                for i, m in pool.map(lambda task: task(), tasks):
-                    metrics[i] += m / self.cv
-        finally:
-            if cached_here:
-                df.unpersist()
-        self._best_model = None
-        self._fit_df = df
-        self._grid_cache = grid
-        return metrics.tolist()
 
     def _check_folds(self, df: DataFrame) -> None:
         """Fail loudly on NULL or out-of-range fold values — one
@@ -217,17 +211,16 @@ class GridSearchCV:
 
     @property
     def best_model_(self):
-        """The best candidate refit on the full data. Lazy on the
-        explicit-fold path: the refit is a full extra fit the search
-        itself never consumes, so it runs on first access only."""
+        """The best candidate refit on the full data. Lazy: the refit
+        is a full extra fit the search itself never consumes, so it
+        runs on first access only."""
         if self._best_model is None:
             if self._fit_df is None:
                 raise AttributeError(
                     "best_model_ is not available: call fit() first"
                 )
             self._best_model = self.estimator.fit(
-                self._fit_df.drop(self.fold_col),
-                self._grid_cache[self.best_index_],
+                self._fit_df, self._grid_cache[self.best_index_]
             )
         return self._best_model
 
@@ -369,6 +362,9 @@ class KeyedEstimator:
         output_col: str = "output",
         fit_fn: Callable[[np.ndarray, np.ndarray], Any] = _ols_fit,
     ):
+        if fit_fn is _ols_fit and y_col is None:
+            # caught here, not as a lstsq failure inside a Python worker
+            raise ValueError("the default OLS fit_fn needs a y_col")
         self.key_cols = list(key_cols)
         self.x_cols = list(x_cols)
         self.y_col = y_col

@@ -30,23 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def shingle_words(text_col, n: int = 3):
-    """Distinct word-level n-gram shingles of a whitespace-tokenized
-    text column (array<string>). Empty when the doc has < n words —
-    guarded explicitly, because sequence(1, 0) would generate a
-    DESCENDING [1, 0] (not an empty array) and index out of bounds."""
-    w = F.split(text_col, " ")
-    idx = F.sequence(F.lit(1), F.size(w) - (n - 1))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            "_", *[F.element_at(w, i + off) for off in range(n)]
-        ),
-    )
-    empty = F.array().cast("array<string>")
-    return F.when(F.size(w) >= n, F.array_distinct(grams)).otherwise(empty)
-
-
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,

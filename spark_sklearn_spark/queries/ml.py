@@ -5,10 +5,11 @@ The reference's purpose was distributing sklearn model selection over
 Spark: ``python/spark_sklearn/grid_search.py#GridSearchCV`` (≈L1-330)
 and ``random_search.py#RandomizedSearchCV`` broadcast X/y and fan
 candidate×fold fits out as one task each
-(``base_search.py#_fit`` ≈L60-180). On modern Spark that machinery IS
-``pyspark.ml.tuning.CrossValidator(parallelism=N)`` — candidate×fold
-fits run concurrently against distributed data, no broadcast of a
-materialized matrix, no driver-side collect of fitted models.
+(``base_search.py#_fit`` ≈L60-180). Here ``ml_api.GridSearchCV``
+runs the same fan-out as one thread-pool wave of MLlib fits —
+candidate×fold fits run concurrently against distributed data, no
+broadcast of a materialized matrix, no driver-side collect of fitted
+models.
 sklearn itself is absent on this machine (SURVEY §0), so estimators
 are MLlib (LogisticRegression on the embeddings table).
 
@@ -51,20 +52,35 @@ def _features_df(spark, d):
     )
 
 
-def _results_df(spark, search):
-    """cv_results_ → small DataFrame (the reference's cv_results_
-    shape, grid_search.py#fit). One row per candidate."""
-    rows = [
+def _search_shape(spark, search, feat):
+    """The candidate×fold SHAPE of a fitted search: the candidates it
+    actually evaluated (read back from cv_results_, NOT re-typed
+    constants) crossed with the fold sizes of ``feat``, one row per
+    (candidate, fold). A bounded cv-row fold-count collect — no
+    joins."""
+    cand = sorted(
         (
             float(r["params"]["regParam"]),
             float(r["params"].get("elasticNetParam", 0.0)),
-            round(float(r["mean_test_score"]), 6),
         )
         for r in search.cv_results_
+    )
+    folds = sorted(
+        (r["fold"], r["n"])
+        for r in feat.groupBy("fold")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    rows = [
+        (rp, en, int(f), int(n), search.cv)
+        for rp, en in cand
+        for f, n in folds
     ]
     return spark.createDataFrame(
-        rows, "reg_param double, elastic_net double, avg_accuracy double"
-    ).orderBy("reg_param", "elastic_net")
+        rows,
+        "reg_param double, elastic_net double, fold int, "
+        "fold_n bigint, n_folds int",
+    ).orderBy("reg_param", "elastic_net", "fold")
 
 
 _GRID_SEARCH_ORACLE = f"""
@@ -99,9 +115,9 @@ def q_ml_grid_search(spark, d):
     What is hash-checked: the candidate×fold SHAPE — the param grid
     the fit actually enumerated (params read back from cv_results_,
     NOT re-typed constants), the fold assignment, and the fold sizes.
-    The split is reproducible by construction: GridSearchCV passes a
-    portable h56(vec_id)%3 foldCol to CrossValidator, so DuckDB
-    rebuilds the exact fold sizes from the raw table. avgMetric stays
+    The split is reproducible by construction: GridSearchCV splits on
+    a portable h56(vec_id)%3 fold column, so DuckDB rebuilds the exact
+    fold sizes from the raw table. avgMetric stays
     engine-side (MLlib LBFGS is not SQL-expressible); metric-direction
     and best-params invariants are pinned in tests/test_ml_api.py.
 
@@ -122,30 +138,7 @@ def q_ml_grid_search(spark, d):
         seed=42,
         fold_col="fold",
     ).fit(feat)
-    # the fitted search must report exactly the 2x2 grid
-    cand = sorted(
-        (
-            float(r["params"]["regParam"]),
-            float(r["params"].get("elasticNetParam", 0.0)),
-        )
-        for r in gs.cv_results_
-    )
-    folds = sorted(
-        (r["fold"], r["n"])
-        for r in feat.groupBy("fold")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    rows = [
-        (rp, en, int(f), int(n), 3)
-        for rp, en in cand
-        for f, n in folds
-    ]
-    return spark.createDataFrame(
-        rows,
-        "reg_param double, elastic_net double, fold int, "
-        "fold_n bigint, n_folds int",
-    ).orderBy("reg_param", "elastic_net", "fold")
+    return _search_shape(spark, gs, feat)
 
 
 # The seed-42 draw of RandomizedSearchCV's ParameterSampler-parity
@@ -207,29 +200,7 @@ def q_ml_random_search(spark, d):
         seed=42,
         fold_col="fold",
     ).fit(feat)
-    cand = sorted(
-        (
-            float(r["params"]["regParam"]),
-            float(r["params"].get("elasticNetParam", 0.0)),
-        )
-        for r in rs.cv_results_
-    )
-    folds = sorted(
-        (r["fold"], r["n"])
-        for r in feat.groupBy("fold")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    rows = [
-        (rp, en, int(f), int(n), 3)
-        for rp, en in cand
-        for f, n in folds
-    ]
-    return spark.createDataFrame(
-        rows,
-        "reg_param double, elastic_net double, fold int, "
-        "fold_n bigint, n_folds int",
-    ).orderBy("reg_param", "elastic_net", "fold")
+    return _search_shape(spark, rs, feat)
 
 
 @query(

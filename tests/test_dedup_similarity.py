@@ -11,8 +11,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from spark_sklearn_spark.operators.minhash import near_dup_pairs, shingle_words
+from spark_sklearn_spark.operators.minhash import near_dup_pairs
 from spark_sklearn_spark.operators.similarity import cosine_pairs, cosine_topk
+from spark_sklearn_spark.queries.pipeline4 import _word_ngrams
 
 VOCAB = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu "
@@ -58,7 +59,8 @@ def test_shingles_short_docs_are_empty(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": [0, 1], "text": ["one two", "a b c d"]})
     )
-    out = df.select(F.size(shingle_words(F.col("text"), 3)).alias("n")).collect()
+    w = F.split(F.col("text"), " ")
+    out = df.select(F.size(_word_ngrams(w, F.size(w), 3)).alias("n")).collect()
     assert [r["n"] for r in out] == [0, 2]
 
 

@@ -322,8 +322,10 @@ def test_fold_col_rejects_bad_fold_values(spark, features_df, fold):
         gs.fit(features_df.withColumn("fold", F.expr(fold).cast("int")))
 
 
-def test_fold_col_fit_keeps_callers_job_group(spark, features_df):
-    """The candidate×fold fan-out runs its fits on pool threads; they
+@pytest.mark.parametrize("fold_col", [None, "fold"])
+def test_search_fit_keeps_callers_job_group(spark, features_df, fold_col):
+    """The candidate×fold fan-out runs its fits on pool threads, with
+    the default rand(seed) split and with a fold column alike; they
     must still carry the caller's job group (so cancelJobGroup and
     per-group accounting reach them)."""
     from pyspark.ml.classification import LogisticRegression
@@ -335,11 +337,11 @@ def test_fold_col_fit_keeps_callers_job_group(spark, features_df):
     )
     gs = GridSearchCV(
         LogisticRegression(maxIter=5), {"regParam": [0.01, 0.1]}, cv=2,
-        parallelism=4, fold_col="fold",
+        parallelism=4, fold_col=fold_col,
     )
-    group = "test-fold-col-job-group"
+    group = f"test-search-job-group-{fold_col}"
     ungrouped = set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup(group, "fold-column search")
+    sc.setJobGroup(group, "grid search")
     try:
         gs.fit(df)
     finally:
@@ -348,3 +350,46 @@ def test_fold_col_fit_keeps_callers_job_group(spark, features_df):
     # at least one per candidate×fold fit, none left ungrouped
     assert len(tracker.getJobIdsForGroup(group)) >= 4
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+@pytest.mark.parametrize("cv", [2, 3])
+@pytest.mark.parametrize("fold_col", [None, "fold"])
+def test_search_avg_metrics_equal_cross_validator(
+    spark, features_df, fold_col, cv
+):
+    """Both split modes reproduce CrossValidator exactly: the default
+    rand(seed) split puts the same rows in each fold, a fold column
+    splits as foldCol does, and the averages are reduced the same way,
+    so the mean test scores equal avgMetrics to the last bit."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
+    from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
+
+    df = features_df.withColumn(
+        "fold", (F.monotonically_increasing_id() % cv).cast("int")
+    ).persist()
+    try:
+        lr = LogisticRegression(maxIter=10)
+        gs = GridSearchCV(
+            lr, {"regParam": [0.01, 0.1, 0.5]}, cv=cv, seed=7,
+            fold_col=fold_col,
+        ).fit(df)
+        grid = ParamGridBuilder().addGrid(
+            lr.regParam, [0.01, 0.1, 0.5]
+        ).build()
+        cvm = CrossValidator(
+            estimator=lr,
+            estimatorParamMaps=grid,
+            evaluator=MulticlassClassificationEvaluator(metricName="accuracy"),
+            numFolds=cv,
+            seed=7,
+            **({"foldCol": fold_col} if fold_col else {}),
+        ).fit(df)
+    finally:
+        df.unpersist()
+    assert [r["mean_test_score"] for r in gs.cv_results_] == cvm.avgMetrics
+
+
+def test_keyed_estimator_default_fit_needs_y_col():
+    with pytest.raises(ValueError, match="y_col"):
+        KeyedEstimator(["k"], ["x"])

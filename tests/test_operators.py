@@ -51,6 +51,12 @@ def test_gapply_matches_pandas_oracle(spark):
     pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
 
 
+def test_gapply_rejects_non_schema(spark):
+    df = spark.createDataFrame(pd.DataFrame({"k": [1], "v": [1.0]}))
+    with pytest.raises(TypeError, match="StructType or DDL string"):
+        gapply(df, "k", lambda key, g: g, ["k", "v"])
+
+
 def test_asof_tiebreak_picks_greatest(spark):
     """Two right rows at the identical timestamp: the greater tiebreak
     (event_id) must win — pinned semantics, not partition luck."""

@@ -11,9 +11,8 @@ Two physical strategies, chosen by threshold regime:
   ~100× faster per pair than per-row JVM expression folds. Replication
   factor is B+1 per vector — pick B ≈ sqrt(#cores·k) so tasks fit.
 - For production near-duplicate thresholds (τ ≥ 0.9) the LSH band
-  join in ``operators/minhash.py`` (set similarity) or a
-  sign-random-projection variant of the same banding is the sublinear
-  scale path; exact block-matmul remains the verifier for candidates.
+  join in ``operators/lsh.py`` (MinHash for set similarity, sign
+  random projections for vectors) is the sublinear scale path; exact block-matmul remains the verifier for candidates.
 
 ``cosine_topk`` — brute-force top-k against one query vector: a
 broadcast of the single query row + one JVM-side fold per vector, then

@@ -5,7 +5,7 @@ TF-IDF, quality), multimodal joins.
 
 Scale posture (the reason these shapes were chosen):
 - exact dedup: one hash-groupBy, partial-agg friendly, no window.
-- minhash dedup: LSH band join (operators/minhash.py) — candidate
+- minhash dedup: LSH band join (operators/lsh.py) — candidate
   generation is ~linear; the O(n²) exact verifier only sees
   candidates. Never an all-pairs product.
 - knn: broadcast the single query row, fold JVM-side, top-k via
@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..operators.minhash import near_dup_pairs
+from ..operators.lsh import band_pairs, near_dup_pairs
 from ..operators.similarity import cosine_pairs, cosine_topk
 from ..registry import query
 from ..sources.io import load, snapshot, write_parquet
@@ -421,6 +421,30 @@ def simhash_sigs(spark, d):
     return counts.select("doc_id", sig_expr.alias("sig"))
 
 
+def simhash_candidates(spark, d):
+    """Distinct SimHash band candidates ``(id_a < id_b, sig_a, sig_b)``
+    from one band per signature byte — the 7-byte banding of
+    q_dedup_simhash and q_dedup_simhash_hist."""
+    bands = simhash_sigs(spark, d).select(
+        "doc_id",
+        "sig",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("byte_idx"),
+                        F.shiftrightunsigned(F.col("sig"), i * 8)
+                        .bitwiseAND(F.lit(255))
+                        .alias("byte_val"),
+                    )
+                    for i in range(7)
+                ]
+            )
+        ).alias("band"),
+    ).select("doc_id", "sig", "band.byte_idx", "band.byte_val")
+    return band_pairs(bands, "doc_id", ["byte_idx", "byte_val"], carry=["sig"])
+
+
 @query(
     "q_dedup_simhash",
     oracle=f"""
@@ -467,37 +491,8 @@ def q_dedup_simhash(spark, d):
     bit_count(xor) verification JVM-side. Candidates-never-all-pairs,
     same posture as MinHash; the oracle's O(n²) signature compare is
     the semantic spec the banding provably equals."""
-    sigs = simhash_sigs(spark, d)
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("byte_idx"),
-                        F.shiftrightunsigned(F.col("sig"), i * 8)
-                        .bitwiseAND(F.lit(255))
-                        .alias("byte_val"),
-                    )
-                    for i in range(7)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "sig", "band.byte_idx", "band.byte_val")
-    a = bands.select(
-        F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"),
-        "byte_idx", "byte_val",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"),
-        "byte_idx", "byte_val",
-    )
     return (
-        a.join(b, ["byte_idx", "byte_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
+        simhash_candidates(spark, d)
         .withColumn(
             "hamming",
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))),
@@ -650,6 +645,21 @@ def q_dedup_embedding(spark, d):
     return emb.select("vec_id").join(dropped, "vec_id", "left_anti")
 
 
+def planted_embeddings(spark, d):
+    """(vec_id, embedding): the embeddings plus a scaled copy
+    (vec_id + 1e6, 2·v) of every 20th vector — the planted near-dups
+    of the embedding-LSH dedup tier (q_dedup_embedding_lsh,
+    q_dedup_semantic_cluster)."""
+    emb = load(spark, d, "embeddings")
+    copies = emb.filter(F.col("vec_id") % 20 == 0).select(
+        (F.col("vec_id") + 1000000).alias("vec_id"),
+        F.transform("embedding", lambda x: x.cast("double") * 2.0).alias(
+            "embedding"
+        ),
+    )
+    return emb.select("vec_id", "embedding").unionByName(copies)
+
+
 @query(
     "q_dedup_embedding_lsh",
     oracle="""
@@ -676,7 +686,7 @@ def q_dedup_embedding(spark, d):
 )
 def q_dedup_embedding_lsh(spark, d):
     """Embedding near-dup dedup on the SRP-LSH sublinear path
-    (operators/srp.py) at a production-style τ=0.98 — banded candidate
+    (operators/lsh.py) at a production-style τ=0.98 — banded candidate
     join, exact-cosine verify on candidates only, NO all-pairs stage
     (plan-asserted in tests/test_plans.py). The fixture embeddings are
     isotropic (max pairwise cos ≈ 0.46), so the query plants scaled
@@ -686,17 +696,9 @@ def q_dedup_embedding_lsh(spark, d):
     deterministic. The oracle is the exact O(n²) dedup over the same
     planted relation; q_dedup_embedding (exact block-matmul, τ=0.4)
     stays as the low-τ recall oracle."""
-    from ..operators.srp import srp_near_dup_pairs
+    from ..operators.lsh import srp_near_dup_pairs
 
-    emb = load(spark, d, "embeddings")
-    base = emb.select("vec_id", "embedding")
-    copies = emb.filter(F.col("vec_id") % 20 == 0).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform("embedding", lambda x: x.cast("double") * 2.0).alias(
-            "embedding"
-        ),
-    )
-    planted = base.unionByName(copies)
+    planted = planted_embeddings(spark, d)
     pairs = srp_near_dup_pairs(planted, "vec_id", "embedding", threshold=0.98)
     dropped = pairs.select(F.col("id_b").alias("vec_id")).distinct()
     return planted.select("vec_id").join(dropped, "vec_id", "left_anti")

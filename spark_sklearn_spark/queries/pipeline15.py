@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..operators.lsh import min_signature
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
@@ -965,8 +966,8 @@ def _mhc_oracle() -> str:
 def q_text_minhash_containment(spark, d):
     """Minhash Jaccard/containment estimates vs exact, per candidate
     pair (module comment). Plan: the shared rare-gram postings
-    relation feeds (a) the exact pair join and (b) a 16-way
-    perm-exploded min agg (one shuffle on (doc, perm), corpus-linear);
+    relation feeds (a) the exact pair join and (b) a 16-slot
+    per-distinct-gram min signature (one agg on doc, corpus-linear);
     the estimate join then runs on the bounded candidate set ×
     16-slot signatures. All outputs integer ppm."""
     from .pipeline2 import bigram_overlap, rare_grams
@@ -983,38 +984,24 @@ def q_text_minhash_containment(spark, d):
         .filter(F.col("jacc") >= 0.4)
         .drop("jacc")
     )
-    # r17: h56('mh{p}:' || g) depends only on (p, g) — compute the 16
-    # hashes ONCE per DISTINCT gram as an array (the _mh_capped_and_
-    # bands rewrite), join back on g (postings already partitioned on
-    # g by the DF-cap window → exchange reuse), and take the per-doc
-    # minima in ONE 16-column agg. The signature then stays WIDE: the
-    # per-pair eq_slots is a codegen'd 16-term comparison sum after
-    # two key joins — the old 16× perm explode (4M md5s + a
-    # (doc, perm) shuffle + a 16×-fanned slot join + re-agg) is gone.
-    # Values identical: same hash expression, same minima, same sum.
-    gh = rare.select("g").distinct().select(
+    # The signature stays WIDE (lsh.min_signature: 16 hashes once per
+    # distinct gram, postings already partitioned on g by the DF-cap
+    # window, one 16-column min agg): the per-pair eq_slots is a
+    # codegen'd 16-term comparison sum after two key joins, not a 16×
+    # perm explode with a (doc, perm) shuffle and a slot join.
+    sigw = min_signature(
+        rare,
+        "doc_id",
         "g",
-        F.array(
-            *[h56(f"concat('mh{p}:', g)") for p in range(_MHC_PERMS)]
-        ).alias("hs"),
-    )
-    sigw = (
-        rare.join(gh, "g")
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min(F.col("hs")[p]).alias(f"m{p}")
-                for p in range(_MHC_PERMS)
-            ]
-        )
+        [h56(f"concat('mh{p}:', g)") for p in range(_MHC_PERMS)],
     )
     sa = sigw.select(
         F.col("doc_id").alias("doc_a"),
-        *[F.col(f"m{p}").alias(f"ma{p}") for p in range(_MHC_PERMS)],
+        *[F.col(f"mh{p}").alias(f"ma{p}") for p in range(_MHC_PERMS)],
     )
     sb = sigw.select(
         F.col("doc_id").alias("doc_b"),
-        *[F.col(f"m{p}").alias(f"mb{p}") for p in range(_MHC_PERMS)],
+        *[F.col(f"mh{p}").alias(f"mb{p}") for p in range(_MHC_PERMS)],
     )
     eq_expr = " + ".join(
         f"IF(ma{p} = mb{p}, 1, 0)" for p in range(_MHC_PERMS)

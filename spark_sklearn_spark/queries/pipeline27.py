@@ -31,7 +31,7 @@ matrix onto the exploded (vec, dim) stream + two combinable aggs —
 O(n * d * planes) map-side work, one shuffle on vec_id. The truth
 panel is a bounded probe fan-out (the q_sim_knn_batch shape) and the
 candidate check is band-keyed on the probe side only — never
-all-pairs. Production retrieval keeps operators/srp.py's 64x16
+all-pairs. Production retrieval keeps operators/lsh.py's 64x16
 scheme (bucket sizes ~n/2^16); the 8x8 scheme here is the MEASURED
 curve, restricted to the probe panel exactly because r=8 buckets
 would go quadratic unrestricted.

@@ -1373,42 +1373,11 @@ def q_dedup_simhash_hist(spark, d):
     The oracle enumerates the identical candidate set via the
     ∃-equal-byte predicate over the O(n²) signature pairs (the
     semantic spec the banding equals by construction)."""
-    from .pipeline import simhash_sigs
+    from .pipeline import simhash_candidates
 
-    sigs = simhash_sigs(spark, d)
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("byte_idx"),
-                        F.shiftrightunsigned(F.col("sig"), i * 8)
-                        .bitwiseAND(F.lit(255))
-                        .alias("byte_val"),
-                    )
-                    for i in range(7)
-                ]
-            )
-        ).alias("band"),
-    ).select(
-        "doc_id", "sig", "band.byte_idx", "band.byte_val"
-    )
-    a = bands.selectExpr(
-        "doc_id AS id_a", "sig AS sig_a", "byte_idx", "byte_val"
-    )
-    b = bands.selectExpr(
-        "doc_id AS id_b", "sig AS sig_b", "byte_idx", "byte_val"
-    )
-    cand = (
-        a.join(b, ["byte_idx", "byte_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-    )
     return (
-        cand.select(
+        simhash_candidates(spark, d)
+        .select(
             F.expr("bit_count(sig_a ^ sig_b)").cast("long").alias(
                 "hamming"
             )

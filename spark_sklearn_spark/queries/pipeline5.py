@@ -697,7 +697,7 @@ def q_text_boilerplate(spark, d):
     same stream on the gram key (vocabulary-sized relation, AQE
     broadcasts when it fits) — then a per-doc combinable rollup.
     The gram stream is staged once (same multi-consumer rule as
-    operators/srp.py); the boilerplate share is exact integer ppm
+    operators/lsh.py); the boilerplate share is exact integer ppm
     (long div long on both engines)."""
     from .pipeline4 import _word_ngrams
 

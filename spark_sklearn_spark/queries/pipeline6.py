@@ -1142,18 +1142,11 @@ def _semantic_components(spark, d):
     """(vec_id, cluster_id) over the planted SRP-LSH pair set,
     snapshotted like pipeline.dup_components."""
     from ..operators.components import connected_components
-    from ..operators.srp import srp_near_dup_pairs
+    from ..operators.lsh import srp_near_dup_pairs
+    from .pipeline import planted_embeddings
 
     def write(path):
-        emb = load(spark, d, "embeddings")
-        base = emb.select("vec_id", "embedding")
-        copies = emb.filter(F.col("vec_id") % 20 == 0).select(
-            (F.col("vec_id") + 1000000).alias("vec_id"),
-            F.transform(
-                "embedding", lambda x: x.cast("double") * 2.0
-            ).alias("embedding"),
-        )
-        planted = base.unionByName(copies)
+        planted = planted_embeddings(spark, d)
         pairs = srp_near_dup_pairs(
             planted, "vec_id", "embedding", threshold=0.98
         ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))

@@ -35,6 +35,7 @@ import os
 
 from pyspark.sql import Window, functions as F
 
+from ..operators.lsh import band_pairs, min_signature
 from ..registry import query
 from ..sources.io import load, snapshot, write_parquet
 from ._helpers import DEC
@@ -1377,35 +1378,12 @@ def _mh_capped_and_bands(spark, d, docs=None, form="explode"):
             F.min(F.when(F.col("i") % MH_R == 1, F.col("mh"))).alias("h1"),
         )
         return capped, bands
-    else:
-        # form == "array":
-        # h56(i:g) depends only on (i, g), never on doc_id — so the 16
-        # md5-head hashes are computed ONCE per DISTINCT gram (postings /
-        # distinct-gram ratio ≈ 9.6x at sf0.1: 260k postings vs 27k grams)
-        # as a 16-element array, joined back onto the postings on g (both
-        # sides descend from the DF-cap window's hashpartition(g) exchange,
-        # so the join adds no new shuffle of the postings), and the per-doc
-        # signature is 16 array-element minima in ONE hash agg on doc_id.
-        # Replaces the 16x posting explode (4.2M md5s + a (doc_id, i)
-        # shuffle of the exploded rows + a second band re-agg) — values
-        # are bit-identical: same hash expression, same minima, bands
-        # assembled from the same (i -> band, slot) layout.
-        gh = capped.select("g").distinct().select(
-            "g",
-            F.array(
-                *[h56(f"concat('{i}:', g)") for i in range(MH_K)]
-            ).alias("hs"),
-        )
-        sig = (
-            capped.join(gh, "g")
-            .groupBy("doc_id")
-            .agg(
-                *[
-                    F.min(F.col("hs")[i]).alias(f"mh{i}")
-                    for i in range(MH_K)
-                ]
-            )
-        )
+    # form == "array": 16 hashes per DISTINCT gram (260k postings vs
+    # 27k grams at sf0.1); the DF-cap window already partitioned the
+    # postings on g, so min_signature's join-back adds no shuffle.
+    sig = min_signature(
+        capped, "doc_id", "g", [h56(f"concat('{i}:', g)") for i in range(MH_K)]
+    )
     stack_args = ", ".join(
         f"{b}L, mh{MH_R * b}, mh{MH_R * b + 1}"
         for b in range(MH_K // MH_R)
@@ -1429,7 +1407,7 @@ def q_dedup_recall_minhash(spark, d):
     on this fixture's bimodal mass that reads as a ~0 candidate
     (collision) rate on the J<0.1 noise bucket and ~100% recall on
     the J>=0.9 dup bucket — the separation that justifies production
-    banding choices (the r=4/b=32 operator in operators/minhash.py
+    banding choices (the r=4/b=32 operator in operators/lsh.py
     targets J >= 0.8 at 3e-9 miss). The measurement itself is
     hash-verified because signatures use the proven md5-head
     portable hash (CLAUDE.md), not engine-specific functions: both
@@ -1439,17 +1417,8 @@ def q_dedup_recall_minhash(spark, d):
     signatures AND the exact-pairs postings join; bands equi-join on
     (band, h0, h1); the rollup is a 10-row agg."""
     capped, bands = _mh_capped_and_bands(spark, d)
-    ba = bands.select(
-        F.col("doc_id").alias("doc_a"), "band", "h0", "h1"
-    )
-    bb = bands.select(
-        F.col("doc_id").alias("doc_b"), "band", "h0", "h1"
-    )
-    cand = (
-        ba.join(bb, ["band", "h0", "h1"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    cand = band_pairs(bands, "doc_id", ["band", "h0", "h1"]).toDF(
+        "doc_a", "doc_b"
     )
     sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     ga = capped.select(F.col("doc_id").alias("doc_a"), "g")

@@ -11,7 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from spark_sklearn_spark.operators.minhash import near_dup_pairs
+from spark_sklearn_spark.operators.lsh import near_dup_pairs
 from spark_sklearn_spark.operators.similarity import cosine_pairs, cosine_topk
 from spark_sklearn_spark.queries.pipeline4 import _word_ngrams
 
@@ -165,12 +165,35 @@ def test_decode_image_real_path_when_pil_present():
     np.testing.assert_array_equal(got, raster)
 
 
+def test_band_pairs_contract(spark):
+    """band_pairs: one row per pair however many bands it shares,
+    id_a < id_b (so no self-pairs), carried columns once per side, and
+    no persist of its own — callers decide what to stage."""
+    from spark_sklearn_spark.operators.lsh import band_pairs
+
+    bands = spark.createDataFrame(
+        [
+            (3, 0, 7, 30), (3, 1, 9, 30),
+            (2, 0, 7, 20), (2, 1, 8, 20),
+            (1, 0, 7, 10), (1, 1, 8, 10),
+            (4, 1, 5, 40),
+        ],
+        "id long, band int, h long, sig long",
+    )
+    pairs = band_pairs(bands, "id", ["band", "h"], carry=["sig"])
+    assert pairs.columns == ["id_a", "id_b", "sig_a", "sig_b"]
+    rows = [tuple(r) for r in pairs.collect()]
+    assert sorted(rows) == [(1, 2, 10, 20), (1, 3, 10, 30), (2, 3, 20, 30)]
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan
+
+
 def test_srp_planted_copies_recovered_exactly(spark):
     """Isotropic vectors + scaled copies: SRP-LSH at tau=0.98 returns
     exactly the planted (source, copy) pairs — sign signatures are
     scale-invariant, so recall on exact-direction dups is 1.0, and the
     exact-cosine verify kills every band false positive."""
-    from spark_sklearn_spark.operators.srp import srp_near_dup_pairs
+    from spark_sklearn_spark.operators.lsh import srp_near_dup_pairs
 
     rng = np.random.RandomState(23)
     n, dim = 50, 16
@@ -195,7 +218,7 @@ def test_srp_recall_vs_exact_at_high_tau(spark):
     must equal the exact block-matmul pair set at tau=0.95 — the
     banded path loses nothing the exact verifier would keep (fixed
     seeds make this deterministic; analytic miss prob ~2e-6/pair)."""
-    from spark_sklearn_spark.operators.srp import srp_near_dup_pairs
+    from spark_sklearn_spark.operators.lsh import srp_near_dup_pairs
 
     rng = np.random.RandomState(29)
     n, dim = 40, 16

@@ -33,60 +33,27 @@ def test_multi_ntile_matches_sequential(spark):
 
 
 def test_distinct_gram_minhash_matches_exploded(spark):
-    """The per-distinct-gram hash-array signature (r17) must produce
-    the same (doc, band, h0, h1) rows as the 16x-exploded per-posting
-    form it replaced."""
-    from pyspark.sql import functions as F
+    """_mh_capped_and_bands' two signature forms — the 16x posting
+    explode and the per-distinct-gram lsh.min_signature — must give
+    the same (doc_id, band, h0, h1) rows."""
+    from spark_sklearn_spark.queries.pipeline8 import (
+        MH_K,
+        MH_R,
+        _mh_capped_and_bands,
+    )
 
-    from spark_sklearn_spark.queries._helpers import h56
-    from spark_sklearn_spark.queries.pipeline8 import MH_K, MH_R
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c x y z"), (3, "x y z a b"),
+         (4, "x y z"), (5, "too short")],
+        "doc_id long, text string",
+    )
 
-    capped = spark.createDataFrame(
-        [(1, "a b c"), (1, "b c d"), (2, "a b c"), (2, "x y z"),
-         (3, "x y z")],
-        "doc_id long, g string",
-    )
-    old = (
-        capped.select(
-            "doc_id",
-            F.explode(F.array(*[F.lit(i) for i in range(MH_K)])).alias("i"),
-            "g",
-        )
-        .select(
-            "doc_id", "i",
-            h56("concat(cast(i as string), ':', g)").alias("h"),
-        )
-        .groupBy("doc_id", "i")
-        .agg(F.min("h").alias("mh"))
-        .groupBy(
-            "doc_id", F.floor(F.col("i") / MH_R).cast("long").alias("band")
-        )
-        .agg(
-            F.min(F.when(F.col("i") % MH_R == 0, F.col("mh"))).alias("h0"),
-            F.min(F.when(F.col("i") % MH_R == 1, F.col("mh"))).alias("h1"),
-        )
-    )
-    gh = capped.select("g").distinct().select(
-        "g",
-        F.array(
-            *[h56(f"concat('{i}:', g)") for i in range(MH_K)]
-        ).alias("hs"),
-    )
-    sig = (
-        capped.join(gh, "g")
-        .groupBy("doc_id")
-        .agg(
-            *[F.min(F.col("hs")[i]).alias(f"mh{i}") for i in range(MH_K)]
-        )
-    )
-    stack_args = ", ".join(
-        f"{b}L, mh{MH_R * b}, mh{MH_R * b + 1}"
-        for b in range(MH_K // MH_R)
-    )
-    new = sig.select(
-        "doc_id",
-        F.expr(f"stack({MH_K // MH_R}, {stack_args}) AS (band, h0, h1)"),
-    )
-    assert {tuple(r) for r in old.collect()} == {
-        tuple(r) for r in new.collect()
-    }
+    def bands(form):
+        b = _mh_capped_and_bands(spark, None, docs=docs, form=form)[1]
+        return {
+            tuple(r) for r in b.select("doc_id", "band", "h0", "h1").collect()
+        }
+
+    exploded = bands("explode")
+    assert len(exploded) == 4 * (MH_K // MH_R)
+    assert exploded == bands("array")

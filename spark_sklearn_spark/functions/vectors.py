@@ -22,6 +22,16 @@ def sq_norm(vec: Column | str) -> Column:
     return F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)
 
 
+def sq_dist(a: str, b: str) -> Column:
+    """Exact squared Euclidean distance of two integer (bigint) arrays —
+    a sequential BIGINT fold, the Spark side of the oracles'
+    ``list_sum(list_transform(...))`` over floor(x*1e6) components."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (a, b) -> (a - b) * (a - b)),"
+        " 0L, (acc, x) -> acc + x)"
+    )
+
+
 def unit(vec: Column | str) -> Column:
     """L2-normalized copy of the array.
 

@@ -16,8 +16,10 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.vectors import sq_dist
 from ..registry import query
 from ..sources.io import load
+from .fits import KM_FIT_CTES, km_fit_memo, quantized_vecs
 
 # --------------------------------------------------------------------------
 # Gaps & islands: consecutive-active-day stre islands per user
@@ -196,16 +198,8 @@ def q_sample_neyman(spark, d):
 # a fixed 1-in-100 slice: panel × corpus stays linear in the corpus.
 
 
-def _ivf_recall_oracle() -> str:
-    from .pipeline8 import _KM_VECS_SQL, _km_round_sql, _km_update_sql
-
-    return f"""
-        WITH {_KM_VECS_SQL},
-        {_km_round_sql(1, "init")},
-        {_km_update_sql(1, "init")},
-        {_km_round_sql(2, "cent1")},
-        {_km_update_sql(2, "cent1")},
-        {_km_round_sql(3, "cent2")},
+_IVF_RECALL_ORACLE = f"""
+        WITH {KM_FIT_CTES},
         probes AS (
           SELECT vec_id AS probe_id, q AS pq FROM vecs
           WHERE vec_id % 100 = 0
@@ -268,7 +262,7 @@ def _ivf_recall_oracle() -> str:
     """
 
 
-@query("q_emb_ann_recall_ivf", oracle=_ivf_recall_oracle())
+@query("q_emb_ann_recall_ivf", oracle=_IVF_RECALL_ORACLE)
 def q_emb_ann_recall_ivf(spark, d):
     """Recall@5 of the declared IVF vs brute truth (module comment),
     reported as the hit-count histogram over the probe panel. Plan:
@@ -277,24 +271,17 @@ def q_emb_ann_recall_ivf(spark, d):
     joins the panel's 2 routed cells to cell-partitioned members —
     at 100 TB the brute side is the eval's sunk cost (run on a
     sampled panel), the IVF side is the production query path."""
-    from .pipeline8 import _km_fit_memo, _quantized_vecs
     from . import pipeline8 as _p8
 
-    vecs = _quantized_vecs(load(spark, d, "embeddings"))
-    cents, members = _km_fit_memo(spark, d)
+    vecs = quantized_vecs(load(spark, d, "embeddings"))
+    cents, members = km_fit_memo(spark, d)
     # the probe panel shares pipeline8's seam so scale_probe
     # --fixed-panel pins ALL IVF-family evals together
     probes = vecs.filter(_p8._ivf_probe_predicate()).select(
         F.col("vec_id").alias("probe_id"), F.col("q").alias("pq")
     )
-    dist = F.expr(
-        "aggregate(zip_with(pq, q, (a, b) -> (a - b) * (a - b)),"
-        " 0L, (acc, x) -> acc + x)"
-    )
-    cdist = F.expr(
-        "aggregate(zip_with(pq, cq, (a, b) -> (a - b) * (a - b)),"
-        " 0L, (acc, x) -> acc + x)"
-    )
+    dist = sq_dist("pq", "q")
+    cdist = sq_dist("pq", "cq")
     w_route = Window.partitionBy("probe_id").orderBy("cd2", "cluster")
     pcells = (
         F.broadcast(probes)

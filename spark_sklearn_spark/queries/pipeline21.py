@@ -21,8 +21,16 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.vectors import sq_dist
 from ..registry import query
 from ..sources.io import load
+from .fits import (
+    KM_CENT2_CTES,
+    KM_FIT_CTES,
+    VECS_Q_SQL,
+    km_fit_memo,
+    quantized_vecs,
+)
 
 # --------------------------------------------------------------------------
 # Simplified silhouette on the shared Lloyd fit
@@ -60,15 +68,8 @@ _SIL_RESCORE = """
 """
 
 
-def _silhouette_oracle() -> str:
-    from .pipeline8 import _KM_VECS_SQL, _km_round_sql, _km_update_sql
-
-    return f"""
-        WITH {_KM_VECS_SQL},
-        {_km_round_sql(1, "init")},
-        {_km_update_sql(1, "init")},
-        {_km_round_sql(2, "cent1")},
-        {_km_update_sql(2, "cent1")},
+_SILHOUETTE_ORACLE = f"""
+        WITH {KM_CENT2_CTES},
         {_SIL_RESCORE}
         SELECT cluster,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -86,21 +87,15 @@ def _silhouette_oracle() -> str:
     """
 
 
-@query("q_ml_silhouette", oracle=_silhouette_oracle())
+@query("q_ml_silhouette", oracle=_SILHOUETTE_ORACLE)
 def q_ml_silhouette(spark, d):
     """Simplified silhouette per cluster (module comment). Plan: one
-    vecs x 4-centroid broadcast rescore (the _km_assign shape), a
-    per-point rank over 4 rows, one combinable per-cluster agg."""
-    from .pipeline8 import _km_fit_memo, _quantized_vecs
-
-    vecs = _quantized_vecs(load(spark, d, "embeddings"))
-    cents, _ = _km_fit_memo(spark, d)
-    dist = F.expr(
-        "aggregate(zip_with(q, cq, (a, b) -> (a - b) * (a - b)),"
-        " 0L, (acc, x) -> acc + x)"
-    )
+    vecs x 4-centroid broadcast rescore (the fits._km_assign shape),
+    a per-point rank over 4 rows, one combinable per-cluster agg."""
+    vecs = quantized_vecs(load(spark, d, "embeddings"))
+    cents, _ = km_fit_memo(spark, d)
     scored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "cluster", dist.alias("dist2")
+        "vec_id", "cluster", sq_dist("q", "cq").alias("dist2")
     )
     w = Window.partitionBy("vec_id").orderBy("dist2", "cluster")
     ab = (
@@ -149,16 +144,8 @@ def q_ml_silhouette(spark, d):
 # the scan is k²-sized.
 
 
-def _db_oracle() -> str:
-    from .pipeline8 import _KM_VECS_SQL, _km_round_sql, _km_update_sql
-
-    return f"""
-        WITH {_KM_VECS_SQL},
-        {_km_round_sql(1, "init")},
-        {_km_update_sql(1, "init")},
-        {_km_round_sql(2, "cent1")},
-        {_km_update_sql(2, "cent1")},
-        {_km_round_sql(3, "cent2")},
+_DB_ORACLE = f"""
+        WITH {KM_FIT_CTES},
         scatter AS (
           SELECT cluster,
                  CAST(SUM(CAST(sqrt(CAST(dist2 AS DOUBLE))
@@ -189,14 +176,12 @@ def _db_oracle() -> str:
     """
 
 
-@query("q_ml_davies_bouldin", oracle=_db_oracle())
+@query("q_ml_davies_bouldin", oracle=_DB_ORACLE)
 def q_ml_davies_bouldin(spark, d):
     """Davies-Bouldin index of the shared Lloyd fit (module comment):
     one combinable scatter agg over the memoized assignments, then
     k²-sized separation/ratio relations."""
-    from .pipeline8 import _km_fit_memo
-
-    cents, assign = _km_fit_memo(spark, d)
+    cents, assign = km_fit_memo(spark, d)
     scatter = assign.groupBy("cluster").agg(
         (
             F.sum(
@@ -213,11 +198,7 @@ def q_ml_davies_bouldin(spark, d):
     cb = cents.select(
         F.col("cluster").alias("cj"), F.col("cq").alias("qb")
     )
-    cdist = F.expr(
-        "sqrt(cast(aggregate(zip_with(qa, qb,"
-        " (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
-        " as double))"
-    )
+    cdist = F.sqrt(sq_dist("qa", "qb").cast("double"))
     sep = ca.join(cb, F.col("ci") != F.col("cj")).select(
         "ci", "cj", cdist.alias("m")
     )
@@ -287,11 +268,8 @@ def _kcenter_pick_sql(t: int, chosen: str) -> str:
 """
 
 
-def _kcenter_oracle() -> str:
-    from .pipeline8 import _VECS_Q_SQL
-
-    return f"""
-        WITH {_VECS_Q_SQL},
+_KCENTER_ORACLE = f"""
+        WITH {VECS_Q_SQL},
         seed AS (
           SELECT vec_id, q FROM vecs ORDER BY vec_id LIMIT 1
         ),
@@ -317,7 +295,7 @@ def _kcenter_oracle() -> str:
     """
 
 
-@query("q_ml_kcenter_init", oracle=_kcenter_oracle())
+@query("q_ml_kcenter_init", oracle=_KCENTER_ORACLE)
 def q_ml_kcenter_init(spark, d):
     """Farthest-point seed selection (module comment): 3 unrolled
     rounds, each one broadcast-chosen scan + a 1-row argmax. Each
@@ -326,13 +304,8 @@ def q_ml_kcenter_init(spark, d):
     chosen set as DataFrame lineage instead re-evaluates every prior
     round per reference (measured 10 s; the recursive-lineage trap
     CLAUDE.md pins for WITH RECURSIVE)."""
-    from .pipeline8 import _quantized_vecs
-
-    vecs = _quantized_vecs(load(spark, d, "embeddings"))
-    dist = F.expr(
-        "aggregate(zip_with(q, cq, (a, b) -> (a - b) * (a - b)),"
-        " 0L, (acc, x) -> acc + x)"
-    )
+    vecs = quantized_vecs(load(spark, d, "embeddings"))
+    dist = sq_dist("q", "cq")
 
     def min_dist(ids):
         chosen = F.broadcast(

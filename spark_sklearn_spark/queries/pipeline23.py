@@ -27,6 +27,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56, sql_h56
+from .fits import KM_CONT_CTE, KM_FIT_CTES, km_contingency
 
 # --------------------------------------------------------------------------
 # Label purity of the Lloyd clusters
@@ -39,21 +40,9 @@ from ._helpers import h56, sql_h56
 # k x |labels| cells.
 
 
-def _purity_oracle() -> str:
-    from .pipeline8 import _KM_VECS_SQL, _km_round_sql, _km_update_sql
-
-    return f"""
-        WITH {_KM_VECS_SQL},
-        {_km_round_sql(1, "init")},
-        {_km_update_sql(1, "init")},
-        {_km_round_sql(2, "cent1")},
-        {_km_update_sql(2, "cent1")},
-        {_km_round_sql(3, "cent2")},
-        cont AS (
-          SELECT a.cluster, e.label, CAST(COUNT(*) AS BIGINT) AS c
-          FROM assign3 a JOIN embeddings e ON e.vec_id = a.vec_id
-          GROUP BY a.cluster, e.label
-        ),
+_PURITY_ORACLE = f"""
+        WITH {KM_FIT_CTES},
+        {KM_CONT_CTE},
         best AS (
           SELECT cluster, label AS top_label, c AS top_n FROM (
             SELECT cluster, label, c,
@@ -74,21 +63,12 @@ def _purity_oracle() -> str:
     """
 
 
-@query("q_ml_cluster_purity", oracle=_purity_oracle())
+@query("q_ml_cluster_purity", oracle=_PURITY_ORACLE)
 def q_ml_cluster_purity(spark, d):
     """Per-cluster majority-label purity of the memoized Lloyd fit
     (module comment): one label join, one contingency agg, one
     cluster-partitioned argmax over |labels| rows."""
-    from .pipeline8 import _km_fit_memo
-
-    emb = load(spark, d, "embeddings").select("vec_id", "label")
-    _, assign = _km_fit_memo(spark, d)
-    cont = (
-        assign.select("vec_id", "cluster")
-        .join(emb, "vec_id")
-        .groupBy("cluster", "label")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    cont = km_contingency(spark, d)
     w = Window.partitionBy("cluster").orderBy(F.desc("c"), "label")
     best = (
         cont.withColumn("rk", F.row_number().over(w))
@@ -125,21 +105,9 @@ def q_ml_cluster_purity(spark, d):
 # (products overflow int64 at corpus scale), micro-floored.
 
 
-def _ari_oracle() -> str:
-    from .pipeline8 import _KM_VECS_SQL, _km_round_sql, _km_update_sql
-
-    return f"""
-        WITH {_KM_VECS_SQL},
-        {_km_round_sql(1, "init")},
-        {_km_update_sql(1, "init")},
-        {_km_round_sql(2, "cent1")},
-        {_km_update_sql(2, "cent1")},
-        {_km_round_sql(3, "cent2")},
-        cont AS (
-          SELECT a.cluster, e.label, CAST(COUNT(*) AS BIGINT) AS c
-          FROM assign3 a JOIN embeddings e ON e.vec_id = a.vec_id
-          GROUP BY a.cluster, e.label
-        ),
+_ARI_ORACLE = f"""
+        WITH {KM_FIT_CTES},
+        {KM_CONT_CTE},
         parts AS (
           SELECT
             (SELECT CAST(SUM(c * (c - 1) // 2) AS BIGINT) FROM cont)
@@ -165,21 +133,12 @@ def _ari_oracle() -> str:
     """
 
 
-@query("q_ml_rand_index", oracle=_ari_oracle())
+@query("q_ml_rand_index", oracle=_ARI_ORACLE)
 def q_ml_rand_index(spark, d):
     """Adjusted Rand index between the Lloyd assignment and the label
     partition (module comment). One contingency agg over the memoized
     assignments; everything downstream is cell-count-sized."""
-    from .pipeline8 import _km_fit_memo
-
-    emb = load(spark, d, "embeddings").select("vec_id", "label")
-    _, assign = _km_fit_memo(spark, d)
-    cont = (
-        assign.select("vec_id", "cluster")
-        .join(emb, "vec_id")
-        .groupBy("cluster", "label")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    cont = km_contingency(spark, d)
     a = cont.agg(
         F.sum(F.expr("c * (c - 1) div 2")).alias("a"),
         F.sum("c").alias("n"),

@@ -26,6 +26,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56, sql_h56
+from .fits import KM_CONT_CTE, KM_FIT_CTES, km_contingency
 
 # --------------------------------------------------------------------------
 # Point-in-time join to a versioned (SCD2) dimension
@@ -340,21 +341,9 @@ def q_ts_esd(spark, d):
 # q_ml_cluster_purity and q_ml_rand_index.
 
 
-def _nmi_oracle() -> str:
-    from .pipeline8 import _KM_VECS_SQL, _km_round_sql, _km_update_sql
-
-    return f"""
-        WITH {_KM_VECS_SQL},
-        {_km_round_sql(1, "init")},
-        {_km_update_sql(1, "init")},
-        {_km_round_sql(2, "cent1")},
-        {_km_update_sql(2, "cent1")},
-        {_km_round_sql(3, "cent2")},
-        cont AS (
-          SELECT a.cluster, e.label, CAST(COUNT(*) AS BIGINT) AS c
-          FROM assign3 a JOIN embeddings e ON e.vec_id = a.vec_id
-          GROUP BY a.cluster, e.label
-        ),
+_NMI_ORACLE = f"""
+        WITH {KM_FIT_CTES},
+        {KM_CONT_CTE},
         n_tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM cont),
         hc AS (
           SELECT CAST(SUM(CAST(s * ln(CAST(s AS DOUBLE))
@@ -384,21 +373,12 @@ def _nmi_oracle() -> str:
     """
 
 
-@query("q_ml_nmi", oracle=_nmi_oracle())
+@query("q_ml_nmi", oracle=_NMI_ORACLE)
 def q_ml_nmi(spark, d):
     """NMI between the Lloyd assignment and the label partition
     (module comment): one contingency agg over the memoized fit,
     cell-sized entropy sums, one identical double chain."""
-    from .pipeline8 import _km_fit_memo
-
-    emb = load(spark, d, "embeddings").select("vec_id", "label")
-    _, assign = _km_fit_memo(spark, d)
-    cont = (
-        assign.select("vec_id", "cluster")
-        .join(emb, "vec_id")
-        .groupBy("cluster", "label")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    cont = km_contingency(spark, d)
     nlogn = lambda col: (  # noqa: E731
         F.col(col).cast("double") * F.log(F.col(col).cast("double"))
     ).cast("decimal(30,10)")

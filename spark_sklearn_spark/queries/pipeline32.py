@@ -65,6 +65,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load, register_views
 from ._helpers import DEC
+from .fits import LR_BINS_CTES, lr_decile_bins
 
 # --------------------------------------------------------------------------
 # Cramér's V between document language and source
@@ -741,29 +742,8 @@ def q_dedup_cdc(spark, d):
 # 10-term sums, closing combination is identical IEEE → floor-q9.
 
 
-def _brier_oracle() -> str:
-    from .pipeline8 import _LR_BASE_SQL, _lr_step_sql
-
-    return f"""
-    WITH {_LR_BASE_SQL},
-    {_lr_step_sql(1)},
-    {_lr_step_sql(2)},
-    {_lr_step_sql(3)},
-    scored AS (
-      SELECT f.y,
-             1.0 / (1.0 + exp(-(w.w0 + w.w1 * f.x1 + w.w2 * f.x2)))
-                 AS p
-      FROM feats f, it3 w
-    ),
-    bins AS (
-      SELECT CAST(least(floor(p * 10.0), 9) AS BIGINT) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS nb,
-             CAST(SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_pos,
-             SUM(CAST(p AS DECIMAL(30,10))) AS sp
-      FROM scored
-      GROUP BY CAST(least(floor(p * 10.0), 9) AS BIGINT)
-    ),
+_BRIER_ORACLE = f"""
+    WITH {LR_BINS_CTES},
     tot AS (
       SELECT CAST(SUM(nb) AS BIGINT) AS n,
              CAST(SUM(n_pos) AS BIGINT) AS pos
@@ -805,45 +785,24 @@ def _brier_oracle() -> str:
     """
 
 
-@query("q_ml_brier_decomp", oracle=_brier_oracle())
+@query("q_ml_brier_decomp", oracle=_BRIER_ORACLE)
 def q_ml_brier_decomp(spark, d):
     """Murphy decomposition of the binned Brier score (module
     comment): reuses q_ml_logreg's bit-identical 3-step GD weights
-    (_lr_fit; the oracle replays the unrolled decimal-GD steps), the
-    q_ml_calibration decile bins, decimal-quantized per-bin terms,
+    and the q_ml_calibration decile bins (fits.lr_decile_bins; the
+    oracle replays the unrolled decimal-GD steps), decimal-quantized per-bin terms,
     identical-IEEE closing combination floored to q9.
 
     Shape: one broadcast-scored corpus scan into a combinable 10-bin
     agg; everything downstream is 10-row/1-row (ONE_ROW_BROADCAST
     exemption class)."""
-    from .pipeline8 import _lr_fit
-
-    feats, n, w3 = _lr_fit(spark, d)
-    z = (
-        F.col("w0")
-        + F.col("w1") * F.col("x1")
-        + F.col("w2") * F.col("x2")
-    )
-    p = 1.0 / (1.0 + F.exp(-z))
-    scored = feats.crossJoin(F.broadcast(w3)).select("y", p.alias("p"))
-    bins = scored.groupBy(
-        F.least(F.floor(F.col("p") * 10.0), F.lit(9))
-        .cast("long")
-        .alias("bin")
-    ).agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_pos"),
-        F.sum(F.col("p").cast(DEC)).alias("sp"),
-    )
     # three downstream branches (tot, terms, and the closing select)
     # each re-evaluate bins' lineage — and every evaluation re-runs
     # the 3-step GD fit plus the scored scan (measured 12.8 s vs
     # q_ml_calibration's 1.8 s for the same fit). Materialize the
     # ≤10-row bin relation once; a bounded localCheckpoint is the
     # sanctioned escape (q_graph_jaccard_nbrs precedent).
-    bins = bins.localCheckpoint()
+    bins = lr_decile_bins(spark, d).localCheckpoint()
     tot = bins.agg(
         F.sum("nb").alias("n"), F.sum("n_pos").alias("pos")
     )

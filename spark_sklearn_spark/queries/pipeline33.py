@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load, register_views
 from ._helpers import DEC
+from .fits import LR_BINS_CTES, lr_decile_bins
 
 # --------------------------------------------------------------------------
 # Theil's uncertainty coefficients over the type × ISO-weekday grid
@@ -239,29 +240,8 @@ def q_ml_mcc(spark, d):
 # MAX of micro-quantized BIGINTs (order-free by construction).
 
 
-def _ece_oracle() -> str:
-    from .pipeline8 import _LR_BASE_SQL, _lr_step_sql
-
-    return f"""
-    WITH {_LR_BASE_SQL},
-    {_lr_step_sql(1)},
-    {_lr_step_sql(2)},
-    {_lr_step_sql(3)},
-    scored AS (
-      SELECT f.y,
-             1.0 / (1.0 + exp(-(w.w0 + w.w1 * f.x1 + w.w2 * f.x2)))
-                 AS p
-      FROM feats f, it3 w
-    ),
-    bins AS (
-      SELECT CAST(least(floor(p * 10.0), 9) AS BIGINT) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS nb,
-             CAST(SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_pos,
-             SUM(CAST(p AS DECIMAL(30,10))) AS sp
-      FROM scored
-      GROUP BY CAST(least(floor(p * 10.0), 9) AS BIGINT)
-    ),
+_ECE_ORACLE = f"""
+    WITH {LR_BINS_CTES},
     gaps AS (
       SELECT nb,
              abs(CAST(sp AS DOUBLE) / nb
@@ -284,34 +264,13 @@ def _ece_oracle() -> str:
     """
 
 
-@query("q_ml_ece", oracle=_ece_oracle())
+@query("q_ml_ece", oracle=_ECE_ORACLE)
 def q_ml_ece(spark, d):
     """Expected + maximum calibration error (module comment): reuses
     q_ml_logreg's bit-identical GD weights and the decile bins, one
     broadcast-scored corpus scan into a combinable 10-bin agg, then
     10-row arithmetic (ONE_ROW_BROADCAST class)."""
-    from .pipeline8 import _lr_fit
-
-    feats, n, w3 = _lr_fit(spark, d)
-    z = (
-        F.col("w0")
-        + F.col("w1") * F.col("x1")
-        + F.col("w2") * F.col("x2")
-    )
-    p = 1.0 / (1.0 + F.exp(-z))
-    scored = feats.crossJoin(F.broadcast(w3)).select("y", p.alias("p"))
-    bins = scored.groupBy(
-        F.least(F.floor(F.col("p") * 10.0), F.lit(9))
-        .cast("long")
-        .alias("bin")
-    ).agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_pos"),
-        F.sum(F.col("p").cast(DEC)).alias("sp"),
-    )
-    gaps = bins.selectExpr(
+    gaps = lr_decile_bins(spark, d).selectExpr(
         "nb",
         "abs(cast(sp as double) / nb - cast(n_pos as double) / nb)"
         " AS gap",

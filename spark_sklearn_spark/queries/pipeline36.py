@@ -71,6 +71,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load, snapshot, write_parquet
 from .pipeline6 import SESSION_GAP_US
+from .fits import LR_BINS_CTES, lr_decile_bins
 from .pipeline8 import TAIL_BASKETS_SQL, tail_baskets
 
 # --------------------------------------------------------------------------
@@ -853,36 +854,15 @@ def q_ts_sma_cross(spark, d):
 # df = n_bins − 2.
 
 
-def _hosmer_lemeshow_oracle() -> str:
-    from .pipeline8 import _LR_BASE_SQL, _lr_step_sql
-
-    return f"""
-    WITH {_LR_BASE_SQL},
-    {_lr_step_sql(1)},
-    {_lr_step_sql(2)},
-    {_lr_step_sql(3)},
-    scored AS (
-      SELECT f.y,
-             1.0 / (1.0 + exp(-(w.w0 + w.w1 * f.x1 + w.w2 * f.x2)))
-                 AS p
-      FROM feats f, it3 w
-    ),
-    bins AS (
-      SELECT CAST(least(floor(p * 10.0), 9) AS BIGINT) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS nb,
-             CAST(SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS o_pos,
-             SUM(CAST(p AS DECIMAL(30,10))) AS e_pos
-      FROM scored
-      GROUP BY CAST(least(floor(p * 10.0), 9) AS BIGINT)
-    ),
+_HOSMER_LEMESHOW_ORACLE = f"""
+    WITH {LR_BINS_CTES},
     terms AS (
-      SELECT nb, o_pos,
-             CAST(e_pos AS DOUBLE) AS e,
-             (CAST(o_pos AS DOUBLE) - CAST(e_pos AS DOUBLE))
-             * (CAST(o_pos AS DOUBLE) - CAST(e_pos AS DOUBLE))
-             / NULLIF(CAST(e_pos AS DOUBLE)
-                      * (1.0 - CAST(e_pos AS DOUBLE) / nb), 0)
+      SELECT nb, n_pos,
+             CAST(sp AS DOUBLE) AS e,
+             (CAST(n_pos AS DOUBLE) - CAST(sp AS DOUBLE))
+             * (CAST(n_pos AS DOUBLE) - CAST(sp AS DOUBLE))
+             / NULLIF(CAST(sp AS DOUBLE)
+                      * (1.0 - CAST(sp AS DOUBLE) / nb), 0)
                  AS term
       FROM bins
     )
@@ -895,42 +875,20 @@ def _hosmer_lemeshow_oracle() -> str:
     """
 
 
-@query("q_ml_hosmer_lemeshow", oracle=_hosmer_lemeshow_oracle())
+@query("q_ml_hosmer_lemeshow", oracle=_HOSMER_LEMESHOW_ORACLE)
 def q_ml_hosmer_lemeshow(spark, d):
     """Hosmer–Lemeshow grouped goodness-of-fit (module comment):
-    reuses q_ml_logreg's bit-identical memoized GD weights (_lr_fit
-    — the unrolled-lineage escape that dropped this family to
-    sub-second in r14), one broadcast-scored corpus scan into a
-    combinable 10-bin agg, then ≤10-row term arithmetic
-    (ONE_ROW_BROADCAST class, exactly the q_ml_ece shape)."""
-    from ._helpers import DEC
-    from .pipeline8 import _lr_fit
-
-    feats, n, w3 = _lr_fit(spark, d)
-    z = (
-        F.col("w0")
-        + F.col("w1") * F.col("x1")
-        + F.col("w2") * F.col("x2")
-    )
-    p = 1.0 / (1.0 + F.exp(-z))
-    scored = feats.crossJoin(F.broadcast(w3)).select("y", p.alias("p"))
-    bins = scored.groupBy(
-        F.least(F.floor(F.col("p") * 10.0), F.lit(9))
-        .cast("long")
-        .alias("bin")
-    ).agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0))
-        .cast("long")
-        .alias("o_pos"),
-        F.sum(F.col("p").cast(DEC)).alias("e_pos"),
-    )
-    terms = bins.selectExpr(
+    reuses q_ml_logreg's bit-identical memoized GD weights and decile
+    bins (fits.lr_decile_bins — the memoized weights are the
+    unrolled-lineage escape that dropped this family to sub-second in
+    r14), then ≤10-row term arithmetic (ONE_ROW_BROADCAST class,
+    exactly the q_ml_ece shape). O_b is n_pos, E_b the score sum sp."""
+    terms = lr_decile_bins(spark, d).selectExpr(
         "nb",
-        "(CAST(o_pos AS DOUBLE) - CAST(e_pos AS DOUBLE))"
-        " * (CAST(o_pos AS DOUBLE) - CAST(e_pos AS DOUBLE))"
-        " / NULLIF(CAST(e_pos AS DOUBLE)"
-        "          * (1.0D - CAST(e_pos AS DOUBLE) / nb), 0) AS term",
+        "(CAST(n_pos AS DOUBLE) - CAST(sp AS DOUBLE))"
+        " * (CAST(n_pos AS DOUBLE) - CAST(sp AS DOUBLE))"
+        " / NULLIF(CAST(sp AS DOUBLE)"
+        "          * (1.0D - CAST(sp AS DOUBLE) / nb), 0) AS term",
     )
     return terms.agg(
         F.sum("nb").alias("n"),

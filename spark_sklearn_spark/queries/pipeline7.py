@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.vectors import sq_dist
 from ..registry import query
 from ..sources.io import load, read_table, warehouse_path, write_table
 from ._helpers import DEC
@@ -842,10 +843,7 @@ def q_sim_ann_grid(spark, d):
         .select(
             "probe_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.expr(
-                "aggregate(zip_with(pq, q, (a, b) -> (a - b) * (a - b)),"
-                " 0L, (acc, x) -> acc + x)"
-            ).alias("dist2"),
+            sq_dist("pq", "q").alias("dist2"),
         )
     )
     w = Window.partitionBy("probe_id").orderBy("dist2", "neighbor_id")
@@ -1263,10 +1261,7 @@ def q_emb_recall_grid(spark, d):
             F.element_at("embedding", 2).cast("double") / GRID_CELL
         ).cast("long").alias("cy"),
     )
-    dist = (
-        "aggregate(zip_with(pq, q, (a, b) -> (a - b) * (a - b)), 0L,"
-        " (acc, x) -> acc + x)"
-    )
+    dist = sq_dist("pq", "q")
     probes = cells.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("probe_id"),
         F.col("q").alias("pq"),
@@ -1280,7 +1275,7 @@ def q_emb_recall_grid(spark, d):
             cand.select(
                 "probe_id",
                 F.col("vec_id").alias("neighbor_id"),
-                F.expr(dist).alias("dist2"),
+                dist.alias("dist2"),
             )
             .withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= GRID_TOPK)

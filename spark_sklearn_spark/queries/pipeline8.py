@@ -31,14 +31,25 @@ aggregation, per SURVEY §2A/A5.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window, functions as F
 
+from ..functions.vectors import sq_dist
 from ..operators.lsh import band_pairs, min_signature
 from ..registry import query
-from ..sources.io import load, snapshot, write_parquet
+from ..sources.io import load
 from ._helpers import DEC
+from .fits import (
+    KM_DIM,
+    KM_FIT_CTES,
+    KM_Q,
+    LR_BINS_CTES,
+    LR_FIT_CTES,
+    VECS_Q_SQL,
+    km_fit_memo,
+    lr_decile_bins,
+    lr_fit,
+    quantized_vecs,
+)
 
 
 # --------------------------------------------------------------------------
@@ -507,184 +518,11 @@ def q_ml_naive_bayes(spark, d):
 # Declared Lloyd's k-means (unrolled iterations, integer arithmetic)
 # --------------------------------------------------------------------------
 
-KM_K = 4
-KM_Q = 1_000_000  # component quantization, same as q_sim_ann_grid
-KM_DIM = 64
-
-# Shared floor(x*1e6) vector quantization — ONE definition feeding both
-# embedding queries' oracles (and _quantized_vecs for the Spark side),
-# so a quantization change cannot silently diverge between them.
-_VECS_Q_SQL = f"""
-        vecs AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                     x -> CAST(floor(CAST(x AS DOUBLE) * {KM_Q})
-                               AS BIGINT)) AS q
-          FROM embeddings
-        )
-"""
-
-_KM_VECS_SQL = f"""
-        {_VECS_Q_SQL},
-        init AS (
-          SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster,
-                 q AS cq
-          FROM vecs ORDER BY vec_id LIMIT {KM_K}
-        )
-"""
-
-
-def _quantized_vecs(emb):
-    """(vec_id, q): Spark mirror of _VECS_Q_SQL."""
-    return emb.select(
-        "vec_id",
-        F.expr(
-            f"transform(embedding, x -> cast(floor(cast(x as double)"
-            f" * {KM_Q}) as bigint))"
-        ).alias("q"),
-    )
-
-
-def _km_round_sql(n: int, cent: str) -> str:
-    """One unrolled Lloyd round: score vs ``cent``, keep the argmin."""
-    return f"""
-        scored{n} AS (
-          SELECT v.vec_id, v.q, c.cluster,
-                 list_sum(list_transform(generate_series(1, {KM_DIM}),
-                     i -> (v.q[i] - c.cq[i]) * (v.q[i] - c.cq[i])))
-                     AS dist2
-          FROM vecs v CROSS JOIN {cent} c
-        ),
-        assign{n} AS (
-          SELECT vec_id, q, cluster, dist2
-          FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY dist2, cluster) AS rk
-                FROM scored{n})
-          WHERE rk = 1
-        )
-"""
-
-
-def _km_update_sql(n: int, prev: str) -> str:
-    """Centroid recompute from assign{n}; empty clusters keep the
-    previous centroid (COALESCE against ``prev``)."""
-    return f"""
-        cells{n} AS (
-          SELECT a.cluster, i.i AS pos, a.q[i.i] AS c
-          FROM assign{n} a,
-               LATERAL (SELECT unnest(generate_series(1, {KM_DIM}))
-                        AS i) i
-        ),
-        dims{n} AS (
-          SELECT cluster, pos,
-                 CAST(floor(SUM(c) * 1.0 / COUNT(*)) AS BIGINT) AS cq
-          FROM cells{n} GROUP BY cluster, pos
-        ),
-        cent{n} AS (
-          SELECT p.cluster, COALESCE(u.cqa, p.cq) AS cq
-          FROM {prev} p
-          LEFT JOIN (SELECT cluster, list(cq ORDER BY pos) AS cqa
-                     FROM dims{n} GROUP BY cluster) u
-            ON u.cluster = p.cluster
-        )
-"""
-
-
-def _km_assign(vecs, cents):
-    """Score every vector against the broadcast centroid relation and
-    keep the (dist2, cluster) argmin — one Lloyd assignment pass."""
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "q",
-        "cluster",
-        F.expr(
-            "aggregate(zip_with(q, cq, (a, b) -> (a - b) * (a - b)),"
-            " 0L, (acc, x) -> acc + x)"
-        ).alias("dist2"),
-    )
-    w = Window.partitionBy("vec_id").orderBy("dist2", "cluster")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .drop("rk")
-    )
-
-
-def _km_update(assigned, prev):
-    """Floored exact-integer-mean centroid recompute; empty clusters
-    keep the previous centroid (COALESCE, mirrored in the oracles)."""
-    cells = assigned.selectExpr("cluster", "posexplode(q) as (pos, c)")
-    dims = cells.groupBy("cluster", "pos").agg(
-        F.floor(F.sum("c") * 1.0 / F.count(F.lit(1)))
-        .cast("long")
-        .alias("cq")
-    )
-    arrs = (
-        dims.groupBy("cluster")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("pos", "cq"))).alias("s")
-        )
-        .select("cluster", F.expr("transform(s, x -> x.cq)").alias("cqa"))
-    )
-    return (
-        prev.select("cluster", F.col("cq").alias("prev_cq"))
-        .join(arrs, "cluster", "left")
-        .select("cluster", F.coalesce("cqa", "prev_cq").alias("cq"))
-    )
-
-
-# The three Lloyd rounds are shared by q_ml_kmeans and the declared
-# IVF retrieval — snapshot the fit so the second consumer pays a file
-# re-read, not three scoring passes.
-
-
-def _km_fit_memo(spark, d):
-    """Snapshotted (cent2, assign3) of the shared Lloyd fit."""
-
-    def write(path):
-        c2, a3 = _km_fit(_quantized_vecs(load(spark, d, "embeddings")))
-        write_parquet(c2, os.path.join(path, "cent2"))
-        write_parquet(a3, os.path.join(path, "assign3"))
-
-    path = snapshot(spark, d, "km_fit", write)
-    return (
-        spark.read.parquet(os.path.join(path, "cent2")),
-        spark.read.parquet(os.path.join(path, "assign3")),
-    )
-
-
-def _km_fit(vecs):
-    """Three unrolled Lloyd rounds from the deterministic seed; returns
-    (final centroids cent2, final assignments assign3) — shared by
-    q_ml_kmeans and the declared IVF retrieval built on it."""
-    init = (
-        vecs.orderBy("vec_id")
-        .limit(KM_K)
-        .select(
-            # BOUNDED: KM_K-row relation (LIMIT above)
-            (
-                F.row_number().over(Window.orderBy("vec_id")) - 1
-            ).alias("cluster"),
-            F.col("q").alias("cq"),
-        )
-    )
-    a1 = _km_assign(vecs, init)
-    c1 = _km_update(a1, init)
-    a2 = _km_assign(vecs, c1)
-    c2 = _km_update(a2, c1)
-    a3 = _km_assign(vecs, c2)
-    return c2, a3
-
 
 @query(
     "q_ml_kmeans",
     oracle=f"""
-        WITH {_KM_VECS_SQL},
-        {_km_round_sql(1, "init")},
-        {_km_update_sql(1, "init")},
-        {_km_round_sql(2, "cent1")},
-        {_km_update_sql(2, "cent1")},
-        {_km_round_sql(3, "cent2")}
+        WITH {KM_FIT_CTES}
         SELECT a.cluster,
                COUNT(*) AS n_members,
                CAST(SUM(a.dist2 // {KM_Q}) AS BIGINT) AS inertia_q,
@@ -714,7 +552,7 @@ def q_ml_kmeans(spark, d):
     exactly MLlib's distributed Lloyd step; unrolling three rounds
     trades convergence for a provable plan, and the rows-only IVF
     path (operators/ivf.py) remains the converged variant."""
-    c2, a3 = _km_fit_memo(spark, d)
+    c2, a3 = km_fit_memo(spark, d)
     cent_dims = c2.select(
         "cluster",
         F.element_at("cq", 1).alias("c1_q"),
@@ -739,54 +577,11 @@ def q_ml_kmeans(spark, d):
 # Declared gradient-descent logistic regression (unrolled full-batch)
 # --------------------------------------------------------------------------
 
-LR_RATE = 2.0  # full-batch learning rate; 3 unrolled steps
-
-_LR_BASE_SQL = """
-        feats AS (
-          SELECT CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END
-                     AS y,
-                 value / 100.0 AS x1,
-                 hour(ts) / 24.0 AS x2
-          FROM events
-        ),
-        n AS (SELECT COUNT(*) AS n FROM feats),
-        it0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2)
-"""
-
-
-def _lr_step_sql(i: int) -> str:
-    """One unrolled GD step: exact-decimal gradient sums against
-    it{i-1}'s weights, then the identical double update expression."""
-    p = (
-        f"1.0 / (1.0 + exp(-(w.w0 + w.w1 * f.x1 + w.w2 * f.x2)))"
-    )
-    return f"""
-        grad{i} AS (
-          SELECT
-            CAST(SUM(CAST(({p} - f.y) AS DECIMAL(30,10))) AS DOUBLE)
-                AS g0,
-            CAST(SUM(CAST(({p} - f.y) * f.x1 AS DECIMAL(30,10)))
-                 AS DOUBLE) AS g1,
-            CAST(SUM(CAST(({p} - f.y) * f.x2 AS DECIMAL(30,10)))
-                 AS DOUBLE) AS g2
-          FROM feats f, it{i - 1} w
-        ),
-        it{i} AS (
-          SELECT w.w0 - {LR_RATE} * g.g0 / n.n AS w0,
-                 w.w1 - {LR_RATE} * g.g1 / n.n AS w1,
-                 w.w2 - {LR_RATE} * g.g2 / n.n AS w2
-          FROM it{i - 1} w, grad{i} g, n
-        )
-"""
-
 
 @query(
     "q_ml_logreg",
     oracle=f"""
-        WITH {_LR_BASE_SQL},
-        {_lr_step_sql(1)},
-        {_lr_step_sql(2)},
-        {_lr_step_sql(3)}
+        WITH {LR_FIT_CTES}
         SELECT CAST(floor(w.w0 * 1000000) AS BIGINT) AS w0_micro,
                CAST(floor(w.w1 * 1000000) AS BIGINT) AS w1_micro,
                CAST(floor(w.w2 * 1000000) AS BIGINT) AS w2_micro,
@@ -825,7 +620,7 @@ def q_ml_logreg(spark, d):
     shrink map-side; no shuffle beyond the final single-group agg);
     three steps = three passes, exactly MLlib's LBFGS data access
     pattern per iteration."""
-    feats, n, w3 = _lr_fit(spark, d)
+    feats, n, w3 = lr_fit(spark, d)
 
     z = F.col("w0") + F.col("w1") * F.col("x1") + F.col("w2") * F.col("x2")
     p = 1.0 / (1.0 + F.exp(-z))
@@ -860,71 +655,6 @@ def q_ml_logreg(spark, d):
             "log_loss_micro",
         )
     )
-
-
-# Weight snapshot: four declared keys (q_ml_logreg /
-# q_ml_calibration / q_ml_brier_decomp / q_ml_ece) share this fit,
-# and the UNROLLED 3-step lineage embeds the events scan 15 times in
-# each consumer's plan — re-fitting per key (and per bench rep)
-# measured 3-8 s each. The 1-row weights snapshot is parquet; the
-# double roundtrip is exact, so consumers score with bit-identical
-# weights and the oracles keep replaying the decimal-GD steps.
-
-
-def _lr_fit(spark, d):
-    """(feats, n, w3): the 3-step full-batch GD fit of q_ml_logreg —
-    shared with q_ml_calibration/q_ml_brier_decomp/q_ml_ece, which
-    bin the fitted scores. w3 is the memoized 1-row weight snapshot
-    (module comment)."""
-    ev = load(spark, d, "events")
-    feats = ev.select(
-        F.when(F.col("event_type") == "purchase", 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-        (F.col("value") / 100.0).alias("x1"),
-        (F.hour("ts") / 24.0).alias("x2"),
-    )
-    n = feats.agg(F.count(F.lit(1)).alias("n"))
-
-    def step(weights):
-        z = (
-            F.col("w0")
-            + F.col("w1") * F.col("x1")
-            + F.col("w2") * F.col("x2")
-        )
-        p = 1.0 / (1.0 + F.exp(-z))
-        g = (
-            feats.crossJoin(F.broadcast(weights))
-            .agg(
-                F.sum((p - F.col("y")).cast(DEC)).cast("double").alias("g0"),
-                F.sum(((p - F.col("y")) * F.col("x1")).cast(DEC))
-                .cast("double")
-                .alias("g1"),
-                F.sum(((p - F.col("y")) * F.col("x2")).cast(DEC))
-                .cast("double")
-                .alias("g2"),
-            )
-        )
-        return (
-            weights.crossJoin(F.broadcast(g))
-            .crossJoin(F.broadcast(n))
-            .select(
-                (F.col("w0") - LR_RATE * F.col("g0") / F.col("n")).alias("w0"),
-                (F.col("w1") - LR_RATE * F.col("g1") / F.col("n")).alias("w1"),
-                (F.col("w2") - LR_RATE * F.col("g2") / F.col("n")).alias("w2"),
-            )
-        )
-
-    def write(path):
-        it0 = spark.range(1).select(
-            F.lit(0.0).alias("w0"),
-            F.lit(0.0).alias("w1"),
-            F.lit(0.0).alias("w2"),
-        )
-        write_parquet(step(step(step(it0))), path)
-
-    path = snapshot(spark, d, "lr_fit_w3", write)
-    return feats, n, spark.read.parquet(path)
 
 
 # --------------------------------------------------------------------------
@@ -1053,7 +783,7 @@ PQ_TOPK = 5
 @query(
     "q_emb_pq_adc",
     oracle=f"""
-        WITH {_VECS_Q_SQL},
+        WITH {VECS_Q_SQL},
         subs AS (
           SELECT v.vec_id, s.s,
                  list_transform(generate_series(1, {PQ_SUB}),
@@ -1141,7 +871,7 @@ def q_emb_pq_adc(spark, d):
     unpruned ADC scan; at 100 TB it composes with IVF bucketing
     (operators/ivf.py) to bound both sides per bucket — this query
     IS the in-bucket scoring kernel."""
-    vecs = _quantized_vecs(load(spark, d, "embeddings"))
+    vecs = quantized_vecs(load(spark, d, "embeddings"))
     subs = vecs.select(
         "vec_id",
         F.explode(
@@ -1171,10 +901,7 @@ def q_emb_pq_adc(spark, d):
         subs.join(F.broadcast(sample), "vec_id")
         .select("s", "code", F.col("sq").alias("cw"))
     )
-    d2 = F.expr(
-        "aggregate(zip_with(sq, cw, (a, b) -> (a - b) * (a - b)),"
-        " 0L, (acc, x) -> acc + x)"
-    )
+    d2 = sq_dist("sq", "cw")
     # Encoding argmin as min_by over a (d2, code) struct (r17, §2.4):
     # lexicographic struct comparison == the old orderBy(d2, code)
     # row_number()=1 window, but as a combinable HASH agg — partial
@@ -1495,12 +1222,7 @@ def _ivf_probe_predicate():
 @query(
     "q_sim_ann_ivf_kmeans",
     oracle=f"""
-        WITH {_KM_VECS_SQL},
-        {_km_round_sql(1, "init")},
-        {_km_update_sql(1, "init")},
-        {_km_round_sql(2, "cent1")},
-        {_km_update_sql(2, "cent1")},
-        {_km_round_sql(3, "cent2")},
+        WITH {KM_FIT_CTES},
         probes AS (
           SELECT vec_id AS probe_id, q FROM vecs WHERE vec_id % 100 = 0
         ),
@@ -1540,8 +1262,8 @@ def _ivf_probe_predicate():
 def q_sim_ann_ivf_kmeans(spark, d):
     """DECLARED IVF retrieval: the real inverted-file ANN pipeline —
     coarse-quantize with k-means, scan only the nprobe nearest
-    cells — with the declared Lloyd fit (_km_fit) as the quantizer,
-    so unlike the rows-only operators/ivf.py path (MLlib KMeans,
+    cells — with the declared Lloyd fit (fits.km_fit_memo) as the
+    quantizer, so unlike the rows-only operators/ivf.py path (MLlib KMeans,
     float centroids) EVERY stage is hash-verified: train, cell
     assignment, probe routing, and in-cell exact integer distances.
     nprobe=2 of k=4 cells scans ~half the corpus per probe — the
@@ -1555,15 +1277,12 @@ def q_sim_ann_ivf_kmeans(spark, d):
     k ~ sqrt(n) cells and bucketed membership tables
     (sources/io.write_bucketed), and PQ codes (q_emb_pq_adc) replace
     raw vectors inside cells."""
-    vecs = _quantized_vecs(load(spark, d, "embeddings"))
-    cents, members = _km_fit_memo(spark, d)
+    vecs = quantized_vecs(load(spark, d, "embeddings"))
+    cents, members = km_fit_memo(spark, d)
     probes = vecs.filter(_ivf_probe_predicate()).select(
         F.col("vec_id").alias("probe_id"), F.col("q").alias("pq")
     )
-    pd2 = F.expr(
-        "aggregate(zip_with(pq, cq, (a, b) -> (a - b) * (a - b)),"
-        " 0L, (acc, x) -> acc + x)"
-    )
+    pd2 = sq_dist("pq", "cq")
     w_route = Window.partitionBy("probe_id").orderBy("cd2", "cluster")
     pcells = (
         probes.crossJoin(F.broadcast(cents))
@@ -1572,10 +1291,7 @@ def q_sim_ann_ivf_kmeans(spark, d):
         .filter(F.col("rk") <= IVF_NPROBE)
         .select("probe_id", "pq", "cluster")
     )
-    nd2 = F.expr(
-        "aggregate(zip_with(pq, q, (a, b) -> (a - b) * (a - b)),"
-        " 0L, (acc, x) -> acc + x)"
-    )
+    nd2 = sq_dist("pq", "q")
     cand = (
         members.select("cluster", "vec_id", "q")
         .join(pcells, "cluster")
@@ -2413,7 +2129,7 @@ def _rrf_oracle() -> str:
                   AS BIGINT) AS lex_rank
       FROM ({bm25})
     ),
-    {_VECS_Q_SQL},
+    {VECS_Q_SQL},
     probe AS (
       SELECT q AS pq FROM vecs WHERE vec_id = {RRF_PROBE_ID}
     ),
@@ -2477,7 +2193,7 @@ def q_search_hybrid_rrf(spark, d):
         F.row_number().over(w_lex).cast("long").alias("lex_rank"),
     )
     emb = load(spark, d, "embeddings")
-    vecs = _quantized_vecs(emb)
+    vecs = quantized_vecs(emb)
     probe = vecs.filter(F.col("vec_id") == RRF_PROBE_ID).select(
         F.col("q").alias("pq")
     )
@@ -2486,10 +2202,7 @@ def q_search_hybrid_rrf(spark, d):
         .crossJoin(F.broadcast(probe))
         .select(
             F.col("vec_id").alias("doc_id"),
-            F.expr(
-                "aggregate(zip_with(q, pq, (a, b) -> (a - b) * (a - b)),"
-                " 0L, (acc, x) -> acc + x)"
-            ).alias("dist2"),
+            sq_dist("q", "pq").alias("dist2"),
         )
     )
     w_sem = Window.orderBy("dist2", "doc_id")
@@ -2710,7 +2423,7 @@ def q_ml_gbm_round(spark, d):
 # The post-training diagnostic that AUC/KS/PR (rank metrics) cannot
 # give: does predicted probability MEAN what it says? Scores come
 # from the SAME bit-identical 3-step GD weights as q_ml_logreg (the
-# fit is shared via _lr_fit / the unrolled SQL steps); each row's
+# fit and its decile bins are shared via queries/fits.py); each row's
 # sigmoid is an identical-input double on both engines, bucketed by
 # floor(p*10) (integer boundary — a p exactly at a bucket edge is a
 # double equality, identical on both sides), and per-bin mean
@@ -2718,32 +2431,14 @@ def q_ml_gbm_round(spark, d):
 
 
 _CALIB_ORACLE = f"""
-    WITH {_LR_BASE_SQL},
-    {_lr_step_sql(1)},
-    {_lr_step_sql(2)},
-    {_lr_step_sql(3)},
-    scored AS (
-      SELECT f.y,
-             1.0 / (1.0 + exp(-(w.w0 + w.w1 * f.x1 + w.w2 * f.x2)))
-                 AS p
-      FROM feats f, it3 w
-    ),
-    bins AS (
-      SELECT CAST(least(floor(p * 10.0), 9) AS BIGINT) AS bin,
-             COUNT(*) AS n,
-             CAST(SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_pos,
-             SUM(CAST(p AS DECIMAL(30,10))) AS sp
-      FROM scored
-      GROUP BY CAST(least(floor(p * 10.0), 9) AS BIGINT)
-    )
-    SELECT bin, CAST(n AS BIGINT) AS n, n_pos,
-           CAST(floor(CAST(sp AS DOUBLE) / n * 1000000.0) AS BIGINT)
+    WITH {LR_BINS_CTES}
+    SELECT bin, nb AS n, n_pos,
+           CAST(floor(CAST(sp AS DOUBLE) / nb * 1000000.0) AS BIGINT)
                AS avg_p_q6,
-           CAST(floor(n_pos * 1000000.0 / n) AS BIGINT)
+           CAST(floor(n_pos * 1000000.0 / nb) AS BIGINT)
                AS pos_rate_q6,
-           CAST(floor(CAST(sp AS DOUBLE) / n * 1000000.0) AS BIGINT)
-             - CAST(floor(n_pos * 1000000.0 / n) AS BIGINT)
+           CAST(floor(CAST(sp AS DOUBLE) / nb * 1000000.0) AS BIGINT)
+             - CAST(floor(n_pos * 1000000.0 / nb) AS BIGINT)
                AS gap_q6
     FROM bins ORDER BY bin
 """
@@ -2756,7 +2451,7 @@ def q_ml_calibration(spark, d):
     exact positive rate, plus the signed calibration gap — the
     companion diagnostic to the rank metrics (q_ml_auc/q_ml_ks/
     q_ml_pr_curve), which are blind to probability scaling. Reuses
-    q_ml_logreg's bit-identical weights (shared fit helper; the
+    q_ml_logreg's bit-identical weights (fits.lr_decile_bins; the
     oracle replays the same unrolled decimal-GD steps), so scores
     are engine-identical doubles; bins are integer floors; per-bin
     mean prediction is an exact decimal sum quantized AFTER the
@@ -2764,32 +2459,16 @@ def q_ml_calibration(spark, d):
     1-row weight relation into the feature scan and ONE combinable
     10-group agg — at 100 TB the cost is the scan, the calibration
     table is 10 rows."""
-    feats, n, w3 = _lr_fit(spark, d)
-    z = F.col("w0") + F.col("w1") * F.col("x1") + F.col("w2") * F.col("x2")
-    p = 1.0 / (1.0 + F.exp(-z))
-    scored = feats.crossJoin(F.broadcast(w3)).select(
-        "y", p.alias("p")
-    )
-    bins = scored.groupBy(
-        F.least(F.floor(F.col("p") * 10.0), F.lit(9))
-        .cast("long")
-        .alias("bin")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_pos"),
-        F.sum(F.col("p").cast(DEC)).alias("sp"),
-    )
+    bins = lr_decile_bins(spark, d)
     avg_p = F.floor(
-        F.col("sp").cast("double") / F.col("n") * 1000000.0
+        F.col("sp").cast("double") / F.col("nb") * 1000000.0
     ).cast("long")
     pos_rate = F.floor(
-        F.col("n_pos") * 1000000.0 / F.col("n")
+        F.col("n_pos") * 1000000.0 / F.col("nb")
     ).cast("long")
     return bins.select(
         "bin",
-        F.col("n").cast("long").alias("n"),
+        F.col("nb").alias("n"),
         "n_pos",
         avg_p.alias("avg_p_q6"),
         pos_rate.alias("pos_rate_q6"),

@@ -305,3 +305,25 @@ def test_distributed_ntile_handles_nulls(spark):
     w = Window.orderBy(F.col("v").asc(), F.col("id").asc())
     want = df.select("id", F.ntile(4).over(w).cast("long").alias("q"))
     assert got.select("id", "q").exceptAll(want).count() == 0
+
+
+def test_sq_dist_exact_at_quantization_scale(spark):
+    """sq_dist is the integer fold every quantized-embedding query
+    ranks on: at the KM_Q = 1e6 scale (components floor(x*1e6) for
+    x in [-1, 1), so negatives included) it must equal numpy's
+    int64 ((a - b) ** 2).sum() exactly — no float step anywhere."""
+    from spark_sklearn_spark.functions.vectors import sq_dist
+    from spark_sklearn_spark.queries.fits import KM_DIM, KM_Q
+
+    rng = np.random.RandomState(11)
+    a = np.floor(rng.uniform(-1.0, 1.0, (40, KM_DIM)) * KM_Q).astype(np.int64)
+    b = np.floor(rng.uniform(-1.0, 1.0, (40, KM_DIM)) * KM_Q).astype(np.int64)
+    b[0] = a[0]  # identical vectors: distance 0
+    b[1] = -a[1]  # sign flip: the largest per-component terms
+    rows = [(i, a[i].tolist(), b[i].tolist()) for i in range(len(a))]
+    df = spark.createDataFrame(rows, "id long, a array<bigint>, b array<bigint>")
+    got = dict(df.select("id", sq_dist("a", "b").alias("d2")).collect())
+    want = ((a - b) ** 2).sum(axis=1)
+    assert (a < 0).any() and (b < 0).any()
+    assert got == {i: int(want[i]) for i in range(len(a))}
+    assert got[0] == 0

@@ -328,10 +328,13 @@ def test_ml_kmeans_matches_numpy(spark, sf_dir):
     rounds from scratch in numpy integer arithmetic — seeding,
     argmin tie-breaks, floored centroid means, empty-cluster
     carry-forward — and demands exact equality of every output
-    cell."""
+    cell, and of every cell of the shared cluster x label
+    contingency table (fits.km_contingency)."""
+    from collections import Counter
+
     import __spark_entry__ as entry
 
-    from spark_sklearn_spark.queries.pipeline8 import KM_K, KM_Q
+    from spark_sklearn_spark.queries.fits import KM_K, KM_Q, km_contingency
     from spark_sklearn_spark.sources.io import load
 
     rows = entry.queries()["q_ml_kmeans"](spark, sf_dir).collect()
@@ -339,7 +342,7 @@ def test_ml_kmeans_matches_numpy(spark, sf_dir):
 
     emb = (
         load(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
+        .select("vec_id", "embedding", "label")
         .collect()
     )
     emb.sort(key=lambda r: r["vec_id"])
@@ -373,18 +376,29 @@ def test_ml_kmeans_matches_numpy(spark, sf_dir):
         assert row["c1_q"] == int(cent[c][0])
         assert row["c2_q"] == int(cent[c][1])
 
+    cont = {
+        (r["cluster"], r["label"]): r["c"]
+        for r in km_contingency(spark, sf_dir).collect()
+    }
+    want = Counter(
+        (int(c), r["label"]) for c, r in zip(assign, emb)
+    )
+    assert cont == dict(want)
+
 
 def test_ml_logreg_matches_numpy(spark, sf_dir):
     """Mirror of q_ml_logreg's three GD steps in numpy: per-term
     DECIMAL(30,10) quantization emulated with exact int64 sums, the
     identical weight-update expression, and the same margin-based
     accuracy — weights and metrics must agree at the rounded
-    precision the query reports."""
+    precision the query reports. The shared decile bins
+    (fits.lr_decile_bins) must match numpy bins of the replayed
+    scores."""
     import math
 
     import __spark_entry__ as entry
 
-    from spark_sklearn_spark.queries.pipeline8 import LR_RATE
+    from spark_sklearn_spark.queries.fits import LR_RATE, lr_decile_bins
     from spark_sklearn_spark.sources.io import load
 
     row = entry.queries()["q_ml_logreg"](spark, sf_dir).collect()[0]
@@ -430,6 +444,19 @@ def test_ml_logreg_matches_numpy(spark, sf_dir):
     p = 1.0 / (1.0 + np.exp(-z))
     ll = dec_sum(-(y * np.log(p) + (1.0 - y) * np.log(1.0 - p))) / n
     assert abs(row["log_loss_micro"] / 1e6 - ll) < 2e-4
+
+    bins = {r["bin"]: r for r in lr_decile_bins(spark, sf_dir).collect()}
+    assert sum(r["nb"] for r in bins.values()) == n
+    b = np.minimum(np.floor(p * 10.0), 9).astype(np.int64)
+    # the replayed p drifts from the engine's by < 1e-5, so only rows
+    # that close to a decile edge may land in a neighbouring bin
+    edges = np.arange(1, 10) / 10.0
+    near = int((np.abs(p[:, None] - edges[None, :]) < 1e-5).any(axis=1).sum())
+    for k in set(bins) | set(b.tolist()):
+        r = bins.get(k)
+        m = b == k
+        assert abs((r["nb"] if r else 0) - int(m.sum())) <= near, k
+        assert abs((r["n_pos"] if r else 0) - int(y[m].sum())) <= near, k
 
 
 def test_tree_split_invariants(spark, sf_dir):

@@ -850,9 +850,9 @@ def test_pipeline21_scalable(spark, sf_dir):
     """q_ml_silhouette/q_ml_davies_bouldin/q_ml_kcenter_init are
     exempt: their vecs x k-centroid broadcast crossJoin plans as a
     BNLJ with a k-BOUNDED build side — the documented Lloyd
-    _km_assign shape shared with q_ml_kmeans/q_sim_ann_ivf_kmeans
-    (linear in the corpus, constant fan-out). crossfield's corpus
-    join must plan clean."""
+    assignment shape (queries.fits._km_assign) shared with
+    q_ml_kmeans/q_sim_ann_ivf_kmeans (linear in the corpus, constant
+    fan-out). crossfield's corpus join must plan clean."""
     from spark_sklearn_spark.plans import assert_scalable
 
     qs = entry.queries()

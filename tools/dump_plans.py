@@ -516,7 +516,7 @@ NOTES = {
         "channel and good rows aggregate combinably."
     ),
     "q_ml_silhouette": (
-        "One vecs x 4-centroid broadcast rescore (the _km_assign "
+        "One vecs x 4-centroid broadcast rescore (the fits._km_assign "
         "shape), per-point rank over 4 rows, one combinable "
         "per-cluster agg — O(n·k), never O(n²) pairwise."
     ),

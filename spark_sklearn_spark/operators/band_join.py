@@ -1,7 +1,7 @@
 """Banded inequality (theta) join (SURVEY.md §4.3; VERDICT r1 item 9).
 
 Spark plans a bare ``a.value < b.value`` join as a
-BroadcastNestedLoopJoin — O(|L|·|R|) work and a broadcast of one whole
+broadcast nested-loop join — O(|L|·|R|) work and a broadcast of one whole
 side, which stops scaling the moment both filtered inputs grow. The
 band join turns the inequality into an equi-join: discretize the value
 domain into fixed-width bands, replicate each left row into every band

@@ -1,7 +1,7 @@
 """Interval / range join via bucketing (SURVEY.md §2B q_join_range_ts).
 
 Spark plans a raw ``l.ts BETWEEN r.lo AND r.hi`` join as a
-BroadcastNestedLoopJoin — O(|L|·|R|), unusable at 100 TB. The scale
+broadcast nested-loop join — O(|L|·|R|), unusable at 100 TB. The scale
 path: quantize the range key into fixed-width buckets, explode each
 right-side interval into the buckets it covers, equi-join on the
 bucket (hash join, shuffles once, AQE-skew-handled), then apply the

@@ -5,9 +5,9 @@ from .inspect import (  # noqa: F401
     assert_scalable,
     bounded_key_windows,
     executed_plan,
-    has_node,
     pushed_filters,
     read_schema,
+    scale_killers,
     window_partitions,
     window_partitions_from_text,
 )

@@ -2,10 +2,12 @@
 meant' toolkit (SURVEY.md §4.2 — our job is to not defeat the
 optimizer, and these helpers make that checkable).
 
-Used by tests/test_plans.py and available to users debugging a slow
-query: ``assert_scalable(df)`` fails fast on the classic 100 TB
-plan-killers (cartesian products, single-partition exchanges/windows)
-instead of letting them ship and melt a cluster.
+``scale_killers`` is the one definition of the classic 100 TB
+plan-killers (cartesian products, broadcast nested loops,
+single-partition exchanges/windows); the all-keys audit in
+tests/test_scale_sweep.py applies it to every registered key, and
+``assert_scalable(df)`` lets a user debugging a slow query fail fast
+on them instead of letting them ship and melt a cluster.
 """
 
 from __future__ import annotations
@@ -18,10 +20,6 @@ from pyspark.sql import DataFrame
 def executed_plan(df: DataFrame) -> str:
     """The final (post-AQE-planning) physical plan as text."""
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def has_node(df: DataFrame, node: str) -> bool:
-    return node in executed_plan(df)
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
@@ -86,8 +84,8 @@ def read_schema(df: DataFrame) -> list[str]:
 # same funnel as a single-partition window in disguise at 100×, unless
 # the window input was ALREADY aggregated to that bounded grain (then
 # the funnel holds a bounded relation, which is fine). Used by the
-# all-keys audit in tests/test_plans.py; extend as new enum columns
-# enter the schema.
+# all-keys audit in tests/test_scale_sweep.py; extend as new enum
+# columns enter the schema.
 BOUNDED_DOMAIN_HINTS: tuple[str, ...] = (
     "event_type",
     "o_orderstatus",
@@ -167,37 +165,40 @@ def _top_level_bracket_groups(s: str) -> list[str]:
 
 
 def bounded_key_windows(
-    df: DataFrame,
+    plan: str,
     hints: tuple[str, ...] = BOUNDED_DOMAIN_HINTS,
 ) -> list[list[str]]:
-    """Window nodes whose EVERY partition key is an enum-like bounded
-    domain (by column-name hint) — the low-cardinality funnel that
-    passes the SinglePartition check but serializes at scale unless
-    the window input is itself a bounded (pre-aggregated) relation.
-    Global windows are NOT returned here (SinglePartition covers
-    them)."""
-    flagged = []
-    for keys in window_partitions_from_text(executed_plan(df)):
-        if keys and all(
-            any(h in k.lower() for h in hints) for k in keys
-        ):
-            flagged.append(keys)
-    return flagged
+    """Window nodes of an executed-plan string whose EVERY partition
+    key is an enum-like bounded domain (by column-name hint) — the
+    low-cardinality funnel that passes the SinglePartition check but
+    serializes at scale unless the window input is itself a bounded
+    (pre-aggregated) relation. Global windows are NOT returned here
+    (SinglePartition covers them)."""
+    return [
+        keys
+        for keys in window_partitions_from_text(plan)
+        if keys and all(any(h in k.lower() for h in hints) for k in keys)
+    ]
 
 
-def assert_scalable(df: DataFrame, allow_cartesian: bool = False) -> None:
-    """Raise AssertionError on plan shapes that cannot survive a
-    scale-up: cartesian products / broadcast nested loops (quadratic)
-    and single-partition exchanges (serialization points)."""
+def scale_killers(plan: str) -> set[str]:
+    """The plan shapes in an executed-plan string that cannot survive
+    a scale-up: cartesian products / broadcast nested loops
+    (quadratic) and single-partition exchanges (serialization
+    points)."""
+    return {
+        k
+        for k in ("CartesianProduct", "BroadcastNestedLoopJoin", "SinglePartition")
+        if k in plan
+    }
+
+
+def assert_scalable(df: DataFrame) -> None:
+    """Raise AssertionError when ``df``'s executed plan contains any of
+    ``scale_killers``."""
     plan = executed_plan(df)
-    problems = []
-    if not allow_cartesian:
-        for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
-            if bad in plan:
-                problems.append(bad)
-    if "SinglePartition" in plan:
-        problems.append("Exchange SinglePartition")
+    problems = scale_killers(plan)
     if problems:
         raise AssertionError(
-            f"plan contains scale-killers: {problems}\n{plan[:4000]}"
+            f"plan contains scale-killers: {sorted(problems)}\n{plan[:4000]}"
         )

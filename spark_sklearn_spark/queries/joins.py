@@ -3,7 +3,7 @@
 Physical-strategy notes (checked in tests/test_plans.py):
 - q_join_broadcast must plan a BroadcastHashJoin (dim side hinted).
 - q_join_shuffle is a SortMergeJoin on the shuffled key.
-- q_join_theta is a BroadcastNestedLoopJoin on deliberately-bounded
+- q_join_theta is a broadcast nested-loop join on deliberately-bounded
   inputs (selective filters first — a theta join's cost is |L|·|R|).
 - q_join_range_ts avoids BNLJ entirely via the bucketed interval join
   (operators/range_join.py) — the 100 TB-safe plan.
@@ -235,7 +235,7 @@ def q_join_theta(spark, d):
     """Pure non-equi (theta) join, executed as a *band join*
     (operators/band_join.py): the value domain is discretized so the
     inequality becomes a shuffled equi-join on band id + residual
-    filter, instead of the BroadcastNestedLoopJoin Spark would plan —
+    filter, instead of the broadcast nested-loop join Spark would plan —
     BNLJ cost grows as |L|·|R| (10,000× at 100× data) while the band
     join grows linearly with a constant replication factor."""
     from ..operators.band_join import band_join_less_than

@@ -24,6 +24,7 @@ from ..operators.lsh import band_pairs, near_dup_pairs
 from ..operators.similarity import cosine_pairs, cosine_topk
 from ..registry import query
 from ..sources.io import load, snapshot, write_parquet
+from ._helpers import h56
 
 
 # --------------------------------------------------------------------------
@@ -395,9 +396,7 @@ def simhash_sigs(spark, d):
     ).filter(F.col("g").isNotNull())
     gh = grams.select(
         "doc_id",
-        F.expr("cast(conv(substr(md5(g), 1, 14), 16, 10) as bigint)").alias(
-            "h"
-        ),
+        h56("g").alias("h"),
     )
     # per-bit majority in one wide hash agg: 56 conditional sums + n,
     # all whole-stage codegen, partial aggregation map-side

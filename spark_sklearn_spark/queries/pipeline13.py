@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
+from ._helpers import h56
 
 # --------------------------------------------------------------------------
 # Weekly stickiness (DAU/WAU)
@@ -312,10 +313,7 @@ def q_sketch_kmv(spark, d):
     )
     hashes = mem.select(
         "set_name",
-        F.expr(
-            "cast(conv(substr(md5(cast(user_id as string)), 1, 14),"
-            " 16, 10) as bigint)"
-        ).alias("h"),
+        h56("cast(user_id as string)").alias("h"),
     ).distinct()
     ranked = hashes.select(
         "set_name",

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
+from ._helpers import h56
 
 # --------------------------------------------------------------------------
 # Additive decomposition (trend + weekday seasonal + remainder)
@@ -549,12 +550,11 @@ def q_ml_cv_stability(spark, d):
     cores (r17: single-row-group fixture ran them in one scan task —
     2.5 s → 1.0 s at sf0.1; no-op on splittable inputs)."""
     li = load(spark, d, "lineitem", spread=True)
-    feats = li.selectExpr(
-        "cast(conv(substr(md5(cast(l_orderkey as string) || '|'"
-        " || cast(l_linenumber as string)), 1, 14), 16, 10) as bigint)"
-        " % 5 AS fold",
-        "l_quantity AS x",
-        "l_extendedprice AS y",
+    key = "cast(l_orderkey as string) || '|' || cast(l_linenumber as string)"
+    feats = li.select(
+        (h56(key) % 5).alias("fold"),
+        F.col("l_quantity").alias("x"),
+        F.col("l_extendedprice").alias("y"),
     )
     moments = feats.groupBy("fold").agg(
         F.count(F.lit(1)).alias("n"),

@@ -808,7 +808,7 @@ def q_text_simpson(spark, d):
 #
 # The scale pattern for range joins (q_join_range_ts's value-band
 # sibling): joining rows to [lo, hi) bands with a raw BETWEEN predicate
-# is a BroadcastNestedLoopJoin — fine for a 7-row band table, fatal
+# is a broadcast nested-loop join — fine for a 7-row band table, fatal
 # when the band table grows. The bucketed form stays an EQUI-join at
 # ANY band count: each band explodes to the fixed-width buckets it
 # overlaps (sequence over floor(lo/W)..floor((hi−1)/W)), rows compute

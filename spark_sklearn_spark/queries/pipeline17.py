@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load, snapshot
-from ._helpers import sql_h56
+from ._helpers import h56, sql_h56
 
 # --------------------------------------------------------------------------
 # binaryFile source roundtrip
@@ -99,10 +99,7 @@ def q_source_binaryfile(spark, d):
                 "",
             ).alias("source"),
             F.col("length").cast("long").alias("n_bytes"),
-            F.expr(
-                "cast(conv(substr(md5(cast(content as string)), 1, 14),"
-                " 16, 10) as bigint)"
-            ).alias("content_h56"),
+            h56("cast(content as string)").alias("content_h56"),
         )
         .orderBy("source")
     )

@@ -724,7 +724,7 @@ def q_geo_grid_join(spark, d):
         f"(lat + 90000000) div {_GEO_R} AS cy",
     )
     # 9 neighbor offsets inlined as one explode (o div 3 - 1,
-    # o % 3 - 1) — a generator, not a BroadcastNestedLoopJoin
+    # o % 3 - 1) — a generator, not a broadcast nested-loop join
     a = pts.select(
         F.col("id").alias("ida"),
         F.col("lat").alias("lata"),

@@ -657,7 +657,7 @@ def q_layout_file_skipping(spark, d):
     )
     # the 4-predicate grid attaches via a generator + constant CASE
     # mapping (a crossJoin of even a 4-row side plans as a
-    # BroadcastNestedLoopJoin, which the scalability gate rejects)
+    # broadcast nested-loop join, which the scalability gate rejects)
     lo_case = "case " + " ".join(
         f"when pred_id = {i} then"
         f" cast(datediff(date '{lo}', date '1970-01-01') as bigint)"

@@ -234,8 +234,6 @@ def q_dq_table_checksum(spark, d):
 # round — the q_ml_kcenter_init re-anchor pattern) so round r+1's
 # lineage stays one agg over the days-sized relation.
 
-_ESD_ROUNDS = 3
-
 
 def _esd_round_sql(t: int, excl: str) -> str:
     return f"""

@@ -28,9 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.vectors import sq_dist
 from ..registry import query
 from ..sources.io import load
-from ._helpers import DEC
+from ._helpers import DEC, h56, sql_h56
 
 # --------------------------------------------------------------------------
 # Katz centrality (bounded-hop, integer-exact)
@@ -250,10 +251,7 @@ def q_ml_lof(spark, d):
     )
     a = panel.select(F.col("vec_id").alias("p"), F.col("q").alias("pq"))
     b = panel.select(F.col("vec_id").alias("o"), F.col("q").alias("oq"))
-    d2 = F.expr(
-        "aggregate(zip_with(pq, oq, (x, y) -> (x - y) * (x - y)),"
-        " 0L, (acc, v) -> acc + v)"
-    )
+    d2 = sq_dist("pq", "oq")
     pairs = (
         F.broadcast(a)
         .join(b, F.col("p") != F.col("o"))
@@ -473,8 +471,6 @@ PERM_REPS = 16
 
 
 def _perm_test_oracle() -> str:
-    from ._helpers import sql_h56
-
     h = sql_h56("CAST(o_orderkey AS VARCHAR)")
     return f"""
         WITH base AS (
@@ -561,10 +557,7 @@ def q_ml_permutation_test(spark, d):
                 "cents"
             ),
             "o_orderstatus",
-            F.expr(
-                "cast(conv(substr(md5(cast(o_orderkey as string)),"
-                " 1, 14), 16, 10) as bigint)"
-            ).alias("h"),
+            h56("cast(o_orderkey as string)").alias("h"),
         )
     )
     obs = o.agg(
@@ -942,10 +935,7 @@ def q_emb_mutual_knn(spark, d):
     )
     a = panel.select(F.col("vec_id").alias("p"), F.col("q").alias("pq"))
     b = panel.select(F.col("vec_id").alias("o"), F.col("q").alias("oq"))
-    d2 = F.expr(
-        "aggregate(zip_with(pq, oq, (x, y) -> (x - y) * (x - y)),"
-        " 0L, (acc, v) -> acc + v)"
-    )
+    d2 = sq_dist("pq", "oq")
     w = Window.partitionBy("p").orderBy("d2", "o")
     knn = (
         F.broadcast(a)
@@ -1350,7 +1340,7 @@ def q_behavior_gini(spark, d):
     Shape: one combinable per-user agg (the only corpus shuffle),
     then a count-of-counts collapse — bounded by the number of
     DISTINCT activity levels, not by users — and the cumulative +
-    3-sum agg run on that bounded relation (its SinglePartition
+    3-sum agg run on that bounded relation (its single-partition
     exchange is the documented bounded-relation exemption; the
     user-grain relation never crosses a single partition)."""
     ev = load(spark, d, "events")

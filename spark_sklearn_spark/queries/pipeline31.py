@@ -91,7 +91,7 @@ def q_behavior_yule_simon(spark, d):
     degenerate all-singletons corpus on both engines).
 
     Shape: the user-grain agg is the only corpus shuffle; the global
-    agg's SinglePartition exchange holds the post-aggregation 1-row
+    agg's single-partition exchange holds the post-aggregation 1-row
     relation (GLOBAL_VERDICT exemption class)."""
     ev = load(spark, d, "events")
     per_user = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("x"))
@@ -601,7 +601,7 @@ def q_ts_spectral_entropy(spark, d):
     Shape: one calendar collapse feeds ONE wide agg carrying all 24
     trig sums (a 12-branch union would rescan the corpus per period —
     measured 2.99 s vs sub-second fused); the 12-row grid is a stack
-    over that 1-row relation. All SinglePartition funnels hold
+    over that 1-row relation. All single-partition funnels hold
     grid-sized relations."""
     import math
 

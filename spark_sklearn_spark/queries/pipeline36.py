@@ -1,7 +1,7 @@
 """Round-16 batch: sweep-line session concurrency and HITS
 hubs/authorities — the two SURVEY §2B rows documented since r11 but
 never registered (VERDICT r15 item 1; the registry parity gate in
-tests/test_round16.py now makes such phantom rows impossible).
+tests/test_queries_smoke.py now makes such phantom rows impossible).
 
 - q_ts_concurrency: the classic sweep-line interval-overlap
   reduction. Each gap-30min session (q_behavior_sessionize's exact

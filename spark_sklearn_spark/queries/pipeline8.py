@@ -2666,7 +2666,7 @@ def q_ml_label_noise_knn(spark, d):
     the single quantized mean divides exact integers identically on
     both engines. Plan: signature build is one fused fold per row;
     the FIXED-SIZE probe panel broadcasts into the candidate scan
-    (BroadcastNestedLoopJoin, NOT CartesianProduct — panel x corpus,
+    (broadcast nested-loop join, NOT cartesian product — panel x corpus,
     linear in data); per-probe windows partition by vec_id. Module
     comment has the panel-estimate and 100 TB candidate-set
     arguments."""

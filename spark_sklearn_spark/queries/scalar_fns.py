@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
+from ._helpers import h56
 
 
 @query(
@@ -389,9 +390,9 @@ def q_fn_surrogate_key(spark, d):
     orders = load(spark, d, "orders")
     keyed = orders.select(
         "o_orderkey",
-        F.expr(
-            "cast(conv(substr(md5(concat('ord|', cast(o_orderkey as string),"
-            " '|', cast(o_custkey as string))), 1, 14), 16, 10) as bigint)"
+        h56(
+            "concat('ord|', cast(o_orderkey as string),"
+            " '|', cast(o_custkey as string))"
         ).alias("sk"),
     )
     return keyed.agg(

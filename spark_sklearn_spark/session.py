@@ -53,7 +53,7 @@ def createLocalSparkSession(
     # relation (operators/ranking.py documents the policy), Spark 4's
     # EliminateWindowPartitions strips any constant partition key we
     # could add, and the GENUINE scale gate is mechanical —
-    # plans.assert_scalable rejects SinglePartition exchanges in
+    # plans.assert_scalable rejects single-partition exchanges in
     # tests/test_plans.py — so the log line is pure noise here
     # (VERDICT r8 item 6).
     try:

@@ -28,8 +28,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Primary keys per fixture table — the deterministic repartition keys
 # for ``spread=True`` (guide §2.5: derive synthetic partitioning from a
 # stable key, never rand(), so task retries reproduce the assignment).

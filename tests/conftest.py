@@ -1,5 +1,6 @@
-"""Shared fixtures (SURVEY.md §5.1: the reference reused one local
-SparkSession across its test modules — fixtureReuseSparkSession)."""
+"""Shared fixtures and helpers (SURVEY.md §5.1: the reference reused one
+local SparkSession across its test modules — fixtureReuseSparkSession).
+Test modules import ``_plan`` / ``_rows`` from here."""
 
 from __future__ import annotations
 
@@ -30,3 +31,34 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    """DuckDB connection with one view per fixture table."""
+    import duckdb
+
+    from spark_sklearn_spark.sources.io import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM"
+            f" read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def _plan(spark, sf_dir, name):
+    """Executed physical plan of registered query ``name`` as text."""
+    import __spark_entry__ as entry
+    from spark_sklearn_spark.plans import executed_plan
+
+    return executed_plan(entry.queries()[name](spark, sf_dir))
+
+
+def _rows(spark, sf_dir, name):
+    """Collected rows of registered query ``name``."""
+    import __spark_entry__ as entry
+
+    return entry.queries()[name](spark, sf_dir).collect()

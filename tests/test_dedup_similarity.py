@@ -5,6 +5,8 @@ numpy oracle, and LSH candidate generation must be deterministic.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -14,6 +16,9 @@ from pyspark.sql import functions as F
 from spark_sklearn_spark.operators.lsh import near_dup_pairs
 from spark_sklearn_spark.operators.similarity import cosine_pairs, cosine_topk
 from spark_sklearn_spark.queries.pipeline4 import _word_ngrams
+
+import __spark_entry__ as entry
+from conftest import _rows
 
 VOCAB = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu "
@@ -332,3 +337,139 @@ def test_ivf_probe_is_exact_within_probed_lists(spark, sf_dir):
     assert [(r["vec_id"], r["cos"]) for r in got] == [
         (vid, cos) for vid, cos in want
     ]
+
+
+def test_minhash_containment_estimator_sane(spark, sf_dir):
+    """Exact containment >= exact Jaccard always; the 16-perm estimate
+    stays within 6/16 of exact Jaccard on the high-J candidate set
+    (generous — planted dups sit at J >= 0.4 where minhash variance
+    is sqrt(J(1-J)/16) ≈ 0.12)."""
+    rows = entry.queries()["q_text_minhash_containment"](
+        spark, sf_dir
+    ).collect()
+    assert rows
+    for r in rows:
+        assert r.cont_ab_ppm >= r.exact_j_ppm
+        assert abs(r.est_j_ppm - r.exact_j_ppm) <= 375_000, r
+
+
+def test_ivf_recall_reasonable(spark, sf_dir):
+    """Every probe lands in some bucket; overall recall@5 over the
+    panel is > 50% (nprobe=2 of 4 cells on clustered data)."""
+    rows = entry.queries()["q_emb_ann_recall_ivf"](spark, sf_dir).collect()
+    n_probes = sum(r.n_probes for r in rows)
+    assert n_probes > 0
+    hits = sum(r.n_hits_of_5 * r.n_probes for r in rows)
+    assert hits * 2 > n_probes * 5  # recall > 0.5
+    for r in rows:
+        assert 0 <= r.n_hits_of_5 <= 5
+        assert r.bucket_recall_ppm == r.n_hits_of_5 * 1_000_000 // 5
+
+
+def test_srp_recall_curve_invariants(spark, sf_dir):
+    """The planted-copy bucket (top cos^2 decile present) must show
+    100% recall — sign signatures are scale-invariant, so a x2 copy
+    collides with its source in EVERY band; the random-pair bucket 0
+    must sit near the theoretical 1-(1-p^8)^8 ~ 3.1% false-candidate
+    floor (wide tolerance: the panel is finite); and every rate is a
+    valid ppm."""
+    rows = entry.queries()["q_dedup_recall_srp"](spark, sf_dir).collect()
+    assert rows
+    by = {r.c2_bucket: r for r in rows}
+    top = max(by)
+    assert top >= 8, sorted(by)  # planted copies land in a top decile
+    assert by[top].n_cand == by[top].n_pairs  # 100% recall
+    assert by[top].cand_rate_ppm == 1_000_000
+    assert 0 in by and by[0].n_pairs > 100
+    assert by[0].cand_rate_ppm < 150_000  # floor ~31k ppm, not ~1e6
+    for r in rows:
+        assert 0 <= r.n_cand <= r.n_pairs
+        assert 0 <= r.cand_rate_ppm <= 1_000_000
+
+
+def test_srp_planted_copies_recall_exactly_one(spark, sf_dir):
+    """With copies scaled AFTER quantization, sign bits are identical
+    by construction: the cos^2=100 bucket must show candidate rate
+    exactly 1e6 ppm (recall = 1, not just empirically)."""
+    rows = (
+        entry.queries()["q_dedup_recall_srp"](spark, sf_dir).collect()
+    )
+    # c2_bucket = signed cos^2-percent // 10, so the planted copies
+    # (cos^2 = 100%) land in bucket 10.
+    top = [r for r in rows if r.c2_bucket == 10]
+    assert top, "no cos^2=100 bucket — planted copies missing"
+    assert top[0].cand_rate_ppm == 1_000_000, top[0]
+
+
+def test_simhash_hist_matches_production_cut(spark, sf_dir):
+    """The banded-candidate Hamming histogram must agree with the
+    production q_dedup_simhash exactly on the ≤ 6 cut: the histogram
+    mass at hamming ≤ 6 IS the number of declared near-dup pairs.
+    Distances stay within the 56-bit signature range."""
+    from spark_sklearn_spark.queries.pipeline import SIMHASH_HAMMING
+
+    hist = entry.queries()["q_dedup_simhash_hist"](
+        spark, sf_dir
+    ).collect()
+    n_prod = entry.queries()["q_dedup_simhash"](spark, sf_dir).count()
+    below = sum(
+        r.n_pairs for r in hist if r.hamming <= SIMHASH_HAMMING
+    )
+    assert below == n_prod
+    assert all(0 <= r.hamming <= 56 for r in hist)
+    assert sum(r.n_pairs for r in hist) >= n_prod
+
+
+def test_cdc_chunk_invariants(spark, sf_dir):
+    [r] = _rows(spark, sf_dir, "q_dedup_cdc")
+    assert 1 <= r.n_sigs <= r.n_chunks
+    assert 0 <= r.dup_chunk_ppm < 1_000_000
+    # every chunk holds ≥1 gram, so the mean is ≥ 1.0
+    assert r.mean_len_micro >= 1_000_000
+    assert r.dup_chunk_ppm == math.floor(
+        float(r.n_chunks - r.n_sigs) / r.n_chunks * 1000000
+    )
+
+
+def test_containment_idf_invariants(spark, sf_dir):
+    """Intersection mass never exceeds either side's total (ppm ≤
+    1e6), every surfaced pair clears the 0.6 ppm threshold in at
+    least one direction, and the weighted pair set stays inside the
+    unweighted containment candidate universe (same postings join,
+    same DF cap)."""
+    rows = entry.queries()["q_dedup_containment_idf"](
+        spark, sf_dir
+    ).collect()
+    assert rows
+    for r in rows:
+        assert 0 < r.wi <= min(r.w_a, r.w_b)
+        assert r.cont_idf_a_ppm <= 1_000_000
+        assert r.cont_idf_b_ppm <= 1_000_000
+        assert max(r.cont_idf_a_ppm, r.cont_idf_b_ppm) >= 600_000
+
+
+def test_distinct_gram_minhash_matches_exploded(spark):
+    """_mh_capped_and_bands' two signature forms — the 16x posting
+    explode and the per-distinct-gram lsh.min_signature — must give
+    the same (doc_id, band, h0, h1) rows."""
+    from spark_sklearn_spark.queries.pipeline8 import (
+        MH_K,
+        MH_R,
+        _mh_capped_and_bands,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c x y z"), (3, "x y z a b"),
+         (4, "x y z"), (5, "too short")],
+        "doc_id long, text string",
+    )
+
+    def bands(form):
+        b = _mh_capped_and_bands(spark, None, docs=docs, form=form)[1]
+        return {
+            tuple(r) for r in b.select("doc_id", "band", "h0", "h1").collect()
+        }
+
+    exploded = bands("explode")
+    assert len(exploded) == 4 * (MH_K // MH_R)
+    assert exploded == bands("array")

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import pytest
 
-import __spark_entry__ as entry
+from conftest import _rows
 
 # Queries chosen for float-sensitivity: double sums (decimal policy),
 # windowed frame sums, matmul-based similarity, LSH banding, ratio
@@ -55,23 +55,15 @@ SENSITIVE = [
 ]
 
 
-def _rows(spark, sf_dir, name):
-    df = entry.queries()[name](spark, sf_dir)
-    cols = sorted(df.columns)
-    return sorted(
-        tuple(r[c] for c in cols) for r in df.select(*cols).collect()
-    )
-
-
 @pytest.mark.parametrize("name", SENSITIVE)
 def test_query_is_partitioning_invariant(spark, sf_dir, name):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        a = _rows(spark, sf_dir, name)
+        a = sorted(_rows(spark, sf_dir, name))
         spark.catalog.clearCache()
         spark.conf.set("spark.sql.shuffle.partitions", "29")
-        b = _rows(spark, sf_dir, name)
+        b = sorted(_rows(spark, sf_dir, name))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.catalog.clearCache()

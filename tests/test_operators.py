@@ -327,3 +327,27 @@ def test_sq_dist_exact_at_quantization_scale(spark):
     assert (a < 0).any() and (b < 0).any()
     assert got == {i: int(want[i]) for i in range(len(a))}
     assert got[0] == 0
+
+
+def test_multi_ntile_matches_sequential(spark):
+    """multi_distributed_ntile must assign exactly the tiles three
+    sequential distributed_ntile calls assign (the q_behavior_rfm
+    rewrite's identity argument)."""
+    from pyspark.sql import functions as F
+
+    from spark_sklearn_spark.operators.ranking import (
+        distributed_ntile,
+        multi_distributed_ntile,
+    )
+
+    df = spark.range(0, 97).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 37 % 11).alias("a"),
+        (F.col("id") * 13 % 7).alias("b"),
+    )
+    seq = distributed_ntile(df, "a", ["k"], 4, out_col="ta")
+    seq = distributed_ntile(seq, "b", ["k"], 4, out_col="tb")
+    multi = multi_distributed_ntile(df, [("a", "ta"), ("b", "tb")], ["k"], 4)
+    left = {tuple(r) for r in seq.select("k", "ta", "tb").collect()}
+    right = {tuple(r) for r in multi.select("k", "ta", "tb").collect()}
+    assert left == right

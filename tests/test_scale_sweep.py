@@ -2,7 +2,8 @@
 
 Every registered query's executed plan is checked for the classic
 100 TB plan-killers (CartesianProduct / BroadcastNestedLoopJoin /
-Exchange SinglePartition) — the check `assert_scalable` makes — with
+Exchange SinglePartition) — `plans.scale_killers`, the one definition
+`assert_scalable` also raises on — with
 ONE explicit exemption table mapping each key that legitimately trips
 to its documented bounded-relation reason. This is the gate whose
 absence let q_behavior_gini / q_text_heaps_law ship user-/doc-grain
@@ -47,7 +48,9 @@ import pytest
 import __spark_entry__ as entry
 
 from spark_sklearn_spark.plans.inspect import (
-    BOUNDED_DOMAIN_HINTS,
+    bounded_key_windows,
+    executed_plan,
+    scale_killers,
     window_partitions_from_text,
 )
 
@@ -245,13 +248,9 @@ BOUNDED_DOMAIN_WINDOW_OK = {
 def all_plans(spark, sf_dir):
     """One executed-plan pass over every registered key (plan text is
     reused by all sweep tests below)."""
-    qs = entry.queries()
     return {
-        name: fn(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        for name, fn in qs.items()
+        name: executed_plan(fn(spark, sf_dir))
+        for name, fn in entry.queries().items()
     }
 
 
@@ -259,13 +258,9 @@ def test_all_keys_scale_sweep(all_plans):
     unexempted: list[tuple[str, list[str]]] = []
     stale: list[tuple[str, str]] = []
     for name, plan in all_plans.items():
-        kills = set()
-        if "CartesianProduct" in plan and name not in CARTESIAN_OK:
-            kills.add("CartesianProduct")
-        if "BroadcastNestedLoopJoin" in plan:
-            kills.add("BroadcastNestedLoopJoin")
-        if "SinglePartition" in plan:
-            kills.add("SinglePartition")
+        kills = scale_killers(plan)
+        if name in CARTESIAN_OK:
+            kills.discard("CartesianProduct")
         allowed = SCALE_EXEMPT.get(name, set())
         if kills - allowed:
             unexempted.append((name, sorted(kills - allowed)))
@@ -304,15 +299,7 @@ def test_bounded_domain_windows_are_justified(all_plans):
     missing: list[str] = []
     stale: list[str] = []
     for name, plan in all_plans.items():
-        flagged = [
-            keys
-            for keys in window_partitions_from_text(plan)
-            if keys
-            and all(
-                any(h in k.lower() for h in BOUNDED_DOMAIN_HINTS)
-                for k in keys
-            )
-        ]
+        flagged = bounded_key_windows(plan)
         if flagged and name not in BOUNDED_DOMAIN_WINDOW_OK:
             missing.append(name)
         if not flagged and name in BOUNDED_DOMAIN_WINDOW_OK:

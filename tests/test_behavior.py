@@ -1,7 +1,6 @@
 """User-behavior query invariants (q_behavior_* / q_funnel_*):
-Markov and absorbing-chain iterates, funnel monotonicity, concentration
-and burstiness statistics replayed in Python, and the removal-effect
-attribution walk's degenerate-data guards.
+concentration and inter-arrival statistics replayed in Python, and the
+removal-effect attribution walk's shares and degenerate-data guards.
 """
 
 from __future__ import annotations
@@ -13,96 +12,6 @@ import pytest
 
 import __spark_entry__ as entry
 from conftest import _rows
-
-
-def test_pathing_paths_end_in_purchase(spark, sf_dir):
-    rows = entry.queries()["q_behavior_pathing"](spark, sf_dir).collect()
-    assert rows, "no conversion paths on fixture"
-    assert all(r.path.endswith(">purchase") for r in rows)
-    assert all(r.n_conversions >= r.n_users > 0 for r in rows)
-    ns = [r.n_conversions for r in rows]
-    assert ns == sorted(ns, reverse=True)
-
-
-def test_stickiness_bounds(spark, sf_dir):
-    rows = entry.queries()["q_behavior_stickiness"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        # avg daily actives cannot exceed weekly actives
-        assert 0 < r.stickiness_ppm <= 1_000_000, r
-        assert r.sum_dau >= r.wau  # each week has >=1 day
-        assert 1 <= r.n_days <= 7
-
-
-def test_markov_iterates_are_distributions(spark, sf_dir):
-    """Each power step stays a probability distribution: micro values
-    sum to 1e6 within one floor per state."""
-    rows = entry.queries()["q_behavior_markov"](spark, sf_dir).collect()
-    k = len(rows)
-    assert k >= 2
-    for col in ("p1_micro", "p2_micro", "p3_micro"):
-        s = sum(r[col] for r in rows)
-        assert 1_000_000 - k <= s <= 1_000_000, (col, s)
-
-
-def test_absorbing_probs_monotone(spark, sf_dir):
-    """Absorption probabilities are monotone in k and inside [0, 1e6];
-    'purchase' itself never appears as a start state."""
-    rows = entry.queries()["q_behavior_absorbing"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert r.event_type != "purchase"
-        assert 0 <= r.a1_micro <= r.a2_micro + 1 <= r.a3_micro + 2
-        assert r.a3_micro <= 1_000_000
-
-
-def test_gaps_cover_all_consecutive_events(spark, sf_dir):
-    """Total histogram mass = (#events − #users with ≥1 event): every
-    consecutive pair contributes exactly one gap."""
-    from pyspark.sql import functions as F
-
-    from spark_sklearn_spark.sources.io import load
-
-    rows = entry.queries()["q_behavior_gaps"](spark, sf_dir).collect()
-    total = sum(r.n_gaps for r in rows)
-    ev = load(spark, sf_dir, "events")
-    n_events = ev.count()
-    n_users = ev.select("user_id").distinct().count()
-    assert total == n_events - n_users
-
-
-def test_uplift_arm_accounting(spark, sf_dir):
-    """Arms partition the user base; conversions bounded by arm size;
-    lift consistent with the published rates."""
-    from spark_sklearn_spark.sources.io import load
-
-    r = entry.queries()["q_behavior_uplift"](spark, sf_dir).collect()[0]
-    n_users = (
-        load(spark, sf_dir, "events").select("user_id").distinct().count()
-    )
-    assert r.n0 + r.n1 == n_users
-    assert 0 <= r.x0 <= r.n0 and 0 <= r.x1 <= r.n1
-    assert r.lift_ppm == r.rate1_ppm - r.rate0_ppm
-
-
-def test_powerlaw_tail_accounting(spark, sf_dir):
-    """Tail is a subset of the population; alpha > 1 by construction."""
-    r = entry.queries()["q_behavior_powerlaw"](spark, sf_dir).collect()[0]
-    assert 0 < r.n_tail <= r.n_users
-    assert r.alpha_micro > 1_000_000
-    assert r.tail_share_ppm == r.n_tail * 1_000_000 // r.n_users
-
-
-def test_funnel_window_bounded_by_unbounded(spark, sf_dir):
-    """Each windowed stage count must be <= the unbounded funnel's
-    count at the same stage (the window only removes conversions),
-    and stages must be nonincreasing."""
-    qs = entry.queries()
-    w = {r.stage: r.n_users for r in qs["q_funnel_window"](spark, sf_dir).collect()}
-    u = {r.stage: r.n_users for r in qs["q_funnel_ordered"](spark, sf_dir).collect()}
-    assert w[1] == u[1]  # stage 1 has no window
-    assert w[2] <= u[2] and w[3] <= u[3]
-    assert w[1] >= w[2] >= w[3] >= 0
 
 
 def test_entropy_rate_bounds(spark):

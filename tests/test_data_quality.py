@@ -1,116 +1,10 @@
-"""Data-quality and layout query invariants (q_dq_* / q_layout_* /
-q_pii_*): audit counts tie back to their source tables, checksums
-detect a dropped row, and file-layout metrics separate the two
-clustering layouts.
+"""Layout query invariants (q_layout_*): file-layout metrics separate
+the two clustering layouts.
 """
 
 from __future__ import annotations
 
 import __spark_entry__ as entry
-
-
-def test_benford_shares_and_terms(spark, sf_dir):
-    """Digits are 1..9, observed shares sum to ~1e6 ppm, expected
-    shares match log10(1+1/d), and chi-square terms are nonnegative."""
-    import math
-
-    rows = entry.queries()["q_dq_benford"](spark, sf_dir).collect()
-    digits = [r.first_digit for r in rows]
-    assert digits == sorted(digits) and set(digits) <= set(range(1, 10))
-    assert abs(sum(r.obs_ppm for r in rows) - 1_000_000) <= len(rows)
-    for r in rows:
-        exp = math.floor(math.log10(1 + 1 / r.first_digit) * 1e6)
-        assert r.benford_ppm == exp, (r.first_digit, r.benford_ppm, exp)
-        assert r.term_micro >= 0
-
-
-def test_reconcile_accounts_for_every_order(spark, sf_dir):
-    from spark_sklearn_spark.sources.io import load
-
-    rows = entry.queries()["q_dq_reconcile"](spark, sf_dir).collect()
-    total = sum(r.n_orders for r in rows)
-    assert total == load(spark, sf_dir, "orders").count()
-
-
-def test_skew_audit_invariants(spark, sf_dir):
-    """Row/key counts tie to the source; shares ordered; Gini in
-    [0, 1e6)."""
-    from spark_sklearn_spark.sources.io import load
-
-    r = entry.queries()["q_dq_skew"](spark, sf_dir).collect()[0]
-    orders = load(spark, sf_dir, "orders")
-    assert r.n_rows == orders.count()
-    assert r.n_keys == orders.select("o_custkey").distinct().count()
-    assert r.max_share_ppm <= r.top10_share_ppm <= 1_000_000
-    assert 0 <= r.gini_ppm < 1_000_000
-
-
-def test_file_skipping_date_layout_wins(spark, sf_dir):
-    """Zone maps on date-clustered files must skip at least as well
-    as key-clustered files for every date predicate — the audit's
-    whole point; counts internally consistent."""
-    rows = entry.queries()["q_layout_file_skipping"](spark, sf_dir).collect()
-    by = {(r.layout, r.pred_id): r for r in rows}
-    assert len(rows) == 8
-    for pred in range(4):
-        kd, kk = by[("by_date", pred)], by[("by_key", pred)]
-        assert kd.skip_ppm >= kk.skip_ppm
-        for r in (kd, kk):
-            assert 0 <= r.files_skipped <= r.files_total
-            assert r.skip_ppm == r.files_skipped * 1_000_000 // r.files_total
-
-
-def test_crossfield_rules_tie_to_source(spark, sf_dir):
-    """Line counts tie to the fact table; violations within counts."""
-    from spark_sklearn_spark.sources.io import load
-
-    rows = entry.queries()["q_dq_crossfield"](spark, sf_dir).collect()
-    n_li = load(spark, sf_dir, "lineitem").count()
-    assert sum(r.n_lines for r in rows) == n_li
-    for r in rows:
-        assert 0 <= r.n_ship_before_order + r.n_ship_late
-        assert r.violation_ppm <= 2_000_000
-
-
-def test_pii_tokenize_injective_and_join_preserving(spark, sf_dir):
-    """No token collisions on the fixture, and the tokenized join
-    returns exactly the key join's cardinality."""
-    r = entry.queries()["q_pii_tokenize"](spark, sf_dir).collect()[0]
-    assert r.n_collisions == 0
-    assert r.n_tokens == r.n_names
-    assert r.n_orders_by_token == r.n_orders_by_key
-    assert r.min_token.startswith("c_") and len(r.min_token) == 19
-
-
-def test_table_checksum_detects_change(spark, sf_dir, duck):
-    """Row counts tie to the sources, and dropping one row flips the
-    XOR checksum (oracle-side experiment)."""
-    from spark_sklearn_spark.queries.pipeline24 import _CANON_NATION
-    from spark_sklearn_spark.queries._helpers import sql_h56
-
-    rows = {
-        r.table_name: r
-        for r in entry.queries()["q_dq_table_checksum"](
-            spark, sf_dir
-        ).collect()
-    }
-    n_nation = duck.execute("SELECT COUNT(*) FROM nation").fetchone()[0]
-    assert rows["nation"].n_rows == n_nation
-    full = rows["nation"].xor_h
-    dropped = duck.execute(
-        f"SELECT bit_xor({sql_h56(_CANON_NATION)}) FROM nation"
-        f" WHERE n_nationkey <> 0"
-    ).fetchone()[0]
-    assert dropped != full
-
-
-def test_double_charge_counts_consistent(spark, sf_dir):
-    """Same-day pairs are a subset; gap mass bounded by 3 days/pair;
-    affected customers cannot exceed pairs."""
-    r = entry.queries()["q_dq_double_charge"](spark, sf_dir).collect()[0]
-    assert 0 <= r.n_same_day <= r.n_pairs
-    assert 0 <= r.gap_days_sum <= 3 * r.n_pairs
-    assert r.n_customers <= max(r.n_pairs, 1)
 
 
 def test_overlap_depth_separates_layouts(spark, sf_dir):

@@ -339,54 +339,6 @@ def test_ivf_probe_is_exact_within_probed_lists(spark, sf_dir):
     ]
 
 
-def test_minhash_containment_estimator_sane(spark, sf_dir):
-    """Exact containment >= exact Jaccard always; the 16-perm estimate
-    stays within 6/16 of exact Jaccard on the high-J candidate set
-    (generous — planted dups sit at J >= 0.4 where minhash variance
-    is sqrt(J(1-J)/16) ≈ 0.12)."""
-    rows = entry.queries()["q_text_minhash_containment"](
-        spark, sf_dir
-    ).collect()
-    assert rows
-    for r in rows:
-        assert r.cont_ab_ppm >= r.exact_j_ppm
-        assert abs(r.est_j_ppm - r.exact_j_ppm) <= 375_000, r
-
-
-def test_ivf_recall_reasonable(spark, sf_dir):
-    """Every probe lands in some bucket; overall recall@5 over the
-    panel is > 50% (nprobe=2 of 4 cells on clustered data)."""
-    rows = entry.queries()["q_emb_ann_recall_ivf"](spark, sf_dir).collect()
-    n_probes = sum(r.n_probes for r in rows)
-    assert n_probes > 0
-    hits = sum(r.n_hits_of_5 * r.n_probes for r in rows)
-    assert hits * 2 > n_probes * 5  # recall > 0.5
-    for r in rows:
-        assert 0 <= r.n_hits_of_5 <= 5
-        assert r.bucket_recall_ppm == r.n_hits_of_5 * 1_000_000 // 5
-
-
-def test_srp_recall_curve_invariants(spark, sf_dir):
-    """The planted-copy bucket (top cos^2 decile present) must show
-    100% recall — sign signatures are scale-invariant, so a x2 copy
-    collides with its source in EVERY band; the random-pair bucket 0
-    must sit near the theoretical 1-(1-p^8)^8 ~ 3.1% false-candidate
-    floor (wide tolerance: the panel is finite); and every rate is a
-    valid ppm."""
-    rows = entry.queries()["q_dedup_recall_srp"](spark, sf_dir).collect()
-    assert rows
-    by = {r.c2_bucket: r for r in rows}
-    top = max(by)
-    assert top >= 8, sorted(by)  # planted copies land in a top decile
-    assert by[top].n_cand == by[top].n_pairs  # 100% recall
-    assert by[top].cand_rate_ppm == 1_000_000
-    assert 0 in by and by[0].n_pairs > 100
-    assert by[0].cand_rate_ppm < 150_000  # floor ~31k ppm, not ~1e6
-    for r in rows:
-        assert 0 <= r.n_cand <= r.n_pairs
-        assert 0 <= r.cand_rate_ppm <= 1_000_000
-
-
 def test_srp_planted_copies_recall_exactly_one(spark, sf_dir):
     """With copies scaled AFTER quantization, sign bits are identical
     by construction: the cos^2=100 bucket must show candidate rate

@@ -1,5 +1,4 @@
-"""Embedding query invariants (q_emb_*): the integer PCA power
-iterate against numpy, whitening and norm moments, isotropy and
+"""Embedding query invariants (q_emb_*): isotropy and
 per-dimension entropy bounds, and the mutual-kNN degree histogram.
 """
 
@@ -9,98 +8,6 @@ import math
 
 import __spark_entry__ as entry
 from conftest import _rows
-
-
-def test_pca_power_aligns_with_numpy(spark, sf_dir):
-    """The integer iterate must track numpy running the SAME three
-    float power-iteration rounds from the same start (cos > 0.97).
-    Note this tests arithmetic fidelity, not spectral convergence —
-    the synthetic embeddings are near-isotropic (lambda1 ~ lambda2),
-    so no 3-round method converges to the true eigenvector here."""
-    import numpy as np
-
-    from spark_sklearn_spark.queries.pca_power import (
-        PP_Q,
-        PP_ROUNDS,
-        PP_VSCALE,
-    )
-    from spark_sklearn_spark.sources.io import load
-
-    X = np.array(
-        [
-            r.embedding
-            for r in load(spark, sf_dir, "embeddings")
-            .select("embedding")
-            .collect()
-        ],
-        dtype=np.float64,
-    )
-    Q = np.floor(X * PP_Q)
-    C = Q - np.trunc(Q.sum(axis=0) / len(Q))
-    cov = C.T @ C
-    v = np.full(C.shape[1], float(PP_VSCALE))
-    for _ in range(PP_ROUNDS):
-        w = cov @ v
-        v = w * PP_VSCALE / np.abs(w).max()
-    v3 = np.array(
-        [
-            r.v3
-            for r in entry.queries()["q_emb_pca_power"](spark, sf_dir)
-            .orderBy("dim")
-            .collect()
-        ],
-        dtype=np.float64,
-    )
-    cos = (v3 @ v) / (np.linalg.norm(v3) * np.linalg.norm(v))
-    assert cos > 0.97, cos
-
-
-def test_norm_audit_moment_order(spark, sf_dir):
-    from spark_sklearn_spark.sources.io import load
-
-    rows = entry.queries()["q_emb_norm_audit"](spark, sf_dir).collect()
-    n_vecs = load(spark, sf_dir, "embeddings").count()
-    assert sum(r.n_vecs for r in rows) == n_vecs
-    for r in rows:
-        assert r.min_sq <= r.mean_sq <= r.max_sq
-        assert r.n_zero == 0  # fixture vectors are non-degenerate
-
-
-def test_pca_topk_scores_align_with_iterate(spark, sf_dir):
-    """Recompute the projection of the top-1 vec from the published
-    iterate and centered values — must equal the reported proj."""
-    from pyspark.sql import functions as F
-
-    from spark_sklearn_spark.queries.pca_power import power_fit
-
-    top = entry.queries()["q_emb_pca_topk"](spark, sf_dir).collect()
-    assert len(top) == 20
-    assert top[0].rnk == 1
-    projs = [abs(r.proj) for r in top]
-    assert projs == sorted(projs, reverse=True)
-    cent, _, iterates = power_fit(spark, sf_dir)
-    want = (
-        cent.filter(F.col("vec_id") == top[0].vec_id)
-        .join(F.broadcast(iterates[-1]), "i")
-        .agg(F.sum(F.col("c") * F.col("v")).alias("p"))
-        .collect()[0]
-        .p
-    )
-    assert want == top[0].proj
-
-
-def test_whiten_checksum_properties(spark, sf_dir):
-    """Per-dim z-scores: zsum ≈ 0 (within n·1 milli of floor bias —
-    floors bias negative, so zsum in [-n, 0]); zabs > 0; moments
-    consistent (n equal across dims)."""
-    rows = entry.queries()["q_emb_whiten"](spark, sf_dir).collect()
-    assert len(rows) == 64
-    ns = {r.n for r in rows}
-    assert len(ns) == 1
-    n = ns.pop()
-    for r in rows:
-        assert -n <= r.zsum_milli <= 0, r
-        assert r.zabs_milli > 0
 
 
 def test_isotropy_bounds(spark):

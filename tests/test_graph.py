@@ -1,177 +1,12 @@
-"""Near-dup graph query invariants (q_graph_*): k-core fixpoints,
-BFS layers, walk counts, clustering/assortativity/modularity ranges and
-community statistics, checked against replays on the edge snapshot.
+"""Near-dup graph query invariants (q_graph_*): walk counts,
+community coverage, rich-club, truss, conductance and HITS statistics,
+checked against replays on the edge snapshot.
 """
 
 from __future__ import annotations
 
 import __spark_entry__ as entry
 from conftest import _rows
-
-
-def test_kcore_reaches_fixpoint(spark, sf_dir):
-    """On the fixture the peel stabilizes within the three unrolled
-    rounds: rounds 2 and 3 must match (so the bounded unroll IS the
-    2-core here, not a truncation)."""
-    rows = {
-        r.round: (r.n_nodes, r.sum_nodes, r.n_edges)
-        for r in entry.queries()["q_graph_kcore"](spark, sf_dir).collect()
-    }
-    assert rows[2] == rows[3], rows
-
-
-def test_kcore_nodes_have_min_degree(spark, sf_dir):
-    """Every surviving node of the final round has degree >= k within
-    the surviving edge set — the defining 2-core property."""
-    from spark_sklearn_spark.queries.kcore import KCORE_K, near_dup_edges
-    from pyspark.sql import functions as F
-
-    edges = near_dup_edges(spark, sf_dir).select("doc_a", "doc_b")
-    # replay the peel
-    for _ in range(3):
-        deg = (
-            edges.select(F.col("doc_a").alias("doc_id"))
-            .unionAll(edges.select(F.col("doc_b").alias("doc_id")))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("dg"))
-        )
-        keep = deg.filter(F.col("dg") >= KCORE_K).select("doc_id")
-        edges = (
-            edges.join(
-                keep.withColumnRenamed("doc_id", "doc_a"), "doc_a", "semi"
-            )
-            .join(
-                keep.withColumnRenamed("doc_id", "doc_b"), "doc_b", "semi"
-            )
-            .localCheckpoint()
-        )
-    final_deg = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .unionAll(edges.select(F.col("doc_b").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("dg"))
-    )
-    bad = final_deg.filter(F.col("dg") < KCORE_K).count()
-    assert bad == 0
-
-
-def test_bfs_layers(spark, sf_dir):
-    from spark_sklearn_spark.queries.pipeline2 import near_dup_edges
-    from pyspark.sql import functions as F
-
-    rows = entry.queries()["q_graph_bfs"](spark, sf_dir).collect()
-    assert [r.depth for r in rows] == [0, 1, 2, 3]
-    d0 = rows[0]
-    assert d0.n_nodes == 1
-    seed = (
-        near_dup_edges(spark, sf_dir)
-        .agg(F.min("doc_a").alias("m"))
-        .collect()[0]
-        .m
-    )
-    assert d0.sum_nodes == seed
-    # the seed has near-dup partners, so depth 1 is non-empty
-    assert rows[1].n_nodes > 0
-
-
-def test_clustcoeff_in_unit_range(spark, sf_dir):
-    rows = entry.queries()["q_graph_clustcoeff"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r.mean_cc_ppm <= 1_000_000
-        assert 0 <= r.n_cliquelike <= r.n_nodes
-        assert r.degree >= 2
-
-
-def test_jaccard_nbrs_bounds(spark, sf_dir):
-    """Neighborhood Jaccard in [0, 1e6]; common neighbors bounded by
-    min degree; degrees >= 1 on both endpoints of a real edge."""
-    rows = entry.queries()["q_graph_jaccard_nbrs"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r.nbr_jacc_ppm <= 1_000_000
-        assert r.n_common <= min(r.deg_a, r.deg_b)
-        assert r.deg_a >= 1 and r.deg_b >= 1
-
-
-def test_assortativity_in_range(spark, sf_dir):
-    row = entry.queries()["q_graph_assortativity"](spark, sf_dir).collect()[0]
-    assert -1_000_001 <= row.assort_micro <= 1_000_000
-    assert row.m == 2 * (row.s_h and row.m // 2 or 0) or row.m > 0
-
-
-def test_modularity_range_and_closure(spark, sf_dir):
-    """Q in [-0.5, 1]; with exact components, every edge is intra, so
-    Q = 1 − Σ(d_c/2m)² <= 1 − 1/n_clusters... just pin the range and
-    that the cluster count matches the component snapshot."""
-    from spark_sklearn_spark.queries.pipeline import dup_components
-
-    row = entry.queries()["q_graph_modularity"](spark, sf_dir).collect()[0]
-    assert -500_001 <= row.modularity_micro <= 1_000_000
-    n_clusters_with_mass = (
-        dup_components(spark, sf_dir)
-        .join(
-            entry.queries()["q_dedup_minhash"](spark, sf_dir)
-            .selectExpr("id_a AS doc_id")
-            .unionAll(
-                entry.queries()["q_dedup_minhash"](spark, sf_dir).selectExpr(
-                    "id_b AS doc_id"
-                )
-            )
-            .distinct(),
-            "doc_id",
-        )
-        .select("cluster_id")
-        .distinct()
-        .count()
-    )
-    assert row.n_clusters == n_clusters_with_mass
-
-
-def test_label_prop_converges_to_components(spark, sf_dir):
-    """n_labels is non-increasing over rounds; n_moved hits 0 only if
-    labels stopped changing; the round-3 label count is bounded below
-    by the exact component count."""
-    from spark_sklearn_spark.queries.pipeline import dup_components
-
-    rows = entry.queries()["q_graph_label_prop"](spark, sf_dir).collect()
-    labels = [r.n_labels for r in sorted(rows, key=lambda r: r.round)]
-    assert labels == sorted(labels, reverse=True)
-    n_comp = (
-        dup_components(spark, sf_dir)
-        .select("cluster_id")
-        .distinct()
-        .count()
-    )
-    assert labels[-1] >= n_comp
-
-
-def test_adamic_adar_ordering_and_bounds(spark, sf_dir):
-    """Top-20 is score-sorted; every pair shares >= 1 capped part;
-    AA <= n_common / ln(2)."""
-    import math
-
-    rows = entry.queries()["q_graph_adamic_adar"](spark, sf_dir).collect()
-    assert 0 < len(rows) <= 20
-    scores = [r.aa_micro for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    for r in rows:
-        assert r.n_common >= 1
-        assert r.aa_micro <= r.n_common * 1_000_000 / math.log(2)
-
-
-def test_closeness_monotone_and_bounded(spark, sf_dir):
-    """harmonic = 1e6*n_d1 + 5e5*n_d2 + 333333*n_d3 exactly, and each
-    seed's depth-1 reach equals its degree in the symmetric edge
-    set."""
-    rows = entry.queries()["q_graph_closeness"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        want = (
-            1_000_000 * r.n_d1 + 500_000 * r.n_d2 + 333_333 * r.n_d3
-        )
-        assert r.harmonic_micro == want, r
-        assert r.n_d1 >= 1  # a seed is an edge endpoint by construction
 
 
 def test_katz_walk_counts_consistent(spark):

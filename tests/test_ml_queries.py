@@ -12,362 +12,6 @@ import __spark_entry__ as entry
 from conftest import _rows
 
 
-def test_ttest_and_chi2_match_numpy(spark, sf_dir):
-    """Welch t and chi-square statistics agree with a straight numpy
-    computation on the same data (within the micro quantization)."""
-    import numpy as np
-
-    from spark_sklearn_spark.sources.io import load
-
-    ev = (
-        load(spark, sf_dir, "events")
-        .select("ts", "event_type", "value")
-        .collect()
-    )
-    # t-test, pooled over one weekday to spot-check
-    trows = entry.queries()["q_ml_ttest"](spark, sf_dir).collect()
-    for tr in trows[:2]:
-        iso = tr.iso_dow
-        a = np.array(
-            [
-                r.value
-                for r in ev
-                if r.event_type == "click"
-                and ((r.ts.isoweekday()) == iso)
-            ]
-        )
-        b = np.array(
-            [
-                r.value
-                for r in ev
-                if r.event_type == "purchase"
-                and ((r.ts.isoweekday()) == iso)
-            ]
-        )
-        t = (a.mean() - b.mean()) / np.sqrt(
-            a.var(ddof=1) / len(a) + b.var(ddof=1) / len(b)
-        )
-        assert abs(tr.t_micro / 1e6 - t) < 1e-3, (iso, tr.t_micro, t)
-    # chi-square
-    crow = entry.queries()["q_ml_chi2"](spark, sf_dir).collect()[0]
-    types = sorted({r.event_type for r in ev})
-    dows = sorted({r.ts.isoweekday() for r in ev})
-    obs = np.zeros((len(dows), len(types)))
-    for r in ev:
-        obs[dows.index(r.ts.isoweekday()), types.index(r.event_type)] += 1
-    rtot = obs.sum(axis=1, keepdims=True)
-    ctot = obs.sum(axis=0, keepdims=True)
-    exp = rtot @ ctot / obs.sum()
-    chi2 = ((obs - exp) ** 2 / exp).sum()
-    assert crow.dof == (len(dows) - 1) * (len(types) - 1)
-    assert abs(crow.chi2_micro / 1e6 - chi2) < 1e-3, (crow.chi2_micro, chi2)
-
-
-def test_knn_classify_panel_and_bounds(spark, sf_dir):
-    from spark_sklearn_spark.sources.io import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    n_panel = emb.filter("vec_id % 97 = 0").count()
-    rows = entry.queries()["q_ml_knn_classify"](spark, sf_dir).collect()
-    assert sum(r.n_probes for r in rows) == n_panel
-    for r in rows:
-        assert 0 <= r.n_correct <= r.n_probes
-        assert 0 <= r.acc_ppm <= 1_000_000
-
-
-def test_als_round_matches_numpy(spark, sf_dir):
-    """The item re-solve equals a straight numpy rank-1 ridge ALS
-    half-round on the same counts (up to the decimal quantization)."""
-    from collections import defaultdict
-
-    from spark_sklearn_spark.sources.io import load
-
-    ev = load(spark, sf_dir, "events").groupBy(
-        "user_id", "event_type"
-    ).count().collect()
-    import hashlib
-
-    def f0(t):
-        h = int(hashlib.md5(t.encode()).hexdigest()[:14], 16)
-        return 1.0 + (h % 1000) / 1000.0
-
-    by_user = defaultdict(list)
-    for r in ev:
-        by_user[r.user_id].append((r.event_type, r["count"]))
-    u = {}
-    for uid, items in by_user.items():
-        num = sum(c * f0(t) for t, c in items)
-        den = 0.1 + sum(f0(t) ** 2 for t, _ in items)
-        u[uid] = num / den
-    by_item = defaultdict(list)
-    for r in ev:
-        by_item[r.event_type].append((r.user_id, r["count"]))
-    for row in entry.queries()["q_ml_als_round"](spark, sf_dir).collect():
-        pts = by_item[row.event_type]
-        num = sum(c * u[uid] for uid, c in pts)
-        den = 0.1 + sum(u[uid] ** 2 for uid, _ in pts)
-        want = num / den
-        assert abs(row.f1_micro / 1e6 - want) < 1e-4, (row, want)
-
-
-def test_ndcg_bounds(spark, sf_dir):
-    rows = entry.queries()["q_ml_ndcg"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r.mean_ndcg_ppm <= 1_000_000, r
-        assert 0 <= r.n_perfect <= r.n_probes
-
-
-def test_pinball_median_below_extremes(spark, sf_dir):
-    """Pinball losses are nonnegative; q=0.5 loss is half the absolute
-    error, so 2·L(0.5) >= max(L(0.1), L(0.9)) cannot be violated by
-    construction — pin the nonnegativity + row count."""
-    rows = {
-        r.q_ppm: r
-        for r in entry.queries()["q_ml_pinball"](spark, sf_dir).collect()
-    }
-    assert set(rows) == {100000, 500000, 900000}
-    for r in rows.values():
-        assert r.total_loss_micro >= 0
-        assert r.n_days == rows[500000].n_days
-
-
-def test_cv_stability_spread_consistent(spark, sf_dir):
-    """The reported spread equals max−min of the fold slopes, and all
-    five folds are present."""
-    rows = entry.queries()["q_ml_cv_stability"](spark, sf_dir).collect()
-    assert {r.fold for r in rows} == set(range(5))
-    slopes = [r.slope_micro for r in rows]
-    spread = max(slopes) - min(slopes)
-    for r in rows:
-        assert r.slope_spread_micro == spread
-
-
-def test_woe_iv_signs_consistent(spark, sf_dir):
-    """IV terms are nonnegative iff WOE and the share difference agree
-    in sign — which they do by construction: iv = (dp − dn)·ln(dp/dn)
-    with dp,dn > 0 is always >= 0."""
-    rows = entry.queries()["q_feat_woe"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert r.iv_term_nano >= -1, r  # −1 absorbs the floor at exact 0
-
-
-def test_spearman_kendall_agree_on_direction(spark, sf_dir):
-    """Both rank correlations must agree in SIGN for every pair where
-    |tau| is decisive (>0.1) — a sign flip between the two would mean
-    one implementation is wrong."""
-    rho = {
-        (r.type_a, r.type_b): r.rho_micro
-        for r in entry.queries()["q_ml_spearman"](spark, sf_dir).collect()
-    }
-    tau = {
-        (r.type_a, r.type_b): r.tau_micro
-        for r in entry.queries()["q_ml_kendall"](spark, sf_dir).collect()
-    }
-    assert set(rho) == set(tau)
-    for k, t in tau.items():
-        if abs(t) > 100_000:
-            assert (t > 0) == (rho[k] > 0), (k, t, rho[k])
-        assert -1_000_001 <= t <= 1_000_000
-        assert -1_000_001 <= rho[k] <= 1_000_000
-
-
-def test_kendall_counts_close(spark, sf_dir):
-    """concordant + discordant <= n_pairs (ties take the rest)."""
-    for r in entry.queries()["q_ml_kendall"](spark, sf_dir).collect():
-        assert r.concordant + r.discordant <= r.n_pairs
-
-
-def test_mannwhitney_invariants(spark, sf_dir):
-    """U2 within [0, 2·n1·n2]; AUC ppm consistent with U2; z sign
-    agrees with which side of 0.5 the AUC sits on."""
-    r = entry.queries()["q_ml_mannwhitney"](spark, sf_dir).collect()[0]
-    assert 0 <= r.u2 <= 2 * r.n1 * r.n2
-    assert r.auc_ppm == r.u2 * 1_000_000 // (2 * r.n1 * r.n2)
-    if r.auc_ppm > 500_000:
-        assert r.z_micro >= 0
-    if r.auc_ppm < 499_000:
-        assert r.z_micro < 0
-
-
-def test_anova_invariants(spark, sf_dir):
-    """5 priority groups; eta² in [0, 1e6); F positive."""
-    r = entry.queries()["q_ml_anova"](spark, sf_dir).collect()[0]
-    assert r.k == 5
-    assert 0 <= r.eta2_ppm < 1_000_000
-    assert r.f_micro >= 0
-
-
-def test_logrank_against_survival_population(spark, sf_dir):
-    """O1 ≤ total conversions within horizon; E1 within the total
-    death mass; chi2 non-negative and consistent with (O1−E1)²/V."""
-    r = entry.queries()["q_ml_logrank"](spark, sf_dir).collect()[0]
-    assert r.o1 >= 0 and r.v_micro > 0
-    assert r.chi2_micro >= 0
-    o1, e1, v = r.o1, r.e1_micro / 1e6, r.v_micro / 1e6
-    want = (o1 - e1) ** 2 / v
-    assert abs(r.chi2_micro / 1e6 - want) < 0.02 * max(want, 1.0)
-
-
-def test_mcnemar_kappa_consistent(spark, sf_dir):
-    """The two keys share the classifier pair: discordant counts from
-    mcnemar must be compatible with kappa's agreement count
-    (agree = n − (A-only-right ∧ disagree) …): b+c ≤ n − agree is
-    NOT generally true, so check the direct identity on a local
-    recount instead."""
-    from spark_sklearn_spark.sources.io import load
-    from pyspark.sql import functions as F
-
-    mc = entry.queries()["q_ml_mcnemar"](spark, sf_dir).collect()[0]
-    ka = entry.queries()["q_ml_kappa"](spark, sf_dir).collect()[0]
-    assert mc.n == ka.n
-    docs = load(spark, sf_dir, "documents")
-    clf = docs.selectExpr(
-        "case when lang = 'en' then 1 else 0 end AS y",
-        "case when text like '% the %' then 1 else 0 end AS a",
-        "case when text like '% and %' or text like '% of %'"
-        " then 1 else 0 end AS b",
-    )
-    row = clf.agg(
-        F.sum(F.expr("case when a = y and b <> y then 1 else 0 end")).alias(
-            "b_disc"
-        ),
-        F.sum(F.expr("case when a = b then 1 else 0 end")).alias("agree"),
-    ).collect()[0]
-    assert mc.b_disc == row.b_disc
-    assert ka.agree == row.agree
-    assert -1_000_000 <= ka.kappa_ppm <= 1_000_000
-
-
-def test_bootstrap_ci_brackets_point(spark, sf_dir):
-    """lo ≤ point ≤ hi (a mean-1 multiplier bootstrap is centered on
-    the sample mean) and the interval is nondegenerate."""
-    r = entry.queries()["q_ml_bootstrap_ci"](spark, sf_dir).collect()[0]
-    assert r.lo_milli <= r.point_milli <= r.hi_milli
-    assert r.lo_milli < r.hi_milli
-    assert r.n > 0
-
-
-def test_silhouette_bounds_and_population(spark, sf_dir):
-    """Simplified silhouette lies in [0, 1] (b >= a by argmin); the
-    cluster populations cover every vector."""
-    from spark_sklearn_spark.sources.io import load
-
-    rows = entry.queries()["q_ml_silhouette"](spark, sf_dir).collect()
-    n_vecs = load(spark, sf_dir, "embeddings").count()
-    assert sum(r.n for r in rows) == n_vecs
-    for r in rows:
-        assert 0 <= r.mean_sil_micro <= 1_000_000
-
-
-def test_davies_bouldin_positive(spark, sf_dir):
-    r = entry.queries()["q_ml_davies_bouldin"](spark, sf_dir).collect()[0]
-    assert r.k == 4
-    assert r.db_micro > 0
-
-
-def test_kcenter_picks_distinct_and_radius_shrinks(spark, sf_dir):
-    """4 distinct seeds; each successive pick's distance is
-    non-increasing (greedy farthest-point invariant); the final
-    coverage radius (pick 0's d2 column) is <= the last pick's d2."""
-    rows = sorted(
-        entry.queries()["q_ml_kcenter_init"](spark, sf_dir).collect(),
-        key=lambda r: r.pick_order,
-    )
-    ids = [r.vec_id for r in rows]
-    assert len(set(ids)) == 4
-    d = [r.d2 for r in rows[1:]]
-    assert d == sorted(d, reverse=True)
-    assert rows[0].d2 <= rows[-1].d2
-
-
-def test_friedman_rank_identities(spark, sf_dir):
-    """Doubled midranks per block sum to k(k+1), so Σ_j S_j must be
-    n·k·(k+1); mean ranks average to (k+1)/2; chi2 ≥ 0."""
-    rows = entry.queries()["q_ml_friedman"](spark, sf_dir).collect()
-    k = rows[0].k
-    n = rows[0].n_blocks
-    assert len(rows) == k
-    assert sum(r.s2 for r in rows) == n * k * (k + 1)
-    assert all(r.chi2_micro == rows[0].chi2_micro >= 0 for r in rows)
-
-
-def test_purity_and_ari_consistent(spark, sf_dir):
-    """Cluster populations cover the corpus; purity in (0, 1e6];
-    ARI in [-0.5e6, 1e6] and its combinatoric inputs satisfy
-    a <= min(b1, b2) <= C(n,2)."""
-    from spark_sklearn_spark.sources.io import load
-
-    rows = entry.queries()["q_ml_cluster_purity"](spark, sf_dir).collect()
-    n_vecs = load(spark, sf_dir, "embeddings").count()
-    assert sum(r.n for r in rows) == n_vecs
-    for r in rows:
-        assert 0 < r.purity_ppm <= 1_000_000
-        assert r.top_n <= r.n
-    ari = entry.queries()["q_ml_rand_index"](spark, sf_dir).collect()[0]
-    assert ari.n == n_vecs
-    assert ari.a <= min(ari.b1, ari.b2) <= ari.n * (ari.n - 1) // 2
-    assert -500_000 <= ari.ari_micro <= 1_000_000
-
-
-def test_nmi_in_unit_range_and_triple_consistent(spark, sf_dir):
-    """NMI in [0, 1e6]; n ties to the other validation keys."""
-    nmi = entry.queries()["q_ml_nmi"](spark, sf_dir).collect()[0]
-    ari = entry.queries()["q_ml_rand_index"](spark, sf_dir).collect()[0]
-    assert nmi.n == ari.n
-    assert 0 <= nmi.nmi_micro <= 1_000_000
-
-
-def test_tost_internally_consistent(spark, sf_dir):
-    """equivalent == both one-sided t's above 1.645; margin > 0."""
-    r = entry.queries()["q_ml_tost"](spark, sf_dir).collect()[0]
-    assert r.margin_milli > 0
-    want = int(
-        r.t_lower_micro > 1_645_000 and r.t_upper_micro > 1_645_000
-    )
-    # floors lose < 1 micro: only assert when both are clear of the
-    # threshold by at least one quantum
-    if (
-        abs(r.t_lower_micro - 1_645_000) > 1
-        and abs(r.t_upper_micro - 1_645_000) > 1
-    ):
-        assert r.equivalent == want
-
-
-def test_kruskal_rank_identities(spark, sf_dir):
-    """Doubled midranks over N days sum to N(N+1); H >= 0; 7 groups."""
-    rows = entry.queries()["q_ml_kruskal"](spark, sf_dir).collect()
-    assert len(rows) == 7
-    n = sum(r.n_g for r in rows)
-    assert sum(r.s2 for r in rows) == n * (n + 1)
-    assert all(
-        r.h_corr_micro == rows[0].h_corr_micro >= 0 for r in rows
-    )
-
-
-def test_isotonic_is_monotone_and_brackets_rates(spark, sf_dir):
-    """The PAV fit must be nondecreasing in the bin, agree with the
-    raw rate wherever the raw curve is already monotone across the
-    whole range, and stay inside [min rate, max rate]."""
-    rows = entry.queries()["q_ml_isotonic_bins"](spark, sf_dir).collect()
-    assert rows
-    iso = [r.iso_ppm for r in rows]
-    assert iso == sorted(iso)
-    rates = [r.rate_ppm for r in rows]
-    assert min(rates) <= iso[0] and iso[-1] <= max(rates)
-
-
-def test_cohen_d_antisymmetric_pairs(spark, sf_dir):
-    """All 10 unordered type pairs present; d is finite and the
-    magnitude is sane for same-distribution synthetic types."""
-    rows = entry.queries()["q_ml_cohen_d"](spark, sf_dir).collect()
-    assert len(rows) == 10
-    for r in rows:
-        assert r.type_a < r.type_b
-        assert abs(r.cohen_d_micro) < 5_000_000  # |d| < 5
-
-
 def test_lof_invariants(spark):
     """LOF at sf0.001: panel membership, kd2 is the k-th smallest
     pair distance (numpy replay on the quantized vectors), and a

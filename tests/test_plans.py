@@ -421,52 +421,6 @@ def test_split_train_is_single_scan_agg(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_basket_lift_total_stays_lazy(spark, sf_dir):
-    """The lazified basket lift carries the basket total as a PLAN
-    NODE (count(distinct basket) aggregate cross-joined in), not as an
-    eagerly-computed literal folded into the lift expression."""
-    df = entry.queries()["q_basket_lift"](spark, sf_dir)
-    plan = df._jdf.queryExecution().analyzed().toString()
-    assert "n_baskets" in plan, "basket total was folded to a literal"
-    assert df.count() > 0
-
-
-def test_interval_overlap_is_equi_join(spark, sf_dir):
-    """The physical plan must contain a hash/sort-merge join keyed on
-    user_id+bucket."""
-    df = entry.queries()["q_join_interval_overlap"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "bucket" in plan
-
-
-def test_pipeline24_scalable(spark, sf_dir):
-    """All four batch-J keys close in 1-row global aggregates (the
-    q_sample_neyman global-scalar exemption): pit_scd2's asof output,
-    each checksum table, nmi's entropy sums, and esd's per-round
-    moments all partial-aggregate map-side and funnel exactly one row
-    per table/round — assert the checksum's XOR agg is combinable by
-    checking the plan carries a partial_bit_xor before the exchange."""
-    from spark_sklearn_spark.plans import executed_plan
-
-    plan = executed_plan(
-        entry.queries()["q_dq_table_checksum"](spark, sf_dir)
-    )
-    assert "partial_bit_xor" in plan or "partial_xor" in plan.lower()
-
-
-def test_pipeline25_scalable(spark, sf_dir):
-    """granger/tost close in 1-row aggs and glob_tree crosses in the
-    1-row recursive count (the csv_dirty/json_corrupt global-scalar
-    shape) — all exempt. Assert the per-lang read is a combinable
-    hash agg partitioned on lang, not a single-partition funnel."""
-    from spark_sklearn_spark.plans import executed_plan
-
-    plan = executed_plan(
-        entry.queries()["q_source_glob_tree"](spark, sf_dir)
-    )
-    assert "hashpartitioning(lang" in plan
-
-
 def test_round12_batch_plans_are_scalable(spark):
     """q_feat_mutual_info
     is the documented bounded-grid exemption (the Lloyd-shape

@@ -3,11 +3,10 @@ a stable, non-degenerate result; every declared query has matching
 column names with its oracle's aliases (the driver hashes by sorted
 column name, so a name drift is an automatic mismatch).
 
-The registry and driver-contract gates live here too: oracle output
-types the type-strict driver hasher accepts (no HUGEINT/DECIMAL, no
--0.0, the engine canary's pinned values), SURVEY.md ↔ registry
-parity, the DRIVER_PRIORITY window and staleness-order pins, and the
-bench.py contract guard.
+The registry and driver-contract gates live here too: SURVEY.md ↔
+registry parity, oracle guards the type-strict driver hasher needs,
+the DRIVER_PRIORITY window and staleness-order pins, and the bench.py
+contract guard.
 """
 
 from __future__ import annotations
@@ -100,89 +99,6 @@ def test_declared_columns_appear_in_oracle(spark, sf_dir, name, registry):
         assert re.search(rf"\b{re.escape(col.lower())}\b", sql_l), (
             f"{name}: column {col!r} not found in oracle SQL"
         )
-
-
-def test_no_oracle_emits_hugeint_or_decimal(duck):
-    """The r7 red mechanism, gated forever: every declared oracle's
-    output schema must be free of HUGEINT (uncast integer SUMs,
-    window SUMs, list_sum) and DECIMAL columns."""
-    offenders = {}
-    for name, sql in entry.oracle_sql().items():
-        rel = duck.sql(sql)
-        bad = [
-            (c, str(t))
-            for c, t in zip(rel.columns, rel.types)
-            if "HUGEINT" in str(t) or str(t).startswith("DECIMAL")
-        ]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, offenders
-
-
-def test_canary_values_pinned(spark, sf_dir, duck):
-    """The canary's columns are constants of the engine pair — pin the
-    expected values so a drift fails HERE with the mechanism named,
-    not just in a driver row."""
-    row = entry.queries()["q_dq_engine_canary"](spark, sf_dir).collect()[0]
-    assert row.n_rows == 25
-    assert row.sum_int == 300  # 0+1+..+24
-    assert row.round6_micro == 666667
-    assert row.negzero_norm == 0  # + 0.0 normalization holds
-    assert row.intdiv_floor == 3
-    assert row.ln_micro == 693147
-    assert row.iso_dow == 5  # 2024-03-15 is a Friday
-    assert row.decsum_micro == 2500000  # 25 * 0.1, exact via decimal
-    assert row.seq_desc_len == 0
-    # r9 extensions
-    assert row.round_half_dir == 3  # exact .5 rounds AWAY, not banker's
-    assert row.tie_floor_micro == 0  # fl(5e-7 * 1e6) < 0.5 ties floor to 0
-    assert row.dbl_literal_atto == 721347520444481664  # strtod parity
-    drow = duck.execute(entry.oracle_sql()["q_dq_engine_canary"]).fetchone()
-    assert tuple(row) == tuple(drow)
-
-
-def test_fixed_reds_emit_integer_outputs(spark, sf_dir):
-    """The four r7 reds that carried ROUND(raw double) outputs now
-    emit integer (long) columns for those measures."""
-    qs = entry.queries()
-    hapax = qs["q_text_hapax"](spark, sf_dir)
-    types = dict(hapax.dtypes)
-    assert types["ttr_ppm"] == "bigint"
-    assert types["hapax_ppm"] == "bigint"
-    mad = qs["q_ts_outlier_mad"](spark, sf_dir)
-    types = dict(mad.dtypes)
-    for c in ("med_micro", "mad_micro", "max_adev_micro", "n_outliers"):
-        assert types[c] == "bigint", c
-    ws = qs["q_sample_weighted"](spark, sf_dir)
-    assert dict(ws.dtypes)["es_key"] == "bigint"
-
-
-def test_check_lint_flags_hugeint(duck):
-    """tools/check.py's portability lint names HUGEINT oracle columns."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-    from check import _portability_lint
-
-    warns = _portability_lint(
-        "t", "SELECT SUM(n_nationkey) AS s FROM nation", [], [], duck
-    )
-    assert any("HUGEINT" in w for w in warns)
-    warns = _portability_lint("t", "SELECT 1 AS s", [(-0.0,)], [], duck)
-    assert any("-0.0" in w for w in warns)
-
-
-def test_canary_bitshift_column(spark, sf_dir):
-    """The new bitshift_mask column must extract byte 2 of the pinned
-    constant: (0x1122334455667788 >> 16) & 255 = 0x66 = 102. The r10
-    round_tie_micro column pins the multiply-round tie: the double
-    nearest 0.1234565 is BELOW the boundary yet both engines round UP
-    (DuckDB: product lands exactly on 123456.5, half-away; Spark:
-    BigDecimal.valueOf goes through the shortest string repr)."""
-    r = entry.queries()["q_dq_engine_canary"](spark, sf_dir).collect()[0]
-    assert r.bitshift_mask == 102
-    assert r.round_tie_micro == 123457
 
 
 def test_survey_section7_counts_match_registry():

@@ -1,82 +1,12 @@
-"""Round-9 additions: pipeline14 landing debt (tests the r8 snapshot
-commit skipped), the pipeline15 batch, the q_agg_approx_percentile
-promotion, and the SURVEY-drift gate (VERDICT r8 item 5).
+"""Query invariants, second group: time series, graph, ML-fit,
+sketch, source and data-quality keys each checked against numpy, a
+brute-force form of the same query, or an identity their output must
+satisfy.
 """
 
 from __future__ import annotations
 
-import os
-import re
-
-import duckdb
-import pytest
-
 import __spark_entry__ as entry
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
-# ---------------------------------------------------------------------------
-# SURVEY drift gate: the §2B table is the single source of truth
-# ---------------------------------------------------------------------------
-
-
-def test_registry_keys_all_documented_in_survey():
-    """Every registered query key must appear in SURVEY.md (§2B table
-    or prose) — pipeline14 landed undocumented in r8; this makes that
-    class of drift a test failure. TPC-H range keys are generated, so
-    the full q_tpch_q\\d+ family counts as documented if any member
-    appears."""
-    survey = open(
-        os.path.join(os.path.dirname(__file__), "..", "SURVEY.md")
-    ).read()
-    documented = set(re.findall(r"q_\w+", survey))
-    tpch_ok = any(k.startswith("q_tpch_q") for k in documented)
-    missing = [
-        k
-        for k in entry.queries()
-        if k not in documented
-        and not (tpch_ok and re.fullmatch(r"q_tpch_q\d+", k))
-    ]
-    assert not missing, f"registry keys absent from SURVEY.md: {missing}"
-
-
-# (The round-10 window pin that lived here was retired after
-# CORRECTNESS_r10 proved its 50/50 green; the live pin is
-# tests/test_round11.py::test_driver_priority_covers_round11_risk.)
-
-
-# ---------------------------------------------------------------------------
-# pipeline14 landing debt (VERDICT r8 item 2)
-# ---------------------------------------------------------------------------
-
-
-def test_pipeline14_scalable(spark, sf_dir):
-    """q_behavior_markov / q_ml_pinball are exempt: their 1-row
-    global aggregates (type count k, calendar bounds) legitimately
-    plan as a SinglePartition agg BNLJ-crossed into bounded relations
-    — the documented q_basket_lift / q_win_pareto shape.
-    q_ml_cv_stability's OVER () spread window runs on the 5-row fits
-    relation (bounded by the fold count)."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    for name in ("q_ts_stl", "q_graph_clustcoeff"):
-        assert_scalable(qs[name](spark, sf_dir))
 
 
 def test_stl_components_reassemble(spark, sf_dir):
@@ -134,31 +64,6 @@ def test_cv_stability_spread_consistent(spark, sf_dir):
     spread = max(slopes) - min(slopes)
     for r in rows:
         assert r.slope_spread_micro == spread
-
-
-# ---------------------------------------------------------------------------
-# pipeline15 batch
-# ---------------------------------------------------------------------------
-
-
-def test_pipeline15_scalable(spark, sf_dir):
-    """q_feat_woe / q_ts_hurst are exempt (1-row totals / 3-row block
-    grid cross-joined into bounded relations — the q_basket_lift
-    shape); everything else must plan clean."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    for name in (
-        "q_ts_changepoint",
-        "q_graph_jaccard_nbrs",
-        "q_behavior_absorbing",
-        "q_text_simpson",
-        "q_join_range_bucket",
-        "q_text_minhash_containment",
-        "q_agg_approx_percentile",
-        "q_emb_pca_topk",
-    ):
-        assert_scalable(qs[name](spark, sf_dir))
 
 
 def test_pca_topk_scores_align_with_iterate(spark, sf_dir):
@@ -315,28 +220,6 @@ def test_approx_percentile_audit_all_green(spark, sf_dir):
         assert r.gk_ok_50 == 1 and r.gk_ok_90 == 1 and r.gk_ok_99 == 1
 
 
-# ---------------------------------------------------------------------------
-# pipeline16 batch B
-# ---------------------------------------------------------------------------
-
-
-def test_pipeline16_scalable(spark, sf_dir):
-    """q_graph_assortativity is exempt (1-row stub-sum aggregate, the
-    global-scalar shape); the rest must plan clean."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    for name in (
-        "q_ml_spearman",
-        "q_ml_kendall",
-        "q_behavior_gaps",
-        "q_sample_reservoir",
-        "q_dq_reconcile",
-        "q_tpch_q1",
-    ):
-        assert_scalable(qs[name](spark, sf_dir))
-
-
 def test_spearman_kendall_agree_on_direction(spark, sf_dir):
     """Both rank correlations must agree in SIGN for every pair where
     |tau| is decisive (>0.1) — a sign flip between the two would mean
@@ -437,22 +320,6 @@ def test_tpch_q1_consistent_with_flagship(spark, sf_dir):
     assert q1 == fl
 
 
-# ---------------------------------------------------------------------------
-# pipeline17 batch C
-# ---------------------------------------------------------------------------
-
-
-def test_pipeline17_scalable(spark, sf_dir):
-    """q_graph_modularity is exempt (1-row edge-total aggregate
-    BNLJ-crossed into the bounded cluster relation — the global-scalar
-    shape); the others must plan clean."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    for name in ("q_source_binaryfile", "q_emb_whiten"):
-        assert_scalable(qs[name](spark, sf_dir))
-
-
 def test_binaryfile_roundtrip_bytes(spark, sf_dir):
     """Each emitted file's byte count equals the sum of its docs' text
     bytes plus the newline separators."""
@@ -519,23 +386,6 @@ def test_whiten_checksum_properties(spark, sf_dir):
         assert r.zabs_milli > 0
 
 
-# ---------------------------------------------------------------------------
-# pipeline18 batch D
-# ---------------------------------------------------------------------------
-
-
-def test_pipeline18_scalable(spark, sf_dir):
-    """q_sample_neyman is exempt (1-row totals crossed in — the
-    global-scalar shape); q_emb_ann_recall_ivf is exempt (the brute
-    TRUTH side is an intentional broadcast-panel × corpus pass — the
-    q_ml_knn_classify shape, linear in the corpus; the IVF side under
-    eval joins on the cell key)."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    assert_scalable(qs["q_win_gaps_islands"](spark, sf_dir))
-
-
 def test_gaps_islands_cover_all_user_days(spark, sf_dir):
     """Σ island_len · n_islands = distinct (user, day) pairs — every
     active day belongs to exactly one island."""
@@ -577,23 +427,6 @@ def test_ivf_recall_reasonable(spark, sf_dir):
     for r in rows:
         assert 0 <= r.n_hits_of_5 <= 5
         assert r.bucket_recall_ppm == r.n_hits_of_5 * 1_000_000 // 5
-
-
-# ---------------------------------------------------------------------------
-# pipeline19 (round-9 batch E)
-# ---------------------------------------------------------------------------
-
-
-def test_pipeline19_scalable(spark, sf_dir):
-    """Global-scalar shapes (mannwhitney/anova/pacf/theta/ams/skew/
-    label_prop close with 1-row or bounded-row aggs) are exempt per
-    the q_sample_neyman precedent; the two corpus-shaped keys must
-    plan clean."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    for name in ("q_fn_ip", "q_geo_grid_join"):
-        assert_scalable(qs[name](spark, sf_dir))
 
 
 def test_mannwhitney_invariants(spark, sf_dir):
@@ -734,22 +567,6 @@ def test_label_prop_converges_to_components(spark, sf_dir):
     assert labels[-1] >= n_comp
 
 
-# ---------------------------------------------------------------------------
-# pipeline20 (round-9 batch F)
-# ---------------------------------------------------------------------------
-
-
-def test_pipeline20_scalable(spark, sf_dir):
-    """Global-scalar shapes (logrank/mcnemar/kappa/bootstrap/asof-tol
-    close with 1-row aggs, json_corrupt crosses in the 1-row corrupt
-    total exactly like its csv_dirty twin) follow the q_sample_neyman
-    exemption; the relation-shaped key must plan clean."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    assert_scalable(qs["q_layout_file_skipping"](spark, sf_dir))
-
-
 def test_logrank_against_survival_population(spark, sf_dir):
     """O1 ≤ total conversions within horizon; E1 within the total
     death mass; chi2 non-negative and consistent with (O1−E1)²/V."""
@@ -841,24 +658,6 @@ def test_json_corrupt_routes_exactly_three(spark, sf_dir):
     assert sum(r.n_good for r in rows) == want
 
 
-# ---------------------------------------------------------------------------
-# pipeline21 (round-9 batch G)
-# ---------------------------------------------------------------------------
-
-
-def test_pipeline21_scalable(spark, sf_dir):
-    """q_ml_silhouette/q_ml_davies_bouldin/q_ml_kcenter_init are
-    exempt: their vecs x k-centroid broadcast crossJoin plans as a
-    BNLJ with a k-BOUNDED build side — the documented Lloyd
-    assignment shape (queries.fits._km_assign) shared with
-    q_ml_kmeans/q_sim_ann_ivf_kmeans (linear in the corpus, constant
-    fan-out). crossfield's corpus join must plan clean."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    assert_scalable(qs["q_dq_crossfield"](spark, sf_dir))
-
-
 def test_silhouette_bounds_and_population(spark, sf_dir):
     """Simplified silhouette lies in [0, 1] (b >= a by argmin); the
     cluster populations cover every vector."""
@@ -902,21 +701,6 @@ def test_crossfield_rules_tie_to_source(spark, sf_dir):
     for r in rows:
         assert 0 <= r.n_ship_before_order + r.n_ship_late
         assert r.violation_ppm <= 2_000_000
-
-
-# ---------------------------------------------------------------------------
-# pipeline22 (round-9 batch H) + canary bitshift column
-# ---------------------------------------------------------------------------
-
-
-def test_pipeline22_scalable(spark, sf_dir):
-    """friedman's day×type grid crossJoin broadcasts a k=5-row type
-    side (the bounded-build-side Lloyd exemption); uplift closes with
-    a 1-row agg. lttb's relation chain must plan clean."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    assert_scalable(qs["q_ts_lttb"](spark, sf_dir))
 
 
 def test_friedman_rank_identities(spark, sf_dir):
@@ -984,22 +768,6 @@ def test_canary_bitshift_column(spark, sf_dir):
     assert r.round_tie_micro == 123457
 
 
-# ---------------------------------------------------------------------------
-# pipeline23 (round-9 batch I)
-# ---------------------------------------------------------------------------
-
-
-def test_pipeline23_scalable(spark, sf_dir):
-    """purity/ARI ride the memoized fit with bounded downstream
-    relations (Lloyd exemption); AA's postings join and bollinger's
-    partitioned window must plan clean."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    for name in ("q_graph_adamic_adar", "q_ts_bollinger"):
-        assert_scalable(qs[name](spark, sf_dir))
-
-
 def test_purity_and_ari_consistent(spark, sf_dir):
     """Cluster populations cover the corpus; purity in (0, 1e6];
     ARI in [-0.5e6, 1e6] and its combinatoric inputs satisfy
@@ -1048,11 +816,6 @@ def test_pii_tokenize_injective_and_join_preserving(spark, sf_dir):
     assert r.n_tokens == r.n_names
     assert r.n_orders_by_token == r.n_orders_by_key
     assert r.min_token.startswith("c_") and len(r.min_token) == 19
-
-
-# ---------------------------------------------------------------------------
-# pipeline24 (round-9 batch J)
-# ---------------------------------------------------------------------------
 
 
 def test_pipeline24_scalable(spark, sf_dir):
@@ -1120,11 +883,6 @@ def test_nmi_in_unit_range_and_triple_consistent(spark, sf_dir):
     assert 0 <= nmi.nmi_micro <= 1_000_000
 
 
-# ---------------------------------------------------------------------------
-# pipeline25 (round-9 batch K)
-# ---------------------------------------------------------------------------
-
-
 def test_pipeline25_scalable(spark, sf_dir):
     """granger/tost close in 1-row aggs and glob_tree crosses in the
     1-row recursive count (the csv_dirty/json_corrupt global-scalar
@@ -1170,11 +928,6 @@ def test_glob_tree_counts_tie(spark, sf_dir):
     assert all(r.total_lines_recursive == total for r in rows)
 
 
-# ---------------------------------------------------------------------------
-# pipeline26 (round-9 batch L)
-# ---------------------------------------------------------------------------
-
-
 def test_kruskal_rank_identities(spark, sf_dir):
     """Doubled midranks over N days sum to N(N+1); H >= 0; 7 groups."""
     rows = entry.queries()["q_ml_kruskal"](spark, sf_dir).collect()
@@ -1203,11 +956,6 @@ def test_double_charge_counts_consistent(spark, sf_dir):
     assert r.n_customers <= max(r.n_pairs, 1)
 
 
-# ---------------------------------------------------------------------------
-# pipeline27 (round-10 batch A): SRP-LSH recall curve
-# ---------------------------------------------------------------------------
-
-
 def test_srp_recall_curve_invariants(spark, sf_dir):
     """The planted-copy bucket (top cos^2 decile present) must show
     100% recall — sign signatures are scale-invariant, so a x2 copy
@@ -1227,42 +975,6 @@ def test_srp_recall_curve_invariants(spark, sf_dir):
     for r in rows:
         assert 0 <= r.n_cand <= r.n_pairs
         assert 0 <= r.cand_rate_ppm <= 1_000_000
-
-
-def test_srp_recall_is_scalable(spark, sf_dir):
-    """The candidate join is band-keyed; the truth panel is the
-    sanctioned broadcast probe fan-out (crossJoin of the bounded
-    probe panel — the q_sim_knn_batch shape), so assert with
-    allow_cartesian and separately pin that no UNBOUNDED cartesian
-    exists: every BNLJ build side must be the probe/weight relation,
-    checked by the single-partition gate staying clean."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    assert_scalable(
-        entry.queries()["q_dedup_recall_srp"](spark, sf_dir),
-        allow_cartesian=True,
-    )
-
-
-# ---------------------------------------------------------------------------
-# pipeline28 (round-10 batch B)
-# ---------------------------------------------------------------------------
-
-
-def test_round10_batch_b_scalable(spark, sf_dir):
-    """Bitmap algebra / SAX / IQR / peaks must plan without
-    cartesians or single-partition exchanges; closeness rides the
-    snapshot-sized BFS joins (localCheckpoint lineage cuts)."""
-    from spark_sklearn_spark.plans import assert_scalable
-
-    qs = entry.queries()
-    for name in (
-        "q_fn_bitmap_words",
-        "q_ts_sax",
-        "q_dq_outlier_iqr",
-        "q_ts_peaks",
-    ):
-        assert_scalable(qs[name](spark, sf_dir))
 
 
 def test_bitmap_words_match_exact_distinct(spark, sf_dir):
@@ -1314,35 +1026,6 @@ def test_closeness_monotone_and_bounded(spark, sf_dir):
         assert r.n_d1 >= 1  # a seed is an edge endpoint by construction
 
 
-# ---------------------------------------------------------------------------
-# pipeline29 (round-10 batch C)
-# ---------------------------------------------------------------------------
-
-
-def test_round10_batch_c_scalable(spark, sf_dir):
-    """The funnel's heavy stages must stay key-shuffled equi-joins —
-    pinned by asserting NO cartesian/BNLJ appears anywhere in its
-    plan (its three 1-row COUNT aggregates legitimately end in
-    SinglePartition exchanges — the q_funnel_ordered shape — so the
-    single-partition gate doesn't apply). The bounded-relation
-    queries (bin triangle, period rows, type pairs) assert with
-    allow_cartesian per the q_basket_lift rule."""
-    from spark_sklearn_spark.plans import executed_plan
-
-    qs = entry.queries()
-    plan = executed_plan(qs["q_funnel_window"](spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # Bounded-relation queries: their 1-row / k-row global aggregates
-    # legitimately end in SinglePartition exchanges and tiny-side
-    # crosses (q_basket_lift shape) — pin only that the CORPUS-sized
-    # stage is a plain hash agg, i.e. no cartesian before the first
-    # aggregation.
-    for name in ("q_ml_isotonic_bins", "q_ts_periodogram", "q_ml_cohen_d"):
-        p = executed_plan(qs[name](spark, sf_dir))
-        assert "CartesianProduct" not in p, name
-
-
 def test_isotonic_is_monotone_and_brackets_rates(spark, sf_dir):
     """The PAV fit must be nondecreasing in the bin, agree with the
     raw rate wherever the raw curve is already monotone across the
@@ -1365,14 +1048,6 @@ def test_funnel_window_bounded_by_unbounded(spark, sf_dir):
     assert w[1] == u[1]  # stage 1 has no window
     assert w[2] <= u[2] and w[3] <= u[3]
     assert w[1] >= w[2] >= w[3] >= 0
-
-
-def test_periodogram_values_bounded(spark, sf_dir):
-    rows = entry.queries()["q_ts_periodogram"](spark, sf_dir).collect()
-    assert {r.period for r in rows} == {7, 11}
-    for r in rows:
-        assert 0 <= r.rel_power_micro <= 1_000_000
-        assert r.total > 0
 
 
 def test_cohen_d_antisymmetric_pairs(spark, sf_dir):

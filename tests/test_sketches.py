@@ -9,8 +9,6 @@ from __future__ import annotations
 
 import math
 
-import __spark_entry__ as entry
-
 from spark_sklearn_spark.queries.sketches import (
     HLL_M,
     q_sketch_bloom,
@@ -109,75 +107,3 @@ def test_hll_merge_equals_direct_sketch(spark, sf_dir):
     )
     via_merge = {r.bucket: r.m for r in merged_regs.collect()}
     assert via_merge == direct
-
-
-def test_hist_quantiles_match_exact_on_bin_edges(spark, sf_dir):
-    """The histogram p-quantile bin must CONTAIN the exact percentile
-    value (sanity: the sketch's error is bounded by one bin width)."""
-    from spark_sklearn_spark.queries.pipeline10 import HQ_BIN
-    from spark_sklearn_spark.sources.io import load
-    from pyspark.sql import functions as F
-
-    ev = load(spark, sf_dir, "events")
-    exact = {
-        r.event_type: r.p50
-        for r in ev.groupBy("event_type")
-        .agg(F.percentile("value", F.lit(0.5)).alias("p50"))
-        .collect()
-    }
-    sketch = {
-        r.event_type: r.p50_bin
-        for r in entry.queries()["q_sketch_hist_quantiles"](
-            spark, sf_dir
-        ).collect()
-    }
-    for et, bin_ in sketch.items():
-        lo, hi = bin_ * HQ_BIN, (bin_ + 1) * HQ_BIN
-        assert lo <= exact[et] <= hi, (et, lo, exact[et], hi)
-
-
-def test_kmv_set_algebra_and_error(spark, sf_dir):
-    rows = {
-        r.set_name: r
-        for r in entry.queries()["q_sketch_kmv"](spark, sf_dir).collect()
-    }
-    u = rows["click|purchase"]
-    i = rows["click&purchase"]
-    c, p = rows["click"], rows["purchase"]
-    # exact set algebra: |A∪B| + |A∩B| = |A| + |B|
-    assert u.n_exact + i.n_exact == c.n_exact + p.n_exact
-    for r in rows.values():
-        if r.n_exact >= 64:
-            # KMV with k=64 has rsd ~1/sqrt(62) ≈ 13%; allow 4 sigma
-            assert abs(r.err_ppm) < 520_000, r
-        else:
-            assert r.kmv_est == r.n_exact  # sketch not full: exact
-
-
-def test_approx_percentile_audit_all_green(spark, sf_dir):
-    """Every gk_ok column is 1 — Spark's GK sketch honors its rank
-    guarantee against the exact value histogram."""
-    rows = entry.queries()["q_agg_approx_percentile"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert r.gk_ok_50 == 1 and r.gk_ok_90 == 1 and r.gk_ok_99 == 1
-
-
-def test_theta_sketch_estimates(spark, sf_dir):
-    """Set identities exact; KMV estimates within 25% (K=256)."""
-    r = entry.queries()["q_sketch_theta"](spark, sf_dir).collect()[0]
-    assert r.exact_union == r.exact_a + r.exact_b - r.exact_inter
-    assert r.exact_inter <= min(r.exact_a, r.exact_b)
-    assert abs(r.est_union - r.exact_union) <= 0.25 * r.exact_union
-    assert abs(r.est_inter - r.exact_inter) <= 0.25 * r.exact_union
-
-
-def test_ams_sketch_estimates(spark, sf_dir):
-    """F2 ≥ n_tokens²/n_types (Cauchy-Schwarz) and ≥ n_tokens; the
-    9-estimator median lands within 60% of exact (AMS guarantees
-    ~1/sqrt(9) relative error at constant factor)."""
-    r = entry.queries()["q_sketch_ams"](spark, sf_dir).collect()[0]
-    assert r.f2 >= r.n_tokens
-    assert r.f2 * r.n_types >= r.n_tokens * r.n_tokens
-    assert abs(r.f2_est - r.f2) <= 0.6 * r.f2
-    assert r.err_ppm == abs(r.f2_est - r.f2) * 1_000_000 // r.f2

@@ -2,8 +2,8 @@
 
 Parquet/ORC are self-describing; CSV/JSON restore types via
 schema-on-read (write_table/read_table docstrings explain why
-inferSchema is banned in pipelines). Also: invariants of the declared
-q_source_* readers and the documents-fixture assumption gate."""
+inferSchema is banned in pipelines). Also: the documents-fixture
+assumption gate."""
 
 from __future__ import annotations
 
@@ -20,8 +20,6 @@ from spark_sklearn_spark.sources.io import (
     supported_formats,
     write_table,
 )
-
-import __spark_entry__ as entry
 
 
 def _sample(spark, sf_dir):
@@ -104,61 +102,6 @@ def test_snapshot_failed_write_memoizes_nothing(spark, tmp_path):
     path = snapshot(spark, d, "test_snapshot", flaky)
     assert snapshot(spark, d, "test_snapshot", flaky) == path
     assert attempts == [path, path]
-
-
-def test_csv_dirty_flags_exactly_three(spark, sf_dir):
-    """All three injected fault lines land in _corrupt_record, none in
-    the good set (the hash also pins this; fail loudly here first)."""
-    rows = entry.queries()["q_source_csv_dirty"](spark, sf_dir).collect()
-    assert all(r.n_corrupt_total == 3 for r in rows)
-
-
-def test_binaryfile_roundtrip_bytes(spark, sf_dir):
-    """Each emitted file's byte count equals the sum of its docs' text
-    bytes plus the newline separators."""
-    from pyspark.sql import functions as F
-
-    from spark_sklearn_spark.sources.io import load
-
-    got = {
-        r.source: r.n_bytes
-        for r in entry.queries()["q_source_binaryfile"](spark, sf_dir).collect()
-    }
-    want = {
-        r.source: r.nb + r.n - 1
-        for r in load(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(
-            F.sum(F.octet_length("text")).alias("nb"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
-def test_json_corrupt_routes_exactly_three(spark, sf_dir):
-    """All 3 injected bad lines land in _corrupt_record; good-row
-    counts tie to the source slice."""
-    from spark_sklearn_spark.sources.io import load
-    from pyspark.sql import functions as F
-
-    rows = entry.queries()["q_source_json_corrupt"](spark, sf_dir).collect()
-    assert all(r.n_corrupt_total == 3 for r in rows)
-    want = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 97 == 0)
-        .count()
-    )
-    assert sum(r.n_good for r in rows) == want
-
-
-def test_glob_tree_counts_tie(spark, sf_dir):
-    """Per-lang doc counts sum to the recursive raw line count."""
-    rows = entry.queries()["q_source_glob_tree"](spark, sf_dir).collect()
-    total = rows[0].total_lines_recursive
-    assert sum(r.n_docs for r in rows) == total
-    assert all(r.total_lines_recursive == total for r in rows)
 
 
 # A fixture regen that breaks the resize oracle's text assumption must

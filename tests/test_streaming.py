@@ -1,32 +1,10 @@
-"""Declared streaming query invariants (q_stream_*): the streaming
-dedup equals batch DISTINCT and hopping-window top-k rows sit on the
-hop grid in rank order.
+"""Declared streaming query invariants (q_stream_*): hopping-window
+top-k rows sit on the hop grid in rank order.
 """
 
 from __future__ import annotations
 
 import __spark_entry__ as entry
-
-
-def test_stream_dedup_keys_equals_batch_distinct(spark, sf_dir):
-    """The declared streaming dedup's key set equals batch DISTINCT
-    regardless of which physical row the state store kept."""
-    got = sorted(
-        tuple(r)
-        for r in entry.queries()["q_stream_dedup_keys"](
-            spark, sf_dir
-        ).collect()
-    )
-    from spark_sklearn_spark.sources.io import load
-
-    want = sorted(
-        tuple(r)
-        for r in load(spark, sf_dir, "events")
-        .select("user_id", "event_type")
-        .distinct()
-        .collect()
-    )
-    assert got == want
 
 
 def test_hopping_topk_invariants(spark, sf_dir):

@@ -1,5 +1,5 @@
 """Text query invariants (q_text_*): lexical statistics replayed from
-raw tokens, readability and diversity bounds, BPE merges and Heaps'
+raw tokens, readability and diversity bounds, and Heaps'
 law curves.
 """
 
@@ -9,101 +9,6 @@ import math
 
 import __spark_entry__ as entry
 from conftest import _rows
-
-
-def test_bpe_merge_fuses_top_pair(spark, sf_dir):
-    """The merge pair is step-0's argmax, and after the merge no
-    char-level pair 'x+y' of the merged pair survives where x,y were
-    adjacent (they became one token), while the merged token appears
-    in the new pair table's vocabulary."""
-    rows = entry.queries()["q_text_bpe_merge"](spark, sf_dir).collect()
-    assert rows
-    mp = rows[0].merge_pair
-    assert all(r.merge_pair == mp and len(mp) == 2 for r in rows)
-    p1, p2 = mp[0], mp[1]
-    toks = set()
-    for r in rows:
-        a, _, b = r.tokpair.partition("+")
-        toks.add(a)
-        toks.add(b)
-        # greedy fuse: the bare adjacent pair cannot survive as a
-        # token pair 'p1+p2' (it was merged everywhere)
-        assert not (a == p1 and b == p2), r.tokpair
-    pairs0 = entry.queries()["q_text_bpe_pairs"](spark, sf_dir).collect()
-    assert pairs0[0].pair == mp
-
-
-def test_jsd_matches_numpy(spark, sf_dir):
-    """One pair's jsd_micro equals a straight numpy JSD over the same
-    token distributions."""
-    import math
-
-    from collections import Counter
-
-    from spark_sklearn_spark.sources.io import load
-
-    rows = entry.queries()["q_text_jsd_pairwise"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r.jsd_micro <= math.floor(math.log(2) * 1e6) + 1
-    target = rows[0]
-    docs = (
-        load(spark, sf_dir, "documents")
-        .filter(F_col_in("source", [target.src_a, target.src_b]))
-        .select("source", "text")
-        .collect()
-    )
-    cnt = {target.src_a: Counter(), target.src_b: Counter()}
-    for row in docs:
-        cnt[row.source].update(row.text.split(" "))
-    pa_n = sum(cnt[target.src_a].values())
-    pb_n = sum(cnt[target.src_b].values())
-    jsd = 0.0
-    vocab = set(cnt[target.src_a]) | set(cnt[target.src_b])
-    for w in vocab:
-        pa = cnt[target.src_a][w] / pa_n
-        pb = cnt[target.src_b][w] / pb_n
-        m = (pa + pb) / 2
-        if pa:
-            jsd += 0.5 * pa * math.log(pa / m)
-        if pb:
-            jsd += 0.5 * pb * math.log(pb / m)
-    assert abs(target.jsd_micro / 1e6 - jsd) < 5e-4, (target, jsd)
-
-
-def F_col_in(name, values):
-    from pyspark.sql import functions as F
-
-    return F.col(name).isin(values)
-
-
-def test_simpson_matches_python(spark, sf_dir):
-    """Recompute Simpson for one source in Python from raw tokens."""
-    from pyspark.sql import functions as F
-    from collections import Counter
-
-    from spark_sklearn_spark.sources.io import load
-
-    rows = entry.queries()["q_text_simpson"](spark, sf_dir).collect()
-    assert rows
-    r0 = rows[0]
-    texts = (
-        load(spark, sf_dir, "documents")
-        .filter(F.col("source") == r0.source)
-        .select("text")
-        .collect()
-    )
-    c = Counter()
-    for t in texts:
-        c.update(t.text.split(" "))
-    n = sum(c.values())
-    rep = sum(v * (v - 1) for v in c.values())
-    assert r0.n_tokens == n
-    assert r0.n_types == len(c)
-    assert r0.rep_pairs == rep
-    import math
-
-    assert r0.simpson_ppb == math.floor(rep / (n * (n - 1)) * 1e9)
 
 
 def test_burstiness_replay(spark):

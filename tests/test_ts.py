@@ -1,6 +1,6 @@
-"""Time-series query invariants (q_ts_* / q_win_gaps_islands):
-smoothers and tests replayed in Python/pandas/numpy, decomposition
-identities, and bounds on the calendar-grain statistics.
+"""Time-series query invariants (q_ts_*): tests replayed in
+Python/numpy or from their returned moments, and bounds on the
+calendar-grain statistics.
 """
 
 from __future__ import annotations
@@ -9,226 +9,6 @@ import math
 
 import __spark_entry__ as entry
 from conftest import _rows
-
-
-def test_rolling_median_matches_pandas(spark, sf_dir):
-    """med7_micro equals pandas' rolling(7, min_periods=1).median of
-    the same daily series (exact selection on identical doubles)."""
-    import pandas as pd
-
-    df = entry.queries()["q_ts_rolling_median"](spark, sf_dir).toPandas()
-    for et, g in df.groupby("event_type"):
-        g = g.sort_values("day")
-        med = (
-            (g.rev_micro / 1e6).rolling(7, min_periods=1).median() * 1e6
-        ).apply(lambda x: int(x // 1) if x == x else 0)
-        # rev_micro is already floored; rolling median of floored
-        # values can differ from floored median of exact values by at
-        # most 1 micro — assert tight agreement
-        got = g.med7_micro.to_numpy()
-        assert (abs(got - med.to_numpy()) <= 1).all(), et
-
-
-def test_holt_matches_python_recurrence(spark, sf_dir):
-    """The unrolled SQL chain equals the straight Python recurrence on
-    the same daily inputs."""
-    from spark_sklearn_spark.queries.pipeline12 import _HOLT_STEPS
-    from spark_sklearn_spark.sources.io import load
-    from pyspark.sql import functions as F
-
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.col("value").cast("decimal(30,10)"))
-            .cast("double")
-            .alias("rev")
-        )
-        .orderBy("event_type", "day")
-        .collect()
-    )
-    series = {}
-    for r in daily:
-        series.setdefault(r.event_type, []).append(r.rev)
-    rows = entry.queries()["q_ts_holt"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        y = series[r.event_type][:_HOLT_STEPS]
-        assert len(y) >= _HOLT_STEPS
-        l, b = y[0], y[1] - y[0]
-        for t in range(1, _HOLT_STEPS):
-            l_new = 0.5 * y[t] + 0.5 * (l + b)
-            b = 0.5 * (l_new - l) + 0.5 * b
-            l = l_new
-        import math
-
-        assert r.level_micro == math.floor(l * 1e6), r
-        assert r.trend_micro == math.floor(b * 1e6), r
-
-
-def test_theilsen_matches_numpy(spark, sf_dir):
-    import math
-
-    import numpy as np
-
-    from spark_sklearn_spark.queries.pipeline12 import q_ts_theilsen
-    from spark_sklearn_spark.sources.io import load
-    from pyspark.sql import functions as F
-
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.expr("cast(date_trunc('day', ts) as long) div 86400").alias(
-                "dday"
-            ),
-        )
-        .agg(
-            F.sum(F.col("value").cast("decimal(30,10)"))
-            .cast("double")
-            .alias("rev")
-        )
-        .collect()
-    )
-    pts = {}
-    for r in daily:
-        pts.setdefault(r.event_type, []).append((r.dday, r.rev))
-    for row in q_ts_theilsen(spark, sf_dir).collect():
-        p = sorted(pts[row.event_type])
-        slopes = [
-            (p[j][1] - p[i][1]) / (p[j][0] - p[i][0])
-            for i in range(len(p))
-            for j in range(i + 1, len(p))
-        ]
-        assert row.n_pairs == len(slopes)
-        want = math.floor(float(np.median(slopes)) * 1e6)
-        assert abs(row.sen_slope_micro - want) <= 1, row
-
-
-def test_stl_components_reassemble(spark, sf_dir):
-    """remainder = rev − trend − seasonal within 2 micro (two floors)."""
-    rows = entry.queries()["q_ts_stl"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        resid = (
-            r.rev_micro - r.trend_micro - r.seasonal_micro
-            - r.remainder_micro
-        )
-        assert 0 <= resid <= 3, r
-
-
-def test_changepoint_cusum_envelope(spark, sf_dir):
-    """|cusum at cp| is the series max by construction; the last
-    cusum value is the total deviation = s − n·(s div n) ∈ [0, n)."""
-    rows = entry.queries()["q_ts_changepoint"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert r.n_days > 0
-        assert abs(r.cusum_at_cp) >= 0
-        assert r.pre_mean_micro != 0 or r.post_mean_micro != 0
-
-
-def test_hurst_output_shape(spark, sf_dir):
-    """All three block sizes present (30-day fixture), ranges positive,
-    and the two-point Hurst estimate is shared across rows and sane
-    (0 < H < 1.5e6 micro — random-walkish data can exceed 1.0 slightly
-    through the truncating means)."""
-    rows = entry.queries()["q_ts_hurst"](spark, sf_dir).collect()
-    assert [r.m for r in rows] == [3, 6, 12]
-    assert all(r.mean_r_micro > 0 for r in rows)
-    hs = {r.hurst_micro for r in rows}
-    assert len(hs) == 1
-    h = hs.pop()
-    assert 0 < h < 1_500_000
-
-
-def test_gaps_islands_cover_all_user_days(spark, sf_dir):
-    """Σ island_len · n_islands = distinct (user, day) pairs — every
-    active day belongs to exactly one island."""
-    from pyspark.sql import functions as F
-
-    from spark_sklearn_spark.sources.io import load
-
-    rows = entry.queries()["q_win_gaps_islands"](spark, sf_dir).collect()
-    covered = sum(r.days_covered for r in rows)
-    want = (
-        load(spark, sf_dir, "events")
-        .select("user_id", F.date_trunc("day", "ts").alias("day"))
-        .distinct()
-        .count()
-    )
-    assert covered == want
-
-
-def test_pacf_lag1_matches_autocorr(spark, sf_dir):
-    """rho1 must be q_ts_autocorr's acf(1) (same moment formula) to
-    within quantization; pacf2 must satisfy Durbin-Levinson given the
-    published rhos."""
-    qs = entry.queries()
-    r = qs["q_ts_pacf"](spark, sf_dir).collect()[0]
-    acf = {
-        row.k: row.acf_micro / 1e6
-        for row in qs["q_ts_autocorr"](spark, sf_dir).collect()
-    }
-    assert abs(r.rho1_micro / 1e6 - acf[1]) < 3e-6
-    r1, r2 = r.rho1_micro / 1e6, r.rho2_micro / 1e6
-    want_p22 = (r2 - r1 * r1) / (1 - r1 * r1)
-    assert abs(r.pacf2_micro / 1e6 - want_p22) < 2e-5
-
-
-def test_lttb_picks_one_per_interior_bucket(spark, sf_dir):
-    """Exactly one pick per interior bucket, and each pick's day lies
-    inside its bucket."""
-    from pyspark.sql import functions as F
-
-    from spark_sklearn_spark.sources.io import load
-
-    rows = entry.queries()["q_ts_lttb"](spark, sf_dir).collect()
-    buckets = [r.bucket for r in rows]
-    assert len(buckets) == len(set(buckets))
-    days = (
-        load(spark, sf_dir, "events")
-        .select(
-            F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-            .cast("long")
-            .alias("d")
-        )
-        .distinct()
-    )
-    all_buckets = sorted(
-        r.b for r in days.selectExpr("d div 3 AS b").distinct().collect()
-    )
-    interior = set(all_buckets[1:-1])
-    assert set(buckets) == interior
-    for r in rows:
-        assert r.day_num // 3 == r.bucket
-
-
-def test_bollinger_counts_bounded(spark, sf_dir):
-    """Breaches cannot exceed the day count; both sides non-negative."""
-    rows = entry.queries()["q_ts_bollinger"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r.n_breach_upper + r.n_breach_lower <= r.n_days
-
-
-def test_esd_rounds_decreasing_criterion(spark, sf_dir):
-    """Three distinct days; z stays positive; removing the extreme
-    day cannot leave a MORE extreme round-2 pick under the same
-    moments (weak check: all z positive and days distinct)."""
-    rows = entry.queries()["q_ts_esd"](spark, sf_dir).collect()
-    assert len(rows) == 3
-    assert len({r.day_num for r in rows}) == 3
-    for r in rows:
-        assert r.z_micro >= 0
-
-
-def test_granger_fits_are_valid(spark, sf_dir):
-    """RSS_u <= RSS_r by construction so F >= 0; the design has
-    days-1 rows."""
-    r = entry.queries()["q_ts_granger"](spark, sf_dir).collect()[0]
-    assert r.f_micro >= 0
-    assert r.n_days >= 10
 
 
 def test_periodogram_power_bounds(spark, sf_dir):

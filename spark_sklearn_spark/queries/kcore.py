@@ -18,15 +18,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .pipeline2 import _BIGRAMS_SQL, near_dup_edges
+from .bigrams import NEAR_DUP_EDGES_CTES, near_dup_edges
 
 KCORE_K = 2
 KCORE_ROUNDS = 3
 
 
 def _kcore_oracle() -> str:
-    # every peel CTE is MATERIALIZED: the chain references edges0 (and
-    # each round) many times, and DuckDB inlining re-evaluates the
+    # every peel CTE is MATERIALIZED, like edges0: the chain references
+    # each round many times, and DuckDB inlining re-evaluates the
     # quadratic shingle join per reference (measured 277 s -> ~1 s at
     # sf0.01 with materialization)
     peel = []
@@ -56,20 +56,7 @@ def _kcore_oracle() -> str:
         for r in range(1, KCORE_ROUNDS + 1)
     )
     return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges0 AS MATERIALIZED (
-            SELECT i.doc_a, i.doc_b
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
+        WITH {NEAR_DUP_EDGES_CTES},
         {", ".join(peel)}
         SELECT * FROM ({rows})
         ORDER BY round

@@ -478,7 +478,7 @@ def q_dedup_simhash(spark, d):
     (promoted from rows-only, VERDICT r5 item 8): 56-bit signatures
     whose per-gram hash is the first 14 hex chars of md5(gram) — the
     digest is engine-independent, so both sides compute identical
-    signatures (same determinism posture as pipeline2._poly_sql's
+    signatures (same determinism posture as rolling_hash.poly_sql's
     rolling hashes, but JVM-codegen instead of an interpreted fold).
     3-gram shingles
     (the MinHash oracle's grain: word sets collapse on the fixture's

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56
+from .bigrams import NEAR_DUP_SYM_CTES, near_dup_edges, near_dup_sym
 
 # --------------------------------------------------------------------------
 # Weekly stickiness (DAU/WAU)
@@ -502,14 +503,7 @@ BFS_ROUNDS = 3
 
 
 def _bfs_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
     ctes = [
-        """sym AS MATERIALIZED (
-          SELECT doc_a AS src, doc_b AS dst FROM edges0
-          UNION ALL
-          SELECT doc_b, doc_a FROM edges0
-        )""",
         "f0 AS MATERIALIZED (SELECT MIN(doc_a) AS doc_id FROM edges0)",
         "v0 AS MATERIALIZED (SELECT doc_id FROM f0)",
     ]
@@ -531,20 +525,7 @@ def _bfs_oracle() -> str:
         for r in range(0, BFS_ROUNDS + 1)
     )
     return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges0 AS MATERIALIZED (
-            SELECT i.doc_a, i.doc_b
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
+        WITH {NEAR_DUP_SYM_CTES},
         {", ".join(ctes)}
         SELECT * FROM ({rows})
         ORDER BY depth
@@ -559,14 +540,8 @@ def q_graph_bfs(spark, d):
     sit at that distance. localCheckpoint cuts lineage per round
     (the kcore posture — later rounds and stats rows re-read each
     frontier)."""
-    from .pipeline2 import near_dup_edges
-
     edges = near_dup_edges(spark, d).select("doc_a", "doc_b")
-    sym = edges.unionAll(
-        edges.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).toDF("src", "dst").localCheckpoint()
+    sym = near_dup_sym(spark, d).localCheckpoint()
     frontier = (
         edges.agg(F.min("doc_a").alias("doc_id")).localCheckpoint()
     )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56
+from .bigrams import NEAR_DUP_EDGES_CTES, near_dup_edges
 
 # --------------------------------------------------------------------------
 # Additive decomposition (trend + weekday seasonal + remainder)
@@ -379,29 +380,13 @@ def q_ml_pinball(spark, d):
 # snapshot.
 
 
-def _clustcoeff_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
-    return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges AS MATERIALIZED (
-            SELECT i.doc_a AS u, i.doc_b AS v
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
+_CLUSTCOEFF_ORACLE = f"""
+        WITH {NEAR_DUP_EDGES_CTES},
         tris AS MATERIALIZED (
-            SELECT e1.u AS a, e1.v AS b, e2.v AS c
-            FROM edges e1
-            JOIN edges e2 ON e2.u = e1.v
-            JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
+            SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
+            FROM edges0 e1
+            JOIN edges0 e2 ON e2.doc_a = e1.doc_b
+            JOIN edges0 e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b
         ),
         tri_nodes AS (
             SELECT a AS doc_id FROM tris
@@ -414,8 +399,8 @@ def _clustcoeff_oracle() -> str:
         ),
         deg AS (
             SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dg FROM (
-              SELECT u AS doc_id FROM edges
-              UNION ALL SELECT v FROM edges
+              SELECT doc_a AS doc_id FROM edges0
+              UNION ALL SELECT doc_b FROM edges0
             ) GROUP BY doc_id
         ),
         cc AS (
@@ -434,17 +419,15 @@ def _clustcoeff_oracle() -> str:
         FROM cc
         GROUP BY dg
         ORDER BY dg
-    """
+"""
 
 
-@query("q_graph_clustcoeff", oracle=_clustcoeff_oracle())
+@query("q_graph_clustcoeff", oracle=_CLUSTCOEFF_ORACLE)
 def q_graph_clustcoeff(spark, d):
     """Degree-vs-clustering-coefficient curve of the near-dup graph
     (module comment). Triangle explode + two bounded aggs + one
     left join on the snapshot-sized node relations; cc is integer
     ppm so the curve is hash-exact."""
-    from .pipeline2 import near_dup_edges
-
     edges = near_dup_edges(spark, d).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).localCheckpoint()

@@ -30,6 +30,14 @@ from ..operators.lsh import min_signature
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
+from .bigrams import (
+    BIGRAM_PAIRS_CTES,
+    NEAR_DUP_SYM_CTES,
+    NEAR_DUP_TAU,
+    bigram_overlap,
+    near_dup_edges,
+    rare_grams,
+)
 
 # --------------------------------------------------------------------------
 # PCA scores: top-20 documents by |projection| onto the fitted PC1
@@ -321,60 +329,38 @@ def q_feat_woe(spark, d):
 # integer ppm. Everything rides the memoized edge snapshot.
 
 
-def _jaccard_nbrs_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
-    return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges AS MATERIALIZED (
-            SELECT i.doc_a AS u, i.doc_b AS v
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
-        adj AS MATERIALIZED (
-            SELECT u AS src, v AS dst FROM edges
-            UNION ALL SELECT v, u FROM edges
-        ),
+_JACCARD_NBRS_ORACLE = f"""
+        WITH {NEAR_DUP_SYM_CTES},
         deg AS (
             SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS dg
-            FROM adj GROUP BY src
+            FROM sym GROUP BY src
         ),
         common AS (
-            SELECT e.u, e.v, CAST(COUNT(*) AS BIGINT) AS cn
-            FROM edges e
-            JOIN adj a ON a.src = e.u
-            JOIN adj b ON b.src = e.v AND b.dst = a.dst
-            GROUP BY e.u, e.v
+            SELECT e.doc_a, e.doc_b, CAST(COUNT(*) AS BIGINT) AS cn
+            FROM edges0 e
+            JOIN sym a ON a.src = e.doc_a
+            JOIN sym b ON b.src = e.doc_b AND b.dst = a.dst
+            GROUP BY e.doc_a, e.doc_b
         )
-        SELECT e.u AS doc_a, e.v AS doc_b,
+        SELECT e.doc_a AS doc_a, e.doc_b AS doc_b,
                da.dg AS deg_a, db.dg AS deg_b,
                COALESCE(c.cn, 0) AS n_common,
                CAST((COALESCE(c.cn, 0) * 1000000)
                     // (da.dg + db.dg - COALESCE(c.cn, 0)) AS BIGINT)
                    AS nbr_jacc_ppm
-        FROM edges e
-        JOIN deg da ON da.doc_id = e.u
-        JOIN deg db ON db.doc_id = e.v
-        LEFT JOIN common c ON c.u = e.u AND c.v = e.v
+        FROM edges0 e
+        JOIN deg da ON da.doc_id = e.doc_a
+        JOIN deg db ON db.doc_id = e.doc_b
+        LEFT JOIN common c ON c.doc_a = e.doc_a AND c.doc_b = e.doc_b
         ORDER BY doc_a, doc_b
-    """
+"""
 
 
-@query("q_graph_jaccard_nbrs", oracle=_jaccard_nbrs_oracle())
+@query("q_graph_jaccard_nbrs", oracle=_JACCARD_NBRS_ORACLE)
 def q_graph_jaccard_nbrs(spark, d):
     """Neighborhood Jaccard per edge (module comment): wedge join
     anchored on the edge set, degree agg, ppm ratio — all on the
     memoized snapshot-sized relations."""
-    from .pipeline2 import near_dup_edges
-
     edges = (
         near_dup_edges(spark, d)
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
@@ -910,25 +896,12 @@ _MHC_PERMS = 16
 
 
 def _mhc_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
     mh = sql_h56("'mh' || CAST(p AS VARCHAR) || ':' || g")
     return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-                  FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   CAST(COUNT(*) AS BIGINT) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
+        WITH {BIGRAM_PAIRS_CTES},
         cand AS (
-            SELECT i.doc_a, i.doc_b, i.c, sa.n AS na, sb.n AS nb
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
+            SELECT doc_a, doc_b, c, na, nb FROM pairs
+            WHERE jacc >= {NEAR_DUP_TAU}
         ),
         perms AS (SELECT unnest(generate_series(0, {_MHC_PERMS - 1})) AS p),
         sig AS (
@@ -970,8 +943,6 @@ def q_text_minhash_containment(spark, d):
     per-distinct-gram min signature (one agg on doc, corpus-linear);
     the estimate join then runs on the bounded candidate set ×
     16-slot signatures. All outputs integer ppm."""
-    from .pipeline2 import bigram_overlap, rare_grams
-
     rare = rare_grams(spark, d)
     cand = (
         bigram_overlap(spark, d)
@@ -981,7 +952,7 @@ def q_text_minhash_containment(spark, d):
                 F.col("c") / (F.col("na") + F.col("nb") - F.col("c")), 6
             ),
         )
-        .filter(F.col("jacc") >= 0.4)
+        .filter(F.col("jacc") >= NEAR_DUP_TAU)
         .drop("jacc")
     )
     # The signature stays WIDE (lsh.min_signature: 16 hashes once per

@@ -23,6 +23,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
+from .bigrams import NEAR_DUP_EDGES_CTES, near_dup_edges
 
 # --------------------------------------------------------------------------
 # Spearman rank correlation between event types' daily revenue
@@ -254,35 +255,19 @@ def q_ml_kendall(spark, d):
 # memoized edge snapshot.
 
 
-def _assortativity_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
-    return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges AS MATERIALIZED (
-            SELECT i.doc_a AS u, i.doc_b AS v
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
+_ASSORTATIVITY_ORACLE = f"""
+        WITH {NEAR_DUP_EDGES_CTES},
         deg AS (
             SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dg FROM (
-              SELECT u AS doc_id FROM edges
-              UNION ALL SELECT v FROM edges
+              SELECT doc_a AS doc_id FROM edges0
+              UNION ALL SELECT doc_b FROM edges0
             ) GROUP BY doc_id
         ),
         stubs AS (
             SELECT du.dg AS j, dv.dg AS k
-            FROM edges e
-            JOIN deg du ON du.doc_id = e.u
-            JOIN deg dv ON dv.doc_id = e.v
+            FROM edges0 e
+            JOIN deg du ON du.doc_id = e.doc_a
+            JOIN deg dv ON dv.doc_id = e.doc_b
         ),
         sums AS (
             SELECT CAST(2 * COUNT(*) AS BIGINT) AS m,
@@ -300,16 +285,14 @@ def _assortativity_oracle() -> str:
                                 * (CAST(s_h AS DOUBLE) / m)))
                           * 1000000.0) AS BIGINT) AS assort_micro
         FROM sums
-    """
+"""
 
 
-@query("q_graph_assortativity", oracle=_assortativity_oracle())
+@query("q_graph_assortativity", oracle=_ASSORTATIVITY_ORACLE)
 def q_graph_assortativity(spark, d):
     """Degree assortativity of the near-dup graph (module comment):
     degree agg + one edge join on the memoized snapshot; the three
     stub sums collapse to a single row before the closing division."""
-    from .pipeline2 import near_dup_edges
-
     edges = (
         near_dup_edges(spark, d)
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))

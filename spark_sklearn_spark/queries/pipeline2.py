@@ -4,7 +4,9 @@ near-dup pairs and rolling-hash document fingerprints.
 Complements pipeline.py's sketch-based families (MinHash bands,
 SimHash, SRP) with their EXACT counterparts — the forms you run on a
 candidate subset, or at moderate corpus sizes, when you need the true
-Jaccard rather than a banded estimate.
+Jaccard rather than a banded estimate. The n-gram pair join and the
+near-dup graph built on it live in bigrams.py, the rolling hash in
+rolling_hash.py.
 
 Scale notes: the n-gram join is a postings join (doc x gram), never a
 doc x doc cartesian; hot grams are capped by a document-frequency
@@ -15,136 +17,27 @@ Generate + hash agg, one shuffle on doc_id.
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.io import load, snapshot, write_parquet
+from ..sources.io import load
 from ._helpers import DEC
-
-# Word bigrams present in more than DF_CAP documents are dropped from
-# BOTH sides (stop-gram removal): a gram in k docs fans out C(k,2)
-# candidate pairs, so the cap bounds the postings join while barely
-# moving Jaccard on near-dups (stop-grams carry no identity signal).
-DF_CAP = 100
-
-_BIGRAMS_SQL = f"""
-        words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        idx AS (SELECT doc_id, w, unnest(generate_series(1, len(w) - 1)) AS i
-                FROM words),
-        grams AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i + 1] AS g FROM idx),
-        rare AS (
-            SELECT doc_id, g FROM grams
-            WHERE g IN (SELECT g FROM grams GROUP BY g
-                        HAVING COUNT(*) <= {DF_CAP})
-        )
-"""
-
-
-def rare_grams(spark, d, with_df=False):
-    """DF-capped distinct word bigrams per doc — (doc_id, g). The
-    shared postings relation under bigram_overlap and the round-9
-    minhash-containment eval (pipeline15). ``with_df=True`` keeps the
-    per-gram document frequency the cap already computed (the IDF
-    weighting tier in pipeline36 needs it; recomputing would cost a
-    second shuffle on g)."""
-    docs = load(spark, d, "documents")
-    # Tokenize ONCE into a column (an embedded split() inside the
-    # interpreted transform re-runs per element — O(n²)/doc), and
-    # explode_outer (plain explode pushes a pruning filter that
-    # re-evaluates the whole gram transform inside the scan).
-    w = docs.select("doc_id", F.split("text", " ").alias("w")).filter(
-        F.size("w") >= 2
-    )
-    grams = w.select(
-        "doc_id",
-        F.explode_outer(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, size(w) - 1), "
-                    "  i -> concat(element_at(w, i), ' ', "
-                    "              element_at(w, i + 1)))"
-                )
-            )
-        ).alias("g"),
-    ).filter(F.col("g").isNotNull())
-    # window-count keeps the DF cap at one shuffle on g (vs agg+join = two)
-    capped = grams.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("g"))
-    ).filter(F.col("df") <= DF_CAP)
-    return capped if with_df else capped.drop("df")
-
-
-def bigram_overlap(spark, d):
-    """Per-pair gram-overlap table (doc_a < doc_b, c = |A∩B|, na, nb)
-    over DF-capped word bigrams — the shared postings-join core under
-    q_dedup_ngram / q_graph_triangles (Jaccard) and
-    q_text_containment (asymmetric ratio). Never doc×doc: the join is
-    on the gram, fan-out bounded by DF_CAP."""
-    rare = rare_grams(spark, d)
-    sizes = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = rare.select(F.col("doc_id").alias("doc_a"), "g")
-    b = rare.select(F.col("doc_id").alias("doc_b"), "g")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return inter.join(sa, "doc_a").join(sb, "doc_b")
-
-
-def rare_bigram_pairs(spark, d):
-    """Exact word-bigram Jaccard pairs (doc_a < doc_b, jacc >= 0.4)
-    over DF-capped grams — the shared edge set for q_dedup_ngram and
-    the graph analytics built on the near-dup graph
-    (q_graph_triangles, q_graph_pagerank)."""
-    jacc = F.round(
-        F.col("c") / (F.col("na") + F.col("nb") - F.col("c")), 6
-    )
-    return (
-        bigram_overlap(spark, d)
-        .withColumn("jacc", jacc)
-        .filter(F.col("jacc") >= 0.4)
-        .select("doc_a", "doc_b", "jacc")
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-# Graph-analytics consumers (triangles, PageRank) re-read the SAME
-# edge set several times per query — and a lazy DataFrame re-runs the
-# whole postings-join pipeline on every branch (a union of pairs with
-# reversed pairs evaluates it twice), so the edge list is a snapshot.
-# q_dedup_ngram itself keeps computing live — it IS the declared
-# check of this pipeline.
-
-
-def near_dup_edges(spark, d):
-    """(doc_a, doc_b, jacc) edge snapshot."""
-    path = snapshot(
-        spark, d, "near_dup_edges",
-        lambda p: write_parquet(rare_bigram_pairs(spark, d), p),
-    )
-    return spark.read.parquet(path)
+from .bigrams import (
+    BIGRAM_PAIRS_CTES,
+    NEAR_DUP_EDGES_CTES,
+    NEAR_DUP_TAU,
+    near_dup_edges,
+    rare_bigram_pairs,
+)
+from .rolling_hash import ROLL_K, poly_sql, rolling_hash_arrays
 
 
 @query(
     "q_dedup_ngram",
     oracle=f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        )
-        SELECT i.doc_a, i.doc_b,
-               ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) AS jacc
-        FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.doc_a
-        JOIN sizes sb ON sb.doc_id = i.doc_b
-        WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
+        WITH {BIGRAM_PAIRS_CTES}
+        SELECT doc_a, doc_b, jacc FROM pairs
+        WHERE jacc >= {NEAR_DUP_TAU}
         ORDER BY doc_a, doc_b
     """,
 )
@@ -159,56 +52,17 @@ def q_dedup_ngram(spark, d):
     return rare_bigram_pairs(spark, d)
 
 
-# 5-char rolling window, base-256 polynomial over codepoints: fits
-# int64 exactly (max codepoint 0x10FFFF * 256^4 < 2^53 < 2^63), so
-# both engines compute identical hashes with plain integer math.
-_K = 5
-
-
-def _poly_sql(col: str, i: str) -> str:
-    return " + ".join(
-        f"ascii(substr({col}, {i} + {j}, 1)) * {256 ** (_K - 1 - j)}"
-        for j in range(_K)
-    )
-
-
-def _rolling_hash_arrays(docs):
-    """(doc_id, hs) where hs[i] is the base-256 polynomial hash of the
-    5-gram starting at codepoint i (1-based) — same values as
-    _poly_sql, different evaluation shape. substr(text, i, 1) is an
-    O(i) codepoint seek on Spark's UTF8String, so hashing via
-    per-position substr is O(len^2) per document (measured 8.5 s at
-    sf0.1); splitting to a codes array once is O(len) and each gram
-    is then five O(1) element_at lookups (1.8 s). codes/hs are
-    referenced >=5x by their consumers, so CollapseProject keeps them
-    materialized per row instead of inlining the transform into the
-    consuming lambda (which would be O(len) per element again)."""
-    codes = docs.filter(F.length("text") >= _K).select(
-        "doc_id",
-        F.expr("transform(split(text, ''), c -> ascii(c))").alias("codes"),
-    )
-    gram = " + ".join(
-        f"element_at(codes, i + {j}) * {256 ** (_K - 1 - j)}L" for j in range(_K)
-    )
-    return codes.select(
-        "doc_id",
-        F.expr(
-            f"transform(sequence(1, size(codes) - {_K - 1}), i -> {gram})"
-        ).alias("hs"),
-    )
-
-
 @query(
     "q_text_fingerprint_rolling",
     oracle=f"""
         WITH pos AS (
             SELECT doc_id, text,
-                   unnest(generate_series(1, len(text) - {_K - 1})) AS i
+                   unnest(generate_series(1, len(text) - {ROLL_K - 1})) AS i
             FROM documents
-            WHERE len(text) >= {_K}
+            WHERE len(text) >= {ROLL_K}
         ),
         hashes AS (
-            SELECT doc_id, ({_poly_sql("text", "i")}) AS h FROM pos
+            SELECT doc_id, ({poly_sql("text", "i")}) AS h FROM pos
         )
         SELECT doc_id,
                MIN(h) AS fp_min,
@@ -224,7 +78,7 @@ def q_text_fingerprint_rolling(spark, d):
     over every 5-char window (the Rabin-Karp/winnowing primitive),
     reduced to a per-doc min-hash fingerprint + gram cardinalities.
     Fingerprinting is per-document LOCAL, so the whole computation
-    stays in-row: one codes array per doc (_rolling_hash_arrays),
+    stays in-row: one codes array per doc (rolling_hash_arrays),
     then array_min / array_distinct / size — zero shuffles, zero
     explode, no Python. 4.7x faster than the exploded-positions +
     per-position substr form it replaces (8.5 s -> 1.8 s at sf0.1;
@@ -233,7 +87,7 @@ def q_text_fingerprint_rolling(spark, d):
     1-row-group fixture ran it in one scan task — 1.92 s → 0.71 s at
     sf0.1; no-op on splittable production inputs)."""
     docs = load(spark, d, "documents", spread=True)
-    hs = _rolling_hash_arrays(docs)
+    hs = rolling_hash_arrays(docs)
     return hs.select(
         "doc_id",
         F.expr("array_min(hs)").alias("fp_min"),
@@ -330,12 +184,12 @@ def q_fuzzy_join(spark, d):
     oracle=f"""
         WITH pos AS (
             SELECT doc_id, text,
-                   unnest(generate_series(1, len(text) - {_K - 1})) AS i
+                   unnest(generate_series(1, len(text) - {ROLL_K - 1})) AS i
             FROM documents
-            WHERE len(text) >= {_K}
+            WHERE len(text) >= {ROLL_K}
         ),
         hashes AS (
-            SELECT doc_id, i, ({_poly_sql("text", "i")}) AS h FROM pos
+            SELECT doc_id, i, ({poly_sql("text", "i")}) AS h FROM pos
         ),
         winnowed AS (
             SELECT doc_id,
@@ -364,7 +218,7 @@ def q_text_winnow(spark, d):
     Winnowing is per-document LOCAL, so no shuffle is needed at all:
     the hash array stays in-row and the window-min is a transform
     with four O(1) lookups (wmins references hs 4x, so it is not
-    inlined — see _rolling_hash_arrays). Replaces a doc-partitioned
+    inlined — see rolling_hash_arrays). Replaces a doc-partitioned
     window + hash agg (two shuffles, 7.6 s at sf0.1) with a pure
     projection (~1.5 s). Docs shorter than K+3 chars have no full
     window and correctly emit nothing (sequence() would count DOWN
@@ -380,9 +234,9 @@ def q_text_winnow(spark, d):
     transforms across cores (r17: the 1-row-group fixture ran the
     whole projection in one scan task — 2.2 s → 0.9 s at sf0.1)."""
     docs = load(spark, d, "documents", spread=True).filter(
-        F.length("text") >= _K + 3
+        F.length("text") >= ROLL_K + 3
     )
-    hs = _rolling_hash_arrays(docs)
+    hs = rolling_hash_arrays(docs)
     wmins = hs.select(
         "doc_id",
         F.expr(
@@ -398,31 +252,18 @@ def q_text_winnow(spark, d):
     ).orderBy("doc_id")
 
 
-# ROUND-safe: the only ROUND here is the edge threshold
-# ROUND(jacc,6) >= 0.4 — byte-identical to the driver-PROVEN
-# q_dedup_ngram predicate (pass r4) over the SAME pair set; the
-# output columns are pure integer doc ids.
+# ROUND-safe: the only ROUND is the edge threshold in
+# NEAR_DUP_EDGES_CTES (ROUND(jacc,6) >= NEAR_DUP_TAU) — the
+# driver-PROVEN q_dedup_ngram predicate (pass r4) over the SAME pair
+# set; the output columns are pure integer doc ids.
 @query(
     "q_graph_triangles",
     oracle=f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges AS (
-            SELECT i.doc_a AS u, i.doc_b AS v
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        )
-        SELECT e1.u AS doc_a, e1.v AS doc_b, e2.v AS doc_c
-        FROM edges e1
-        JOIN edges e2 ON e2.u = e1.v
-        JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
+        WITH {NEAR_DUP_EDGES_CTES}
+        SELECT e1.doc_a AS doc_a, e1.doc_b AS doc_b, e2.doc_b AS doc_c
+        FROM edges0 e1
+        JOIN edges0 e2 ON e2.doc_a = e1.doc_b
+        JOIN edges0 e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b
         ORDER BY doc_a, doc_b, doc_c
     """,
 )

@@ -22,10 +22,11 @@ popcount over plain BIGINTs.
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
+from .bigrams import NEAR_DUP_SYM_CTES, near_dup_sym
 
 # --------------------------------------------------------------------------
 # Chunked-bitmap set algebra
@@ -142,14 +143,7 @@ CLOSE_SEED_MOD = 50
 
 
 def _closeness_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
     ctes = [
-        """sym AS MATERIALIZED (
-          SELECT doc_a AS src, doc_b AS dst FROM edges0
-          UNION ALL
-          SELECT doc_b, doc_a FROM edges0
-        )""",
         f"""seeds AS MATERIALIZED (
           SELECT DISTINCT src AS seed FROM sym
           WHERE src % {CLOSE_SEED_MOD} = 0
@@ -174,20 +168,7 @@ def _closeness_oracle() -> str:
         for r in range(1, CLOSE_ROUNDS + 1)
     )
     return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges0 AS MATERIALIZED (
-            SELECT i.doc_a, i.doc_b
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
+        WITH {NEAR_DUP_SYM_CTES},
         {", ".join(ctes)},
         reach AS ({reach})
         SELECT seed,
@@ -205,7 +186,8 @@ def _closeness_oracle() -> str:
 
 
 # ROUND-safe: the only ROUND is the driver-PROVEN q_dedup_ngram edge
-# predicate (pass r4) shared by the whole near-dup graph family.
+# predicate (pass r4) in NEAR_DUP_EDGES_CTES, shared by the whole
+# near-dup graph family.
 @query("q_graph_closeness", oracle=_closeness_oracle())
 def q_graph_closeness(spark, d):
     """k-hop harmonic closeness: for every seed in the bounded panel
@@ -219,19 +201,7 @@ def q_graph_closeness(spark, d):
     panel x component size. The frontier dedups by (seed, node), so a
     node reached at two depths counts at the SHORTER one only —
     true BFS distance."""
-    from .pipeline2 import near_dup_edges
-
-    edges = near_dup_edges(spark, d).select("doc_a", "doc_b")
-    sym = (
-        edges.unionAll(
-            edges.select(
-                F.col("doc_b").alias("doc_a"),
-                F.col("doc_a").alias("doc_b"),
-            )
-        )
-        .toDF("src", "dst")
-        .localCheckpoint()
-    )
+    sym = near_dup_sym(spark, d).localCheckpoint()
     seeds = (
         sym.filter(F.col("src") % CLOSE_SEED_MOD == 0)
         .select(F.col("src").alias("seed"))

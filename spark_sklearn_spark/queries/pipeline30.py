@@ -32,6 +32,7 @@ from ..functions.vectors import sq_dist
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
+from .bigrams import NEAR_DUP_SYM_CTES, near_dup_sym
 
 # --------------------------------------------------------------------------
 # Katz centrality (bounded-hop, integer-exact)
@@ -40,29 +41,8 @@ from ._helpers import DEC, h56, sql_h56
 # walk lengths 1..3; beta = 1/4 -> integer weights 16, 4, 1
 
 
-def _katz_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
-    return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges0 AS MATERIALIZED (
-            SELECT i.doc_a, i.doc_b
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
-        sym AS MATERIALIZED (
-          SELECT doc_a AS src, doc_b AS dst FROM edges0
-          UNION ALL
-          SELECT doc_b, doc_a FROM edges0
-        ),
+_KATZ_ORACLE = f"""
+        WITH {NEAR_DUP_SYM_CTES},
         w1 AS MATERIALIZED (
           SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS w
           FROM sym GROUP BY src
@@ -85,12 +65,13 @@ def _katz_oracle() -> str:
                    AS katz_scaled64
         FROM w1 JOIN w2 USING (doc_id) JOIN w3 USING (doc_id)
         ORDER BY doc_id
-    """
+"""
 
 
 # ROUND-safe: the only ROUND is the driver-PROVEN q_dedup_ngram edge
-# predicate (pass r4) shared by the whole near-dup graph family.
-@query("q_graph_katz", oracle=_katz_oracle())
+# predicate (pass r4) in NEAR_DUP_EDGES_CTES, shared by the whole
+# near-dup graph family.
+@query("q_graph_katz", oracle=_KATZ_ORACLE)
 def q_graph_katz(spark, d):
     """Katz centrality with attenuation β=1/4 truncated at walk
     length 3, over the memoized near-dup edge snapshot — the damped
@@ -107,14 +88,7 @@ def q_graph_katz(spark, d):
     snapshot is the bounded banded near-dup graph; every join is a
     key-partitioned equi-join that AQE can re-plan. Walk counts fit
     int64 through hop 3 for any graph with max-degree ≤ ~2M."""
-    from .pipeline2 import near_dup_edges
-
-    edges = near_dup_edges(spark, d).select("doc_a", "doc_b")
-    sym = edges.unionAll(
-        edges.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).toDF("src", "dst")
+    sym = near_dup_sym(spark, d)
     w1 = sym.groupBy("src").agg(F.count(F.lit(1)).alias("w")).select(
         F.col("src").alias("doc_id"), "w"
     )

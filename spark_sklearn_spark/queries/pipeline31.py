@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
+from .bigrams import NEAR_DUP_SYM_CTES, near_dup_edges, near_dup_sym
 
 # --------------------------------------------------------------------------
 # Yule–Simon (cumulative-advantage) fit of per-user activity
@@ -261,29 +262,8 @@ def q_ts_piecewise_trend(spark, d):
 # an exact integer (documented deviation from the paper's CPM).
 
 
-def _leiden_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
-    return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges0 AS MATERIALIZED (
-            SELECT i.doc_a, i.doc_b
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
-        sym AS MATERIALIZED (
-          SELECT doc_a AS src, doc_b AS dst FROM edges0
-          UNION ALL
-          SELECT doc_b, doc_a FROM edges0
-        ),
+_LEIDEN_ORACLE = f"""
+        WITH {NEAR_DUP_SYM_CTES},
         l1 AS MATERIALIZED (
           SELECT src AS doc_id,
                  least(src, MIN(dst)) AS l
@@ -313,12 +293,13 @@ def _leiden_oracle() -> str:
         SELECT CAST(gain AS BIGINT) AS gain,
                CAST(COUNT(*) AS BIGINT) AS n_nodes
         FROM gains GROUP BY gain ORDER BY gain
-    """
+"""
 
 
 # ROUND-safe: the only ROUND is the driver-PROVEN q_dedup_ngram edge
-# predicate (pass r4) shared by the whole near-dup graph family.
-@query("q_graph_leiden_refine", oracle=_leiden_oracle())
+# predicate (pass r4) in NEAR_DUP_EDGES_CTES, shared by the whole
+# near-dup graph family.
+@query("q_graph_leiden_refine", oracle=_LEIDEN_ORACLE)
 def q_graph_leiden_refine(spark, d):
     """Leiden refinement-phase gain histogram (module comment) over
     the memoized near-dup edge snapshot: one min-label superstep,
@@ -363,17 +344,6 @@ def q_graph_leiden_refine(spark, d):
         gains.groupBy("gain")
         .agg(F.count(F.lit(1)).alias("n_nodes"))
         .orderBy("gain")
-    )
-
-
-def near_dup_sym(spark, d):
-    """Symmetrized (src, dst) view of the memoized near-dup edge
-    snapshot (pipeline2.near_dup_edges)."""
-    from .pipeline2 import near_dup_edges
-
-    e = near_dup_edges(spark, d).select("doc_a", "doc_b")
-    return e.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
-        e.selectExpr("doc_b AS src", "doc_a AS dst")
     )
 
 
@@ -1195,8 +1165,6 @@ _RC_KS = (1, 2, 3, 5, 8)
 
 
 def _rich_club_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
     e_sums = ", ".join(
         f"CAST(SUM(CASE WHEN least(da, db) > {k} THEN 1 ELSE 0 END)"
         f" AS BIGINT) AS e{k}"
@@ -1216,25 +1184,7 @@ def _rich_club_oracle() -> str:
         for k in _RC_KS
     )
     return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges0 AS MATERIALIZED (
-            SELECT i.doc_a, i.doc_b
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
-        sym AS MATERIALIZED (
-          SELECT doc_a AS src, doc_b AS dst FROM edges0
-          UNION ALL
-          SELECT doc_b, doc_a FROM edges0
-        ),
+        WITH {NEAR_DUP_SYM_CTES},
         degs AS MATERIALIZED (
           SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS deg
           FROM sym GROUP BY src
@@ -1252,7 +1202,8 @@ def _rich_club_oracle() -> str:
 
 
 # ROUND-safe: the only ROUND is the driver-PROVEN q_dedup_ngram edge
-# predicate (pass r4) shared by the whole near-dup graph family.
+# predicate (pass r4) in NEAR_DUP_EDGES_CTES, shared by the whole
+# near-dup graph family.
 @query("q_graph_rich_club", oracle=_rich_club_oracle())
 def q_graph_rich_club(spark, d):
     """Rich-club coefficients φ(k) over the memoized near-dup edge
@@ -1260,8 +1211,6 @@ def q_graph_rich_club(spark, d):
     edge-degree join, ONE conditional-sum agg covering all five k
     levels, integer ppm ratios. The k-grid expansion is a stack over
     two 1-row aggregates (Lloyd-shape broadcast)."""
-    from .pipeline2 import near_dup_edges
-
     e = near_dup_edges(spark, d).select("doc_a", "doc_b")
     sym = near_dup_sym(spark, d)
     degs = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))

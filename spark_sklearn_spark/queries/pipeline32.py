@@ -60,11 +60,12 @@ group SUM to BIGINT (DuckDB HUGEINT parity).
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load, register_views
 from ._helpers import DEC
+from .bigrams import NEAR_DUP_SYM_CTES, near_dup_edges, near_dup_sym
 from .fits import LR_BINS_CTES, lr_decile_bins
 
 # --------------------------------------------------------------------------
@@ -494,29 +495,8 @@ def q_behavior_hhi(spark, d):
 # pairs. Snapshot-sized relations throughout (near_dup_edges memo).
 
 
-def _truss_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
-    return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges0 AS MATERIALIZED (
-            SELECT i.doc_a, i.doc_b
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
-        sym AS MATERIALIZED (
-          SELECT doc_a AS src, doc_b AS dst FROM edges0
-          UNION ALL
-          SELECT doc_b, doc_a FROM edges0
-        ),
+_TRUSS_ORACLE = f"""
+        WITH {NEAR_DUP_SYM_CTES},
         tri AS (
           SELECT e.doc_a, e.doc_b, CAST(COUNT(*) AS BIGINT) AS s
           FROM edges0 e
@@ -533,12 +513,13 @@ def _truss_oracle() -> str:
         )
         SELECT support, CAST(COUNT(*) AS BIGINT) AS n_edges
         FROM supp GROUP BY support ORDER BY support
-    """
+"""
 
 
 # ROUND-safe: the only ROUND is the driver-PROVEN q_dedup_ngram edge
-# predicate (pass r4) shared by the whole near-dup graph family.
-@query("q_graph_truss_support", oracle=_truss_oracle())
+# predicate (pass r4) in NEAR_DUP_EDGES_CTES, shared by the whole
+# near-dup graph family.
+@query("q_graph_truss_support", oracle=_TRUSS_ORACLE)
 def q_graph_truss_support(spark, d):
     """k-truss edge-support histogram (module comment): per-node
     neighbor sets from ONE collect_set agg over the memoized edge
@@ -548,16 +529,9 @@ def q_graph_truss_support(spark, d):
     Shape: every relation after the snapshot read is edge-/node-
     sized (the near-dup graph, not the corpus); joins are key
     equi-joins; the histogram grain is bounded by max degree."""
-    from .pipeline2 import near_dup_edges
-
     edges = near_dup_edges(spark, d).select("doc_a", "doc_b")
-    sym = edges.unionAll(
-        edges.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    )
-    nbrs = sym.groupBy(F.col("doc_a").alias("node")).agg(
-        F.collect_set("doc_b").alias("nb")
+    nbrs = near_dup_sym(spark, d).groupBy(F.col("src").alias("node")).agg(
+        F.collect_set("dst").alias("nb")
     )
     supp = (
         edges.join(
@@ -617,17 +591,17 @@ _SIG_MOD = 1 << 40
 
 
 def _cdc_oracle() -> str:
-    from .pipeline2 import _K, _poly_sql
+    from .rolling_hash import ROLL_K, poly_sql
 
     return f"""
         WITH pos AS (
             SELECT doc_id, text,
-                   unnest(generate_series(1, len(text) - {_K - 1})) AS i
+                   unnest(generate_series(1, len(text) - {ROLL_K - 1})) AS i
             FROM documents
-            WHERE len(text) >= {_K}
+            WHERE len(text) >= {ROLL_K}
         ),
         hashes AS (
-            SELECT doc_id, i, ({_poly_sql("text", "i")}) AS h FROM pos
+            SELECT doc_id, i, ({poly_sql("text", "i")}) AS h FROM pos
         ),
         flagged AS (
             SELECT doc_id, i, h,
@@ -668,20 +642,20 @@ def _cdc_oracle() -> str:
 @query("q_dedup_cdc", oracle=_cdc_oracle())
 def q_dedup_cdc(spark, d):
     """Content-defined chunking dedup profile (module comment): the
-    in-row rolling-hash array (_rolling_hash_arrays — O(len) per
+    in-row rolling-hash array (rolling_hash_arrays — O(len) per
     doc), in-row boundary positions + per-chunk signature folds over
     disjoint ranges, a chunk-grain explode, one global 1-row agg.
     Exact integer signatures; the two closing ratios are
     identical-operand IEEE floored to ppm/micro. Values are
     bit-identical to the oracle's window-cumsum formulation — the
     boundary set and range partition are the same by construction."""
-    from .pipeline2 import _rolling_hash_arrays
+    from .rolling_hash import rolling_hash_arrays
 
     # spread: the per-row O(len) rolling-hash/boundary/fold work ran in
     # ONE scan task on the 1-row-group fixture (r18 spread batch 5:
     # 2.31 -> 0.64 s steady; no-op on production layouts)
     docs = load(spark, d, "documents", spread=True)
-    hs = _rolling_hash_arrays(docs)
+    hs = rolling_hash_arrays(docs)
     # hs is referenced 3x here (size + two element_at sites), so
     # CollapseProject keeps the O(len) transform materialized per row
     # instead of inlining it into the filter lambda (the winnow note)

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load, register_views
+from .bigrams import NEAR_DUP_SYM_CTES, near_dup_sym
 
 # --------------------------------------------------------------------------
 # Maximum drawdown + longest underwater spell of the deviation walk
@@ -461,29 +462,8 @@ def q_text_ari(spark, d):
 _COND_TOPK = 10
 
 
-def _conductance_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
-    return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges0 AS MATERIALIZED (
-            SELECT i.doc_a, i.doc_b
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
-        sym AS MATERIALIZED (
-          SELECT doc_a AS src, doc_b AS dst FROM edges0
-          UNION ALL
-          SELECT doc_b, doc_a FROM edges0
-        ),
+_CONDUCTANCE_ORACLE = f"""
+        WITH {NEAR_DUP_SYM_CTES},
         l1 AS MATERIALIZED (
           SELECT src AS v,
                  CAST(least(src, MIN(dst)) AS BIGINT) AS lbl
@@ -515,12 +495,13 @@ def _conductance_oracle() -> str:
         WHERE v.vol < t.two_e
         ORDER BY v.vol DESC, v.lbl
         LIMIT {_COND_TOPK}
-    """
+"""
 
 
 # ROUND-safe: the only ROUND is the driver-PROVEN q_dedup_ngram edge
-# predicate (pass r4) shared by the whole near-dup graph family.
-@query("q_graph_conductance", oracle=_conductance_oracle())
+# predicate (pass r4) in NEAR_DUP_EDGES_CTES, shared by the whole
+# near-dup graph family.
+@query("q_graph_conductance", oracle=_CONDUCTANCE_ORACLE)
 def q_graph_conductance(spark, d):
     """Community conductance after one min-label superstep (module
     comment): one neighbor-min agg labels every node, two doc-keyed
@@ -528,14 +509,7 @@ def q_graph_conductance(spark, d):
     grain cut/vol aggs, a TakeOrdered top-10 head. Snapshot-sized
     relations throughout; excludes the whole-graph community (vol =
     2E has no complement)."""
-    from .pipeline2 import near_dup_edges
-
-    edges = near_dup_edges(spark, d).select("doc_a", "doc_b")
-    sym = edges.unionAll(
-        edges.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    sym = near_dup_sym(spark, d)
     l1 = sym.groupBy("src").agg(
         F.least(F.col("src"), F.min("dst")).cast("long").alias("lbl")
     ).select(F.col("src").alias("v"), "lbl")

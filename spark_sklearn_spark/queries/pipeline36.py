@@ -70,6 +70,7 @@ from pyspark.sql import Window, functions as F
 
 from ..registry import query
 from ..sources.io import load, snapshot, write_parquet
+from .bigrams import BIGRAMS_SQL, rare_grams
 from .pipeline6 import SESSION_GAP_US
 from .fits import LR_BINS_CTES, lr_decile_bins
 from .pipeline8 import TAIL_BASKETS_SQL, tail_baskets
@@ -445,11 +446,8 @@ def q_stream_hopping_topk(spark, d):
 CONTAIN_IDF_TAU_PPM = 600_000
 
 
-def _containment_idf_oracle() -> str:
-    from .pipeline2 import _BIGRAMS_SQL
-
-    return f"""
-        WITH {_BIGRAMS_SQL},
+_CONTAINMENT_IDF_ORACLE = f"""
+        WITH {BIGRAMS_SQL},
         df AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS df
                FROM rare GROUP BY g),
         nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
@@ -481,10 +479,10 @@ def _containment_idf_oracle() -> str:
                        i.wi * 1000000 // sb.wtot)
               >= {CONTAIN_IDF_TAU_PPM}
         ORDER BY doc_a, doc_b
-    """
+"""
 
 
-@query("q_dedup_containment_idf", oracle=_containment_idf_oracle())
+@query("q_dedup_containment_idf", oracle=_CONTAINMENT_IDF_ORACLE)
 def q_dedup_containment_idf(spark, d):
     """IDF-weighted asymmetric containment over DF-capped word
     bigrams (module comment): C_idf(A,B) = Σ_{g∈A∩B} idf(g) /
@@ -499,8 +497,6 @@ def q_dedup_containment_idf(spark, d):
     arithmetic, and the threshold compares ppm integers (no ROUND on
     raw doubles). Docs with zero IDF mass (every gram in all N docs)
     are excluded on both engines before any division."""
-    from .pipeline2 import rare_grams
-
     rare = rare_grams(spark, d, with_df=True)
     docs = load(spark, d, "documents")
     nd = docs.agg(F.count(F.lit(1)).alias("n"))

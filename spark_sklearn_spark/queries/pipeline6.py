@@ -17,8 +17,8 @@ window shuffle (lag/lead + running sum share the partitioning);
 OHLC's two row_number orderings reuse one exchange and the final
 hash agg emits |types|·|hours| cells regardless of corpus size;
 entropy is explode → two combinable hash aggs; containment rides the
-same DF-capped postings join as q_dedup_ngram (bigram_overlap — the
-fan-out-bounded, never-doc×doc core).
+same DF-capped postings join as q_dedup_ngram (bigrams.bigram_overlap
+— the fan-out-bounded, never-doc×doc core).
 """
 
 from __future__ import annotations
@@ -28,7 +28,12 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load, snapshot, write_parquet
 from ._helpers import DEC
-from .pipeline2 import _BIGRAMS_SQL
+from .bigrams import (
+    BIGRAM_PAIRS_CTES,
+    NEAR_DUP_SYM_CTES,
+    bigram_overlap,
+    near_dup_sym,
+)
 
 # --------------------------------------------------------------------------
 # Batch sessionization (gap-based session ids)
@@ -320,26 +325,19 @@ CONTAIN_TAU = 0.6
 @query(
     "q_text_containment",
     oracle=f"""
-        WITH {{_BIGRAMS_SQL}},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ), scored AS (
-            SELECT i.doc_a, i.doc_b,
-                   ROUND(i.c * 1.0 / sa.n, 6) AS cont_a,
-                   ROUND(i.c * 1.0 / sb.n, 6) AS cont_b,
-                   ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) AS jacc
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
+        WITH {BIGRAM_PAIRS_CTES},
+        scored AS (
+            SELECT doc_a, doc_b,
+                   ROUND(c * 1.0 / na, 6) AS cont_a,
+                   ROUND(c * 1.0 / nb, 6) AS cont_b,
+                   jacc
+            FROM pairs
         )
         SELECT doc_a, doc_b, cont_a, cont_b, jacc
         FROM scored
         WHERE greatest(cont_a, cont_b) >= {CONTAIN_TAU}
         ORDER BY doc_a, doc_b
-    """.replace("{_BIGRAMS_SQL}", _BIGRAMS_SQL),
+    """,
 )
 def q_text_containment(spark, d):
     """Asymmetric gram containment C(A,B) = |A∩B| / |A| for candidate
@@ -347,12 +345,10 @@ def q_text_containment(spark, d):
     a short doc fully embedded in a long one has high containment but
     low Jaccard, so q_dedup_ngram's symmetric threshold misses it.
     Rides the same DF-capped postings join as q_dedup_ngram
-    (pipeline2.bigram_overlap — fan-out bounded by DF_CAP, never
+    (bigrams.bigram_overlap — fan-out bounded by DF_CAP, never
     doc×doc); both directions plus Jaccard are emitted so the caller
     sees WHY a pair surfaced. Ratios rounded to 6 before the
     threshold on both engines."""
-    from .pipeline2 import bigram_overlap
-
     ov = bigram_overlap(spark, d)
     return (
         ov.select(
@@ -613,11 +609,6 @@ def _pagerank_oracle(iterations: int = 5) -> str:
     bit-identical doubles on both engines."""
     riso = "(1.0 / c.n)"
     ctes = [
-        """sym AS (
-          SELECT doc_a AS src, doc_b AS dst FROM edges
-          UNION
-          SELECT doc_b AS src, doc_a AS dst FROM edges
-        )""",
         """active AS (
           SELECT src AS node, COUNT(*) AS out_deg FROM sym GROUP BY src
         )""",
@@ -656,20 +647,7 @@ def _pagerank_oracle(iterations: int = 5) -> str:
           WHERE a.node IS NULL
         )""")
     return f"""
-        WITH {_BIGRAMS_SQL},
-        sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-            FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY doc_a, doc_b
-        ),
-        edges AS (
-            SELECT i.doc_a, i.doc_b
-            FROM inter i
-            JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-        ),
+        WITH {NEAR_DUP_SYM_CTES},
         {", ".join(ctes)}
         SELECT node AS doc_id,
                ROUND(rank, 6) AS rank,
@@ -698,18 +676,11 @@ def q_graph_pagerank(spark, d):
     decimal policy. Output: top-20 hubs by rank (rounded AFTER
     ordering by the raw value, doc_id tie-break)."""
     from ..operators.pagerank import pagerank
-    from .pipeline2 import near_dup_edges
 
     docs = load(spark, d, "documents")
-    pairs = near_dup_edges(spark, d).select("doc_a", "doc_b")
-    sym = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).distinct()
     pr = pagerank(
-        docs.select("doc_id"), sym, "doc_id", "doc_a", "doc_b",
-        exact_contribs=True,
+        docs.select("doc_id"), near_dup_sym(spark, d), "doc_id", "src",
+        "dst", exact_contribs=True,
     )
     return (
         pr.orderBy(F.col("rank").desc(), F.col("doc_id"))

@@ -17,7 +17,7 @@ bucket per row simulates the ingest's file assignment — 48 skewed
 query runs over it — the window cumsum is over files, never rows.
 
 Degree distribution rides the memoized near-dup edge snapshot
-(pipeline2.near_dup_edges) — the graph-health profile (how clustered
+(bigrams.near_dup_edges) — the graph-health profile (how clustered
 is my duplication?) next to q_graph_triangles/q_graph_pagerank.
 """
 
@@ -29,7 +29,7 @@ from ..functions.vectors import sq_dist
 from ..registry import query
 from ..sources.io import load, read_table, warehouse_path, write_table
 from ._helpers import DEC
-from .pipeline2 import _BIGRAMS_SQL, near_dup_edges
+from .bigrams import NEAR_DUP_EDGES_CTES, near_dup_edges
 
 # --------------------------------------------------------------------------
 # JSON-lines round-trip
@@ -215,25 +215,12 @@ def q_layout_compaction(spark, d):
 # --------------------------------------------------------------------------
 
 _DEGREE_ORACLE = f"""
-    WITH {_BIGRAMS_SQL},
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM rare GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-        FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY doc_a, doc_b
-    ),
-    edges AS (
-        SELECT i.doc_a, i.doc_b
-        FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.doc_a
-        JOIN sizes sb ON sb.doc_id = i.doc_b
-        WHERE ROUND(i.c * 1.0 / (sa.n + sb.n - i.c), 6) >= 0.4
-    ),
+    WITH {NEAR_DUP_EDGES_CTES},
     degs AS (
       SELECT doc_id, COUNT(*) AS degree FROM (
-        SELECT doc_a AS doc_id FROM edges
+        SELECT doc_a AS doc_id FROM edges0
         UNION ALL
-        SELECT doc_b AS doc_id FROM edges
+        SELECT doc_b AS doc_id FROM edges0
       ) GROUP BY doc_id
     )
     SELECT degree, COUNT(*) AS n_docs,

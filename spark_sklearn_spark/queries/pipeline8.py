@@ -58,7 +58,7 @@ from .fits import (
 
 # Parts bought by more than POP_CAP distinct customers are head items:
 # they connect everyone to everyone (no signal for affinity) and their
-# postings lists dominate the pair fan-out. Same role as pipeline2's
+# postings lists dominate the pair fan-out. Same role as bigrams.py's
 # DF_CAP for bigrams. The near-dup DOC graph can't host this query:
 # its synthetic components are exact cliques at every threshold, so
 # distance-2 open wedges don't exist (probed r7 — 0 rows at every SF).

@@ -14,15 +14,14 @@ import __spark_entry__ as entry
 from conftest import _rows
 
 
-def test_entropy_rate_bounds(spark):
+def test_entropy_rate_bounds(spark, sf_dir):
     """h ∈ [0, ln(n_next_types)]·1e6 per state, and the transition
     totals cover every non-terminal event."""
     import math
 
     import __spark_entry__ as entry
 
-    sf = "/root/testdata/sf0.001"
-    rows = entry.queries()["q_behavior_entropy_rate"](spark, sf).collect()
+    rows = entry.queries()["q_behavior_entropy_rate"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         cap = math.floor(math.log(r.n_next_types) * 1_000_000) + 1
@@ -30,7 +29,7 @@ def test_entropy_rate_bounds(spark):
         assert r.n_out >= r.n_next_types
 
 
-def test_gini_replay(spark):
+def test_gini_replay(spark, sf_dir):
     """Exact integer replay at sf0.001 and range sanity: Gini of a
     real usage distribution lies strictly in (0, 1)·1e6 micro."""
     import __spark_entry__ as entry
@@ -38,11 +37,10 @@ def test_gini_replay(spark):
 
     from spark_sklearn_spark.sources.io import load
 
-    sf = "/root/testdata/sf0.001"
-    r = entry.queries()["q_behavior_gini"](spark, sf).collect()[0]
+    r = entry.queries()["q_behavior_gini"](spark, sf_dir).collect()[0]
     counts = sorted(
         (c.x, c.user_id)
-        for c in load(spark, sf, "events")
+        for c in load(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("x"))
         .collect()

@@ -10,15 +10,14 @@ import __spark_entry__ as entry
 from conftest import _rows
 
 
-def test_isotropy_bounds(spark):
+def test_isotropy_bounds(spark, sf_dir):
     """Participation ratio must land in (1, 64]·1e6 micro and the
     trace/Frobenius identities must recombine: PR·F2 ≤ T²·1e6 <
     (PR+1)·F2 (floor definition). The fixture embeddings are
     near-isotropic, so PR should be well above half the dimension."""
     import __spark_entry__ as entry
 
-    sf = "/root/testdata/sf0.001"
-    r = entry.queries()["q_emb_isotropy"](spark, sf).collect()[0]
+    r = entry.queries()["q_emb_isotropy"](spark, sf_dir).collect()[0]
     assert r.n_vecs > 0 and r.fro2_damped > 0
     assert 1_000_000 < r.pr_micro <= 64_000_000
     t2 = r.trace_damped * r.trace_damped
@@ -27,7 +26,7 @@ def test_isotropy_bounds(spark):
     assert r.pr_micro > 32_000_000  # isotropic fixture
 
 
-def test_mutual_knn_histogram(spark):
+def test_mutual_knn_histogram(spark, sf_dir):
     """Degrees lie in 0..k, the histogram covers the whole panel, and
     the mutual-edge count implied by Σ deg·count is even (each mutual
     edge contributes to two points' degrees)."""
@@ -39,10 +38,9 @@ def test_mutual_knn_histogram(spark):
     )
     from spark_sklearn_spark.sources.io import load
 
-    sf = "/root/testdata/sf0.001"
-    rows = entry.queries()["q_emb_mutual_knn"](spark, sf).collect()
+    rows = entry.queries()["q_emb_mutual_knn"](spark, sf_dir).collect()
     panel_n = (
-        load(spark, sf, "embeddings")
+        load(spark, sf_dir, "embeddings")
         .filter(f"vec_id % {LOF_PANEL_MOD} = 0")
         .count()
     )

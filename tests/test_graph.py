@@ -9,19 +9,45 @@ import __spark_entry__ as entry
 from conftest import _rows
 
 
-def test_katz_walk_counts_consistent(spark):
+def test_near_dup_graph_sides_agree(spark, sf_dir, duck):
+    """bigrams.py's two sides define one graph: the DuckDB edges0 set
+    equals the near_dup_edges snapshot, the sym multiset equals
+    near_dup_sym, and sym has no duplicate (src, dst) — the fact that
+    lets q_graph_pagerank use it without a distinct."""
+    from collections import Counter
+
+    from spark_sklearn_spark.queries.bigrams import (
+        NEAR_DUP_SYM_CTES,
+        near_dup_edges,
+        near_dup_sym,
+    )
+
+    def duck_rows(sql):
+        return duck.execute(f"WITH {NEAR_DUP_SYM_CTES} {sql}").fetchall()
+
+    edges = duck_rows("SELECT doc_a, doc_b FROM edges0")
+    sym = duck_rows("SELECT src, dst FROM sym")
+    assert edges  # an empty graph would make every check vacuous
+    spark_edges = near_dup_edges(spark, sf_dir).select("doc_a", "doc_b")
+    assert set(edges) == {tuple(r) for r in spark_edges.collect()}
+    assert Counter(sym) == Counter(
+        tuple(r) for r in near_dup_sym(spark, sf_dir).collect()
+    )
+    assert len(set(sym)) == len(sym)
+
+
+def test_katz_walk_counts_consistent(spark, sf_dir):
     """Walk-count identities on the near-dup graph at sf0.001:
     Σ_v walks1(v) = 2·|edges| (each undirected edge contributes two
     directed walks), every node with walks1 > 0 appears, and
     katz_scaled64 recombines exactly."""
     import __spark_entry__ as entry
 
-    from spark_sklearn_spark.queries.pipeline2 import near_dup_edges
+    from spark_sklearn_spark.queries.bigrams import near_dup_edges
 
-    sf = "/root/testdata/sf0.001"
-    rows = entry.queries()["q_graph_katz"](spark, sf).collect()
+    rows = entry.queries()["q_graph_katz"](spark, sf_dir).collect()
     assert rows
-    n_edges = near_dup_edges(spark, sf).count()
+    n_edges = near_dup_edges(spark, sf_dir).count()
     assert sum(r.walks1 for r in rows) == 2 * n_edges
     for r in rows:
         assert r.katz_scaled64 == 16 * r.walks1 + 4 * r.walks2 + r.walks3
@@ -35,7 +61,7 @@ def test_leiden_refine_covers_all_graph_nodes(spark, sf_dir):
     against the max degree."""
     from pyspark.sql import functions as F
 
-    from spark_sklearn_spark.queries.pipeline31 import near_dup_sym
+    from spark_sklearn_spark.queries.bigrams import near_dup_sym
 
     rows = entry.queries()["q_graph_leiden_refine"](
         spark, sf_dir
@@ -67,7 +93,7 @@ def test_rich_club_is_monotone_in_k(spark, sf_dir):
 
 
 def test_truss_support_covers_all_edges(spark, sf_dir):
-    from spark_sklearn_spark.queries.pipeline2 import near_dup_edges
+    from spark_sklearn_spark.queries.bigrams import near_dup_edges
 
     rows = _rows(spark, sf_dir, "q_graph_truss_support")
     n_edges = near_dup_edges(spark, sf_dir).count()

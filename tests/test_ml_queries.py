@@ -12,7 +12,7 @@ import __spark_entry__ as entry
 from conftest import _rows
 
 
-def test_lof_invariants(spark):
+def test_lof_invariants(spark, sf_dir):
     """LOF at sf0.001: panel membership, kd2 is the k-th smallest
     pair distance (numpy replay on the quantized vectors), and a
     point inside a uniform-density neighborhood scores close to 1e6
@@ -27,14 +27,13 @@ def test_lof_invariants(spark):
     )
     from spark_sklearn_spark.sources.io import load
 
-    sf = "/root/testdata/sf0.001"
-    rows = entry.queries()["q_ml_lof"](spark, sf).collect()
+    rows = entry.queries()["q_ml_lof"](spark, sf_dir).collect()
     assert rows
     emb = {
         r.vec_id: np.floor(
             np.asarray(r.embedding, dtype="float64") * LOF_Q
         ).astype("int64")
-        for r in load(spark, sf, "embeddings")
+        for r in load(spark, sf_dir, "embeddings")
         .filter(f"vec_id % {LOF_PANEL_MOD} = 0")
         .collect()
     }
@@ -50,7 +49,7 @@ def test_lof_invariants(spark):
         assert r.s_reach >= sum(d2[:LOF_K])  # reach-dists >= raw dists
 
 
-def test_mutual_info_nonnegative_total(spark):
+def test_mutual_info_nonnegative_total(spark, sf_dir):
     """MI at sf0.001: per-priority contributions sum to a
     non-negative total (MI >= 0 up to the per-part floor error of at
     most 1 micro-nat each), and the n_x margins cover every order."""
@@ -58,16 +57,15 @@ def test_mutual_info_nonnegative_total(spark):
 
     from spark_sklearn_spark.sources.io import load
 
-    sf = "/root/testdata/sf0.001"
-    rows = entry.queries()["q_feat_mutual_info"](spark, sf).collect()
+    rows = entry.queries()["q_feat_mutual_info"](spark, sf_dir).collect()
     assert rows
-    total_orders = load(spark, sf, "orders").count()
+    total_orders = load(spark, sf_dir, "orders").count()
     assert sum(r.n_x for r in rows) == total_orders
     # each part floors at most 1 micro-nat low
     assert sum(r.mi_part_micro for r in rows) >= -len(rows)
 
 
-def test_permutation_test_invariants(spark):
+def test_permutation_test_invariants(spark, sf_dir):
     """16 reps; each rep's arms partition the F+O orders; the
     observed F-vs-O gap is genuine in the fixture so random
     reassignment should rarely exceed it — but assert only structure
@@ -76,11 +74,10 @@ def test_permutation_test_invariants(spark):
 
     from spark_sklearn_spark.sources.io import load
 
-    sf = "/root/testdata/sf0.001"
-    rows = entry.queries()["q_ml_permutation_test"](spark, sf).collect()
+    rows = entry.queries()["q_ml_permutation_test"](spark, sf_dir).collect()
     assert [r.rep for r in rows] == list(range(1, 17))
     n_fo = (
-        load(spark, sf, "orders")
+        load(spark, sf_dir, "orders")
         .filter("o_orderstatus IN ('F', 'O')")
         .count()
     )

@@ -421,7 +421,7 @@ def test_split_train_is_single_scan_agg(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_round12_batch_plans_are_scalable(spark):
+def test_partial_agg_pruned_scan_and_pca_fit_snapshot_read(spark, sf_dir):
     """q_feat_mutual_info
     is the documented bounded-grid exemption (the Lloyd-shape
     precedent): everything past the one data-sized scan+partial-agg
@@ -437,23 +437,22 @@ def test_round12_batch_plans_are_scalable(spark):
     from spark_sklearn_spark.plans import executed_plan
     from spark_sklearn_spark.sources.io import warehouse_path
 
-    sf = "/root/testdata/sf0.001"
     qs = entry.queries()
-    plan = executed_plan(qs["q_feat_mutual_info"](spark, sf))
+    plan = executed_plan(qs["q_feat_mutual_info"](spark, sf_dir))
     assert "partial_count" in plan  # map-side combine before shuffle
     assert "o_orderpriority" in plan and "o_totalprice" in plan
     assert "o_orderdate" not in plan  # column pruning reached the scan
     # q_ml_permutation_test: same bounded exemption — the only BNLJ is
     # the 1-row observed-statistic join onto the 16-row rep relation;
     # the data-sized stage is one scan with a map-side combinable agg.
-    plan = executed_plan(qs["q_ml_permutation_test"](spark, sf))
+    plan = executed_plan(qs["q_ml_permutation_test"](spark, sf_dir))
     assert "partial_count" in plan
     assert "o_orderdate" not in plan
     # q_emb_isotropy: one aggregate over the memoized 4096-row cells
     # snapshot — the global agg's SinglePartition runs on a
     # constant-size relation (Lloyd-shape exemption).
-    plan = executed_plan(qs["q_emb_isotropy"](spark, sf))
-    fit = os.path.basename(warehouse_path("pca_fit", sf))
+    plan = executed_plan(qs["q_emb_isotropy"](spark, sf_dir))
+    fit = os.path.basename(warehouse_path("pca_fit", sf_dir))
     assert f"pca_fit/{fit}/cells" in plan  # reads the shared fit snapshot
 
 

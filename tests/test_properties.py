@@ -252,7 +252,7 @@ def test_pagerank_invariants(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from spark_sklearn_spark.operators.pagerank import pagerank
-    from spark_sklearn_spark.queries.pipeline2 import rare_bigram_pairs
+    from spark_sklearn_spark.queries.bigrams import rare_bigram_pairs
     from spark_sklearn_spark.sources.io import load
 
     docs = load(spark, sf_dir, "documents")

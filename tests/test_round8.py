@@ -240,7 +240,8 @@ def test_kcore_reaches_fixpoint(spark, sf_dir):
 def test_kcore_nodes_have_min_degree(spark, sf_dir):
     """Every surviving node of the final round has degree >= k within
     the surviving edge set — the defining 2-core property."""
-    from spark_sklearn_spark.queries.kcore import KCORE_K, near_dup_edges
+    from spark_sklearn_spark.queries.bigrams import near_dup_edges
+    from spark_sklearn_spark.queries.kcore import KCORE_K
     from pyspark.sql import functions as F
 
     edges = near_dup_edges(spark, sf_dir).select("doc_a", "doc_b")
@@ -625,7 +626,7 @@ def F_col_in(name, values):
 
 
 def test_bfs_layers(spark, sf_dir):
-    from spark_sklearn_spark.queries.pipeline2 import near_dup_edges
+    from spark_sklearn_spark.queries.bigrams import near_dup_edges
     from pyspark.sql import functions as F
 
     rows = entry.queries()["q_graph_bfs"](spark, sf_dir).collect()

@@ -818,7 +818,7 @@ def test_pii_tokenize_injective_and_join_preserving(spark, sf_dir):
     assert r.min_token.startswith("c_") and len(r.min_token) == 19
 
 
-def test_pipeline24_scalable(spark, sf_dir):
+def test_table_checksum_xor_is_partial_agg(spark, sf_dir):
     """All four batch-J keys close in 1-row global aggregates (the
     q_sample_neyman global-scalar exemption): pit_scd2's asof output,
     each checksum table, nmi's entropy sums, and esd's per-round
@@ -883,7 +883,7 @@ def test_nmi_in_unit_range_and_triple_consistent(spark, sf_dir):
     assert 0 <= nmi.nmi_micro <= 1_000_000
 
 
-def test_pipeline25_scalable(spark, sf_dir):
+def test_glob_tree_agg_is_hash_partitioned_on_lang(spark, sf_dir):
     """granger/tost close in 1-row aggs and glob_tree crosses in the
     1-row recursive count (the csv_dirty/json_corrupt global-scalar
     shape) — all exempt. Assert the per-lang read is a combinable

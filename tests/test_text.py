@@ -11,7 +11,7 @@ import __spark_entry__ as entry
 from conftest import _rows
 
 
-def test_burstiness_replay(spark):
+def test_burstiness_replay(spark, sf_dir):
     """Exact integer replay of the Fano pipeline for every reported
     term at sf0.001, and Fano must be positive (a term with df≥30 in
     500 docs always disperses)."""
@@ -20,10 +20,9 @@ def test_burstiness_replay(spark):
 
     from spark_sklearn_spark.sources.io import load
 
-    sf = "/root/testdata/sf0.001"
-    rows = entry.queries()["q_text_burstiness"](spark, sf).collect()
+    rows = entry.queries()["q_text_burstiness"](spark, sf_dir).collect()
     assert rows
-    docs = load(spark, sf, "documents")
+    docs = load(spark, sf_dir, "documents")
     nd = docs.count()
     stats = {
         r.term: (r.df, r.s, r.q)
@@ -47,7 +46,7 @@ def test_burstiness_replay(spark):
         assert r.fano_micro > 0
 
 
-def test_heaps_law_plausible(spark):
+def test_heaps_law_plausible(spark, sf_dir):
     """β must land in (0, 1)·1e6 (vocabulary grows sublinearly in a
     natural-ish corpus) and the curve's endpoint identities hold:
     n_points = doc count."""
@@ -55,9 +54,8 @@ def test_heaps_law_plausible(spark):
 
     from spark_sklearn_spark.sources.io import load
 
-    sf = "/root/testdata/sf0.001"
-    r = entry.queries()["q_text_heaps_law"](spark, sf).collect()[0]
-    assert r.n_points == load(spark, sf, "documents").count()
+    r = entry.queries()["q_text_heaps_law"](spark, sf_dir).collect()[0]
+    assert r.n_points == load(spark, sf_dir, "documents").count()
     assert 0 < r.beta_micro < 1_000_000
     assert r.lnk_micro is not None
 

@@ -24,7 +24,7 @@ def test_periodogram_power_bounds(spark, sf_dir):
     assert by_p[7].total == by_p[11].total > 0
 
 
-def test_ljung_box_replay(spark):
+def test_ljung_box_replay(spark, sf_dir):
     """Exact numpy replay of the integer-scaled Ljung-Box pipeline at
     sf0.001: ρ_micro and the cumulative Q must match the n-scaled
     scatter arithmetic bit for bit, and ρ must lie in [-1e6, 1e6]."""
@@ -33,12 +33,11 @@ def test_ljung_box_replay(spark):
 
     from spark_sklearn_spark.sources.io import load
 
-    sf = "/root/testdata/sf0.001"
-    rows = entry.queries()["q_ts_ljung_box"](spark, sf).collect()
+    rows = entry.queries()["q_ts_ljung_box"](spark, sf_dir).collect()
     assert [r.k for r in rows] == list(range(1, 8))
     daily = {
         r.day_idx: r.x
-        for r in load(spark, sf, "events")
+        for r in load(spark, sf_dir, "events")
         .selectExpr(
             "cast(datediff(to_date(ts), date '1970-01-01') as long)"
             " as day_idx"
@@ -67,7 +66,7 @@ def test_ljung_box_replay(spark):
         assert r.lb_q_scaled == n * (n + 2) * cum, r
 
 
-def test_permutation_entropy_bounds(spark):
+def test_permutation_entropy_bounds(spark, sf_dir):
     """PE must land in [0, ln(6)]·1e6 micro-nats per event type, with
     n_patterns ≤ 6 and triples = days − 2 when the type's daily
     series is gap-free."""
@@ -75,8 +74,7 @@ def test_permutation_entropy_bounds(spark):
 
     import __spark_entry__ as entry
 
-    sf = "/root/testdata/sf0.001"
-    rows = entry.queries()["q_ts_permutation_entropy"](spark, sf).collect()
+    rows = entry.queries()["q_ts_permutation_entropy"](spark, sf_dir).collect()
     assert rows
     cap = math.floor(math.log(6) * 1_000_000)
     for r in rows:
@@ -85,14 +83,13 @@ def test_permutation_entropy_bounds(spark):
         assert r.n_triples > 0
 
 
-def test_cross_correlation_invariants(spark):
+def test_cross_correlation_invariants(spark, sf_dir):
     """15 lag rows; |xcf| ≤ 1e6 + 1 micro; the lag-0 value is
     symmetric ground truth (overlap of the two full series), and
     n_pairs is maximal at k=0 for gap-free series."""
     import __spark_entry__ as entry
 
-    sf = "/root/testdata/sf0.001"
-    rows = entry.queries()["q_ts_cross_correlation"](spark, sf).collect()
+    rows = entry.queries()["q_ts_cross_correlation"](spark, sf_dir).collect()
     assert [r.k for r in rows] == list(range(-7, 8))
     by_k = {r.k: r for r in rows}
     for r in rows:

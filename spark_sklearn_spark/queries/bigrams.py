@@ -18,7 +18,9 @@ by layer:
   pairs with Jaccard >= ``NEAR_DUP_TAU``;
 - adjacency: ``near_dup_sym`` / ``NEAR_DUP_SYM_CTES`` (plus sym), the
   edges in both directions as (src, dst). The edges are unique and
-  oriented, so this UNION ALL has no duplicate rows.
+  oriented, so this UNION ALL has no duplicate rows;
+- degrees: ``degrees`` / ``NEAR_DUP_DEG_CTES`` (plus deg), one
+  (doc_id, dg) row per doc with >= 1 edge.
 """
 
 from __future__ import annotations
@@ -81,6 +83,13 @@ NEAR_DUP_SYM_CTES = f"""{NEAR_DUP_EDGES_CTES},
           SELECT doc_a AS src, doc_b AS dst FROM edges0
           UNION ALL
           SELECT doc_b, doc_a FROM edges0
+        )
+"""
+
+NEAR_DUP_DEG_CTES = f"""{NEAR_DUP_SYM_CTES},
+        deg AS MATERIALIZED (
+          SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS dg
+          FROM sym GROUP BY src
         )
 """
 
@@ -180,4 +189,16 @@ def near_dup_sym(spark, d):
     e = near_dup_edges(spark, d).select("doc_a", "doc_b")
     return e.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
         e.selectExpr("doc_b AS src", "doc_a AS dst")
+    )
+
+
+def degrees(edges, a, b):
+    """(doc_id, dg) degree of each endpoint of an undirected edge list
+    with endpoint columns ``a`` and ``b``: the two endpoint columns
+    unioned, then one count per doc."""
+    return (
+        edges.select(F.col(a).alias("doc_id"))
+        .unionAll(edges.select(F.col(b).alias("doc_id")))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("dg"))
     )

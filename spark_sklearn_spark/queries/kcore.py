@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .bigrams import NEAR_DUP_EDGES_CTES, near_dup_edges
+from .bigrams import NEAR_DUP_EDGES_CTES, degrees, near_dup_edges
 
 KCORE_K = 2
 KCORE_ROUNDS = 3
@@ -74,12 +74,7 @@ def q_graph_kcore(spark, d):
     edges = near_dup_edges(spark, d).select("doc_a", "doc_b")
     rows = []
     for r in range(1, KCORE_ROUNDS + 1):
-        deg = (
-            edges.select(F.col("doc_a").alias("doc_id"))
-            .unionAll(edges.select(F.col("doc_b").alias("doc_id")))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("dg"))
-        )
+        deg = degrees(edges, "doc_a", "doc_b")
         keep = deg.filter(F.col("dg") >= KCORE_K).select("doc_id")
         # eager localCheckpoint per round: each later round AND its
         # stats row re-reads this relation, and without the cut the

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56
-from .bigrams import NEAR_DUP_EDGES_CTES, near_dup_edges
+from .bigrams import NEAR_DUP_DEG_CTES, degrees, near_dup_edges
 
 # --------------------------------------------------------------------------
 # Additive decomposition (trend + weekday seasonal + remainder)
@@ -381,7 +381,7 @@ def q_ml_pinball(spark, d):
 
 
 _CLUSTCOEFF_ORACLE = f"""
-        WITH {NEAR_DUP_EDGES_CTES},
+        WITH {NEAR_DUP_DEG_CTES},
         tris AS MATERIALIZED (
             SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
             FROM edges0 e1
@@ -396,12 +396,6 @@ _CLUSTCOEFF_ORACLE = f"""
         t_cnt AS (
             SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS t
             FROM tri_nodes GROUP BY doc_id
-        ),
-        deg AS (
-            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dg FROM (
-              SELECT doc_a AS doc_id FROM edges0
-              UNION ALL SELECT doc_b FROM edges0
-            ) GROUP BY doc_id
         ),
         cc AS (
             SELECT d.doc_id, d.dg,
@@ -445,12 +439,7 @@ def q_graph_clustcoeff(spark, d):
     t_cnt = tri_nodes.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("t")
     )
-    deg = (
-        edges.select(F.col("u").alias("doc_id"))
-        .unionAll(edges.select(F.col("v").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("dg"))
-    )
+    deg = degrees(edges, "u", "v")
     cc = (
         deg.filter(F.col("dg") >= 2)
         .join(t_cnt, "doc_id", "left")

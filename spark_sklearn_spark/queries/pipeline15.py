@@ -32,7 +32,7 @@ from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
 from .bigrams import (
     BIGRAM_PAIRS_CTES,
-    NEAR_DUP_SYM_CTES,
+    NEAR_DUP_DEG_CTES,
     NEAR_DUP_TAU,
     bigram_overlap,
     near_dup_edges,
@@ -330,11 +330,7 @@ def q_feat_woe(spark, d):
 
 
 _JACCARD_NBRS_ORACLE = f"""
-        WITH {NEAR_DUP_SYM_CTES},
-        deg AS (
-            SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS dg
-            FROM sym GROUP BY src
-        ),
+        WITH {NEAR_DUP_DEG_CTES},
         common AS (
             SELECT e.doc_a, e.doc_b, CAST(COUNT(*) AS BIGINT) AS cn
             FROM edges0 e

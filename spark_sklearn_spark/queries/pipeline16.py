@@ -23,7 +23,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
-from .bigrams import NEAR_DUP_EDGES_CTES, near_dup_edges
+from .bigrams import NEAR_DUP_DEG_CTES, degrees, near_dup_edges
 
 # --------------------------------------------------------------------------
 # Spearman rank correlation between event types' daily revenue
@@ -256,13 +256,7 @@ def q_ml_kendall(spark, d):
 
 
 _ASSORTATIVITY_ORACLE = f"""
-        WITH {NEAR_DUP_EDGES_CTES},
-        deg AS (
-            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dg FROM (
-              SELECT doc_a AS doc_id FROM edges0
-              UNION ALL SELECT doc_b FROM edges0
-            ) GROUP BY doc_id
-        ),
+        WITH {NEAR_DUP_DEG_CTES},
         stubs AS (
             SELECT du.dg AS j, dv.dg AS k
             FROM edges0 e
@@ -298,12 +292,7 @@ def q_graph_assortativity(spark, d):
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .localCheckpoint()
     )
-    deg = (
-        edges.select(F.col("u").alias("doc_id"))
-        .unionAll(edges.select(F.col("v").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("dg"))
-    )
+    deg = degrees(edges, "u", "v")
     du = deg.select(F.col("doc_id").alias("u"), F.col("dg").alias("j"))
     dv = deg.select(F.col("doc_id").alias("v"), F.col("dg").alias("k"))
     stubs = edges.join(du, "u").join(dv, "v")

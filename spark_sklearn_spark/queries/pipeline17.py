@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load, snapshot
 from ._helpers import h56, sql_h56
+from .bigrams import degrees
+from .shingles import DUP_COMPONENTS_CTES, dup_components, dup_pairs
 
 # --------------------------------------------------------------------------
 # binaryFile source roundtrip
@@ -119,27 +121,8 @@ def q_source_binaryfile(spark, d):
 # division per term, summed via DECIMAL quantization.
 
 
-def _modularity_oracle() -> str:
-    from .pipeline import NEAR_DUP_J, _SQL_JACCARD, _SQL_SHINGLES_CTE
-
-    return f"""
-        WITH RECURSIVE {_SQL_SHINGLES_CTE}, pairs AS (
-          SELECT a.doc_id AS src, b.doc_id AS dst
-          FROM sh a, sh b
-          WHERE a.doc_id < b.doc_id
-            AND {_SQL_JACCARD} >= {NEAR_DUP_J}
-        ), edges AS (
-          SELECT src, dst FROM pairs
-          UNION SELECT dst, src FROM pairs
-          UNION SELECT doc_id, doc_id FROM documents
-        ), reach(src, dst) AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        ), comp AS (
-          SELECT src AS doc_id, MIN(dst) AS cluster_id
-          FROM reach GROUP BY src
-        ), deg AS (
+_MODULARITY_ORACLE = f"""
+        WITH RECURSIVE {DUP_COMPONENTS_CTES}, deg AS (
           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dg FROM (
             SELECT src AS doc_id FROM pairs
             UNION ALL SELECT dst FROM pairs
@@ -172,24 +155,17 @@ def _modularity_oracle() -> str:
                                AS DOUBLE) * 1000000.0) AS BIGINT)
                    AS modularity_micro
         FROM terms
-    """
+"""
 
 
-@query("q_graph_modularity", oracle=_modularity_oracle())
+@query("q_graph_modularity", oracle=_MODULARITY_ORACLE)
 def q_graph_modularity(spark, d):
     """Modularity of the dup-component partition (module comment):
     rides the memoized dup_components snapshot + the LSH edge set;
     integer degree/edge sums per cluster, decimal-quantized term sum."""
-    from .pipeline import dup_components, dup_pairs
-
     pairs = dup_pairs(spark, d)
     comp = dup_components(spark, d)
-    deg = (
-        pairs.select(F.col("src").alias("doc_id"))
-        .unionAll(pairs.select(F.col("dst").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("dg"))
-    )
+    deg = degrees(pairs, "src", "dst")
     m_tot = pairs.agg(F.count(F.lit(1)).alias("m"))
     ca = comp.select(F.col("doc_id").alias("src"), F.col("cluster_id").alias("cid_a"))
     cb = comp.select(F.col("doc_id").alias("dst"), F.col("cluster_id").alias("cid_b"))

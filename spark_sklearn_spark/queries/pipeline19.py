@@ -32,6 +32,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56, sql_h56
+from .shingles import DUP_PAIRS_CTES, dup_pairs
 
 # --------------------------------------------------------------------------
 # Mann-Whitney U — tie-corrected rank-sum test, no corpus-wide window
@@ -895,8 +896,6 @@ def q_dq_skew(spark, d):
 
 
 def _label_prop_oracle() -> str:
-    from .pipeline import NEAR_DUP_J, _SQL_JACCARD, _SQL_SHINGLES_CTE
-
     rounds = []
     for r in (1, 2, 3):
         prev = "l0" if r == 1 else f"l{r - 1}"
@@ -921,13 +920,7 @@ def _label_prop_oracle() -> str:
         for r in (1, 2, 3)
     )
     return f"""
-        WITH {_SQL_SHINGLES_CTE},
-        pairs AS (
-          SELECT a.doc_id AS src, b.doc_id AS dst
-          FROM sh a, sh b
-          WHERE a.doc_id < b.doc_id
-            AND {_SQL_JACCARD} >= {NEAR_DUP_J}
-        ),
+        WITH {DUP_PAIRS_CTES},
         edges AS (
           SELECT src, dst FROM pairs
           UNION ALL SELECT dst, src FROM pairs
@@ -944,8 +937,6 @@ def q_graph_label_prop(spark, d):
     """3 unrolled min-label-propagation rounds on the shingle
     near-dup graph (module comment); rides the memoized dup_pairs
     snapshot. Output: per-round convergence trajectory."""
-    from .pipeline import dup_pairs
-
     docs = load(spark, d, "documents").select("doc_id")
     pairs = dup_pairs(spark, d)
     edges = pairs.select("src", "dst").unionAll(

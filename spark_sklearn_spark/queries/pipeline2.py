@@ -29,7 +29,7 @@ from .bigrams import (
     near_dup_edges,
     rare_bigram_pairs,
 )
-from .rolling_hash import ROLL_K, poly_sql, rolling_hash_arrays
+from .rolling_hash import ROLL_HASHES_CTES, ROLL_K, rolling_hash_arrays
 
 
 @query(
@@ -55,15 +55,7 @@ def q_dedup_ngram(spark, d):
 @query(
     "q_text_fingerprint_rolling",
     oracle=f"""
-        WITH pos AS (
-            SELECT doc_id, text,
-                   unnest(generate_series(1, len(text) - {ROLL_K - 1})) AS i
-            FROM documents
-            WHERE len(text) >= {ROLL_K}
-        ),
-        hashes AS (
-            SELECT doc_id, ({poly_sql("text", "i")}) AS h FROM pos
-        )
+        WITH {ROLL_HASHES_CTES}
         SELECT doc_id,
                MIN(h) AS fp_min,
                COUNT(DISTINCT h) AS n_distinct_grams,
@@ -182,15 +174,7 @@ def q_fuzzy_join(spark, d):
 @query(
     "q_text_winnow",
     oracle=f"""
-        WITH pos AS (
-            SELECT doc_id, text,
-                   unnest(generate_series(1, len(text) - {ROLL_K - 1})) AS i
-            FROM documents
-            WHERE len(text) >= {ROLL_K}
-        ),
-        hashes AS (
-            SELECT doc_id, i, ({poly_sql("text", "i")}) AS h FROM pos
-        ),
+        WITH {ROLL_HASHES_CTES},
         winnowed AS (
             SELECT doc_id,
                    MIN(h) OVER (PARTITION BY doc_id ORDER BY i

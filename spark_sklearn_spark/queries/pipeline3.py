@@ -21,29 +21,13 @@ from pyspark.sql import Window, functions as F
 
 from ..registry import query
 from ..sources.io import load
-from .pipeline import _SQL_JACCARD, _SQL_SHINGLES_CTE, NEAR_DUP_J
+from .shingles import DUP_COMPONENTS_CTES, dup_components
 
 
 @query(
     "q_dedup_canonical",
     oracle=f"""
-        WITH RECURSIVE {_SQL_SHINGLES_CTE}, pairs AS (
-          SELECT a.doc_id AS src, b.doc_id AS dst
-          FROM sh a, sh b
-          WHERE a.doc_id < b.doc_id
-            AND {_SQL_JACCARD} >= {NEAR_DUP_J}
-        ), edges AS (
-          SELECT src, dst FROM pairs
-          UNION SELECT dst, src FROM pairs
-          UNION SELECT doc_id, doc_id FROM documents
-        ), reach(src, dst) AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        ), comp AS (
-          SELECT src AS doc_id, min(dst) AS cluster_id
-          FROM reach GROUP BY src
-        ), sized AS (
+        WITH RECURSIVE {DUP_COMPONENTS_CTES}, sized AS (
           SELECT c.cluster_id, c.doc_id, d.n_chars,
                  COUNT(*) OVER (PARTITION BY c.cluster_id) AS n_members,
                  ROW_NUMBER() OVER (PARTITION BY c.cluster_id
@@ -73,8 +57,6 @@ def q_dedup_canonical(spark, d):
     ``dup_components`` snapshot shared with q_dedup_clusters (the two
     queries consume the identical pairs→components subgraph, ~85 % of
     each wall — VERDICT r5 'What's wrong' #2)."""
-    from .pipeline import dup_components
-
     docs = load(spark, d, "documents")
     comp = dup_components(spark, d)
     sized = comp.join(docs.select("doc_id", "n_chars"), "doc_id")

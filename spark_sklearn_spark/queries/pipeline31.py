@@ -45,7 +45,13 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
-from .bigrams import NEAR_DUP_SYM_CTES, near_dup_edges, near_dup_sym
+from .bigrams import (
+    NEAR_DUP_DEG_CTES,
+    NEAR_DUP_SYM_CTES,
+    near_dup_edges,
+    near_dup_sym,
+)
+from .shingles import SHINGLES_SQL
 
 # --------------------------------------------------------------------------
 # Yule–Simon (cumulative-advantage) fit of per-user activity
@@ -924,53 +930,7 @@ def q_ml_sprt(spark, d):
     from ..sources.io import register_views
 
     register_views(spark, d, ["events"])
-    import math
-
-    l1 = math.log(_SPRT_P1 / _SPRT_P0)
-    l0 = math.log((1.0 - _SPRT_P1) / (1.0 - _SPRT_P0))
-    up = math.log((1.0 - _SPRT_BETA) / _SPRT_ALPHA)
-    lo = math.log(_SPRT_BETA / (1.0 - _SPRT_ALPHA))
-    return spark.sql(f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CASE WHEN event_type = 'purchase'
-                           THEN 1 ELSE 0 END) AS BIGINT) AS x
-      FROM events GROUP BY CAST(date_trunc('day', ts) AS TIMESTAMP)
-    ),
-    walk AS (
-      SELECT CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT) AS i,
-             CAST(floor(CAST(SUM(
-               CAST(x * {l1!r} + (n - x) * {l0!r}
-                    AS DECIMAL(30,10))
-             ) OVER (ORDER BY day
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS DOUBLE) * 1000000) AS BIGINT) AS llr_micro
-      FROM daily
-    ),
-    crossings AS (
-      SELECT i, llr_micro,
-             CASE WHEN llr_micro >= {math.floor(up * 1e6)}
-                  THEN 'accept_h1'
-                  WHEN llr_micro <= {math.ceil(lo * 1e6)}
-                  THEN 'accept_h0'
-                  ELSE 'continue' END AS state
-      FROM walk
-    ),
-    first_cross AS (
-      SELECT i, state FROM crossings WHERE state <> 'continue'
-      ORDER BY i LIMIT 1
-    ),
-    last_row AS (
-      SELECT i AS n_days, llr_micro AS final_llr_micro
-      FROM walk ORDER BY i DESC LIMIT 1
-    )
-    SELECT l.n_days, l.final_llr_micro,
-           COALESCE(CAST(MAX(f.i) AS BIGINT), 0) AS decision_day,
-           COALESCE(MAX(f.state), 'continue') AS decision
-    FROM last_row l LEFT JOIN first_cross f ON TRUE
-    GROUP BY l.n_days, l.final_llr_micro
-    """)
+    return spark.sql(_sprt_sql())
 
 
 # --------------------------------------------------------------------------
@@ -1171,7 +1131,7 @@ def _rich_club_oracle() -> str:
         for k in _RC_KS
     )
     n_sums = ", ".join(
-        f"CAST(SUM(CASE WHEN deg > {k} THEN 1 ELSE 0 END)"
+        f"CAST(SUM(CASE WHEN dg > {k} THEN 1 ELSE 0 END)"
         f" AS BIGINT) AS n{k}"
         for k in _RC_KS
     )
@@ -1184,19 +1144,15 @@ def _rich_club_oracle() -> str:
         for k in _RC_KS
     )
     return f"""
-        WITH {NEAR_DUP_SYM_CTES},
-        degs AS MATERIALIZED (
-          SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS deg
-          FROM sym GROUP BY src
-        ),
+        WITH {NEAR_DUP_DEG_CTES},
         ed AS (
-          SELECT e.doc_a, e.doc_b, a.deg AS da, b.deg AS db
+          SELECT e.doc_a, e.doc_b, a.dg AS da, b.dg AS db
           FROM edges0 e
-          JOIN degs a ON a.doc_id = e.doc_a
-          JOIN degs b ON b.doc_id = e.doc_b
+          JOIN deg a ON a.doc_id = e.doc_a
+          JOIN deg b ON b.doc_id = e.doc_b
         ),
         en AS (SELECT {e_sums} FROM ed),
-        nn AS (SELECT {n_sums} FROM degs)
+        nn AS (SELECT {n_sums} FROM deg)
         SELECT * FROM ({rows}) ORDER BY k
     """
 
@@ -1266,8 +1222,8 @@ def q_graph_rich_club(spark, d):
 # bound (Hamming ≥ 7 pairs may or may not collide) is part of the
 # declared semantics, not a hash risk.
 
-_SIMHASH_HIST_ORACLE = """
-    WITH {SH}, grams AS (
+_SIMHASH_HIST_ORACLE = f"""
+    WITH {SHINGLES_SQL}, grams AS (
       SELECT doc_id, unnest(shingles) AS g FROM sh
     ), gh AS (
       SELECT doc_id,
@@ -1303,17 +1259,7 @@ _SIMHASH_HIST_ORACLE = """
 """
 
 
-def _simhash_hist_oracle() -> str:
-    return _SIMHASH_HIST_ORACLE.replace("{SH}", _shingles_cte())
-
-
-def _shingles_cte() -> str:
-    from .pipeline import _SQL_SHINGLES_CTE
-
-    return _SQL_SHINGLES_CTE
-
-
-@query("q_dedup_simhash_hist", oracle=_simhash_hist_oracle())
+@query("q_dedup_simhash_hist", oracle=_SIMHASH_HIST_ORACLE)
 def q_dedup_simhash_hist(spark, d):
     """Hamming histogram of SimHash band candidates (module comment):
     the same 56-bit signatures and 7-byte banding as q_dedup_simhash

@@ -67,6 +67,7 @@ from ..sources.io import load, register_views
 from ._helpers import DEC
 from .bigrams import NEAR_DUP_SYM_CTES, near_dup_edges, near_dup_sym
 from .fits import LR_BINS_CTES, lr_decile_bins
+from .rolling_hash import ROLL_HASHES_CTES, rolling_hash_arrays
 
 # --------------------------------------------------------------------------
 # Cramér's V between document language and source
@@ -590,19 +591,8 @@ _CDC_MOD = 64
 _SIG_MOD = 1 << 40
 
 
-def _cdc_oracle() -> str:
-    from .rolling_hash import ROLL_K, poly_sql
-
-    return f"""
-        WITH pos AS (
-            SELECT doc_id, text,
-                   unnest(generate_series(1, len(text) - {ROLL_K - 1})) AS i
-            FROM documents
-            WHERE len(text) >= {ROLL_K}
-        ),
-        hashes AS (
-            SELECT doc_id, i, ({poly_sql("text", "i")}) AS h FROM pos
-        ),
+_CDC_ORACLE = f"""
+        WITH {ROLL_HASHES_CTES},
         flagged AS (
             SELECT doc_id, i, h,
                    CASE WHEN i = 1 OR h % {_CDC_MOD} = 0
@@ -636,10 +626,10 @@ def _cdc_oracle() -> str:
                           / NULLIF(n_chunks, 0) * 1000000) AS BIGINT)
                    AS mean_len_micro
         FROM agg
-    """
+"""
 
 
-@query("q_dedup_cdc", oracle=_cdc_oracle())
+@query("q_dedup_cdc", oracle=_CDC_ORACLE)
 def q_dedup_cdc(spark, d):
     """Content-defined chunking dedup profile (module comment): the
     in-row rolling-hash array (rolling_hash_arrays — O(len) per
@@ -649,8 +639,6 @@ def q_dedup_cdc(spark, d):
     identical-operand IEEE floored to ppm/micro. Values are
     bit-identical to the oracle's window-cumsum formulation — the
     boundary set and range partition are the same by construction."""
-    from .rolling_hash import rolling_hash_arrays
-
     # spread: the per-row O(len) rolling-hash/boundary/fold work ran in
     # ONE scan task on the 1-row-group fixture (r18 spread batch 5:
     # 2.31 -> 0.64 s steady; no-op on production layouts)

@@ -1111,7 +1111,7 @@ def q_win_pareto(spark, d):
 
 def _semantic_components(spark, d):
     """(vec_id, cluster_id) over the planted SRP-LSH pair set,
-    snapshotted like pipeline.dup_components."""
+    snapshotted like shingles.dup_components."""
     from ..operators.components import connected_components
     from ..operators.lsh import srp_near_dup_pairs
     from .pipeline import planted_embeddings
@@ -1179,7 +1179,7 @@ def q_dedup_semantic_cluster(spark, d):
     the exact O(n²) cosine pair set; the Spark side never goes
     all-pairs (banded SRP candidates + exact verify only on
     survivors). The (vec_id, cluster_id) assignment is a snapshot
-    (sources/io.snapshot), like pipeline.dup_components."""
+    (sources/io.snapshot), like shingles.dup_components."""
     comp = _semantic_components(spark, d)
     return (
         comp.groupBy("cluster_id")

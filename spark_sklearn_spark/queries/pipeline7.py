@@ -29,7 +29,8 @@ from ..functions.vectors import sq_dist
 from ..registry import query
 from ..sources.io import load, read_table, warehouse_path, write_table
 from ._helpers import DEC
-from .bigrams import NEAR_DUP_EDGES_CTES, near_dup_edges
+from .bigrams import NEAR_DUP_DEG_CTES, degrees, near_dup_edges
+from .shingles import DUP_COMPONENTS_CTES, dup_components
 
 # --------------------------------------------------------------------------
 # JSON-lines round-trip
@@ -215,18 +216,11 @@ def q_layout_compaction(spark, d):
 # --------------------------------------------------------------------------
 
 _DEGREE_ORACLE = f"""
-    WITH {NEAR_DUP_EDGES_CTES},
-    degs AS (
-      SELECT doc_id, COUNT(*) AS degree FROM (
-        SELECT doc_a AS doc_id FROM edges0
-        UNION ALL
-        SELECT doc_b AS doc_id FROM edges0
-      ) GROUP BY doc_id
-    )
-    SELECT degree, COUNT(*) AS n_docs,
+    WITH {NEAR_DUP_DEG_CTES}
+    SELECT dg AS degree, COUNT(*) AS n_docs,
            MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-    FROM degs
-    GROUP BY degree
+    FROM deg
+    GROUP BY dg
     ORDER BY degree
 """
 
@@ -242,15 +236,9 @@ def q_graph_degree_dist(spark, d):
     recomputes the edges from scratch in SQL. Degree counting is
     symmetrize (unionAll) + groupBy — never materializes anything
     larger than the edge list."""
-    e = near_dup_edges(spark, d)
-    degs = (
-        e.select(F.col("doc_a").alias("doc_id"))
-        .unionAll(e.select(F.col("doc_b").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    degs = degrees(near_dup_edges(spark, d), "doc_a", "doc_b")
     return (
-        degs.groupBy("degree")
+        degs.groupBy(F.col("dg").alias("degree"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("min_doc"),
@@ -847,69 +835,51 @@ def q_sim_ann_grid(spark, d):
 # --------------------------------------------------------------------------
 
 
-def _dedup_funnel_oracle() -> str:
-    from .pipeline import NEAR_DUP_J, _SQL_JACCARD, _SQL_SHINGLES_CTE
-
-    return f"""
-        WITH RECURSIVE docs_t AS (
-          SELECT doc_id, len(string_split(text, ' ')) AS nw,
-                 sha256(lower(trim(text))) AS exact_key,
-                 md5(array_to_string(list_sort(string_split(text, ' ')),
-                                     ' ')) AS bow_key
-          FROM documents
-        ),
-        {_SQL_SHINGLES_CTE}, pairs AS (
-          SELECT a.doc_id AS src, b.doc_id AS dst
-          FROM sh a, sh b
-          WHERE a.doc_id < b.doc_id
-            AND {_SQL_JACCARD} >= {NEAR_DUP_J}
-        ), edges AS (
-          SELECT src, dst FROM pairs
-          UNION SELECT dst, src FROM pairs
-          UNION SELECT doc_id, doc_id FROM documents
-        ), reach(src, dst) AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        ), comp AS (
-          SELECT src AS doc_id, min(dst) AS grp FROM reach GROUP BY src
-        ),
-        exact_t AS (
-          SELECT COUNT(*) AS n_groups,
-                 SUM(kept_nw) AS tokens_kept
-          FROM (SELECT exact_key, arg_min(nw, doc_id) AS kept_nw
-                FROM docs_t GROUP BY exact_key)
-        ),
-        bow_t AS (
-          SELECT COUNT(*) AS n_groups,
-                 SUM(kept_nw) AS tokens_kept
-          FROM (SELECT bow_key, arg_min(nw, doc_id) AS kept_nw
-                FROM docs_t GROUP BY bow_key)
-        ),
-        near_t AS (
-          SELECT COUNT(*) AS n_groups,
-                 SUM(kept_nw) AS tokens_kept
-          FROM (SELECT c.grp, arg_min(d.nw, d.doc_id) AS kept_nw
-                FROM comp c JOIN docs_t d ON d.doc_id = c.doc_id
-                GROUP BY c.grp)
-        ),
-        totals AS (
-          SELECT COUNT(*) AS n_docs, SUM(nw) AS n_tokens FROM docs_t
-        )
-        SELECT tier, t.n_docs, x.n_groups,
-               t.n_docs - x.n_groups AS n_removable,
-               CAST(t.n_tokens - x.tokens_kept AS BIGINT)
-                   AS tokens_removed
-        FROM totals t, (
-          SELECT 'tier1_exact' AS tier, * FROM exact_t
-          UNION ALL SELECT 'tier2_bow', * FROM bow_t
-          UNION ALL SELECT 'tier3_neardup', * FROM near_t
-        ) x
-        ORDER BY tier
-    """
+_DEDUP_FUNNEL_ORACLE = f"""
+    WITH RECURSIVE {DUP_COMPONENTS_CTES},
+    docs_t AS (
+      SELECT doc_id, len(string_split(text, ' ')) AS nw,
+             sha256(lower(trim(text))) AS exact_key,
+             md5(array_to_string(list_sort(string_split(text, ' ')),
+                                 ' ')) AS bow_key
+      FROM documents
+    ),
+    exact_t AS (
+      SELECT COUNT(*) AS n_groups,
+             SUM(kept_nw) AS tokens_kept
+      FROM (SELECT exact_key, arg_min(nw, doc_id) AS kept_nw
+            FROM docs_t GROUP BY exact_key)
+    ),
+    bow_t AS (
+      SELECT COUNT(*) AS n_groups,
+             SUM(kept_nw) AS tokens_kept
+      FROM (SELECT bow_key, arg_min(nw, doc_id) AS kept_nw
+            FROM docs_t GROUP BY bow_key)
+    ),
+    near_t AS (
+      SELECT COUNT(*) AS n_groups,
+             SUM(kept_nw) AS tokens_kept
+      FROM (SELECT c.cluster_id, arg_min(d.nw, d.doc_id) AS kept_nw
+            FROM comp c JOIN docs_t d ON d.doc_id = c.doc_id
+            GROUP BY c.cluster_id)
+    ),
+    totals AS (
+      SELECT COUNT(*) AS n_docs, SUM(nw) AS n_tokens FROM docs_t
+    )
+    SELECT tier, t.n_docs, x.n_groups,
+           t.n_docs - x.n_groups AS n_removable,
+           CAST(t.n_tokens - x.tokens_kept AS BIGINT)
+               AS tokens_removed
+    FROM totals t, (
+      SELECT 'tier1_exact' AS tier, * FROM exact_t
+      UNION ALL SELECT 'tier2_bow', * FROM bow_t
+      UNION ALL SELECT 'tier3_neardup', * FROM near_t
+    ) x
+    ORDER BY tier
+"""
 
 
-@query("q_dedup_funnel", oracle=_dedup_funnel_oracle())
+@query("q_dedup_funnel", oracle=_DEDUP_FUNNEL_ORACLE)
 def q_dedup_funnel(spark, d):
     """Dedup-tier funnel: what each successive tier would remove —
     exact byte-hash, bag-of-words, MinHash-LSH transitive clusters —
@@ -921,8 +891,6 @@ def q_dedup_funnel(spark, d):
     dup_components snapshot (built once per corpus — the same one
     q_dedup_clusters/q_dedup_canonical ride); min_by/arg_min picks
     keeper token counts without a join back."""
-    from .pipeline import dup_components
-
     docs = load(spark, d, "documents").select(
         "doc_id",
         F.size(F.split("text", " ")).alias("nw"),

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
-from ._helpers import DEC
+from .shingles import DUP_COMPONENTS_CTES, dup_components
 
 # --------------------------------------------------------------------------
 # Segment-level (paragraph) dedup ledger
@@ -476,40 +476,21 @@ def q_join_interval_overlap(spark, d):
 # --------------------------------------------------------------------------
 
 
-def _component_sizes_oracle() -> str:
-    from .pipeline import NEAR_DUP_J, _SQL_JACCARD, _SQL_SHINGLES_CTE
-
-    return f"""
-        WITH RECURSIVE {_SQL_SHINGLES_CTE}, pairs AS (
-          SELECT a.doc_id AS src, b.doc_id AS dst
-          FROM sh a, sh b
-          WHERE a.doc_id < b.doc_id
-            AND {_SQL_JACCARD} >= {NEAR_DUP_J}
-        ), edges AS (
-          SELECT src, dst FROM pairs
-          UNION SELECT dst, src FROM pairs
-          UNION SELECT doc_id, doc_id FROM documents
-        ), reach(src, dst) AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        ), comp AS (
-          SELECT src AS doc_id, MIN(dst) AS cluster_id
-          FROM reach GROUP BY src
-        ), sizes AS (
-          SELECT cluster_id, COUNT(*) AS sz FROM comp GROUP BY cluster_id
-        )
-        SELECT sz AS component_size,
-               COUNT(*) AS n_clusters,
-               CAST(sz * COUNT(*) AS BIGINT) AS n_docs,
-               MIN(cluster_id) AS min_cluster
-        FROM sizes
-        GROUP BY sz
-        ORDER BY sz
-    """
+_COMPONENT_SIZES_ORACLE = f"""
+    WITH RECURSIVE {DUP_COMPONENTS_CTES}, sizes AS (
+      SELECT cluster_id, COUNT(*) AS sz FROM comp GROUP BY cluster_id
+    )
+    SELECT sz AS component_size,
+           COUNT(*) AS n_clusters,
+           CAST(sz * COUNT(*) AS BIGINT) AS n_docs,
+           MIN(cluster_id) AS min_cluster
+    FROM sizes
+    GROUP BY sz
+    ORDER BY sz
+"""
 
 
-@query("q_graph_component_sizes", oracle=_component_sizes_oracle())
+@query("q_graph_component_sizes", oracle=_COMPONENT_SIZES_ORACLE)
 def q_graph_component_sizes(spark, d):
     """Size distribution of the near-dup components: how many
     clusters of each size exist and how many documents they absorb —
@@ -518,8 +499,6 @@ def q_graph_component_sizes(spark, d):
     corpus). Rides the memoized dup_components snapshot; two stacked
     tiny hash aggs; declared against the shared recursive
     transitive-closure CTE."""
-    from .pipeline import dup_components
-
     comp = dup_components(spark, d)
     sizes = comp.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
     out = (

@@ -1,7 +1,9 @@
 """The 5-char rolling hash shared by the per-document fingerprint
 keys (q_text_fingerprint_rolling, q_text_winnow, q_dedup_cdc): the
-DuckDB per-position form ``poly_sql`` and the Spark in-row array form
-``rolling_hash_arrays``, which give the same values.
+DuckDB per-position form ``poly_sql`` (and ``ROLL_HASHES_CTES``, the
+(doc_id, i, h) relation every window start of every document gives)
+and the Spark in-row array form ``rolling_hash_arrays``, which give
+the same values.
 """
 
 from __future__ import annotations
@@ -19,6 +21,19 @@ def poly_sql(col: str, i: str) -> str:
         f"ascii(substr({col}, {i} + {j}, 1)) * {256 ** (ROLL_K - 1 - j)}"
         for j in range(ROLL_K)
     )
+
+
+ROLL_HASHES_CTES = f"""
+        pos AS (
+            SELECT doc_id, text,
+                   unnest(generate_series(1, len(text) - {ROLL_K - 1})) AS i
+            FROM documents
+            WHERE len(text) >= {ROLL_K}
+        ),
+        hashes AS (
+            SELECT doc_id, i, ({poly_sql("text", "i")}) AS h FROM pos
+        )
+"""
 
 
 def rolling_hash_arrays(docs):

@@ -6,6 +6,7 @@ numpy oracle, and LSH candidate generation must be deterministic.
 from __future__ import annotations
 
 import math
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -47,6 +48,83 @@ def test_planted_near_dups_recovered(spark):
     pairs = near_dup_pairs(df, "doc_id", "text", jaccard_threshold=0.8)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert got == set(planted)
+
+
+def _shingle_edge_docs():
+    """Docs of distinct words whose pairs straddle the shingle graph's
+    definition. One substituted word in an n-word doc leaves 3-shingle
+    Jaccard (n-5)/(n+1) and 2-shingle Jaccard (n-3)/(n+1): at n = 30
+    that is 25/31 >= NEAR_DUP_J (a pair), at n = 24 it is 19/25 (no
+    pair, though 21/25 would be one with 2-shingles). Doc 2 is doc 1
+    with a second word substituted, so it reaches doc 0 (Jaccard
+    22/34) only through the closure. Doc 6 is too short to shingle."""
+    a = [f"a{i}" for i in range(30)]
+    b = [f"b{i}" for i in range(24)]
+    texts = [
+        a,
+        a[:15] + ["x1"] + a[16:],
+        a[:5] + ["x2"] + a[6:15] + ["x1"] + a[16:],
+        b,
+        b[:12] + ["x3"] + b[13:],
+        [f"c{i}" for i in range(10)],
+        ["d0", "d1"],
+    ]
+    return pd.DataFrame(
+        {"doc_id": range(len(texts)), "text": [" ".join(t) for t in texts]}
+    )
+
+
+def test_shingle_dup_graph_sides_agree(spark, sf_dir, duck, tmp_path):
+    """shingles.py's two sides define one graph: the DuckDB pairs set
+    equals the dup_pairs snapshot (brute-force Jaccard vs LSH + exact
+    verify) and the recursive-closure comp set equals the
+    dup_components snapshot (pointer jumping). Checked at sf_dir and
+    on _shingle_edge_docs, whose pairs sit next to the threshold: the
+    fixture's pairs are all >= 0.88 or <= 0.07, so a one-sided move of
+    the threshold inside that gap, or of the shingle width, shows only
+    on the edge corpus."""
+    import duckdb
+
+    from spark_sklearn_spark.queries.shingles import (
+        DUP_COMPONENTS_CTES,
+        dup_components,
+        dup_pairs,
+    )
+    from spark_sklearn_spark.sources.io import warehouse_path
+
+    def check(d, con):
+        def duck_rows(sql):
+            return set(
+                con.execute(f"WITH RECURSIVE {DUP_COMPONENTS_CTES} {sql}").fetchall()
+            )
+
+        pairs = duck_rows("SELECT src, dst FROM pairs")
+        assert pairs  # an empty graph would make every check vacuous
+        assert pairs == {tuple(r) for r in dup_pairs(spark, d).collect()}
+        comp = duck_rows("SELECT doc_id, cluster_id FROM comp")
+        assert comp == {
+            tuple(r)
+            for r in dup_components(spark, d)
+            .select("doc_id", "cluster_id")
+            .collect()
+        }
+        return pairs, comp
+
+    check(sf_dir, duck)
+
+    _shingle_edge_docs().to_parquet(tmp_path / "documents.parquet")
+    edge = str(tmp_path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{edge}/documents.parquet')"
+    )
+    try:
+        pairs, comp = check(edge, con)
+        assert pairs == {(0, 1), (1, 2)}
+        assert dict(comp) == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 5, 6: 6}
+    finally:
+        for kind in ("dup_pairs", "dedup_components"):
+            shutil.rmtree(warehouse_path(kind, edge), ignore_errors=True)
 
 
 def test_minhash_deterministic_across_runs(spark):

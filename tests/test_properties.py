@@ -249,18 +249,13 @@ def test_pagerank_invariants(spark, sf_dir):
     1 (dangling mass redistributed, nothing leaks), every rank ≥ the
     teleport floor (1-d)/n, and isolated docs sit exactly AT the
     floor-plus-dangling base while connected hubs sit above it."""
-    from pyspark.sql import functions as F
-
     from spark_sklearn_spark.operators.pagerank import pagerank
-    from spark_sklearn_spark.queries.bigrams import rare_bigram_pairs
+    from spark_sklearn_spark.queries.bigrams import near_dup_sym
     from spark_sklearn_spark.sources.io import load
 
     docs = load(spark, sf_dir, "documents")
-    pairs = rare_bigram_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    sym = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).distinct()
-    pr = pagerank(docs.select("doc_id"), sym, "doc_id", "doc_a", "doc_b")
+    sym = near_dup_sym(spark, sf_dir)
+    pr = pagerank(docs.select("doc_id"), sym, "doc_id", "src", "dst")
     rows = pr.collect()
     n = len(rows)
     assert n == docs.count()

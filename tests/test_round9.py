@@ -348,7 +348,7 @@ def test_modularity_range_and_closure(spark, sf_dir):
     """Q in [-0.5, 1]; with exact components, every edge is intra, so
     Q = 1 − Σ(d_c/2m)² <= 1 − 1/n_clusters... just pin the range and
     that the cluster count matches the component snapshot."""
-    from spark_sklearn_spark.queries.pipeline import dup_components
+    from spark_sklearn_spark.queries.shingles import dup_components
 
     row = entry.queries()["q_graph_modularity"](spark, sf_dir).collect()[0]
     assert -500_001 <= row.modularity_micro <= 1_000_000
@@ -553,7 +553,7 @@ def test_label_prop_converges_to_components(spark, sf_dir):
     """n_labels is non-increasing over rounds; n_moved hits 0 only if
     labels stopped changing; the round-3 label count is bounded below
     by the exact component count."""
-    from spark_sklearn_spark.queries.pipeline import dup_components
+    from spark_sklearn_spark.queries.shingles import dup_components
 
     rows = entry.queries()["q_graph_label_prop"](spark, sf_dir).collect()
     labels = [r.n_labels for r in sorted(rows, key=lambda r: r.round)]

@@ -14,6 +14,12 @@ one distinct-agg. Gap-fill generates each user's calendar span with
 sequence() (rows ~ users x days, independent of event skew) and
 forward-fills with a user-partitioned running last() — no
 single-partition window anywhere.
+
+Shared stages, each one text or one builder for both engines:
+``transitions`` / ``TRANSITIONS_CTES`` (seq, trans), the per-user
+next-event-type counts of the behavior chain keys, and
+``DAILY_COUNTS_CTE`` (daily), the events per calendar day of the
+daily time-series keys.
 """
 
 from __future__ import annotations
@@ -22,6 +28,46 @@ from pyspark.sql import Window, functions as F
 
 from ..registry import query
 from ..sources.io import load
+
+# (event_type, nxt, c): how often each event type is followed by nxt
+# in a user's (ts, event_id)-ordered stream. One user-partitioned
+# lead() window, then a combinable agg onto the |event_types|^2 key
+# space.
+TRANSITIONS_CTES = """
+        seq AS (
+          SELECT event_type,
+                 lead(event_type) OVER (PARTITION BY user_id
+                                        ORDER BY ts, event_id) AS nxt
+          FROM events
+        ),
+        trans AS (
+          SELECT event_type, nxt, CAST(COUNT(*) AS BIGINT) AS c
+          FROM seq WHERE nxt IS NOT NULL
+          GROUP BY event_type, nxt
+        )"""
+
+
+def transitions(spark, d):
+    """TRANSITIONS_CTES's Spark side (the trans relation)."""
+    seq = load(spark, d, "events").select(
+        "event_type",
+        F.expr(
+            "lead(event_type) OVER (PARTITION BY user_id"
+            " ORDER BY ts, event_id)"
+        ).alias("nxt"),
+    ).filter(F.col("nxt").isNotNull())
+    return seq.groupBy("event_type", "nxt").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+
+
+# (day, y): events per calendar day; the same text runs on Spark
+# (spark.sql) and DuckDB.
+DAILY_COUNTS_CTE = """daily AS (
+      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+             CAST(COUNT(*) AS BIGINT) AS y
+      FROM events GROUP BY CAST(date_trunc('day', ts) AS TIMESTAMP)
+    )"""
 
 
 @query(

@@ -13,6 +13,12 @@ of both, and of the stages built on them that several keys share:
   ``KM_CONT_CTE``).
 - Logreg: ``LR_FIT_CTES`` (feats, n, it0-it3), ``lr_fit`` and the
   decile-binned scores (``lr_decile_bins`` / ``LR_BINS_CTES``).
+- Trees: the histogram split search of the decision stump, the depth-2
+  tree and the GBM round — the per-feature bucket histogram
+  (``split_hist`` / ``split_hist_sql``), every threshold's left-side
+  and node sums (``split_prefix`` / ``split_prefix_ctes``) and the
+  quantized child and parent Gini (``gini_q9`` / ``GINI_Q9_SQL``,
+  ``gini_root_q9`` / ``GINI_ROOT_Q9_SQL``).
 """
 
 from __future__ import annotations
@@ -377,3 +383,133 @@ def lr_decile_bins(spark, d):
         .alias("n_pos"),
         F.sum(F.col("p").cast(DEC)).alias("sp"),
     )
+
+
+# --------------------------------------------------------------------------
+# Histogram split search (decision stump, depth-2 tree, GBM round)
+# --------------------------------------------------------------------------
+
+# Candidate thresholds are integer feature buckets, so the split search
+# runs over a bucket-bounded relation: the "hist" method of distributed
+# tree learners (XGBoost/LightGBM). Raw rows collapse to per-bucket
+# sufficient statistics (n, s) in one combinable agg, and every
+# threshold's left/right sums come from ONE prefix-sum window over the
+# buckets. The scan dominates and the search is metadata-sized; a
+# depth-k tree repeats it per node (k scans, no row-level sort or pair
+# join). The Spark histogram expands each row to (feature, bucket) with
+# one stack() map-side, so all features share ONE scan and ONE exchange:
+# a union of per-feature group-bys pays both per feature (the depth-2
+# tree measured 48 -> 16 scans and 38 -> 18 exchanges). The oracles
+# keep one UNION ALL branch per feature; only the rows must agree. All
+# sums are exact integers; a score crossing an ordering is a double of
+# them written identically on both engines and floored to an integer.
+
+
+def split_hist(df, feats, stat, part_cols=()):
+    """(part_cols..., feature, bucket, n, s): one histogram per feature
+    of ``df``. ``feats`` maps each feature name to its integer bucket
+    column; ``s`` sums the integer ``stat`` column per bucket."""
+    pairs = ", ".join(f"'{f}', {c}" for f, c in feats.items())
+    ex = df.select(
+        *part_cols,
+        stat,
+        F.expr(f"stack({len(feats)}, {pairs})").alias("feature", "bucket"),
+    )
+    return ex.groupBy(*part_cols, "feature", "bucket").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(stat).cast("long").alias("s"),
+    )
+
+
+def split_hist_sql(src, feats, stat, part_cols=()):
+    """split_hist's DuckDB side over the relation ``src``."""
+    part = "".join(f"{c}, " for c in part_cols)
+    return "\n      UNION ALL\n      ".join(
+        f"SELECT {part}'{f}' AS feature, {c} AS bucket, COUNT(*) AS n,"
+        f" CAST(SUM({stat}) AS BIGINT) AS s FROM {src} GROUP BY {part}{c}"
+        for f, c in feats.items()
+    )
+
+
+def split_prefix(buckets, part_cols=()):
+    """(part_cols..., feature, threshold, nl, sl, nt, st): every
+    threshold of a split_hist relation that leaves both sides
+    non-empty, with the left side's sums (buckets < threshold) and the
+    node's totals."""
+    keys = [*part_cols, "feature"]
+    tot = buckets.groupBy(*keys).agg(
+        F.sum("n").alias("nt"), F.sum("s").alias("st")
+    )
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy("bucket")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    pre = buckets.join(tot, keys).select(
+        *keys,
+        "bucket",
+        "nt",
+        "st",
+        F.sum("n").over(w).alias("nl"),
+        F.sum("s").over(w).alias("sl"),
+    )
+    nl, nt = F.col("nl"), F.col("nt")
+    return pre.filter((nl > 0) & (nt - nl > 0)).select(
+        *keys, (F.col("bucket") + 1).alias("threshold"), "nl", "sl", "nt", "st"
+    )
+
+
+def split_prefix_ctes(buckets, part_cols=()):
+    """split_prefix's DuckDB side: CTEs ``{buckets}_tot``,
+    ``{buckets}_pre`` and the result ``{buckets}_split`` over the
+    bucket CTE ``buckets``."""
+    keys = ", ".join([*part_cols, "feature"])
+    bkeys = ", ".join(f"b.{k}" for k in [*part_cols, "feature"])
+    on = " AND ".join(f"t.{k} = b.{k}" for k in [*part_cols, "feature"])
+    return f"""
+    {buckets}_tot AS (
+      SELECT {keys}, CAST(SUM(n) AS BIGINT) AS nt,
+             CAST(SUM(s) AS BIGINT) AS st
+      FROM {buckets} GROUP BY {keys}
+    ),
+    {buckets}_pre AS (
+      SELECT {bkeys}, b.bucket, t.nt, t.st,
+             CAST(SUM(b.n) OVER w AS BIGINT) AS nl,
+             CAST(SUM(b.s) OVER w AS BIGINT) AS sl
+      FROM {buckets} b JOIN {buckets}_tot t ON {on}
+      WINDOW w AS (PARTITION BY {bkeys} ORDER BY b.bucket
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+    ),
+    {buckets}_split AS (
+      SELECT {keys}, bucket + 1 AS threshold, nl, sl, nt, st
+      FROM {buckets}_pre WHERE nl > 0 AND nt - nl > 0
+    )"""
+
+
+# Gini scores of a split_prefix row whose s counts positives:
+# weighted child Gini of the split and the node's own Gini, floor(x*1e9).
+GINI_Q9_SQL = """CAST(floor((
+                 (2.0 * sl * (nl - sl)) / nl
+                 + (2.0 * (st - sl) * ((nt - nl) - (st - sl)))
+                   / (nt - nl)
+             ) / nt * 1000000000.0) AS BIGINT)"""
+
+GINI_ROOT_Q9_SQL = """CAST(floor(2.0 * st * (nt - st) / nt / nt
+                        * 1000000000.0) AS BIGINT)"""
+
+
+def gini_q9():
+    """GINI_Q9_SQL's Spark side."""
+    nl, sl, nt, st = (F.col(c) for c in ("nl", "sl", "nt", "st"))
+    return F.floor(
+        (2.0 * sl * (nl - sl) / nl
+         + 2.0 * (st - sl) * ((nt - nl) - (st - sl)) / (nt - nl))
+        / nt
+        * 1000000000.0
+    ).cast("long")
+
+
+def gini_root_q9():
+    """GINI_ROOT_Q9_SQL's Spark side."""
+    nt, st = F.col("nt"), F.col("st")
+    return F.floor(2.0 * st * (nt - st) / nt / nt * 1000000000.0).cast("long")

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56
+from .behavior import TRANSITIONS_CTES, transitions
 from .bigrams import NEAR_DUP_DEG_CTES, degrees, near_dup_edges
 
 # --------------------------------------------------------------------------
@@ -167,17 +168,7 @@ def _markov_oracle() -> str:
         for s in range(2, _MARKOV_STEPS + 1)
     )
     return f"""
-        WITH seq AS (
-          SELECT event_type,
-                 lead(event_type) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS nxt
-          FROM events
-        ),
-        trans AS (
-          SELECT event_type, nxt, CAST(COUNT(*) AS BIGINT) AS c
-          FROM seq WHERE nxt IS NOT NULL
-          GROUP BY event_type, nxt
-        ),
+        WITH {TRANSITIONS_CTES},
         rowsum AS (
           SELECT event_type, CAST(SUM(c) AS BIGINT) AS r FROM trans
           GROUP BY event_type
@@ -201,17 +192,7 @@ def q_behavior_markov(spark, d):
     three unrolled power steps (module comment). One user-partitioned
     lead() window is the only corpus shuffle; the matrix, row sums,
     and every iterate are |event_types|-bounded relations."""
-    ev = load(spark, d, "events")
-    seq = ev.select(
-        "event_type",
-        F.expr(
-            "lead(event_type) OVER (PARTITION BY user_id"
-            " ORDER BY ts, event_id)"
-        ).alias("nxt"),
-    ).filter(F.col("nxt").isNotNull())
-    trans = seq.groupBy("event_type", "nxt").agg(
-        F.count(F.lit(1)).alias("c")
-    )
+    trans = transitions(spark, d)
     rowsum = trans.groupBy("event_type").agg(F.sum("c").alias("r"))
     types = trans.select("event_type").distinct()
     k = types.agg(F.count(F.lit(1)).alias("k"))

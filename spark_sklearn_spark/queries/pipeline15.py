@@ -30,6 +30,7 @@ from ..operators.lsh import min_signature
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
+from .behavior import TRANSITIONS_CTES, transitions
 from .bigrams import (
     BIGRAM_PAIRS_CTES,
     NEAR_DUP_DEG_CTES,
@@ -595,20 +596,12 @@ def _absorbing_oracle() -> str:
         for s in range(2, _ABSORB_STEPS + 1)
     )
     return f"""
-        WITH seq AS (
-          SELECT event_type,
-                 lead(event_type) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS nxt
-          FROM events
-        ),
-        trans AS (
-          SELECT event_type, nxt, CAST(COUNT(*) AS BIGINT) AS c
-          FROM seq
-          WHERE nxt IS NOT NULL AND event_type <> '{_ABSORB_TARGET}'
-          GROUP BY event_type, nxt
+        WITH {TRANSITIONS_CTES},
+        live AS (
+          SELECT * FROM trans WHERE event_type <> '{_ABSORB_TARGET}'
         ),
         rowsum AS (
-          SELECT event_type, CAST(SUM(c) AS BIGINT) AS r FROM trans
+          SELECT event_type, CAST(SUM(c) AS BIGINT) AS r FROM live
           GROUP BY event_type
         ),
         p1s AS (
@@ -616,14 +609,14 @@ def _absorbing_oracle() -> str:
                  CAST(SUM(CASE WHEN t.nxt = '{_ABSORB_TARGET}'
                                THEN t.c ELSE 0 END) AS DOUBLE)
                      / ANY_VALUE(r.r) AS p1
-          FROM trans t JOIN rowsum r ON r.event_type = t.event_type
+          FROM live t JOIN rowsum r ON r.event_type = t.event_type
           GROUP BY t.event_type
         ),
         pmat AS (
           SELECT t.event_type, t.nxt,
                  t.c / (1.0 * r.r) AS pr,
                  p.p1
-          FROM trans t
+          FROM live t
           JOIN rowsum r ON r.event_type = t.event_type
           JOIN p1s p ON p.event_type = t.event_type
         ),
@@ -641,19 +634,8 @@ def q_behavior_absorbing(spark, d):
     k=1..3 unrolled (module comment). One lead() window is the only
     corpus shuffle; the restricted matrix and every iterate are
     grid-sized broadcasts."""
-    ev = load(spark, d, "events")
-    seq = ev.select(
-        "event_type",
-        F.expr(
-            "lead(event_type) OVER (PARTITION BY user_id"
-            " ORDER BY ts, event_id)"
-        ).alias("nxt"),
-    ).filter(
-        F.col("nxt").isNotNull()
-        & (F.col("event_type") != _ABSORB_TARGET)
-    )
-    trans = seq.groupBy("event_type", "nxt").agg(
-        F.count(F.lit(1)).alias("c")
+    trans = transitions(spark, d).filter(
+        F.col("event_type") != _ABSORB_TARGET
     )
     rowsum = trans.groupBy("event_type").agg(F.sum("c").alias("r"))
     p1s = (

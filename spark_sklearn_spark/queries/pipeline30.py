@@ -32,7 +32,13 @@ from ..functions.vectors import sq_dist
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
-from .bigrams import NEAR_DUP_SYM_CTES, near_dup_sym
+from .behavior import TRANSITIONS_CTES, transitions
+from .bigrams import (
+    NEAR_DUP_DEG_CTES,
+    degrees,
+    near_dup_edges,
+    near_dup_sym,
+)
 
 # --------------------------------------------------------------------------
 # Katz centrality (bounded-hop, integer-exact)
@@ -42,11 +48,8 @@ from .bigrams import NEAR_DUP_SYM_CTES, near_dup_sym
 
 
 _KATZ_ORACLE = f"""
-        WITH {NEAR_DUP_SYM_CTES},
-        w1 AS MATERIALIZED (
-          SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS w
-          FROM sym GROUP BY src
-        ),
+        WITH {NEAR_DUP_DEG_CTES},
+        w1 AS (SELECT doc_id, dg AS w FROM deg),
         w2 AS MATERIALIZED (
           SELECT s.src AS doc_id, CAST(SUM(w.w) AS BIGINT) AS w
           FROM sym s JOIN w1 w ON w.doc_id = s.dst
@@ -89,9 +92,10 @@ def q_graph_katz(spark, d):
     key-partitioned equi-join that AQE can re-plan. Walk counts fit
     int64 through hop 3 for any graph with max-degree ≤ ~2M."""
     sym = near_dup_sym(spark, d)
-    w1 = sym.groupBy("src").agg(F.count(F.lit(1)).alias("w")).select(
-        F.col("src").alias("doc_id"), "w"
+    w1 = degrees(near_dup_edges(spark, d), "doc_a", "doc_b").select(
+        "doc_id", F.col("dg").alias("w")
     )
+
     def _next(prev):
         return (
             sym.join(
@@ -1185,18 +1189,8 @@ def q_text_burstiness(spark, d):
 # --------------------------------------------------------------------------
 
 
-_ENTROPY_RATE_ORACLE = """
-    WITH seq AS (
-      SELECT event_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS nxt
-      FROM events
-    ),
-    trans AS (
-      SELECT event_type, nxt, CAST(COUNT(*) AS BIGINT) AS c
-      FROM seq WHERE nxt IS NOT NULL
-      GROUP BY event_type, nxt
-    )
+_ENTROPY_RATE_ORACLE = f"""
+    WITH {TRANSITIONS_CTES}
     SELECT event_type,
            CAST(SUM(c) AS BIGINT) AS n_out,
            CAST(COUNT(*) AS BIGINT) AS n_next_types,
@@ -1221,19 +1215,9 @@ def q_behavior_entropy_rate(spark, d):
     Integer-ln/decimal-sum entropy posture (q_text_entropy). Shape:
     ONE user-partitioned lead window is the only corpus shuffle;
     everything after is |event_types|²-bounded."""
-    ev = load(spark, d, "events")
-    seq = ev.select(
-        "event_type",
-        F.expr(
-            "lead(event_type) OVER (PARTITION BY user_id"
-            " ORDER BY ts, event_id)"
-        ).alias("nxt"),
-    ).filter(F.col("nxt").isNotNull())
-    trans = seq.groupBy("event_type", "nxt").agg(
-        F.count(F.lit(1)).alias("c")
-    )
     return (
-        trans.groupBy("event_type")
+        transitions(spark, d)
+        .groupBy("event_type")
         .agg(
             F.sum("c").alias("n_out"),
             F.count(F.lit(1)).alias("n_next_types"),

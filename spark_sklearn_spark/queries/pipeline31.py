@@ -45,9 +45,11 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
+from .behavior import DAILY_COUNTS_CTE
 from .bigrams import (
     NEAR_DUP_DEG_CTES,
     NEAR_DUP_SYM_CTES,
+    degrees,
     near_dup_edges,
     near_dup_sym,
 )
@@ -141,12 +143,8 @@ def q_behavior_yule_simon(spark, d):
 # that bounded relation (GLOBAL_WINDOW_BOUNDED exemption); the 1-row
 # totals CROSS JOIN is the sanctioned Lloyd-shape broadcast.
 
-_PW_SQL = """
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(COUNT(*) AS BIGINT) AS y
-      FROM events GROUP BY CAST(date_trunc('day', ts) AS TIMESTAMP)
-    ),
+_PW_SQL = f"""
+    WITH {DAILY_COUNTS_CTE},
     idx AS (
       SELECT CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT) AS i,
              day, y
@@ -1168,12 +1166,11 @@ def q_graph_rich_club(spark, d):
     levels, integer ppm ratios. The k-grid expansion is a stack over
     two 1-row aggregates (Lloyd-shape broadcast)."""
     e = near_dup_edges(spark, d).select("doc_a", "doc_b")
-    sym = near_dup_sym(spark, d)
-    degs = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    degs = degrees(e, "doc_a", "doc_b")
     ed = (
         e.join(
-            degs.selectExpr("src AS doc_a", "deg AS da"), "doc_a"
-        ).join(degs.selectExpr("src AS doc_b", "deg AS db"), "doc_b")
+            degs.selectExpr("doc_id AS doc_a", "dg AS da"), "doc_a"
+        ).join(degs.selectExpr("doc_id AS doc_b", "dg AS db"), "doc_b")
     )
     en = ed.agg(
         *[
@@ -1187,7 +1184,7 @@ def q_graph_rich_club(spark, d):
     )
     nn = degs.agg(
         *[
-            F.sum(F.when(F.col("deg") > k, 1).otherwise(0))
+            F.sum(F.when(F.col("dg") > k, 1).otherwise(0))
             .cast("long")
             .alias(f"n{k}")
             for k in _RC_KS

@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load, register_views
 from ._helpers import DEC
+from .behavior import DAILY_COUNTS_CTE
 from .bigrams import NEAR_DUP_SYM_CTES, near_dup_edges, near_dup_sym
 from .fits import LR_BINS_CTES, lr_decile_bins
 from .rolling_hash import ROLL_HASHES_CTES, rolling_hash_arrays
@@ -232,12 +233,8 @@ def q_text_yule_k(spark, d):
 # micro. The daily collapse is calendar-bounded, so the global sign/
 # run windows run on a bounded relation (GLOBAL_WINDOW_BOUNDED).
 
-_RUNS_SQL = """
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(COUNT(*) AS BIGINT) AS y
-      FROM events GROUP BY CAST(date_trunc('day', ts) AS TIMESTAMP)
-    ),
+_RUNS_SQL = f"""
+    WITH {DAILY_COUNTS_CTE},
     delta AS (
       SELECT day, y - LAG(y) OVER (ORDER BY day) AS d FROM daily
     ),
@@ -302,12 +299,8 @@ def q_ts_runs_test(spark, d):
 # extrema). Same bounded-daily-grain posture; identical IEEE closed
 # forms, floor-micro outputs.
 
-_TURNING_SQL = """
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(COUNT(*) AS BIGINT) AS y
-      FROM events GROUP BY CAST(date_trunc('day', ts) AS TIMESTAMP)
-    ),
+_TURNING_SQL = f"""
+    WITH {DAILY_COUNTS_CTE},
     ctx AS (
       SELECT y,
              LAG(y) OVER (ORDER BY day) AS yp,
@@ -387,11 +380,7 @@ def _vr_sql() -> str:
         for q in _VR_QS
     )
     return f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(COUNT(*) AS BIGINT) AS y
-      FROM events GROUP BY CAST(date_trunc('day', ts) AS TIMESTAMP)
-    ),
+    WITH {DAILY_COUNTS_CTE},
     delta AS (
       SELECT day, y - LAG(y) OVER (ORDER BY day) AS d FROM daily
     ),

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load, register_views
 from ._helpers import DEC
+from .behavior import DAILY_COUNTS_CTE
 from .fits import LR_BINS_CTES, lr_decile_bins
 
 # --------------------------------------------------------------------------
@@ -308,12 +309,8 @@ def q_ml_ece(spark, d):
 # Catalyst plans it as BNLJ, the documented bounded-relation
 # exemption; the corpus itself is touched once, by the daily agg.
 
-_SAMPEN_SQL = """
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(COUNT(*) AS BIGINT) AS y
-      FROM events GROUP BY CAST(date_trunc('day', ts) AS TIMESTAMP)
-    ),
+_SAMPEN_SQL = f"""
+    WITH {DAILY_COUNTS_CTE},
     idx AS (
       SELECT CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT) AS i, y
       FROM daily
@@ -385,11 +382,7 @@ _ETA2_DUCK_DOW = "isodow(day)"
 
 def _eta2_sql(dow_expr: str) -> str:
     return f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(COUNT(*) AS BIGINT) AS y
-      FROM events GROUP BY CAST(date_trunc('day', ts) AS TIMESTAMP)
-    ),
+    WITH {DAILY_COUNTS_CTE},
     grp AS (
       SELECT CAST({dow_expr} AS BIGINT) AS dow,
              CAST(COUNT(*) AS BIGINT) AS ng,

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load, register_views
+from .behavior import DAILY_COUNTS_CTE
 from .bigrams import NEAR_DUP_SYM_CTES, near_dup_sym
 
 # --------------------------------------------------------------------------
@@ -62,12 +63,8 @@ from .bigrams import NEAR_DUP_SYM_CTES, near_dup_sym
 # Funnels: calendar-bounded daily windows + the 1-row totals
 # broadcast (ONE_ROW_BROADCAST class).
 
-_DRAWDOWN_SQL = """
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(COUNT(*) AS BIGINT) AS y
-      FROM events GROUP BY CAST(date_trunc('day', ts) AS TIMESTAMP)
-    ),
+_DRAWDOWN_SQL = f"""
+    WITH {DAILY_COUNTS_CTE},
     tot AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(y) AS BIGINT) AS s

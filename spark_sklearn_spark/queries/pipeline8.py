@@ -39,16 +39,24 @@ from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC
 from .fits import (
+    GINI_Q9_SQL,
+    GINI_ROOT_Q9_SQL,
     KM_DIM,
     KM_FIT_CTES,
     KM_Q,
     LR_BINS_CTES,
     LR_FIT_CTES,
     VECS_Q_SQL,
+    gini_q9,
+    gini_root_q9,
     km_fit_memo,
     lr_decile_bins,
     lr_fit,
     quantized_vecs,
+    split_hist,
+    split_hist_sql,
+    split_prefix,
+    split_prefix_ctes,
 )
 
 
@@ -1315,75 +1323,51 @@ def q_sim_ann_ivf_kmeans(spark, d):
 # Declared decision-stump fit (best Gini split over bucketed features)
 # --------------------------------------------------------------------------
 
-# Candidate split thresholds are INTEGER feature buckets (floor(value)
-# 0..100, hour 0..23), so the split search runs over a bounded bucket
-# relation — the histogram trick every distributed tree learner
-# (XGBoost/LightGBM "hist" mode) uses: raw rows shrink to per-bucket
-# (n, n_pos) in one combinable agg, and every threshold's left/right
-# counts come from ONE prefix-sum window over the buckets.
+# The two integer-bucketed features of the classification trees and
+# the per-row label they count (queries/fits.py has the histogram
+# split search both trees share).
+TREE_FEATS = {"value_floor": "b_value", "hour": "b_hour"}
+
+_TREE_EV_SQL = """
+    ev AS (
+      SELECT CAST(floor(value) AS BIGINT) AS b_value,
+             CAST(hour(ts) AS BIGINT) AS b_hour,
+             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
+      FROM events
+    )"""
 
 
-def _stump_sql(feat: str, expr: str) -> str:
-    return f"""
-        SELECT '{feat}' AS feature,
-               CAST({expr} AS BIGINT) AS bucket,
-               COUNT(*) AS n,
-               CAST(SUM(CASE WHEN event_type = 'purchase'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS np
-        FROM events
-        GROUP BY CAST({expr} AS BIGINT)
-    """
+def _tree_rows(spark, d):
+    """(b_value, b_hour, y): _TREE_EV_SQL's Spark side."""
+    return load(spark, d, "events").select(
+        F.floor("value").cast("long").alias("b_value"),
+        F.hour("ts").cast("long").alias("b_hour"),
+        F.when(F.col("event_type") == "purchase", 1)
+        .otherwise(0)
+        .alias("y"),
+    )
 
 
 _STUMP_ORACLE = f"""
-    WITH buckets AS (
-        {_stump_sql("value_floor", "floor(value)")}
-        UNION ALL
-        {_stump_sql("hour", "hour(ts)")}
-    ),
-    tot AS (
-      SELECT feature, SUM(n) AS nt, SUM(np) AS pt
-      FROM buckets GROUP BY feature
-    ),
-    pre AS (
-      SELECT b.feature, b.bucket, t.nt, t.pt,
-             SUM(b.n) OVER w AS nl,
-             SUM(b.np) OVER w AS pl
-      FROM buckets b JOIN tot t ON t.feature = b.feature
-      WINDOW w AS (PARTITION BY b.feature ORDER BY b.bucket
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ),
-    scored AS (
-      SELECT feature, bucket + 1 AS threshold, nl, pl,
-             nt - nl AS nr, pt - pl AS pr, nt, pt,
-             CAST(floor((
-                 (2.0 * pl * (nl - pl)) / nl
-                 + (2.0 * (pt - pl) * ((nt - nl) - (pt - pl)))
-                   / (nt - nl)
-             ) / nt * 1000000000.0) AS BIGINT) AS gini_q9
-      FROM pre
-      WHERE nl > 0 AND nt - nl > 0
-    ),
+    WITH {_TREE_EV_SQL},
+    hist AS ({split_hist_sql("ev", TREE_FEATS, "y")}),
+    {split_prefix_ctes("hist")},
     best AS (
       SELECT * FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY feature
                       ORDER BY gini_q9, threshold) AS rk
-        FROM scored
+        FROM (SELECT *, {GINI_Q9_SQL} AS gini_q9 FROM hist_split)
       ) WHERE rk = 1
     ),
-    base AS (
-      SELECT feature,
-             CAST(floor(2.0 * pt * (nt - pt) / nt / nt
-                        * 1000000000.0) AS BIGINT) AS gini_root_q9
-      FROM tot
+    out AS (
+      SELECT feature, threshold, nl AS n_left, sl AS pos_left,
+             nt - nl AS n_right, st - sl AS pos_right,
+             {GINI_ROOT_Q9_SQL} AS gini_root_q9,
+             gini_q9 AS gini_split_q9
+      FROM best
     )
-    SELECT b.feature, b.threshold,
-           CAST(b.nl AS BIGINT) AS n_left, CAST(b.pl AS BIGINT) AS pos_left,
-           CAST(b.nr AS BIGINT) AS n_right, CAST(b.pr AS BIGINT) AS pos_right,
-           g.gini_root_q9, b.gini_q9 AS gini_split_q9,
-           g.gini_root_q9 - b.gini_q9 AS gain_q9
-    FROM best b JOIN base g ON g.feature = b.feature
-    ORDER BY b.feature
+    SELECT *, gini_root_q9 - gini_split_q9 AS gain_q9
+    FROM out ORDER BY feature
 """
 
 
@@ -1393,97 +1377,29 @@ def q_ml_tree_stump(spark, d):
     vs non-purchase over two integer-bucketed features (floor(value),
     hour-of-day) — completing the hash-verified classical-model set
     (linear OLS, logistic GD, Naive Bayes, k-means, and now a tree
-    split). This is the histogram split-finding every distributed
-    tree learner uses: raw rows collapse to per-bucket (n, n_pos) in
-    one combinable agg (<=101 buckets/feature), a single prefix-sum
-    window yields every candidate threshold's left/right counts, and
-    the weighted-Gini score is the identical double expression of
-    EXACT integer counts on both engines, quantized to an integer
-    (floor(x*1e9)) before the argmin rank — no float boundary in the
-    ordering. At 100 TB the bucket relation stays bucket-bounded:
-    the scan dominates, the split search is metadata-sized — depth-k
-    trees iterate this per node exactly as XGBoost hist does."""
-    ev = load(spark, d, "events")
-
-    def bucketize(feat, col):
-        return ev.select(
-            F.lit(feat).alias("feature"),
-            col.cast("long").alias("bucket"),
-            F.when(F.col("event_type") == "purchase", 1)
-            .otherwise(0)
-            .alias("y"),
-        ).groupBy("feature", "bucket").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("y").cast("long").alias("np"),
-        )
-
-    buckets = bucketize("value_floor", F.floor("value")).unionByName(
-        bucketize("hour", F.hour("ts"))
-    )
-    tot = buckets.groupBy("feature").agg(
-        F.sum("n").alias("nt"), F.sum("np").alias("pt")
-    )
-    w = (
-        Window.partitionBy("feature")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = (
-        buckets.join(tot, "feature")
-        .select(
-            "feature",
-            "bucket",
-            "nt",
-            "pt",
-            F.sum("n").over(w).alias("nl"),
-            F.sum("np").over(w).alias("pl"),
-        )
-    )
-    nl, pl = F.col("nl"), F.col("pl")
-    nt, pt = F.col("nt"), F.col("pt")
-    nr, pr = nt - nl, pt - pl
-    gini = (
-        (2.0 * pl * (nl - pl) / nl + 2.0 * pr * (nr - pr) / nr)
-        / nt
-        * 1000000000.0
-    )
-    scored = (
-        pre.filter((nl > 0) & (nt - nl > 0))
-        .select(
-            "feature",
-            (F.col("bucket") + 1).alias("threshold"),
-            nl.alias("nl"),
-            pl.alias("pl"),
-            nr.alias("nr"),
-            pr.alias("pr"),
-            "nt",
-            "pt",
-            F.floor(gini).cast("long").alias("gini_q9"),
-        )
-    )
+    split). The histogram split search of queries/fits.py, then a
+    per-feature argmin of the quantized weighted Gini with a
+    threshold tie-break; the root Gini comes from the winning row's
+    node totals."""
+    hist = split_hist(_tree_rows(spark, d), TREE_FEATS, "y")
+    scored = split_prefix(hist).withColumn("gini_q9", gini_q9())
     w_best = Window.partitionBy("feature").orderBy("gini_q9", "threshold")
-    best = (
+    nl, sl, nt, st = (F.col(c) for c in ("nl", "sl", "nt", "st"))
+    return (
         scored.withColumn("rk", F.row_number().over(w_best))
         .filter(F.col("rk") == 1)
-    )
-    base = tot.select(
-        "feature",
-        F.floor(2.0 * pt * (nt - pt) / nt / nt * 1000000000.0)
-        .cast("long")
-        .alias("gini_root_q9"),
-    )
-    return (
-        best.join(base, "feature")
         .select(
             "feature",
             "threshold",
-            F.col("nl").alias("n_left"),
-            F.col("pl").alias("pos_left"),
-            F.col("nr").alias("n_right"),
-            F.col("pr").alias("pos_right"),
-            "gini_root_q9",
+            nl.alias("n_left"),
+            sl.alias("pos_left"),
+            (nt - nl).alias("n_right"),
+            (st - sl).alias("pos_right"),
+            gini_root_q9().alias("gini_root_q9"),
             F.col("gini_q9").alias("gini_split_q9"),
-            (F.col("gini_root_q9") - F.col("gini_q9")).alias("gain_q9"),
+        )
+        .withColumn(
+            "gain_q9", F.col("gini_root_q9") - F.col("gini_split_q9")
         )
         .orderBy("feature")
     )
@@ -1493,60 +1409,15 @@ def q_ml_tree_stump(spark, d):
 # Declared depth-2 tree fit (root stump, then best split per leaf)
 # --------------------------------------------------------------------------
 
-# The per-node iteration every hist-mode tree learner runs: pass 1
-# finds the root split exactly as q_ml_tree_stump does; pass 2 routes
-# each row to its leaf via the (broadcast) 1-row root relation and
-# repeats the histogram split search PARTITIONED BY leaf. Each pass is
-# one scan collapsing to a bucket-bounded relation (<=515 rows/node),
-# so depth-k growth costs k scans — never a per-row sort or pair join.
-# All counts are exact integers; the weighted-Gini argmin compares
-# floor(x*1e9)-quantized scores with a (feature, threshold) tie-break,
-# so no float ordering crosses the engine boundary.
-
-_TREE2_GINI = """CAST(floor((
-                 (2.0 * pl * (nl - pl)) / nl
-                 + (2.0 * (pt - pl) * ((nt - nl) - (pt - pl)))
-                   / (nt - nl)
-             ) / nt * 1000000000.0) AS BIGINT)"""
-
 _TREE2_ORACLE = f"""
-    WITH ev AS (
-      SELECT CAST(floor(value) AS BIGINT) AS b_value,
-             CAST(hour(ts) AS BIGINT) AS b_hour,
-             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-      FROM events
-    ),
-    buckets AS (
-      SELECT 'value_floor' AS feature, b_value AS bucket,
-             COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS np
-      FROM ev GROUP BY b_value
-      UNION ALL
-      SELECT 'hour', b_hour, COUNT(*), CAST(SUM(y) AS BIGINT)
-      FROM ev GROUP BY b_hour
-    ),
-    tot AS (
-      SELECT feature, CAST(SUM(n) AS BIGINT) AS nt,
-             CAST(SUM(np) AS BIGINT) AS pt
-      FROM buckets GROUP BY feature
-    ),
-    pre AS (
-      SELECT b.feature, b.bucket, t.nt, t.pt,
-             CAST(SUM(b.n) OVER w AS BIGINT) AS nl,
-             CAST(SUM(b.np) OVER w AS BIGINT) AS pl
-      FROM buckets b JOIN tot t ON t.feature = b.feature
-      WINDOW w AS (PARTITION BY b.feature ORDER BY b.bucket
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ),
-    scored AS (
-      SELECT feature, bucket + 1 AS threshold, nl, pl, nt, pt,
-             {_TREE2_GINI} AS gini_q9
-      FROM pre WHERE nl > 0 AND nt - nl > 0
-    ),
+    WITH {_TREE_EV_SQL},
+    hist AS ({split_hist_sql("ev", TREE_FEATS, "y")}),
+    {split_prefix_ctes("hist")},
     root AS (
       SELECT * FROM (
         SELECT *, ROW_NUMBER() OVER (
                  ORDER BY gini_q9, feature, threshold) AS rk
-        FROM scored
+        FROM (SELECT *, {GINI_Q9_SQL} AS gini_q9 FROM hist_split)
       ) WHERE rk = 1
     ),
     leafed AS (
@@ -1558,192 +1429,60 @@ _TREE2_ORACLE = f"""
              e.b_value, e.b_hour, e.y
       FROM ev e CROSS JOIN root r
     ),
-    buckets2 AS (
-      SELECT node, 'value_floor' AS feature, b_value AS bucket,
-             COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS np
-      FROM leafed GROUP BY node, b_value
-      UNION ALL
-      SELECT node, 'hour', b_hour, COUNT(*), CAST(SUM(y) AS BIGINT)
-      FROM leafed GROUP BY node, b_hour
-    ),
-    tot2 AS (
-      SELECT node, feature, CAST(SUM(n) AS BIGINT) AS nt,
-             CAST(SUM(np) AS BIGINT) AS pt
-      FROM buckets2 GROUP BY node, feature
-    ),
-    pre2 AS (
-      SELECT b.node, b.feature, b.bucket, t.nt, t.pt,
-             CAST(SUM(b.n) OVER w AS BIGINT) AS nl,
-             CAST(SUM(b.np) OVER w AS BIGINT) AS pl
-      FROM buckets2 b
-      JOIN tot2 t ON t.node = b.node AND t.feature = b.feature
-      WINDOW w AS (PARTITION BY b.node, b.feature ORDER BY b.bucket
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ),
-    scored2 AS (
-      SELECT node, feature, bucket + 1 AS threshold, nl, pl, nt, pt,
-             {_TREE2_GINI} AS gini_q9
-      FROM pre2 WHERE nl > 0 AND nt - nl > 0
-    ),
+    hist2 AS ({split_hist_sql("leafed", TREE_FEATS, "y", ("node",))}),
+    {split_prefix_ctes("hist2", ("node",))},
     best2 AS (
       SELECT * FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY node
                  ORDER BY gini_q9, feature, threshold) AS rk
-        FROM scored2
+        FROM (SELECT *, {GINI_Q9_SQL} AS gini_q9 FROM hist2_split)
       ) WHERE rk = 1
     ),
-    rootrow AS (
-      SELECT 'root' AS node, r.feature, r.threshold,
-             r.nt AS n_node, r.pt AS pos_node,
-             r.nl AS n_left, r.pl AS pos_left,
-             CAST(floor(2.0 * r.pt * (r.nt - r.pt) / r.nt / r.nt
-                        * 1000000000.0) AS BIGINT) AS gini_parent_q9,
-             r.gini_q9 AS gini_split_q9
-      FROM root r
+    nodes AS (
+      SELECT 'root' AS node, feature, threshold, nl, sl, nt, st, gini_q9
+      FROM root
+      UNION ALL
+      SELECT node, feature, threshold, nl, sl, nt, st, gini_q9 FROM best2
     ),
-    childrows AS (
-      SELECT b.node, b.feature, b.threshold,
-             b.nt AS n_node, b.pt AS pos_node,
-             b.nl AS n_left, b.pl AS pos_left,
-             CAST(floor(2.0 * b.pt * (b.nt - b.pt) / b.nt / b.nt
-                        * 1000000000.0) AS BIGINT) AS gini_parent_q9,
-             b.gini_q9 AS gini_split_q9
-      FROM best2 b
-    ),
-    unioned AS (
-      SELECT * FROM rootrow UNION ALL SELECT * FROM childrows
+    out AS (
+      SELECT node, feature, threshold, nt AS n_node, st AS pos_node,
+             nl AS n_left, sl AS pos_left,
+             {GINI_ROOT_Q9_SQL} AS gini_parent_q9,
+             gini_q9 AS gini_split_q9
+      FROM nodes
     )
-    SELECT node, feature, threshold, n_node, pos_node, n_left,
-           pos_left, gini_parent_q9, gini_split_q9,
-           gini_parent_q9 - gini_split_q9 AS gain_q9
-    FROM unioned ORDER BY node
+    SELECT *, gini_parent_q9 - gini_split_q9 AS gain_q9
+    FROM out ORDER BY node
 """
-
-
-def _tree2_scored(buckets, part_cols):
-    """Per-threshold quantized weighted-Gini over a bucket relation.
-
-    `buckets`: (part_cols..., feature, bucket, n, np). Returns
-    (part_cols..., feature, threshold, nl, pl, nt, pt, gini_q9) with
-    the identical double expression the oracle uses, floor-quantized
-    to 1e-9 before any comparison.
-    """
-    keys = part_cols + ["feature"]
-    tot = buckets.groupBy(*keys).agg(
-        F.sum("n").alias("nt"), F.sum("np").alias("pt")
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = buckets.join(tot, keys).select(
-        *keys,
-        "bucket",
-        "nt",
-        "pt",
-        F.sum("n").over(w).alias("nl"),
-        F.sum("np").over(w).alias("pl"),
-    )
-    nl, pl = F.col("nl"), F.col("pl")
-    nt, pt = F.col("nt"), F.col("pt")
-    gini = (
-        (2.0 * pl * (nl - pl) / nl
-         + 2.0 * (pt - pl) * ((nt - nl) - (pt - pl)) / (nt - nl))
-        / nt
-        * 1000000000.0
-    )
-    return pre.filter((nl > 0) & (nt - nl > 0)).select(
-        *keys,
-        (F.col("bucket") + 1).alias("threshold"),
-        "nl",
-        "pl",
-        "nt",
-        "pt",
-        F.floor(gini).cast("long").alias("gini_q9"),
-    )
-
-
-def _tree2_node_row(df):
-    """Project a best-split row to the declared output columns."""
-    nt, pt = F.col("nt"), F.col("pt")
-    parent = F.floor(
-        2.0 * pt * (nt - pt) / nt / nt * 1000000000.0
-    ).cast("long")
-    return df.select(
-        "node",
-        "feature",
-        "threshold",
-        nt.alias("n_node"),
-        pt.alias("pos_node"),
-        F.col("nl").alias("n_left"),
-        F.col("pl").alias("pos_left"),
-        parent.alias("gini_parent_q9"),
-        F.col("gini_q9").alias("gini_split_q9"),
-    )
 
 
 @query("q_ml_tree_depth2", oracle=_TREE2_ORACLE)
 def q_ml_tree_depth2(spark, d):
     """DECLARED depth-2 tree fit: the root stump plus the best Gini
     split of each child leaf — the per-node iteration of hist-mode
-    tree growth (q_ml_tree_stump's docstring has the histogram
-    argument). Pass 1 reduces the scan to per-(feature, bucket)
-    exact counts and picks the root by quantized-Gini argmin with a
-    lexicographic (feature, threshold) tie-break; pass 2 broadcasts
-    the 1-row root relation onto the events scan to route rows to
-    'L'/'R', then repeats the identical search partitioned by leaf.
-    Counts stay exact integers end to end; every Gini crossing an
-    ordering is floor(x*1e9) BIGINT on both engines. At 100 TB:
-    depth-k = k linear scans, each shuffling only bucket-bounded
-    histograms (<=515 rows per node here) — the XGBoost/LightGBM
-    scaling shape, with no row-level sort and no pair join."""
-    ev = load(spark, d, "events").select(
-        F.floor("value").cast("long").alias("b_value"),
-        F.hour("ts").cast("long").alias("b_hour"),
-        F.when(F.col("event_type") == "purchase", 1)
-        .otherwise(0)
-        .alias("y"),
+    tree growth (queries/fits.py has the split search). Pass 1 picks
+    the root by quantized-Gini argmin with a lexicographic (feature,
+    threshold) tie-break; pass 2 broadcasts the 1-row root relation
+    onto the events scan to route rows to 'L'/'R', then repeats the
+    identical search partitioned by leaf."""
+    ev = _tree_rows(spark, d)
+    scored = split_prefix(split_hist(ev, TREE_FEATS, "y")).withColumn(
+        "gini_q9", gini_q9()
     )
-
-    def hist(df, part_cols):
-        # ONE scan + ONE shuffle for both feature histograms (r17,
-        # §2.4): stack expands each row to (feature, bucket) map-side
-        # and partial aggregation collapses to bucket-bounded rows
-        # before the single exchange — replacing the two-scan
-        # unionByName form (2 scans + 2 exchanges per pass). Same
-        # (part_cols, feature, bucket, n, np) rows.
-        ex = df.select(
-            *part_cols,
-            "y",
-            F.expr(
-                "stack(2, 'value_floor', b_value, 'hour', b_hour)"
-            ).alias("feature", "bucket"),
-        )
-        return ex.groupBy(*part_cols, "feature", "bucket").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("y").cast("long").alias("np"),
-        )
-
-    scored = _tree2_scored(hist(ev, []), [])
+    cols = ["feature", "threshold", "nl", "sl", "nt", "st", "gini_q9"]
     # Global argmin over the bucket-bounded scored relation via
     # TakeOrderedAndProject (total order: (feature, threshold) is
     # unique) — not a partition-less window.
-    root = (
-        scored.orderBy("gini_q9", "feature", "threshold")
-        .limit(1)
-        .select(
-            F.col("feature").alias("r_feature"),
-            F.col("threshold").alias("r_threshold"),
-            "nl",
-            "pl",
-            "nt",
-            "pt",
-            "gini_q9",
-        )
+    root = scored.orderBy("gini_q9", "feature", "threshold").limit(1).select(
+        F.lit("root").alias("node"), *cols
     )
 
-    leafed = ev.join(F.broadcast(root.select("r_feature", "r_threshold"))).select(
+    leafed = ev.join(
+        F.broadcast(root.select(
+            F.col("feature").alias("r_feature"),
+            F.col("threshold").alias("r_threshold"),
+        ))
+    ).select(
         F.when(
             F.col("r_feature") == "value_floor",
             F.when(F.col("b_value") < F.col("r_threshold"), "L").otherwise("R"),
@@ -1756,30 +1495,30 @@ def q_ml_tree_depth2(spark, d):
         "b_hour",
         "y",
     )
-    scored2 = _tree2_scored(hist(leafed, ["node"]), ["node"])
+    scored2 = split_prefix(
+        split_hist(leafed, TREE_FEATS, "y", ["node"]), ["node"]
+    ).withColumn("gini_q9", gini_q9())
     w_best = Window.partitionBy("node").orderBy(
         "gini_q9", "feature", "threshold"
     )
     best2 = (
         scored2.withColumn("rk", F.row_number().over(w_best))
         .filter(F.col("rk") == 1)
+        .select("node", *cols)
     )
-
-    rootrow = _tree2_node_row(
-        root.select(
-            F.lit("root").alias("node"),
-            F.col("r_feature").alias("feature"),
-            F.col("r_threshold").alias("threshold"),
-            "nl",
-            "pl",
-            "nt",
-            "pt",
-            "gini_q9",
-        )
-    )
-    childrows = _tree2_node_row(best2)
     return (
-        rootrow.unionByName(childrows)
+        root.unionByName(best2)
+        .select(
+            "node",
+            "feature",
+            "threshold",
+            F.col("nt").alias("n_node"),
+            F.col("st").alias("pos_node"),
+            F.col("nl").alias("n_left"),
+            F.col("sl").alias("pos_left"),
+            gini_root_q9().alias("gini_parent_q9"),
+            F.col("gini_q9").alias("gini_split_q9"),
+        )
         .withColumn(
             "gain_q9", F.col("gini_parent_q9") - F.col("gini_split_q9")
         )
@@ -2255,51 +1994,29 @@ def q_search_hybrid_rrf(spark, d):
 
 # One GBM iteration under squared loss: F0 = global mean, fit the
 # best SSE-reducing stump to the residuals, report leaf gammas (the
-# additive update). The histogram trick again — but for regression
-# the sufficient statistics per bucket are (n, sum target), and the
-# split score is the variance-reduction identity
-# gain = RL^2/nl + RR^2/nr (RL/RR = left/right residual sums), which
-# needs NO second moment. Targets quantize to integer milli-units
-# (floor(value*1e3)) so every sum is an exact BIGINT; the score is a
-# double of exact integers written identically on both engines and
-# floor-normalized by n (keeps the quantized score inside BIGINT:
-# RL ~ n*5e5, RL^2/nl/nt ~ 2.5e11 at sf0.1) before the ordering.
+# additive update). The histogram split search of queries/fits.py
+# with (n, sum target) per bucket; the split score is the
+# variance-reduction identity gain = RL^2/nl + RR^2/nr (RL/RR =
+# left/right residual sums), which needs NO second moment. Targets
+# quantize to integer milli-units (floor(value*1e3)) so every sum is
+# an exact BIGINT; the score is a double of exact integers written
+# identically on both engines and floor-normalized by n (keeps the
+# quantized score inside BIGINT: RL ~ n*5e5, RL^2/nl/nt ~ 2.5e11 at
+# sf0.1) before the ordering.
 GBM_TOP_SPLITS = 5
-
-
-def _gbm_sql(feat: str, expr: str) -> str:
-    return f"""
-        SELECT '{feat}' AS feature,
-               CAST({expr} AS BIGINT) AS bucket,
-               COUNT(*) AS n,
-               CAST(SUM(CAST(floor(value * 1000.0) AS BIGINT))
-                    AS BIGINT) AS s
-        FROM events
-        GROUP BY CAST({expr} AS BIGINT)
-    """
-
+GBM_FEATS = {"hour": "b_hour", "dom": "b_dom"}
 
 _GBM_ORACLE = f"""
-    WITH buckets AS (
-        {_gbm_sql("hour", "hour(ts)")}
-        UNION ALL
-        {_gbm_sql("dom", "day(ts)")}
+    WITH ev AS (
+      SELECT CAST(hour(ts) AS BIGINT) AS b_hour,
+             CAST(day(ts) AS BIGINT) AS b_dom,
+             CAST(floor(value * 1000.0) AS BIGINT) AS vq
+      FROM events
     ),
-    tot AS (
-      SELECT feature, CAST(SUM(n) AS BIGINT) AS nt,
-             CAST(SUM(s) AS BIGINT) AS st
-      FROM buckets GROUP BY feature
-    ),
-    pre AS (
-      SELECT b.feature, b.bucket, t.nt, t.st,
-             CAST(SUM(b.n) OVER w AS BIGINT) AS nl,
-             CAST(SUM(b.s) OVER w AS BIGINT) AS sl
-      FROM buckets b JOIN tot t ON t.feature = b.feature
-      WINDOW w AS (PARTITION BY b.feature ORDER BY b.bucket
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ),
+    hist AS ({split_hist_sql("ev", GBM_FEATS, "vq")}),
+    {split_prefix_ctes("hist")},
     scored AS (
-      SELECT feature, bucket + 1 AS threshold, nl, nt - nl AS nr,
+      SELECT feature, threshold, nl, nt - nl AS nr,
              CAST(floor((
                  (sl - nl * (st * 1.0 / nt))
                    * (sl - nl * (st * 1.0 / nt)) / nl
@@ -2313,8 +2030,7 @@ _GBM_ORACLE = f"""
                         / (nt - nl) * 1000.0)
                   AS BIGINT) AS gamma_right_q6,
              CAST(floor(st * 1.0 / nt * 1000.0) AS BIGINT) AS f0_q6
-      FROM pre
-      WHERE nl > 0 AND nt - nl > 0
+      FROM hist_split
     )
     SELECT CAST(ROW_NUMBER() OVER (
                ORDER BY gain_q DESC, feature, threshold)
@@ -2335,66 +2051,36 @@ def q_ml_gbm_round(spark, d):
     variance-reduction identity, leaf gammas = mean residual per
     side — the additive-update step GBM iterates, joining the
     hash-verified model set (OLS, logistic GD, NB, k-means, tree
-    splits). Histogram plan again: per-bucket (n, sum vq) combinable
-    agg over milli-quantized targets, ONE prefix window, candidate
-    relation <= 55 rows; the top-{GBM_TOP_SPLITS} split surface ships
-    instead of just the argmax so the oracle checks the whole
-    ordering. At 100 TB: one scan + bucket-bounded metadata, same as
-    the classification stumps; k boosting rounds = k scans with
-    re-predicted residuals (here round 1, where residual sums are a
-    closed form of (n, s) — no per-row prediction join needed)."""
-    ev = load(spark, d, "events")
-
-    def hist(feat, col):
-        return ev.select(
-            F.lit(feat).alias("feature"),
-            col.cast("long").alias("bucket"),
-            F.floor(F.col("value") * 1000.0).cast("long").alias("vq"),
-        ).groupBy("feature", "bucket").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("vq").cast("long").alias("s"),
-        )
-
-    buckets = hist("hour", F.hour("ts")).unionByName(
-        hist("dom", F.dayofmonth("ts"))
+    splits). The candidate relation is <= 55 rows; the
+    top-{GBM_TOP_SPLITS} split surface ships instead of just the
+    argmax so the oracle checks the whole ordering. k boosting rounds
+    = k scans with re-predicted residuals (here round 1, where
+    residual sums are a closed form of (n, s) — no per-row prediction
+    join needed)."""
+    ev = load(spark, d, "events").select(
+        F.hour("ts").cast("long").alias("b_hour"),
+        F.dayofmonth("ts").cast("long").alias("b_dom"),
+        F.floor(F.col("value") * 1000.0).cast("long").alias("vq"),
     )
-    tot = buckets.groupBy("feature").agg(
-        F.sum("n").alias("nt"), F.sum("s").alias("st")
-    )
-    w = (
-        Window.partitionBy("feature")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = buckets.join(tot, "feature").select(
-        "feature",
-        "bucket",
-        "nt",
-        "st",
-        F.sum("n").over(w).alias("nl"),
-        F.sum("s").over(w).alias("sl"),
-    )
+    pre = split_prefix(split_hist(ev, GBM_FEATS, "vq"))
     nl, sl = F.col("nl"), F.col("sl")
     nt, st = F.col("nt"), F.col("st")
     mu = st * 1.0 / nt
     rl = sl - nl * mu
     rr = (st - sl) - (nt - nl) * mu
-    scored = (
-        pre.filter((nl > 0) & (nt - nl > 0))
-        .select(
-            "feature",
-            (F.col("bucket") + 1).alias("threshold"),
-            nl.alias("n_left"),
-            (nt - nl).alias("n_right"),
-            F.floor((rl / nl) * 1000.0).cast("long").alias("gamma_left_q6"),
-            F.floor((rr / (nt - nl)) * 1000.0)
-            .cast("long")
-            .alias("gamma_right_q6"),
-            F.floor(mu * 1000.0).cast("long").alias("f0_q6"),
-            F.floor((rl * rl / nl + rr * rr / (nt - nl)) / nt)
-            .cast("long")
-            .alias("gain_q"),
-        )
+    scored = pre.select(
+        "feature",
+        "threshold",
+        nl.alias("n_left"),
+        (nt - nl).alias("n_right"),
+        F.floor((rl / nl) * 1000.0).cast("long").alias("gamma_left_q6"),
+        F.floor((rr / (nt - nl)) * 1000.0)
+        .cast("long")
+        .alias("gamma_right_q6"),
+        F.floor(mu * 1000.0).cast("long").alias("f0_q6"),
+        F.floor((rl * rl / nl + rr * rr / (nt - nl)) / nt)
+        .cast("long")
+        .alias("gain_q"),
     )
     top = scored.orderBy(
         F.desc("gain_q"), F.asc("feature"), F.asc("threshold")

@@ -254,3 +254,67 @@ def test_hosmer_lemeshow_consistency_with_ece(spark, sf_dir):
     assert hl.n_bins == ece.n_bins
     assert hl.df == hl.n_bins - 2
     assert hl.hl_q6 >= 0
+
+
+def _tree_tie_events():
+    """8 events where every tree tie-break decides the result. Per
+    bucket h in 0..3: two events with floor(value) = hour = h and
+    day-of-month h + 1, purchases at h = 0 and h = 3. So both features
+    carry the same histogram (their best splits tie, and the depth-2
+    root falls to the feature name), the mirrored labels make
+    thresholds 1 and 3 tie on gini_q9, and the GBM gains tie across
+    features and between thresholds 1 and 3."""
+    import pandas as pd
+
+    rows = [
+        (2 * h + i, h, "purchase" if h in (0, 3) else "view")
+        for h in range(4)
+        for i in range(2)
+    ]
+    return pd.DataFrame(
+        {
+            "event_id": [r[0] for r in rows],
+            "ts": [pd.Timestamp(2024, 1, h + 1, h) for _, h, _ in rows],
+            "user_id": [r[0] % 3 for r in rows],
+            "event_type": [r[2] for r in rows],
+            "value": [h + 0.25 for _, h, _ in rows],
+            "props": ["{}"] * len(rows),
+        }
+    ).astype({"ts": "datetime64[us]"})
+
+
+def test_tree_split_search_sides_agree(spark, sf_dir, duck, tmp_path):
+    """The three keys on fits.py's histogram split search match their
+    oracles at sf_dir and on _tree_tie_events, where a tie-break
+    reversed on one side changes the rows."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from check import check_query
+
+    keys = ("q_ml_tree_stump", "q_ml_tree_depth2", "q_ml_gbm_round")
+    qs, oracles = entry.queries(), entry.oracle_sql()
+
+    def check(d, con):
+        for k in keys:
+            ok, msg = check_query(k, qs[k], oracles[k], spark, con, d)
+            assert ok, (k, d, msg)
+
+    check(sf_dir, duck)
+
+    _tree_tie_events().to_parquet(tmp_path / "events.parquet")
+    edge = str(tmp_path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{edge}/events.parquet')"
+    )
+    check(edge, con)
+    stump = {(r.feature, r.threshold) for r in qs[keys[0]](spark, edge).collect()}
+    assert stump == {("hour", 1), ("value_floor", 1)}
+    tree = [(r.node, r.feature, r.threshold) for r in qs[keys[1]](spark, edge).collect()]
+    assert tree == [("R", "hour", 3), ("root", "hour", 1)]
+    gbm = [(r.feature, r.threshold) for r in qs[keys[2]](spark, edge).collect()]
+    assert gbm == [("dom", 3), ("hour", 2), ("dom", 2), ("dom", 4), ("hour", 1)]

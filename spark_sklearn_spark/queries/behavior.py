@@ -17,9 +17,17 @@ single-partition window anywhere.
 
 Shared stages, each one text or one builder for both engines:
 ``transitions`` / ``TRANSITIONS_CTES`` (seq, trans), the per-user
-next-event-type counts of the behavior chain keys, and
+next-event-type counts of the behavior chain keys;
 ``DAILY_COUNTS_CTE`` (daily), the events per calendar day of the
-daily time-series keys.
+daily time-series keys that run one SQL text on both engines;
+``day_idx`` / ``DAY_IDX_SQL``, the integer day of an event (days
+since 1970-01-01 in the UTC session), the one integer day key of the
+time-series and behavior keys;
+``day_counts`` / ``DAY_COUNTS_CTE`` and ``TYPE_DAY_COUNTS_CTE``
+(daily), the events per day index overall and per event type; and
+``day_revenue`` / ``DAY_REVENUE_CTE`` and ``TYPE_DAY_REVENUE_CTE``
+(daily), the exact revenue micro-units per calendar day overall and
+per event type.
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ from pyspark.sql import Window, functions as F
 
 from ..registry import query
 from ..sources.io import load
+from ._helpers import DEC
 
 # (event_type, nxt, c): how often each event type is followed by nxt
 # in a user's (ts, event_id)-ordered stream. One user-partitioned
@@ -68,6 +77,73 @@ DAILY_COUNTS_CTE = """daily AS (
              CAST(COUNT(*) AS BIGINT) AS y
       FROM events GROUP BY CAST(date_trunc('day', ts) AS TIMESTAMP)
     )"""
+
+# Days from 1970-01-01 to ts in the UTC session, as BIGINT.
+DAY_IDX_SQL = "CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)"
+
+
+def day_idx():
+    """DAY_IDX_SQL's Spark side (a fresh Column per call: a module-level
+    Column would need a live SparkContext at import time)."""
+    return F.datediff(F.to_date("ts"), F.lit("1970-01-01")).cast("long")
+
+
+# (day_idx, n) / (event_type, day_idx, n): events per day index.
+DAY_COUNTS_CTE = f"""daily AS (
+      SELECT {DAY_IDX_SQL} AS day_idx, CAST(COUNT(*) AS BIGINT) AS n
+      FROM events GROUP BY day_idx
+    )"""
+
+TYPE_DAY_COUNTS_CTE = f"""daily AS (
+      SELECT event_type, {DAY_IDX_SQL} AS day_idx,
+             CAST(COUNT(*) AS BIGINT) AS n
+      FROM events GROUP BY event_type, day_idx
+    )"""
+
+
+def day_counts(spark, d, by=()):
+    """DAY_COUNTS_CTE's Spark side, or TYPE_DAY_COUNTS_CTE's with
+    by=("event_type",): (*by, day_idx, n)."""
+    return (
+        load(spark, d, "events")
+        .groupBy(*by, day_idx().alias("day_idx"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+# (day, rev_micro) / (event_type, day, rev_micro): revenue per calendar
+# day, summed exactly in DECIMAL(30,10) and floored to micro-units.
+_REV_MICRO_SQL = """CAST(floor(SUM(CAST(value AS DECIMAL(30,10))) * 1000000)
+                  AS BIGINT) AS rev_micro"""
+
+DAY_REVENUE_CTE = f"""daily AS (
+      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+             {_REV_MICRO_SQL}
+      FROM events
+      GROUP BY day
+    )"""
+
+TYPE_DAY_REVENUE_CTE = f"""daily AS (
+      SELECT event_type,
+             CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+             {_REV_MICRO_SQL}
+      FROM events
+      GROUP BY event_type, day
+    )"""
+
+
+def day_revenue(spark, d, by=()):
+    """DAY_REVENUE_CTE's Spark side, or TYPE_DAY_REVENUE_CTE's with
+    by=("event_type",): (*by, day, rev_micro)."""
+    return (
+        load(spark, d, "events")
+        .groupBy(*by, F.date_trunc("day", "ts").alias("day"))
+        .agg(
+            F.floor(F.sum(F.col("value").cast(DEC)) * 1000000)
+            .cast("long")
+            .alias("rev_micro")
+        )
+    )
 
 
 @query(
@@ -295,42 +371,28 @@ def q_ts_rollup_multigrain(spark, d):
 
 @query(
     "q_behavior_transitions",
-    oracle="""
-        WITH seq AS (
-          SELECT user_id, event_type,
-                 lag(event_type) OVER (PARTITION BY user_id
-                                       ORDER BY ts, event_id) AS prev_type
-          FROM events
-        )
-        SELECT prev_type, event_type AS next_type,
-               count(*) AS n_transitions
-        FROM seq
-        WHERE prev_type IS NOT NULL
-        GROUP BY 1, 2
+    oracle=f"""
+        WITH {TRANSITIONS_CTES}
+        SELECT event_type AS prev_type, nxt AS next_type,
+               c AS n_transitions
+        FROM trans
         ORDER BY prev_type, next_type
     """,
 )
 def q_behavior_transitions(spark, d):
     """Event-flow transition matrix (the Sankey / Markov-chain view of
-    user behavior): counts of consecutive event-type pairs per user.
-    One shuffle on user_id for the lag window (total order inside a
-    user via (ts, event_id) — deterministic under timestamp ties),
-    then a combinable hash agg onto the tiny (prev, next) key space.
-    The transition matrix is |event_types|² rows regardless of
-    corpus size — 100 TB of events reduces to a 25-cell table."""
-    ev = load(spark, d, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id",
-        "event_type",
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-    return (
-        seq.filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
-        .orderBy("prev_type", "next_type")
-    )
+    user behavior): counts of consecutive event-type pairs per user,
+    read off the shared ``transitions`` stage. One shuffle on user_id
+    for the lead window (total order inside a user via (ts, event_id)
+    — deterministic under timestamp ties), then a combinable hash agg
+    onto the tiny (prev, next) key space. The transition matrix is
+    |event_types|² rows regardless of corpus size — 100 TB of events
+    reduces to a 25-cell table."""
+    return transitions(spark, d).select(
+        F.col("event_type").alias("prev_type"),
+        F.col("nxt").alias("next_type"),
+        F.col("c").alias("n_transitions"),
+    ).orderBy("prev_type", "next_type")
 
 
 @query(

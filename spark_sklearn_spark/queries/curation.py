@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load, warehouse_path
 from ._helpers import DEC, TWO56, h56
+from .behavior import DAY_COUNTS_CTE, DAY_IDX_SQL, day_counts, day_idx
 
 # --------------------------------------------------------------------------
 # Referential-integrity audit (FK orphan counts)
@@ -743,11 +744,10 @@ def q_ts_twap(spark, d):
 
 @query(
     "q_behavior_lifecycle",
-    oracle="""
+    oracle=f"""
         WITH weeks AS (
           SELECT DISTINCT user_id,
-                 CAST(floor(date_diff('day', DATE '1970-01-01', ts) / 7)
-                      AS BIGINT) AS wk
+                 CAST(floor({DAY_IDX_SQL} / 7) AS BIGINT) AS wk
           FROM events
         ),
         flagged AS (
@@ -796,9 +796,7 @@ def q_behavior_lifecycle(spark, d):
     ev = load(spark, d, "events")
     weeks = ev.select(
         "user_id",
-        F.floor(
-            F.datediff(F.to_date("ts"), F.lit("1970-01-01")) / 7
-        ).cast("long").alias("wk"),
+        F.floor(day_idx() / 7).cast("long").alias("wk"),
     ).distinct()
     w_all = W.partitionBy("user_id")
     w_ord = W.partitionBy("user_id").orderBy("wk")
@@ -854,12 +852,7 @@ ACF_LAGS = [1, 2, 3, 7]
 @query(
     "q_ts_autocorr",
     oracle=f"""
-        WITH daily AS (
-          SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                     AS day_idx,
-                 COUNT(*) AS n
-          FROM events GROUP BY day_idx
-        ),
+        WITH {DAY_COUNTS_CTE},
         lags AS (SELECT unnest([{", ".join(str(k) for k in ACF_LAGS)}]) AS k),
         pairs AS (
           SELECT l.k, a.n AS x, b.n AS y
@@ -892,12 +885,7 @@ def q_ts_autocorr(spark, d):
     so no decimal detour needed — products stay BIGINT). Same
     closed-form expression on both engines; the acf leaves as integer
     micro (identical IEEE pipeline then floor(x*1e6))."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("day_idx")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = day_counts(spark, d)
     lags = spark.range(1).select(
         F.explode(F.array(*[F.lit(k) for k in ACF_LAGS])).alias("k")
     )
@@ -939,12 +927,7 @@ BT_TEST_DAYS = 7
 @query(
     "q_ts_backtest",
     oracle=f"""
-        WITH daily AS (
-          SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                     AS day_idx,
-                 COUNT(*) AS n
-          FROM events GROUP BY day_idx
-        ),
+        WITH {DAY_COUNTS_CTE},
         bounds AS (
           SELECT MAX(day_idx) - {BT_TEST_DAYS - 1} AS cutoff FROM daily
         ),
@@ -979,12 +962,7 @@ def q_ts_backtest(spark, d):
     (long div long; abs over integers) — no float anywhere. Shape:
     corpus collapses to the daily grain once, the 'model' is a 7-row
     agg broadcast onto the 7-row test set."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("day_idx")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = day_counts(spark, d)
     bounds = daily.agg(
         (F.max("day_idx") - (BT_TEST_DAYS - 1)).alias("cutoff")
     )

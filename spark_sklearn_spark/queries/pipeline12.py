@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
+from .behavior import DAY_IDX_SQL, day_idx
 
 # --------------------------------------------------------------------------
 # Benford first-digit audit
@@ -390,10 +391,10 @@ def q_ts_holt(spark, d):
 # two-middle interpolation on identical operands (the rolling-median
 # argument); outputs leave micro-floored.
 
-_THEILSEN_ORACLE = """
+_THEILSEN_ORACLE = f"""
     WITH daily AS (
       SELECT event_type,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400 AS d,
+             {DAY_IDX_SQL} AS d,
              CAST(SUM(CAST(value AS DECIMAL(30,10))) AS DOUBLE) AS rev
       FROM events
       GROUP BY event_type, d
@@ -425,8 +426,7 @@ def q_ts_theilsen(spark, d):
     ev = load(spark, d, "events")
     daily = ev.groupBy(
         "event_type",
-        F.expr("cast(date_trunc('day', ts) as long) div 86400")
-        .alias("dday"),
+        day_idx().alias("dday"),
     ).agg(
         F.sum(F.col("value").cast("decimal(30,10)"))
         .cast("double")

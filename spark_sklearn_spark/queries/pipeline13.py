@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56
+from .behavior import DAY_IDX_SQL, day_idx
 from .bigrams import NEAR_DUP_SYM_CTES, near_dup_edges, near_dup_sym
 
 # --------------------------------------------------------------------------
@@ -37,11 +38,10 @@ from .bigrams import NEAR_DUP_SYM_CTES, near_dup_edges, near_dup_sym
 # day 0 (1970-01-01) was a Thursday, so +3 aligns the week boundary
 # to Monday — engine-independent, no year-boundary ISO edge cases.
 
-_STICKINESS_ORACLE = """
+_STICKINESS_ORACLE = f"""
     WITH days AS (
       SELECT DISTINCT
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400
-                 AS dday,
+             {DAY_IDX_SQL} AS dday,
              user_id
       FROM events
     ),
@@ -77,12 +77,7 @@ def q_behavior_stickiness(spark, d):
     aggs and the join run on calendar-bounded relations. Integer ppm
     output — zero float surface."""
     ev = load(spark, d, "events")
-    days = ev.select(
-        F.expr("cast(date_trunc('day', ts) as long) div 86400").alias(
-            "dday"
-        ),
-        "user_id",
-    ).distinct()
+    days = ev.select(day_idx().alias("dday"), "user_id").distinct()
     daily = days.groupBy("dday").agg(
         F.countDistinct("user_id").alias("dau")
     ).withColumn("week", F.expr("(dday + 3) div 7"))

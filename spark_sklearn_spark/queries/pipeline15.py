@@ -30,7 +30,13 @@ from ..operators.lsh import min_signature
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
-from .behavior import TRANSITIONS_CTES, transitions
+from .behavior import (
+    DAY_REVENUE_CTE,
+    TRANSITIONS_CTES,
+    TYPE_DAY_REVENUE_CTE,
+    day_revenue,
+    transitions,
+)
 from .bigrams import (
     BIGRAM_PAIRS_CTES,
     NEAR_DUP_DEG_CTES,
@@ -117,15 +123,8 @@ def q_emb_pca_topk(spark, d):
 # via min_by — every step int64-exact. Everything past the one corpus
 # collapse is calendar-grain.
 
-_CHANGEPOINT_ORACLE = """
-    WITH daily AS (
-      SELECT event_type,
-             CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(floor(SUM(CAST(value AS DECIMAL(30,10))) * 1000000)
-                  AS BIGINT) AS rev_micro
-      FROM events
-      GROUP BY event_type, day
-    ),
+_CHANGEPOINT_ORACLE = f"""
+    WITH {TYPE_DAY_REVENUE_CTE},
     stats AS (
       SELECT event_type,
              CAST(SUM(rev_micro) AS BIGINT) AS s,
@@ -179,14 +178,7 @@ def q_ts_changepoint(spark, d):
     argmax and the pre/post level means all on the calendar-bounded
     relation. min_by over the unique day key makes the tie-break
     deterministic on both engines."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        F.floor(F.sum(F.col("value").cast(DEC)) * 1000000)
-        .cast("long")
-        .alias("rev_micro")
-    )
+    daily = day_revenue(spark, d, by=("event_type",))
     stats = daily.groupBy("event_type").agg(
         F.sum("rev_micro").alias("s"), F.count(F.lit(1)).alias("n")
     )
@@ -412,13 +404,7 @@ def q_graph_jaccard_nbrs(spark, d):
 _HURST_MS = (3, 6, 12)
 
 _HURST_ORACLE = f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(floor(SUM(CAST(value AS DECIMAL(30,10))) * 1000000)
-                  AS BIGINT) AS rev_micro
-      FROM events
-      GROUP BY day
-    ),
+    WITH {DAY_REVENUE_CTE},
     seq AS (
       SELECT day, rev_micro,
              ROW_NUMBER() OVER (ORDER BY day) - 1 AS t
@@ -479,12 +465,7 @@ def q_ts_hurst(spark, d):
     collapse to exact daily micro ints, block slicing by row-number
     div, integer within-block cusums/ranges, and the two-point
     log-log slope over the 3-row per-m relation."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
-        F.floor(F.sum(F.col("value").cast(DEC)) * 1000000)
-        .cast("long")
-        .alias("rev_micro")
-    )
+    daily = day_revenue(spark, d)
     # the calendar-bounded series rides one ordered index; lit(1)
     # partition silences the single-partition warning (bounded input)
     seq = daily.withColumn(

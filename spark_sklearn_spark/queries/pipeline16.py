@@ -23,6 +23,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
+from .behavior import TYPE_DAY_REVENUE_CTE, day_revenue
 from .bigrams import NEAR_DUP_DEG_CTES, degrees, near_dup_edges
 
 # --------------------------------------------------------------------------
@@ -38,15 +39,8 @@ from .bigrams import NEAR_DUP_DEG_CTES, degrees, near_dup_edges
 # IEEE, floored to micro. Everything past the collapse is
 # calendar-bounded.
 
-_SPEARMAN_ORACLE = """
-    WITH daily AS (
-      SELECT event_type,
-             CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(floor(SUM(CAST(value AS DECIMAL(30,10))) * 1000000)
-                  AS BIGINT) AS rev_micro
-      FROM events
-      GROUP BY event_type, day
-    ),
+_SPEARMAN_ORACLE = f"""
+    WITH {TYPE_DAY_REVENUE_CTE},
     ranked AS (
       SELECT event_type, day,
              CAST(ROW_NUMBER() OVER (PARTITION BY event_type
@@ -78,14 +72,7 @@ def q_ml_spearman(spark, d):
     (module comment). One corpus collapse; ranks, the day-keyed pair
     join, and the closing division all run on calendar-bounded
     relations."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        F.floor(F.sum(F.col("value").cast(DEC)) * 1000000)
-        .cast("long")
-        .alias("rev_micro")
-    )
+    daily = day_revenue(spark, d, by=("event_type",))
     w = Window.partitionBy("event_type").orderBy("rev_micro", "day")
     ranked = daily.select(
         "event_type", "day", F.row_number().over(w).cast("long").alias("rk")
@@ -133,15 +120,8 @@ def q_ml_spearman(spark, d):
 # D, and ties are exact integers; one closing identical-operand
 # division, floored to micro.
 
-_KENDALL_ORACLE = """
-    WITH daily AS (
-      SELECT event_type,
-             CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(floor(SUM(CAST(value AS DECIMAL(30,10))) * 1000000)
-                  AS BIGINT) AS rev_micro
-      FROM events
-      GROUP BY event_type, day
-    ),
+_KENDALL_ORACLE = f"""
+    WITH {TYPE_DAY_REVENUE_CTE},
     paired AS (
       SELECT a.event_type AS type_a, b.event_type AS type_b,
              a.day, a.rev_micro AS xa, b.rev_micro AS xb
@@ -176,14 +156,7 @@ def q_ml_kendall(spark, d):
     """Kendall tau-a per event-type pair (module comment): one corpus
     collapse, a day-keyed pairing, then the C(days,2) concordance
     join — all calendar-bounded integer work."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        F.floor(F.sum(F.col("value").cast(DEC)) * 1000000)
-        .cast("long")
-        .alias("rev_micro")
-    )
+    daily = day_revenue(spark, d, by=("event_type",))
     a = daily.select(
         F.col("event_type").alias("type_a"),
         "day",

@@ -19,6 +19,7 @@ from pyspark.sql import Window, functions as F
 from ..functions.vectors import sq_dist
 from ..registry import query
 from ..sources.io import load
+from .behavior import DAY_IDX_SQL, day_idx
 from .fits import KM_FIT_CTES, km_fit_memo, quantized_vecs
 
 # --------------------------------------------------------------------------
@@ -32,11 +33,9 @@ from .fits import KM_FIT_CTES, km_fit_memo, quantized_vecs
 # q_behavior_streaks (which reports per-user maxima) this emits the
 # ISLAND LENGTH DISTRIBUTION — the corpus-level activity texture.
 
-_ISLANDS_ORACLE = """
+_ISLANDS_ORACLE = f"""
     WITH active AS (
-      SELECT DISTINCT user_id,
-             CAST(epoch(CAST(date_trunc('day', ts) AS TIMESTAMP))
-                  // 86400 AS BIGINT) AS day_num
+      SELECT DISTINCT user_id, {DAY_IDX_SQL} AS day_num
       FROM events
     ),
     keyed AS (
@@ -65,12 +64,7 @@ def q_win_gaps_islands(spark, d):
     comment). One distinct collapse to (user, day), one user
     window, two combinable aggs — calendar-bounded per user."""
     ev = load(spark, d, "events")
-    active = ev.select(
-        "user_id",
-        (F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-        .cast("long")
-        .alias("day_num"),
-    ).distinct()
+    active = ev.select("user_id", day_idx().alias("day_num")).distinct()
     w = Window.partitionBy("user_id").orderBy("day_num")
     keyed = active.select(
         "user_id",

@@ -32,6 +32,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56, sql_h56
+from .behavior import DAY_COUNTS_CTE, day_counts
 from .shingles import DUP_PAIRS_CTES, dup_pairs
 
 # --------------------------------------------------------------------------
@@ -239,12 +240,7 @@ _PACF_RHO = """
 """
 
 _PACF_ORACLE = f"""
-    WITH daily AS (
-      SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS day_idx,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM events GROUP BY day_idx
-    ),
+    WITH {DAY_COUNTS_CTE},
     lags AS (SELECT unnest([1, 2, 3]) AS k),
     pairs AS (
       SELECT l.k, a.n AS x, b.n AS y
@@ -294,12 +290,7 @@ def q_ts_pacf(spark, d):
     Durbin-Levinson (module comment). The corpus collapses to the
     calendar-bounded daily grain first; the lag self-join and every
     later relation is days-sized."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("day_idx")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = day_counts(spark, d)
     lags = spark.range(1).select(
         F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("k")
     )

@@ -22,6 +22,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56, sql_h56
+from .behavior import DAY_IDX_SQL, TYPE_DAY_COUNTS_CTE, day_idx
 
 # --------------------------------------------------------------------------
 # Friedman test across event types, blocked by day
@@ -37,42 +38,39 @@ from ._helpers import h56, sql_h56
 # ranks doubled; numerator and denominator each pick up a factor 4.)
 
 _FRIED_ORACLE = f"""
-    WITH daily AS (
-      SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS d,
-             event_type AS t, CAST(COUNT(*) AS BIGINT) AS c
-      FROM events GROUP BY d, t
-    ),
+    WITH {TYPE_DAY_COUNTS_CTE},
     grid AS (
-      SELECT d.d, t.t, COALESCE(x.c, 0) AS c
-      FROM (SELECT DISTINCT d FROM daily) d
-      CROSS JOIN (SELECT DISTINCT t FROM daily) t
-      LEFT JOIN daily x ON x.d = d.d AND x.t = t.t
+      SELECT d.day_idx, t.event_type, COALESCE(x.n, 0) AS n
+      FROM (SELECT DISTINCT day_idx FROM daily) d
+      CROSS JOIN (SELECT DISTINCT event_type FROM daily) t
+      LEFT JOIN daily x ON x.day_idx = d.day_idx
+                       AND x.event_type = t.event_type
     ),
     ranked AS (
-      SELECT d, t, c,
-             RANK() OVER (PARTITION BY d ORDER BY c) AS rk,
-             CAST(COUNT(*) OVER (PARTITION BY d, c) AS BIGINT) AS eq
+      SELECT day_idx, event_type, n,
+             RANK() OVER (PARTITION BY day_idx ORDER BY n) AS rk,
+             CAST(COUNT(*) OVER (PARTITION BY day_idx, n) AS BIGINT) AS eq
       FROM grid
     ),
     r2s AS (
-      SELECT d, t, 2 * rk + eq - 1 AS r2 FROM ranked
+      SELECT day_idx, event_type, 2 * rk + eq - 1 AS r2 FROM ranked
     ),
     dims AS (
-      SELECT CAST(COUNT(DISTINCT d) AS BIGINT) AS n,
-             CAST(COUNT(DISTINCT t) AS BIGINT) AS k,
+      SELECT CAST(COUNT(DISTINCT day_idx) AS BIGINT) AS n,
+             CAST(COUNT(DISTINCT event_type) AS BIGINT) AS k,
              CAST(SUM(r2 * r2) AS BIGINT) AS a2
       FROM r2s
     ),
     per_t AS (
-      SELECT t, CAST(SUM(r2) AS BIGINT) AS s2 FROM r2s GROUP BY t
+      SELECT event_type, CAST(SUM(r2) AS BIGINT) AS s2
+      FROM r2s GROUP BY event_type
     ),
     num AS (
       SELECT CAST(SUM((p.s2 - m.n * (m.k + 1))
                       * (p.s2 - m.n * (m.k + 1))) AS BIGINT) AS sq
       FROM per_t p CROSS JOIN dims m
     )
-    SELECT p.t AS event_type, p.s2,
+    SELECT p.event_type, p.s2,
            CAST(p.s2 * 500 // m.n AS BIGINT) AS mean_rank_milli,
            m.n AS n_blocks, m.k,
            CAST((m.k - 1) * q.sq * 1000000
@@ -88,12 +86,11 @@ def q_ml_friedman(spark, d):
     """Tie-corrected Friedman test (module comment). Plan: corpus
     collapses to the (day, type) grid once; ranks are per-day windows
     over k=5 rows; everything downstream is k- or 1-row-sized."""
+    # Not day_counts: its column names drop the `event_type AS t`
+    # projections and so change this plan's operator counts.
     ev = load(spark, d, "events")
     daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d"),
-        F.col("event_type").alias("t"),
+        day_idx().alias("d"), F.col("event_type").alias("t")
     ).agg(F.count(F.lit(1)).alias("c"))
     days = daily.select("d").distinct()
     types = daily.select("t").distinct()
@@ -262,10 +259,9 @@ def q_behavior_uplift(spark, d):
 # earlier day. Bucket = 3 days: the fixture's event stream spans ~30
 # days, so 30-day buckets would leave no interior bucket at all.
 
-_LTTB_ORACLE = """
+_LTTB_ORACLE = f"""
     WITH daily AS (
-      SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS d,
+      SELECT {DAY_IDX_SQL} AS d,
              CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
                   AS BIGINT) AS y
       FROM events GROUP BY d
@@ -304,11 +300,7 @@ def q_ts_lttb(spark, d):
     Plan: corpus -> calendar-bounded daily grain, bucket stats join
     (bucket-count-sized), one bucket-partitioned pick window."""
     ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d")
-    ).agg(
+    daily = ev.groupBy(day_idx().alias("d")).agg(
         F.sum(F.expr("cast(floor(value * 100 + 0.5) as bigint)")).alias(
             "y"
         )

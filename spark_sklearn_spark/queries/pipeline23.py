@@ -27,6 +27,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56, sql_h56
+from .behavior import DAY_IDX_SQL, day_idx
 from .fits import KM_CONT_CTE, KM_FIT_CTES, km_contingency
 
 # --------------------------------------------------------------------------
@@ -288,8 +289,7 @@ _BOLL_W = 7
 _BOLL_ORACLE = f"""
     WITH daily AS (
       SELECT event_type AS t,
-             CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS d,
+             {DAY_IDX_SQL} AS d,
              CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
                   AS BIGINT) AS y
       FROM events GROUP BY t, d
@@ -336,9 +336,7 @@ def q_ts_bollinger(spark, d):
     ev = load(spark, d, "events")
     daily = ev.groupBy(
         F.col("event_type").alias("t"),
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d"),
+        day_idx().alias("d"),
     ).agg(
         F.sum(F.expr("cast(floor(value * 100 + 0.5) as bigint)")).alias(
             "y"

@@ -26,6 +26,7 @@ from pyspark.sql import Window, functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import h56, sql_h56
+from .behavior import DAY_COUNTS_CTE, day_counts
 from .fits import KM_CONT_CTE, KM_FIT_CTES, km_contingency
 
 # --------------------------------------------------------------------------
@@ -238,18 +239,18 @@ def q_dq_table_checksum(spark, d):
 def _esd_round_sql(t: int, excl: str) -> str:
     return f"""
     m{t} AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(y) AS BIGINT) AS s,
-             CAST(SUM(y * y) AS BIGINT) AS q
-      FROM daily WHERE d NOT IN ({excl})
+      SELECT CAST(COUNT(*) AS BIGINT) AS nd,
+             CAST(SUM(n) AS BIGINT) AS s,
+             CAST(SUM(n * n) AS BIGINT) AS q
+      FROM daily WHERE day_idx NOT IN ({excl})
     ),
     pick{t} AS (
-      SELECT d, y, n, s, q FROM (
-        SELECT dd.d, dd.y, m.n, m.s, m.q,
+      SELECT day_idx, n, nd, s, q FROM (
+        SELECT dd.day_idx, dd.n, m.nd, m.s, m.q,
                ROW_NUMBER() OVER (
-                 ORDER BY abs(m.n * dd.y - m.s) DESC, dd.d) AS rk
+                 ORDER BY abs(m.nd * dd.n - m.s) DESC, dd.day_idx) AS rk
         FROM daily dd CROSS JOIN m{t} m
-        WHERE dd.d NOT IN ({excl})
+        WHERE dd.day_idx NOT IN ({excl})
       ) WHERE rk = 1
     )
 """
@@ -257,26 +258,22 @@ def _esd_round_sql(t: int, excl: str) -> str:
 
 def _esd_out_sql(t: int) -> str:
     return f"""
-    SELECT {t} AS round, d AS day_num, y,
+    SELECT {t} AS round, day_idx AS day_num, n AS y,
            CAST(floor(
-             abs(CAST(y AS DOUBLE) - CAST(s AS DOUBLE) / n)
-             / sqrt((CAST(n AS DOUBLE) * q - CAST(s AS DOUBLE) * s)
-                    / (CAST(n AS DOUBLE) * n))
+             abs(CAST(n AS DOUBLE) - CAST(s AS DOUBLE) / nd)
+             / sqrt((CAST(nd AS DOUBLE) * q - CAST(s AS DOUBLE) * s)
+                    / (CAST(nd AS DOUBLE) * nd))
              * 1000000.0) AS BIGINT) AS z_micro
     FROM pick{t}
 """
 
 
 _ESD_ORACLE = f"""
-    WITH daily AS (
-      SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS d,
-             CAST(COUNT(*) AS BIGINT) AS y
-      FROM events GROUP BY d
-    ),
+    WITH {DAY_COUNTS_CTE},
     {_esd_round_sql(1, "-1")},
-    {_esd_round_sql(2, "SELECT d FROM pick1")},
-    {_esd_round_sql(3, "SELECT d FROM pick1 UNION ALL SELECT d FROM pick2")}
+    {_esd_round_sql(2, "SELECT day_idx FROM pick1")},
+    {_esd_round_sql(3, "SELECT day_idx FROM pick1 UNION ALL "
+                       "SELECT day_idx FROM pick2")}
     {_esd_out_sql(1)}
     UNION ALL {_esd_out_sql(2)}
     UNION ALL {_esd_out_sql(3)}
@@ -289,39 +286,36 @@ def q_ts_esd(spark, d):
     """3 unrolled ESD outlier-removal rounds (module comment). The
     corpus collapses to the calendar-bounded daily grain once; each
     round is one 1-row moment agg + one argmax over that grain."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d")
-    ).agg(F.count(F.lit(1)).alias("y"))
+    daily = day_counts(spark, d)
     excl: list[int] = []
     out_rows = []
     for t in (1, 2, 3):
-        rem = daily.filter(~F.col("d").isin(excl)) if excl else daily
+        rem = daily.filter(~F.col("day_idx").isin(excl)) if excl else daily
         m = rem.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("y").alias("s"),
-            F.sum(F.col("y") * F.col("y")).alias("q"),
+            F.count(F.lit(1)).alias("nd"),
+            F.sum("n").alias("s"),
+            F.sum(F.col("n") * F.col("n")).alias("q"),
         )
         row = (
             rem.crossJoin(F.broadcast(m))
             .withColumn(
-                "crit", F.abs(F.col("n") * F.col("y") - F.col("s"))
+                "crit", F.abs(F.col("nd") * F.col("n") - F.col("s"))
             )
-            .orderBy(F.desc("crit"), "d")
+            .orderBy(F.desc("crit"), "day_idx")
             .limit(1)
             .collect()[0]
         )
-        excl.append(int(row.d))
+        excl.append(int(row.day_idx))
         import math
 
-        n, s, q = int(row.n), int(row.s), int(row.q)
+        nd, s, q = int(row.nd), int(row.s), int(row.q)
         z = (
-            abs(float(row.y) - float(s) / n)
-            / math.sqrt((float(n) * q - float(s) * s) / (float(n) * n))
+            abs(float(row.n) - float(s) / nd)
+            / math.sqrt((float(nd) * q - float(s) * s) / (float(nd) * nd))
         )
-        out_rows.append((t, int(row.d), int(row.y), math.floor(z * 1e6)))
+        out_rows.append(
+            (t, int(row.day_idx), int(row.n), math.floor(z * 1e6))
+        )
     return spark.createDataFrame(
         out_rows, "round int, day_num bigint, y bigint, z_micro bigint"
     ).orderBy("round")

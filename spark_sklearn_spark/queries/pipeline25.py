@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load, warehouse_path
+from .behavior import DAY_IDX_SQL, day_idx
 
 # --------------------------------------------------------------------------
 # Granger causality, lag 1
@@ -67,8 +68,7 @@ _GRANGER_SOLVE = """
 
 _GRANGER_ORACLE = f"""
     WITH daily AS (
-      SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS d,
+      SELECT {DAY_IDX_SQL} AS d,
              CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1
                            ELSE 0 END) AS BIGINT) AS yp,
              CAST(SUM(CASE WHEN event_type = 'click' THEN 1
@@ -111,11 +111,7 @@ def q_ts_granger(spark, d):
     self-join on the calendar, one 10-moment agg, pure expression
     math after."""
     ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d")
-    ).agg(
+    daily = ev.groupBy(day_idx().alias("d")).agg(
         F.sum(
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("yp"),

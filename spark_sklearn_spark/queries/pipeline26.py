@@ -22,6 +22,7 @@ from pyspark.sql import Window, functions as F
 
 from ..registry import query
 from ..sources.io import load
+from .behavior import DAY_COUNTS_CTE, day_counts
 
 # --------------------------------------------------------------------------
 # Kruskal-Wallis across weekdays
@@ -35,17 +36,12 @@ from ..sources.io import load
 # correction divides by 1 − Σ(t³−t)/(N³−N). Every sum is an exact
 # integer; the closing chain is identical IEEE on both engines.
 
-_KW_ORACLE = """
-    WITH daily AS (
-      SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS d,
-             CAST(COUNT(*) AS BIGINT) AS y
-      FROM events GROUP BY d
-    ),
+_KW_ORACLE = f"""
+    WITH {DAY_COUNTS_CTE},
     ranked AS (
-      SELECT d % 7 AS dow, y,
-             RANK() OVER (ORDER BY y) AS rk,
-             CAST(COUNT(*) OVER (PARTITION BY y) AS BIGINT) AS eq
+      SELECT day_idx % 7 AS dow, n,
+             RANK() OVER (ORDER BY n) AS rk,
+             CAST(COUNT(*) OVER (PARTITION BY n) AS BIGINT) AS eq
       FROM daily
     ),
     r2s AS (SELECT dow, 2 * rk + eq - 1 AS r2, eq FROM ranked),
@@ -56,8 +52,8 @@ _KW_ORACLE = """
     ),
     ties AS (
       SELECT CAST(SUM(eq * eq * eq - eq) AS BIGINT) AS t3
-      FROM (SELECT y, CAST(COUNT(*) AS BIGINT) AS eq
-            FROM daily GROUP BY y)
+      FROM (SELECT n, CAST(COUNT(*) AS BIGINT) AS eq
+            FROM daily GROUP BY n)
     ),
     tot AS (
       -- per-group terms quantize to DECIMAL before the cross-group
@@ -84,16 +80,11 @@ def q_ml_kruskal(spark, d):
     """Tie-corrected Kruskal-Wallis across weekdays (module comment).
     The corpus collapses to the calendar-bounded daily grain once;
     ranks, group sums, and the H chain all run on that grain."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d")
-    ).agg(F.count(F.lit(1)).alias("y"))
-    w_rank = Window.orderBy("y")
-    w_eq = Window.partitionBy("y")
+    daily = day_counts(spark, d)
+    w_rank = Window.orderBy("n")
+    w_eq = Window.partitionBy("n")
     r2s = daily.select(
-        (F.col("d") % 7).alias("dow"),
+        (F.col("day_idx") % 7).alias("dow"),
         (
             2 * F.rank().over(w_rank)
             + F.count(F.lit(1)).over(w_eq)
@@ -106,7 +97,7 @@ def q_ml_kruskal(spark, d):
         F.count(F.lit(1)).alias("n_g"), F.sum("r2").alias("s2")
     )
     ties = (
-        daily.groupBy("y")
+        daily.groupBy("n")
         .agg(F.count(F.lit(1)).alias("eq"))
         .agg(
             F.sum(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
+from .behavior import TYPE_DAY_COUNTS_CTE, day_counts
 from .bigrams import NEAR_DUP_SYM_CTES, near_dup_sym
 
 # --------------------------------------------------------------------------
@@ -246,13 +247,7 @@ SAX_W = 4  # days per PAA window
 SAX_ALPHA = 4  # alphabet size (quartile symbols a-d)
 
 _SAX_ORACLE = f"""
-    WITH daily AS (
-      SELECT event_type,
-             CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS day_idx,
-             COUNT(*) AS n
-      FROM events GROUP BY event_type, day_idx
-    ),
+    WITH {TYPE_DAY_COUNTS_CTE},
     paa AS (
       SELECT event_type, day_idx // {SAX_W} AS win,
              CAST(SUM(n) * 1000000 // COUNT(*) AS BIGINT) AS paa_micro
@@ -290,13 +285,7 @@ def q_ts_sax(spark, d):
     index for time series the way MinHash is for text."""
     from ..operators.ranking import distributed_ntile
 
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("day_idx"),
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = day_counts(spark, d, by=("event_type",))
     paa = daily.groupBy(
         "event_type", F.expr(f"day_idx div {SAX_W}").alias("win")
     ).agg(F.expr("sum(n) * 1000000L div count(*)").alias("paa_micro"))
@@ -421,13 +410,7 @@ PEAK_MIN_PROM = 5  # minimum count prominence to report
 
 
 _PEAKS_ORACLE = f"""
-    WITH daily AS (
-      SELECT event_type,
-             CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS day_idx,
-             COUNT(*) AS n
-      FROM events GROUP BY event_type, day_idx
-    ),
+    WITH {TYPE_DAY_COUNTS_CTE},
     ctx AS (
       SELECT event_type, day_idx, n,
              lag(n) OVER w AS np, lead(n) OVER w AS nn
@@ -456,13 +439,7 @@ def q_ts_peaks(spark, d):
     calendar-bounded daily grain."""
     from pyspark.sql import Window as W
 
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("day_idx"),
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = day_counts(spark, d, by=("event_type",))
     w = W.partitionBy("event_type").orderBy("day_idx")
     ctx = daily.select(
         "event_type",

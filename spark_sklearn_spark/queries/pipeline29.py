@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC
+from .behavior import DAY_COUNTS_CTE, day_counts
 
 # --------------------------------------------------------------------------
 # Isotonic (PAV) calibration on value-decile bins
@@ -257,12 +258,7 @@ def _periodogram_oracle() -> str:
           FROM daily""")
     union = " UNION ALL ".join(rows)
     return f"""
-        WITH daily AS (
-          SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                     AS day_idx,
-                 COUNT(*) AS n
-          FROM events GROUP BY day_idx
-        )
+        WITH {DAY_COUNTS_CTE}
         SELECT * FROM ({union}) ORDER BY period
     """
 
@@ -274,12 +270,7 @@ def q_ts_periodogram(spark, d):
     floor, relative to total^2, as floor-micro. One combinable
     daily-grain collapse; each period is one more agg over the
     calendar-bounded relation with folded trig literals."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("day_idx")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = day_counts(spark, d)
     outs = []
     for p in PERIODS:
         c = _trig_case("day_idx", p, math.cos)

@@ -32,7 +32,15 @@ from ..functions.vectors import sq_dist
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC, h56, sql_h56
-from .behavior import TRANSITIONS_CTES, transitions
+from .behavior import (
+    DAY_COUNTS_CTE,
+    DAY_IDX_SQL,
+    TRANSITIONS_CTES,
+    TYPE_DAY_COUNTS_CTE,
+    day_counts,
+    day_idx,
+    transitions,
+)
 from .bigrams import (
     NEAR_DUP_DEG_CTES,
     degrees,
@@ -593,18 +601,13 @@ LB_LAGS = 7  # test lags 1..7 (one weekly cycle)
 
 
 _LB_ORACLE = f"""
-    WITH daily AS (
-      SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS day_idx,
-             CAST(COUNT(*) AS BIGINT) AS x
-      FROM events GROUP BY day_idx
-    ),
+    WITH {DAY_COUNTS_CTE},
     tot AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS s
+      SELECT CAST(COUNT(*) AS BIGINT) AS nd, CAST(SUM(n) AS BIGINT) AS s
       FROM daily
     ),
     den AS (
-      SELECT CAST(SUM((t.n * d.x - t.s) * (t.n * d.x - t.s)) AS BIGINT)
+      SELECT CAST(SUM((t.nd * d.n - t.s) * (t.nd * d.n - t.s)) AS BIGINT)
                  AS den
       FROM daily d CROSS JOIN tot t
     ),
@@ -612,7 +615,7 @@ _LB_ORACLE = f"""
     num AS (
       SELECT l.k,
              CAST(COUNT(*) AS BIGINT) AS n_pairs,
-             CAST(SUM((t.n * a.x - t.s) * (t.n * b.x - t.s)) AS BIGINT)
+             CAST(SUM((t.nd * a.n - t.s) * (t.nd * b.n - t.s)) AS BIGINT)
                  AS num
       FROM daily a
       JOIN lags l ON true
@@ -623,12 +626,12 @@ _LB_ORACLE = f"""
     rho AS (
       SELECT k, n_pairs,
              CAST((num * 1000000) // den AS BIGINT) AS rho_micro,
-             t.n AS n
+             t.nd AS nd
       FROM num CROSS JOIN den CROSS JOIN tot t
     )
     SELECT k, n_pairs, rho_micro,
-           CAST(n * (n + 2)
-                * SUM((rho_micro * rho_micro) // (n - k))
+           CAST(nd * (nd + 2)
+                * SUM((rho_micro * rho_micro) // (nd - k))
                   OVER (ORDER BY k) AS BIGINT) AS lb_q_scaled
     FROM rho
     ORDER BY k
@@ -657,27 +660,22 @@ def q_ts_ljung_box(spark, d):
     Shape: corpus collapses to the calendar-bounded daily grain first
     (one combinable agg); everything after — lag self-join, moment
     sums, the 7-row cumulative window — runs on that bounded series."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("day_idx")
-    ).agg(F.count(F.lit(1)).alias("x"))
+    daily = day_counts(spark, d)
     tot = daily.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
+        F.count(F.lit(1)).alias("nd"), F.sum("n").alias("s")
     ).withColumn("j", F.lit(1))
     dj = daily.withColumn("j", F.lit(1)).join(F.broadcast(tot), "j")
     den = (
         dj.agg(
             F.sum(
-                (F.col("n") * F.col("x") - F.col("s"))
-                * (F.col("n") * F.col("x") - F.col("s"))
+                (F.col("nd") * F.col("n") - F.col("s"))
+                * (F.col("nd") * F.col("n") - F.col("s"))
             ).alias("den")
         )
     ).withColumn("j", F.lit(1))
     lags = spark.range(1, LB_LAGS + 1).select(F.col("id").alias("k"))
-    a = dj.select("day_idx", F.col("x").alias("xa"), "n", "s")
-    b = daily.select(F.col("day_idx").alias("dj_idx"), F.col("x").alias("xb"))
+    a = dj.select("day_idx", F.col("n").alias("xa"), "nd", "s")
+    b = daily.select(F.col("day_idx").alias("dj_idx"), F.col("n").alias("xb"))
     num = (
         a.crossJoin(F.broadcast(lags))
         .join(b, F.col("dj_idx") == F.col("day_idx") + F.col("k"))
@@ -685,10 +683,10 @@ def q_ts_ljung_box(spark, d):
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum(
-                (F.col("n") * F.col("xa") - F.col("s"))
-                * (F.col("n") * F.col("xb") - F.col("s"))
+                (F.col("nd") * F.col("xa") - F.col("s"))
+                * (F.col("nd") * F.col("xb") - F.col("s"))
             ).alias("num"),
-            F.first("n").alias("n"),
+            F.first("nd").alias("nd"),
         )
     )
     rho = (
@@ -698,7 +696,7 @@ def q_ts_ljung_box(spark, d):
             "k",
             "n_pairs",
             F.expr("num * 1000000L div den").alias("rho_micro"),
-            "n",
+            "nd",
         )
     )
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
@@ -707,10 +705,10 @@ def q_ts_ljung_box(spark, d):
         "n_pairs",
         "rho_micro",
         (
-            F.col("n")
-            * (F.col("n") + 2)
+            F.col("nd")
+            * (F.col("nd") + 2)
             * F.sum(
-                F.expr("(rho_micro * rho_micro) div (n - k)")
+                F.expr("(rho_micro * rho_micro) div (nd - k)")
             ).over(w)
         )
         .cast("long")
@@ -723,16 +721,10 @@ def q_ts_ljung_box(spark, d):
 # --------------------------------------------------------------------------
 
 
-_PE_ORACLE = """
-    WITH daily AS (
-      SELECT event_type,
-             CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS day_idx,
-             CAST(COUNT(*) AS BIGINT) AS x
-      FROM events GROUP BY event_type, day_idx
-    ),
+_PE_ORACLE = f"""
+    WITH {TYPE_DAY_COUNTS_CTE},
     triples AS (
-      SELECT a.event_type, a.x AS x0, b.x AS x1, c.x AS x2
+      SELECT a.event_type, a.n AS x0, b.n AS x1, c.n AS x2
       FROM daily a
       JOIN daily b ON b.event_type = a.event_type
                   AND b.day_idx = a.day_idx + 1
@@ -786,21 +778,15 @@ def q_ts_permutation_entropy(spark, d):
     closing expression is identical IEEE then floor-micro. Shape:
     calendar-bounded daily agg → two +1/+2 self-joins on the tiny
     grain → 6-cell pattern agg per type."""
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("day_idx"),
-    ).agg(F.count(F.lit(1)).alias("x"))
-    a = daily.select("event_type", "day_idx", F.col("x").alias("x0"))
+    daily = day_counts(spark, d, by=("event_type",))
+    a = daily.select("event_type", "day_idx", F.col("n").alias("x0"))
     b = daily.select(
         "event_type", (F.col("day_idx") - 1).alias("day_idx"),
-        F.col("x").alias("x1"),
+        F.col("n").alias("x1"),
     )
     c = daily.select(
         "event_type", (F.col("day_idx") - 2).alias("day_idx"),
-        F.col("x").alias("x2"),
+        F.col("n").alias("x2"),
     )
     pats = (
         a.join(b, ["event_type", "day_idx"])
@@ -950,15 +936,11 @@ XCF_B = "purchase"
 
 _XCF_ORACLE = f"""
     WITH dx AS (
-      SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS day_idx,
-             CAST(COUNT(*) AS BIGINT) AS x
+      SELECT {DAY_IDX_SQL} AS day_idx, CAST(COUNT(*) AS BIGINT) AS x
       FROM events WHERE event_type = '{XCF_A}' GROUP BY day_idx
     ),
     dy AS (
-      SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                 AS day_idx,
-             CAST(COUNT(*) AS BIGINT) AS y
+      SELECT {DAY_IDX_SQL} AS day_idx, CAST(COUNT(*) AS BIGINT) AS y
       FROM events WHERE event_type = '{XCF_B}' GROUP BY day_idx
     ),
     mx AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1022,11 +1004,7 @@ def q_ts_cross_correlation(spark, d):
     def daily(t, col):
         return (
             ev.filter(F.col("event_type") == t)
-            .groupBy(
-                F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-                .cast("long")
-                .alias("day_idx")
-            )
+            .groupBy(day_idx().alias("day_idx"))
             .agg(F.count(F.lit(1)).alias(col))
         )
 

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
-from .behavior import DAILY_COUNTS_CTE
+from .behavior import DAILY_COUNTS_CTE, DAY_COUNTS_CTE, day_counts
 from .bigrams import (
     NEAR_DUP_DEG_CTES,
     NEAR_DUP_SYM_CTES,
@@ -539,12 +539,7 @@ def _spectrum_oracle() -> str:
           FROM daily""")
     union = " UNION ALL ".join(rows)
     return f"""
-        WITH daily AS (
-          SELECT CAST(date_diff('day', DATE '1970-01-01', ts) AS BIGINT)
-                     AS day_idx,
-                 COUNT(*) AS n
-          FROM events GROUP BY day_idx
-        ),
+        WITH {DAY_COUNTS_CTE},
         spec AS (SELECT * FROM ({union})),
         dom AS (
           SELECT period, r FROM spec ORDER BY r DESC, period LIMIT 1
@@ -582,12 +577,7 @@ def q_ts_spectral_entropy(spark, d):
     from .pipeline29 import _trig_case
     from ._helpers import DEC
 
-    ev = load(spark, d, "events")
-    daily = ev.groupBy(
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("day_idx")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = day_counts(spark, d)
     aggs = [F.sum("n").cast("double").alias("tot")]
     for p in _SPECTRUM_PERIODS:
         c = _trig_case("day_idx", p, math.cos)

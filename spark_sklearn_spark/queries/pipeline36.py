@@ -70,6 +70,7 @@ from pyspark.sql import Window, functions as F
 
 from ..registry import query
 from ..sources.io import load, snapshot, write_parquet
+from .behavior import DAY_IDX_SQL, day_idx
 from .bigrams import BIGRAMS_SQL, rare_grams
 from .pipeline6 import SESSION_GAP_US
 from .fits import LR_BINS_CTES, lr_decile_bins
@@ -559,10 +560,10 @@ def q_dedup_containment_idf(spark, d):
 # micro. Pair fan-out is calendar-bounded (≤n²/type per year), the
 # q_ts_theilsen shape.
 
-_MANN_KENDALL_ORACLE = """
+_MANN_KENDALL_ORACLE = f"""
     WITH daily AS (
       SELECT event_type,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400 AS d,
+             {DAY_IDX_SQL} AS d,
              CAST(floor(SUM(CAST(value AS DECIMAL(30,10))) * 100)
                   AS BIGINT) AS c
       FROM events
@@ -626,8 +627,7 @@ def q_ts_mann_kendall(spark, d):
     ev = load(spark, d, "events")
     daily = ev.groupBy(
         "event_type",
-        F.expr("cast(date_trunc('day', ts) as long) div 86400")
-        .alias("dd"),
+        day_idx().alias("dd"),
     ).agg(
         F.expr(
             "CAST(floor(SUM(CAST(value AS DECIMAL(30,10))) * 100)"
@@ -709,7 +709,7 @@ SMA_LONG = 7
 _SMA_CROSS_ORACLE = f"""
     WITH daily AS (
       SELECT event_type,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400 AS d,
+             {DAY_IDX_SQL} AS d,
              CAST(floor(SUM(CAST(value AS DECIMAL(30,10))) * 100)
                   AS BIGINT) AS c
       FROM events
@@ -773,8 +773,7 @@ def q_ts_sma_cross(spark, d):
     ev = load(spark, d, "events")
     daily = ev.groupBy(
         "event_type",
-        F.expr("cast(date_trunc('day', ts) as long) div 86400")
-        .alias("dd"),
+        day_idx().alias("dd"),
     ).agg(
         F.expr(
             "CAST(floor(SUM(CAST(value AS DECIMAL(30,10))) * 100)"
@@ -949,7 +948,7 @@ _DF_BETA_EXPR = (
 _DICKEY_FULLER_ORACLE = f"""
     WITH daily AS (
       SELECT event_type,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400 AS d,
+             {DAY_IDX_SQL} AS d,
              CAST(floor(SUM(CAST(value AS DECIMAL(30,10))))
                   AS BIGINT) AS y
       FROM events
@@ -998,8 +997,7 @@ def q_ts_dickey_fuller(spark, d):
     ev = load(spark, d, "events")
     daily = ev.groupBy(
         "event_type",
-        F.expr("cast(date_trunc('day', ts) as long) div 86400")
-        .alias("dd"),
+        day_idx().alias("dd"),
     ).agg(
         F.expr(
             "CAST(floor(SUM(CAST(value AS DECIMAL(30,10))))"

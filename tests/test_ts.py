@@ -263,3 +263,96 @@ def test_dickey_fuller_replays_from_moments(spark, sf_dir):
             assert r.df_t_micro is None
         else:
             assert r.df_t_micro == math.floor(beta / rt * 1000000)
+
+
+# Keys that read behavior.py's day index, day counts or day revenue.
+DAILY_SERIES_KEYS = (
+    "q_ts_autocorr", "q_ts_backtest", "q_ts_pacf", "q_ts_esd",
+    "q_ml_kruskal", "q_ts_periodogram", "q_ts_ljung_box",
+    "q_ts_spectral_entropy", "q_ts_sax", "q_ts_peaks",
+    "q_ts_permutation_entropy", "q_ml_friedman", "q_behavior_lifecycle",
+    "q_ts_lttb", "q_ts_bollinger", "q_ts_granger", "q_ts_theilsen",
+    "q_behavior_stickiness", "q_win_gaps_islands", "q_ts_mann_kendall",
+    "q_ts_sma_cross", "q_ts_dickey_fuller", "q_ts_cross_correlation",
+    "q_ts_changepoint", "q_ml_spearman", "q_ml_kendall", "q_ts_hurst",
+)
+
+
+def _day_edge_events():
+    """54 events over 2024-01-01..14 with no event on 01-08, in three
+    event types; 01-10 is a spike of 8 views. Day 01-01 ends with an
+    event at 23:59:59.999999 and day 01-02 starts with one at exactly
+    midnight, the two instants a day key that rounds or shifts by a
+    microsecond puts on the wrong day."""
+    import pandas as pd
+
+    per_day = [5, 3, 4, 6, 2, 4, 5, 0, 3, 8, 4, 2, 5, 3]
+    types = ("view", "click", "purchase")
+    boundary = {
+        4: pd.Timestamp("2024-01-01 23:59:59.999999"),
+        5: pd.Timestamp("2024-01-02 00:00:00"),
+    }
+    rows = []
+    for day, n in enumerate(per_day):
+        for _ in range(n):
+            k = len(rows)
+            ts = pd.Timestamp(2024, 1, day + 1) + pd.Timedelta(
+                hours=(5 * k) % 24, minutes=(7 * k) % 60
+            )
+            t = "view" if day == 9 else types[(k + day) % 3]
+            rows.append(
+                (k, boundary.get(k, ts), k % 5, t, (37 * k) % 100 / 4)
+            )
+    return pd.DataFrame(
+        rows, columns=["event_id", "ts", "user_id", "event_type", "value"]
+    ).assign(props="{}").astype({"ts": "datetime64[us]"})
+
+
+def test_daily_series_sides_agree(spark, sf_dir, duck, tmp_path):
+    """behavior.py's day index and day counts give the same relation on
+    both engines across a midnight boundary, and every key reading the
+    daily series matches its oracle at sf_dir and on _day_edge_events."""
+    import sys
+    from collections import Counter
+    from pathlib import Path
+
+    import duckdb
+
+    from spark_sklearn_spark.queries.behavior import (
+        DAY_COUNTS_CTE,
+        DAY_IDX_SQL,
+        TYPE_DAY_COUNTS_CTE,
+        day_counts,
+        day_idx,
+    )
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from check import check_query
+
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    ev = _day_edge_events()
+    ev.to_parquet(tmp_path / "events.parquet")
+    edge = str(tmp_path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{edge}/events.parquet')"
+    )
+
+    counts = {}
+    for by, cte in (((), DAY_COUNTS_CTE), (("event_type",), TYPE_DAY_COUNTS_CTE)):
+        counts[by] = sorted(tuple(r) for r in day_counts(spark, edge, by).collect())
+        d_rows = sorted(con.execute(f"WITH {cte} SELECT * FROM daily").fetchall())
+        assert counts[by] == d_rows, by
+    days = ev.ts.values.astype("datetime64[D]").astype("int64").tolist()
+    assert counts[()] == sorted(Counter(days).items())
+
+    lits = "TIMESTAMP '2024-01-01 23:59:59.999999', TIMESTAMP '2024-01-02'"
+    s_days = spark.sql(f"SELECT explode(array({lits})) AS ts").select(day_idx())
+    assert [r[0] for r in s_days.collect()] == [19723, 19724]
+    d_days = con.execute(f"SELECT {DAY_IDX_SQL} FROM (SELECT unnest([{lits}]) AS ts)")
+    assert [r[0] for r in d_days.fetchall()] == [19723, 19724]
+
+    for d, c in ((sf_dir, duck), (edge, con)):
+        for k in DAILY_SERIES_KEYS:
+            ok, msg = check_query(k, qs[k], oracles[k], spark, c, d)
+            assert ok and msg != "OK (0 rows)", (k, d, msg)

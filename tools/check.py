@@ -13,12 +13,15 @@ Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import date, datetime
 from decimal import Decimal
 
 import duckdb
 import numpy as np
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -126,7 +129,12 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    # the checkout root goes on the driver's sys.path and, before the
+    # session starts, on PYTHONPATH, so Python workers import the package
+    sys.path.insert(0, ROOT)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as e
     from spark_sklearn_spark.session import createLocalSparkSession
 

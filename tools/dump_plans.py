@@ -8,7 +8,10 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 NOTES = {
     "q_agg_hash": (
@@ -614,7 +617,12 @@ NOTES = {
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sys.path.insert(0, "/root/repo")
+    # the checkout root goes on the driver's sys.path and, before the
+    # session starts, on PYTHONPATH, so Python workers import the package
+    sys.path.insert(0, ROOT)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as e
     from spark_sklearn_spark.session import createLocalSparkSession
 
@@ -635,7 +643,7 @@ def main() -> None:
             df.explain("formatted")
         tree = buf.getvalue().split("\n\n")[0]
         out += [f"## {name}", "", note, "", "```", tree.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(NOTES)} plans)")
 

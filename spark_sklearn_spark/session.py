@@ -3,8 +3,11 @@
 Parity: ``python/spark_sklearn/util.py#createLocalSparkSession``
 (SURVEY.md §2A row A11) — the reference ships a convenience builder
 for a local SparkSession; ours additionally pins the configs required
-for oracle parity (UTC session timezone, Arrow on) and for local-mode
-efficiency (AQE, shuffle partitions ≈ cores).
+for oracle parity (UTC session timezone, Arrow on, parquet nanos read
+as long) and for engine efficiency (AQE with partition coalescing and
+skew joins, 32 shuffle partitions, a 64 MB broadcast threshold, a
+generated-class cache of 1000 entries, driver memory from
+``$SPARK_DRIVER_MEM`` or 24g, and the UI off).
 """
 
 from __future__ import annotations
@@ -45,6 +48,13 @@ def createLocalSparkSession(
         # still sets it defensively for foreign sessions (the driver
         # builds its own).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Spark caches 100 generated classes by default; one pass of
+        # perfbench's dedup_cvsearch_ingest generates ~174 distinct
+        # whole-stage sources (floor ~90), so each repeated pass
+        # evicted every class before its reuse and recompiled and
+        # re-JITted 113-170 of them. The cache is keyed on the source
+        # text, so its size changes no plan or result.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

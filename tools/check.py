@@ -125,6 +125,18 @@ def check_query(name, fn, sql, spark, con, sf_dir):
     return True, f"OK ({len(s_data)} rows)"
 
 
+def codegen_line(spark) -> str:
+    """Janino compilations and their total seconds in this JVM so far.
+
+    A sweep that recompiles more than its distinct generated sources is
+    evicting classes from Spark's codegen cache
+    (``spark.sql.codegen.cache.maxEntries``)."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return f"codegen: {n} Janino compilations, {ns / 1e9:.2f} s compiling"
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -164,6 +176,7 @@ def main():
         n_ok += ok
         n_fail += not ok
     print(f"\n{n_ok} declared PASS, {n_fail} FAIL, {n_rows_only} rows-only")
+    print(codegen_line(spark))
     sys.exit(1 if n_fail else 0)
 
 

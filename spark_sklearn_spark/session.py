@@ -50,9 +50,11 @@ def createLocalSparkSession(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Spark caches 100 generated classes by default; one pass of
         # perfbench's dedup_cvsearch_ingest generates ~174 distinct
-        # whole-stage sources (floor ~90), so each repeated pass
-        # evicted every class before its reuse and recompiled and
-        # re-JITted 113-170 of them. The cache is keyed on the source
+        # sources (floor ~90), so every warm pass recompiled and
+        # re-JITted 110-170 of them. A tools/check.py sweep generates
+        # ~5.6k, mostly used once: at 1000 it compiles 6.4k, so a cap
+        # that held them all would keep 5.6x as many classes alive to
+        # save 13% of its compiles. The cache is keyed on the source
         # text, so its size changes no plan or result.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )

@@ -23,6 +23,7 @@ def test_codegen_cache_holds_a_repeated_working_set(spark):
     run_round()
     first = _compilations(spark)
     run_round()
+    recompiled = _compilations(spark) - first
     assert first > before  # the counter sees this JVM's compilations
-    assert _compilations(spark) - first == 0
+    assert recompiled == 0
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"

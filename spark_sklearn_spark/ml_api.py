@@ -386,7 +386,7 @@ class KeyedEstimator:
         )
         schema = f"{key_schema}, __model binary"
 
-        def fit_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def fit_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             X = pdf[x_cols].to_numpy(dtype="float64")
             y = pdf[y_col].to_numpy(dtype="float64") if y_col else None
             model = fit_fn(X, y)

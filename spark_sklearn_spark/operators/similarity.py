@@ -95,7 +95,7 @@ def cosine_pairs(
 
     tau = float(threshold)
 
-    def one_task(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def one_task(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         task_id = key[0]
@@ -301,7 +301,7 @@ def mmr_rerank(
 
     kk, ll = int(k), float(lam)
 
-    def one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return pd.DataFrame(columns=["rank", "vec_id", "relevance", "mmr_score"])
         order0 = np.lexsort((pdf[id_col].to_numpy(), -pdf[rel_col].to_numpy()))

@@ -8,8 +8,9 @@ file re-read, not a postings join) and the DuckDB CTE chain each
 consumer's oracle replays. This module is the one home of both, layer
 by layer:
 
-- grams: ``rare_grams`` / ``BIGRAMS_SQL`` (words .. rare), the
-  DF-capped distinct bigrams per doc;
+- grams: ``rare_grams`` / ``BIGRAMS_SQL`` (grams, rare), the
+  DF-capped distinct bigrams per doc (grams.py); the SQL ``rare``
+  keeps the gram's ``df``;
 - pair overlap: ``bigram_overlap`` / ``BIGRAM_PAIRS_CTES`` (plus
   sizes, inter, and pairs with the rounded Jaccard), the postings
   self-join on the gram, fan-out bounded by ``DF_CAP``;
@@ -25,9 +26,10 @@ by layer:
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from ..sources.io import load, snapshot, write_parquet
+from .grams import df_capped, df_capped_sql, word_grams, word_grams_sql
 
 # Word bigrams present in more than DF_CAP documents are dropped from
 # BOTH sides (stop-gram removal): a gram in k docs fans out C(k,2)
@@ -41,15 +43,8 @@ DF_CAP = 100
 NEAR_DUP_TAU = 0.4
 
 BIGRAMS_SQL = f"""
-        words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        idx AS (SELECT doc_id, w, unnest(generate_series(1, len(w) - 1)) AS i
-                FROM words),
-        grams AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i + 1] AS g FROM idx),
-        rare AS (
-            SELECT doc_id, g FROM grams
-            WHERE g IN (SELECT g FROM grams GROUP BY g
-                        HAVING COUNT(*) <= {DF_CAP})
-        )
+        grams AS ({word_grams_sql("documents", 2)}),
+        rare AS ({df_capped_sql("grams", DF_CAP, with_df=True)})
 """
 
 # pairs mirrors bigram_overlap (doc_a < doc_b, c, na, nb) plus jacc
@@ -101,31 +96,8 @@ def rare_grams(spark, d, with_df=False):
     ``with_df=True`` keeps the per-gram document frequency the cap
     already computed (the IDF weighting tier, q_dedup_containment_idf,
     needs it; recomputing would cost a second shuffle on g)."""
-    docs = load(spark, d, "documents")
-    # Tokenize ONCE into a column (an embedded split() inside the
-    # interpreted transform re-runs per element — O(n²)/doc), and
-    # explode_outer (plain explode pushes a pruning filter that
-    # re-evaluates the whole gram transform inside the scan).
-    w = docs.select("doc_id", F.split("text", " ").alias("w")).filter(
-        F.size("w") >= 2
-    )
-    grams = w.select(
-        "doc_id",
-        F.explode_outer(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, size(w) - 1), "
-                    "  i -> concat(element_at(w, i), ' ', "
-                    "              element_at(w, i + 1)))"
-                )
-            )
-        ).alias("g"),
-    ).filter(F.col("g").isNotNull())
-    # window-count keeps the DF cap at one shuffle on g (vs agg+join = two)
-    capped = grams.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("g"))
-    ).filter(F.col("df") <= DF_CAP)
-    return capped if with_df else capped.drop("df")
+    grams = word_grams(load(spark, d, "documents"), 2)
+    return df_capped(grams, DF_CAP, with_df)
 
 
 def bigram_overlap(spark, d):

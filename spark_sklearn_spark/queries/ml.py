@@ -252,7 +252,7 @@ def _keyed_models(spark, d):
         F.size(F.split("text", " ")).cast("double").alias("x"),
     )
 
-    def fit_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         x = pdf["x"].to_numpy()
         y = pdf["n_chars"].to_numpy(dtype="float64")
         xm, ym = x.mean(), y.mean()

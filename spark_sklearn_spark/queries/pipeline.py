@@ -24,7 +24,8 @@ from ..operators.lsh import band_pairs, near_dup_pairs
 from ..operators.similarity import cosine_pairs, cosine_topk
 from ..registry import query
 from ..sources.io import load
-from ._helpers import h56
+from ._helpers import h56, sql_h56
+from .grams import word_grams, word_grams_sql
 from .shingles import (
     DUP_COMPONENTS_CTES,
     NEAR_DUP_J,
@@ -368,22 +369,7 @@ def simhash_sigs(spark, d):
     pipeline31). NOT persisted on purpose: Catalyst reuses the
     aggregation exchange across the band self-join (ReusedExchange);
     an explicit persist measured 2.3× slower (CLAUDE.md trap)."""
-    docs = load(spark, d, "documents")
-    w = docs.select("doc_id", F.split("text", " ").alias("w")).filter(
-        F.size("w") >= 3  # sequence(1, size-2) would DESCEND below 3 words
-    )
-    grams = w.select(
-        "doc_id",
-        F.explode_outer(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, size(w) - 2), "
-                    "  i -> concat_ws('_', element_at(w, i), "
-                    "       element_at(w, i + 1), element_at(w, i + 2)))"
-                )
-            )
-        ).alias("g"),
-    ).filter(F.col("g").isNotNull())
+    grams = word_grams(load(spark, d, "documents"), 3, sep="_")
     gh = grams.select(
         "doc_id",
         h56("g").alias("h"),
@@ -408,6 +394,25 @@ def simhash_sigs(spark, d):
     # pipeline runs once anyway; an explicit persist breaks that reuse
     # and measured 2.3× slower at sf0.1
     return counts.select("doc_id", sig_expr.alias("sig"))
+
+
+# sig mirrors simhash_sigs (doc_id, sig): grams -> gh -> bits -> sig
+SIMHASH_SIG_CTES = f"""grams AS ({word_grams_sql("documents", 3, sep="_")}
+        ), gh AS (
+          SELECT doc_id, {sql_h56("g")} AS h FROM grams
+        ), bits AS (
+          SELECT doc_id, b,
+                 COUNT(*) FILTER (WHERE ((h >> b) & 1) = 1) AS ones,
+                 COUNT(*) AS n
+          FROM gh, (SELECT unnest(generate_series(0, {SIMHASH_BITS - 1})) AS b)
+          GROUP BY doc_id, b
+        ), sig AS (
+          SELECT doc_id,
+                 CAST(SUM(CASE WHEN ones * 2 > n
+                               THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)
+                      AS BIGINT) AS sig
+          FROM bits GROUP BY doc_id
+        )"""
 
 
 def simhash_candidates(spark, d):
@@ -437,25 +442,7 @@ def simhash_candidates(spark, d):
 @query(
     "q_dedup_simhash",
     oracle=f"""
-        WITH {SHINGLES_SQL} , grams AS (
-          SELECT doc_id, unnest(shingles) AS g FROM sh
-        ), gh AS (
-          SELECT doc_id,
-                 CAST(('0x' || substr(md5(g), 1, 14)) AS BIGINT) AS h
-          FROM grams
-        ), bits AS (
-          SELECT doc_id, b,
-                 COUNT(*) FILTER (WHERE ((h >> b) & 1) = 1) AS ones,
-                 COUNT(*) AS n
-          FROM gh, (SELECT unnest(generate_series(0, {SIMHASH_BITS - 1})) AS b)
-          GROUP BY doc_id, b
-        ), sig AS (
-          SELECT doc_id,
-                 CAST(SUM(CASE WHEN ones * 2 > n
-                               THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)
-                      AS BIGINT) AS sig
-          FROM bits GROUP BY doc_id
-        )
+        WITH {SIMHASH_SIG_CTES}
         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
         FROM sig a JOIN sig b ON a.doc_id < b.doc_id

@@ -21,6 +21,7 @@ from pyspark.sql import Window, functions as F
 
 from ..registry import query
 from ..sources.io import load
+from .grams import word_grams, word_grams_sql
 from .shingles import DUP_COMPONENTS_CTES, dup_components
 
 
@@ -189,17 +190,12 @@ def q_emb_quantize(spark, d):
 
 @query(
     "q_text_ngram_counts",
-    oracle="""
-        WITH words AS (
-            SELECT lang, string_split(text, ' ') AS w FROM documents
-        ),
-        idx AS (
-            SELECT lang, w, unnest(generate_series(1, len(w) - 1)) AS i
-            FROM words WHERE len(w) >= 2
+    oracle=f"""
+        WITH grams AS (
+            {word_grams_sql("documents", 2, keys=("lang",), distinct=False)}
         ),
         counts AS (
-            SELECT lang, w[i] || ' ' || w[i + 1] AS gram, COUNT(*) AS n
-            FROM idx GROUP BY lang, gram
+            SELECT lang, g AS gram, COUNT(*) AS n FROM grams GROUP BY lang, g
         ),
         ranked AS (
             SELECT lang, gram, n,
@@ -221,23 +217,12 @@ def q_text_ngram_counts(spark, d):
     repeated grams before the exchange -- then a top-k window over the
     already-aggregated gram counts partitioned by lang. Ties pinned by
     (n DESC, gram) on both engines."""
-    docs = load(spark, d, "documents")
-    words = docs.select("lang", F.split("text", " ").alias("w")).filter(
-        F.size("w") >= 2
+    grams = word_grams(
+        load(spark, d, "documents"), 2, keys=("lang",), distinct=False
     )
-    # explode_outer + null-drop: plain explode pushes a pruning filter
-    # that re-evaluates the interpreted transform inside the scan (see
-    # q_decontaminate).
-    grams = words.select(
-        "lang",
-        F.explode_outer(
-            F.expr(
-                "transform(sequence(1, size(w) - 1), "
-                "i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))"
-            )
-        ).alias("gram"),
-    ).filter(F.col("gram").isNotNull())
-    counts = grams.groupBy("lang", "gram").agg(F.count(F.lit(1)).alias("n"))
+    counts = grams.groupBy("lang", F.col("g").alias("gram")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
     wr = Window.partitionBy("lang").orderBy(F.col("n").desc(), F.col("gram"))
     return (
         counts.withColumn("rn", F.row_number().over(wr))

@@ -53,7 +53,7 @@ from .bigrams import (
     near_dup_edges,
     near_dup_sym,
 )
-from .shingles import SHINGLES_SQL
+from .pipeline import SIMHASH_SIG_CTES, simhash_candidates
 
 # --------------------------------------------------------------------------
 # Yule–Simon (cumulative-advantage) fit of per-user activity
@@ -1210,25 +1210,7 @@ def q_graph_rich_club(spark, d):
 # declared semantics, not a hash risk.
 
 _SIMHASH_HIST_ORACLE = f"""
-    WITH {SHINGLES_SQL}, grams AS (
-      SELECT doc_id, unnest(shingles) AS g FROM sh
-    ), gh AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(g), 1, 14)) AS BIGINT) AS h
-      FROM grams
-    ), bits AS (
-      SELECT doc_id, b,
-             COUNT(*) FILTER (WHERE ((h >> b) & 1) = 1) AS ones,
-             COUNT(*) AS n
-      FROM gh, (SELECT unnest(generate_series(0, 55)) AS b)
-      GROUP BY doc_id, b
-    ), sig AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN ones * 2 > n
-                           THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)
-                  AS BIGINT) AS sig
-      FROM bits GROUP BY doc_id
-    ),
+    WITH {SIMHASH_SIG_CTES},
     cand AS (
       SELECT bit_count(xor(a.sig, b.sig)) AS hamming
       FROM sig a JOIN sig b ON a.doc_id < b.doc_id
@@ -1255,8 +1237,6 @@ def q_dedup_simhash_hist(spark, d):
     The oracle enumerates the identical candidate set via the
     ∃-equal-byte predicate over the O(n²) signature pairs (the
     semantic spec the banding equals by construction)."""
-    from .pipeline import simhash_candidates
-
     return (
         simhash_candidates(spark, d)
         .select(

@@ -449,15 +449,13 @@ CONTAIN_IDF_TAU_PPM = 600_000
 
 _CONTAINMENT_IDF_ORACLE = f"""
         WITH {BIGRAMS_SQL},
-        df AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS df
-               FROM rare GROUP BY g),
         nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
         wg AS (
           SELECT r.doc_id, r.g,
                  CAST(floor((ln(CAST(nd.n AS DOUBLE))
-                             - ln(CAST(d.df AS DOUBLE))) * 1000000)
+                             - ln(CAST(r.df AS DOUBLE))) * 1000000)
                       AS BIGINT) AS w
-          FROM rare r JOIN df d ON d.g = r.g CROSS JOIN nd
+          FROM rare r CROSS JOIN nd
         ),
         wsz AS (
           SELECT doc_id, CAST(SUM(w) AS BIGINT) AS wtot

@@ -25,6 +25,7 @@ from ..functions.vectors import as_double_array
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC
+from .grams import word_grams, word_grams_sql
 
 
 # --------------------------------------------------------------------------
@@ -132,38 +133,17 @@ def q_quality_gate(spark, d):
 DECON_BENCH_MOD = 97
 
 
-def _word_ngrams(tok_col, n_col, size: int):
-    """n-gram array over a token array, JVM-side. Guards the
-    `sequence(1, n-2)` descending-sequence trap for short docs."""
-    idx = F.when(
-        n_col >= size, F.sequence(F.lit(1), n_col - (size - 1))
-    ).otherwise(F.array())
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(tok_col, i + j) for j in range(size)]
-        ),
-    )
-
-
 @query(
     "q_decontaminate",
     oracle=f"""
-        WITH toks AS (
-          SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        ), tg AS (
-          SELECT doc_id,
-                 unnest(list_distinct(
-                   [w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                    for i in generate_series(1, len(w) - 2)])) AS ng
-          FROM toks
+        WITH tg AS ({word_grams_sql("documents", 3)}
         ), bench AS (
-          SELECT DISTINCT ng FROM tg WHERE doc_id % {DECON_BENCH_MOD} = 0
+          SELECT DISTINCT g FROM tg WHERE doc_id % {DECON_BENCH_MOD} = 0
         ), doc_sizes AS (
           SELECT doc_id, count(*) AS n_ngrams FROM tg GROUP BY doc_id
         ), hits AS (
-          SELECT t.doc_id, count(DISTINCT t.ng) AS n_shared
-          FROM tg t JOIN bench b USING (ng)
+          SELECT t.doc_id, count(DISTINCT t.g) AS n_shared
+          FROM tg t JOIN bench b USING (g)
           WHERE t.doc_id % {DECON_BENCH_MOD} <> 0
           GROUP BY t.doc_id
         )
@@ -197,37 +177,16 @@ def q_decontaminate(spark, d):
     measured 3× the single-pass wall at sf0.1. The benchmark branch
     itself prunes to the 1/{mod} doc slice below the explode, so its
     gram pass is ~1% of a corpus pass."""
-    docs = load(spark, d, "documents")
-    # Materialize the token array BEFORE the ngram transform: higher-
-    # order functions are interpreted with no CSE, so an embedded
-    # split() expression would re-tokenize the document once per
-    # element (O(n²) per doc). A column reference in the lambda is a
-    # pointer read.
-    w = docs.select("doc_id", F.split("text", " ").alias("__w"))
-    grams = w.select(
-        "doc_id",
-        F.array_distinct(
-            _word_ngrams(F.col("__w"), F.size("__w"), 3)
-        ).alias("ngs"),
-    )
-    # explode_outer, NOT explode: plain explode makes the optimizer
-    # push a `size(ngs) > 0 AND isnotnull(ngs)` pruning filter into the
-    # scan, re-evaluating the interpreted ngram transform per row with
-    # split() re-inlined per element — O(n²)/doc, 5× the query wall.
-    # outer explode needs no pruning predicate; drop the one null row
-    # per empty doc after the Generate instead.
-    tg = grams.select("doc_id", F.explode_outer("ngs").alias("ng")).filter(
-        F.col("ng").isNotNull()
-    )
+    tg = word_grams(load(spark, d, "documents"), 3)
     bench = (
         tg.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
-        .select("ng")
+        .select("g")
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
     return (
         tg.filter(F.col("doc_id") % DECON_BENCH_MOD != 0)
-        .join(F.broadcast(bench), "ng", "left")
+        .join(F.broadcast(bench), "g", "left")
         .groupBy("doc_id")
         .agg(
             F.count("__hit").alias("n_shared"),
@@ -499,7 +458,7 @@ def q_emb_dimstats(spark, d):
     emb = load(spark, d, "embeddings")
     # posexplode_outer + null-drop: plain posexplode pushes a pruning
     # filter that re-evaluates the interpreted cast-transform per row
-    # in the scan (see q_decontaminate).
+    # in the scan (see grams.word_grams).
     x = emb.select(
         F.posexplode_outer(as_double_array(F.col("embedding"))).alias(
             "dim", "v"

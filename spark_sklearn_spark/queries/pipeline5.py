@@ -26,6 +26,7 @@ from ..functions.vectors import as_double_array
 from ..registry import query
 from ..sources.io import load
 from ._helpers import DEC
+from .grams import word_grams, word_grams_sql
 
 # --------------------------------------------------------------------------
 # Sequence packing (context-window assembly)
@@ -191,17 +192,10 @@ def q_sample_temperature(spark, d):
 
 @query(
     "q_text_repetition",
-    oracle="""
-        WITH toks AS (
-          SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        ), tg AS (
-          SELECT doc_id,
-                 unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                         for i in generate_series(1, len(w) - 2)]) AS ng
-          FROM toks
-          WHERE len(w) >= 3
+    oracle=f"""
+        WITH tg AS ({word_grams_sql("documents", 3, distinct=False)}
         ), per AS (
-          SELECT doc_id, ng, count(*) AS cnt FROM tg GROUP BY doc_id, ng
+          SELECT doc_id, g, count(*) AS cnt FROM tg GROUP BY doc_id, g
         )
         SELECT doc_id,
                CAST(sum(cnt) AS BIGINT) AS n_grams,
@@ -224,25 +218,8 @@ def q_text_repetition(spark, d):
     ratio is a single IEEE division of exact integer counts. The
     sliding 3-gram build is a JVM-side transform over the token array
     (no per-element fold — O(n) per doc)."""
-    from .pipeline4 import _word_ngrams
-
-    docs = load(spark, d, "documents")
-    # tokenize ONCE into a column — an embedded split() inside the
-    # interpreted ngram lambda would re-run per element (O(n²)/doc)
-    w = docs.select("doc_id", F.split("text", " ").alias("__w")).filter(
-        F.size("__w") >= 3
-    )
-    # explode_outer + null-drop, not explode: see q_decontaminate —
-    # plain explode pushes a pruning filter that re-runs the
-    # interpreted ngram transform (with split() inlined per element)
-    # inside the scan.
-    tg = w.select(
-        "doc_id",
-        F.explode_outer(
-            _word_ngrams(F.col("__w"), F.size("__w"), 3)
-        ).alias("ng"),
-    ).filter(F.col("ng").isNotNull())
-    per = tg.groupBy("doc_id", "ng").agg(F.count(F.lit(1)).alias("cnt"))
+    tg = word_grams(load(spark, d, "documents"), 3, distinct=False)
+    per = tg.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("cnt"))
     return (
         per.groupBy("doc_id")
         .agg(
@@ -320,7 +297,7 @@ def q_emb_outliers(spark, d):
     emb = load(spark, d, "embeddings")
     # posexplode_outer + null-drop: plain posexplode pushes a pruning
     # filter that re-evaluates the interpreted cast-transform per row
-    # in the scan (see q_decontaminate).
+    # in the scan (see grams.word_grams).
     x = emb.select(
         "vec_id",
         "label",
@@ -665,16 +642,9 @@ BOILER_DF = 50  # a 3-gram in more than this many docs is boilerplate
 @query(
     "q_text_boilerplate",
     oracle=f"""
-        WITH toks AS (
-          SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        ), tg AS (
-          SELECT doc_id,
-                 unnest(list_distinct(
-                   [w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                    for i in generate_series(1, len(w) - 2)])) AS ng
-          FROM toks WHERE len(w) >= 3
+        WITH tg AS ({word_grams_sql("documents", 3)}
         ), df AS (
-          SELECT ng, count(*) AS ndocs FROM tg GROUP BY ng
+          SELECT g, count(*) AS ndocs FROM tg GROUP BY g
         )
         SELECT t.doc_id,
                count(*) AS n_grams,
@@ -682,7 +652,7 @@ BOILER_DF = 50  # a 3-gram in more than this many docs is boilerplate
                     AS BIGINT) AS n_boiler,
                CAST(count(CASE WHEN d.ndocs > {BOILER_DF} THEN 1 END)
                     * 1000000 // count(*) AS BIGINT) AS boiler_ppm
-        FROM tg t JOIN df d ON t.ng = d.ng
+        FROM tg t JOIN df d ON t.g = d.g
         GROUP BY t.doc_id
         ORDER BY t.doc_id
     """,
@@ -699,25 +669,10 @@ def q_text_boilerplate(spark, d):
     The gram stream is staged once (same multi-consumer rule as
     operators/lsh.py); the boilerplate share is exact integer ppm
     (long div long on both engines)."""
-    from .pipeline4 import _word_ngrams
-
-    docs = load(spark, d, "documents")
-    w = docs.select("doc_id", F.split("text", " ").alias("__w")).filter(
-        F.size("__w") >= 3
-    )
-    tg = (
-        w.select(
-            "doc_id",
-            F.explode_outer(
-                F.array_distinct(_word_ngrams(F.col("__w"), F.size("__w"), 3))
-            ).alias("ng"),
-        )
-        .filter(F.col("ng").isNotNull())
-        .persist()
-    )
-    df_t = tg.groupBy("ng").agg(F.count(F.lit(1)).alias("ndocs"))
+    tg = word_grams(load(spark, d, "documents"), 3).persist()
+    df_t = tg.groupBy("g").agg(F.count(F.lit(1)).alias("ndocs"))
     return (
-        tg.join(df_t, "ng")
+        tg.join(df_t, "g")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),

@@ -58,6 +58,7 @@ from .fits import (
     split_prefix,
     split_prefix_ctes,
 )
+from .grams import df_capped, df_capped_sql, word_grams, word_grams_sql
 
 
 # --------------------------------------------------------------------------
@@ -968,20 +969,8 @@ def _mh_bands_sql(src: str = "documents") -> str:
     from ._helpers import sql_h56
 
     h = sql_h56("CAST(i AS VARCHAR) || ':' || g")
-    return f"""grams AS (
-          SELECT DISTINCT doc_id,
-                 w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS g
-          FROM (SELECT doc_id, string_split(text, ' ') AS w
-                FROM {src}),
-               LATERAL (SELECT unnest(generate_series(1, len(w) - 2))
-                        AS i) ix
-          WHERE len(w) >= 3
-        ),
-        capped AS (
-          SELECT doc_id, g FROM grams
-          WHERE g IN (SELECT g FROM grams GROUP BY g
-                      HAVING COUNT(*) <= {MH_DF_CAP})
-        ),
+    return f"""grams AS ({word_grams_sql(src, 3)}),
+        capped AS ({df_capped_sql("grams", MH_DF_CAP)}),
         hashes AS (
           SELECT c.doc_id, ix.i, {h} AS h
           FROM capped c,
@@ -1067,31 +1056,10 @@ def _mh_capped_and_bands(spark, d, docs=None, form="explode"):
     bit-identical across forms: same hash expression, same minima,
     same (i -> band, slot) layout."""
     from ._helpers import h56
-    from .pipeline4 import _word_ngrams
 
     if docs is None:
         docs = load(spark, d, "documents")
-    w = docs.select("doc_id", F.split("text", " ").alias("__w")).filter(
-        F.size("__w") >= 3
-    )
-    grams = (
-        w.select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    _word_ngrams(F.col("__w"), F.size("__w"), 3)
-                )
-            ).alias("g"),
-        )
-        .filter(F.col("g").isNotNull())
-    )
-    capped = (
-        grams.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("g"))
-        )
-        .filter(F.col("df") <= MH_DF_CAP)
-        .drop("df")
-    )
+    capped = df_capped(word_grams(docs, 3), MH_DF_CAP)
     if form == "explode":
         # pre-r17 shape: 16x posting explode -> (doc_id, i) min agg ->
         # band re-agg. 16 md5s per POSTING and two extra exchanges.

@@ -81,7 +81,7 @@ def q_dedup_segments(spark, d):
     docs = load(spark, d, "documents")
     # Tokenize ONCE into a column (r17): interpreted HOFs have no CSE,
     # so a split(text) embedded in the per-segment lambda re-splits the
-    # whole document for EVERY segment — O(len²)/doc (the rare_grams
+    # whole document for EVERY segment — O(len²)/doc (the word_grams
     # note). explode_outer keeps the pruning filter from re-evaluating
     # the transform inside the scan; values are identical (same md5
     # over the same slices).

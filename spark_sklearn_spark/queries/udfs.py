@@ -164,7 +164,7 @@ def q_gapply_norm(spark, d):
     against the window-function formulation in SQL (pandas ddof=1
     std == stddev_samp)."""
 
-    def zscore(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def zscore(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         v = pdf["value"]
         z = ((v - v.mean()) / v.std(ddof=1)).round(6)
         # degenerate groups (single row / zero variance) produce NaN in

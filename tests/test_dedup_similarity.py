@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from spark_sklearn_spark.operators.lsh import near_dup_pairs
 from spark_sklearn_spark.operators.similarity import cosine_pairs, cosine_topk
-from spark_sklearn_spark.queries.pipeline4 import _word_ngrams
+from spark_sklearn_spark.queries import grams
 
 import __spark_entry__ as entry
 from conftest import _rows
@@ -142,9 +142,43 @@ def test_shingles_short_docs_are_empty(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": [0, 1], "text": ["one two", "a b c d"]})
     )
-    w = F.split(F.col("text"), " ")
-    out = df.select(F.size(_word_ngrams(w, F.size(w), 3)).alias("n")).collect()
-    assert [r["n"] for r in out] == [0, 2]
+    out = grams.word_grams(df, 3).groupBy("doc_id").count().collect()
+    assert {r["doc_id"]: r["count"] for r in out} == {1: 2}
+
+
+def test_word_grams_sides_agree(spark):
+    """word_grams / df_capped and their DuckDB twins give the same
+    postings multiset: empty text, 1, n-1 and n words, repeated grams
+    within a doc and across docs, both separators, distinct on/off,
+    and the DF cap at 1 (only grams in exactly one row survive)."""
+    import duckdb
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": range(8),
+            "text": [
+                "", "a", "a b", "a b c", "a b a b a b", "a b c",
+                "x y z x y z", "c d e f",
+            ],
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    con = duckdb.connect()
+    con.register("docs", pdf)
+    for n in (2, 3):
+        for sep in (" ", "_"):
+            for distinct in (True, False):
+                g = grams.word_grams(df, n, sep=sep, distinct=distinct)
+                sql = grams.word_grams_sql("docs", n, sep=sep, distinct=distinct)
+                got = sorted(map(tuple, g.collect()))
+                assert got == sorted(con.execute(sql).fetchall()), (n, sep)
+                assert (len(set(got)) < len(got)) == (not distinct)
+                capped = grams.df_capped(g, 1, with_df=True)
+                capped_sql = grams.df_capped_sql(f"({sql})", 1, with_df=True)
+                got = sorted(map(tuple, capped.collect()))
+                assert got == sorted(con.execute(capped_sql).fetchall())
+                assert got and {r[-1] for r in got} == {1}
+        assert not grams.word_grams(df.filter("doc_id < 2"), n).collect()
 
 
 def _random_embeddings(rng, n, dim=16):

@@ -4,6 +4,8 @@ Converter) driven the way a spark_sklearn user would."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -74,7 +76,11 @@ def test_keyed_estimator_roundtrip(spark):
             )
         )
     df = spark.createDataFrame(pd.concat(frames))
-    model = KeyedEstimator(["k"], ["x"], "y", output_col="pred").fit(df)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        model = KeyedEstimator(["k"], ["x"], "y", output_col="pred").fit(df)
+    # the grouped-map function's type hints name its eval type outright
+    assert not [w for w in caught if "infer the eval type" in str(w.message)]
     assert model.model_df.count() == 2
     out = model.transform(df).withColumn(
         "err", F.abs(F.col("pred") - F.col("y"))

@@ -359,8 +359,12 @@ def test_no_interpreted_lambda_in_filters(spark, sf_dir):
     for name in (
         "q_decontaminate",
         "q_text_repetition",
+        "q_text_boilerplate",
         "q_dedup_ngram",
         "q_text_ngram_counts",
+        "q_dedup_recall_minhash",
+        "q_dedup_editdist",
+        "q_dedup_simhash",
         "q_emb_dimstats",
         "q_emb_outliers",
     ):

@@ -13,12 +13,18 @@ import io
 import os
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main() -> None:
     out_dir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
+    # the checkout root goes on the driver's sys.path and, before the
+    # session starts, on PYTHONPATH, so Python workers import the package
+    sys.path.insert(0, ROOT)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as e
     from spark_sklearn_spark.session import createLocalSparkSession
 
@@ -34,6 +40,10 @@ def main() -> None:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(buf.getvalue())
+        # a key that persists a relation would otherwise hand its cached
+        # plan to every later key with the same subtree (bench.py clears
+        # between queries too)
+        spark.catalog.clearCache()
         print(f"wrote {path}", flush=True)
 
 

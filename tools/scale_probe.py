@@ -27,7 +27,7 @@ import os
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASE_SF = "/root/testdata/sf0.1"
 
 # One representative per family: scan+agg, 3-way join, window,
@@ -299,7 +299,7 @@ TABLES = [
 def build_replica(spark, k: int) -> str:
     from pyspark.sql import functions as F
 
-    out = os.path.join(REPO, "spark-warehouse", "scale", f"sf0.1x{k}")
+    out = os.path.join(ROOT, "spark-warehouse", "scale", f"sf0.1x{k}")
     if all(
         os.path.exists(os.path.join(out, f"{t}.parquet")) for t in TABLES
     ):
@@ -346,7 +346,12 @@ def main() -> None:
     fixed_panel = "--fixed-panel" in sys.argv[1:]
     k = int(argv[0]) if argv else 5
     only = set(argv[1:])
-    sys.path.insert(0, REPO)
+    # the checkout root goes on the driver's sys.path and, before the
+    # session starts, on PYTHONPATH, so Python workers import the package
+    sys.path.insert(0, ROOT)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as entry
     from spark_sklearn_spark.session import createLocalSparkSession
 

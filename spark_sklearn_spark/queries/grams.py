@@ -36,10 +36,18 @@ def word_grams(docs, n, keys=("doc_id",), sep=" ", distinct=True):
     w = docs.select(*keys, F.split("text", " ").alias("__w")).filter(
         F.size("__w") >= n
     )
+    # concat with separator literals, not concat_ws: the lambda runs
+    # interpreted per element and no word is null, so concat_ws's
+    # null-skipping path is pure cost (q_text_ngram_counts 0.74 s vs
+    # 0.63 s, same-session A/B at sf0.1)
     arr = F.transform(
         F.sequence(F.lit(1), F.size("__w") - (n - 1)),
-        lambda i: F.concat_ws(
-            sep, *[F.element_at("__w", i + j) for j in range(n)]
+        lambda i: F.concat(
+            *[
+                x
+                for j in range(n)
+                for x in (F.lit(sep), F.element_at("__w", i + j))
+            ][1:]
         ),
     )
     if distinct:
